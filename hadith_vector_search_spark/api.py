@@ -106,7 +106,6 @@ class HybridEngine:
         self._fwd = None   # doc-sorted forward arrays (interactive mode)
         self._doc_rows = None   # id -> row dict (interactive mode)
         self._lex_vocab = None  # sorted vocab keys of _lex
-        self._docs_view = None  # serving temp view name (interactive mode)
         self._interactive_bounds = None  # set once enable_interactive runs
 
     def enable_interactive(self, max_driver_rows: int = 500_000,
@@ -118,8 +117,10 @@ class HybridEngine:
         architecture (quran_mcp/search.py's numpy matmul over a loaded
         matrix), and the point-serving layer SCALE.md prescribes for
         sub-second latency, collapsed into this engine for corpora that
-        fit one node. Scoring, bonuses, and dedup stay on the SAME Spark
-        column expressions (no logic twin); only retrieval moves.
+        fit one node. With the doc map resident, scoring, bonuses and
+        dedup also run driver-side in `_score_local_py`, the one Python
+        twin of the Column scoring tail (`_scored_column_tail`); without
+        it the resident candidates are scored by that Column tail.
 
         Bounded: refuses (returns False) above `max_driver_rows` vectors,
         and for id column types that cannot round-trip through the VALUES
@@ -139,9 +140,9 @@ class HybridEngine:
         score idf(df)·sat(tf, dl) is query-independent — the classic
         impact-ordered-index observation — so a request's lexical leg is
         a gather over its terms' arrays plus one grouped sum, no Spark
-        job. With both tiers resident a hybrid call is ONE job (the
-        final scoring plan); if the postings bound is exceeded the
-        lexical leg simply stays on Spark (two jobs, round-6 behavior).
+        job. With every tier resident a hybrid call runs no Spark job;
+        if the postings bound is exceeded the lexical leg simply stays
+        on Spark (one more job per call).
 
         `borrow_vectors_from` (opt-in): a `PublishedVectorIndex` whose
         resident raw matrix this engine SHARES instead of collecting its
@@ -166,13 +167,9 @@ class HybridEngine:
         if borrow_vectors_from is not None:
             borrowed = self._borrow_vector_tier(borrow_vectors_from,
                                                 max_driver_rows)
-        if borrowed is not None:
-            n_docs_bound = len(borrowed[0])
-        else:
-            n_docs_bound = self.emb.count()
-            if n_docs_bound > max_driver_rows:
-                self.disable_interactive()
-                return False
+        if borrowed is None and self.emb.count() > max_driver_rows:
+            self.disable_interactive()
+            return False
         # Tiers below are rebuilt conditionally (postings bound, atomic
         # columns); reset them FIRST so a re-enable whose corpus newly
         # crosses a per-tier bound degrades that tier to the Spark path
@@ -187,28 +184,11 @@ class HybridEngine:
             self._ids = np.array([r[0] for r in rows])
             self._mat = np.array([list(r[1]) for r in rows])
 
-        # Serving copy of the corpus: the pinned docs frame keeps its batch
-        # partitioning (32 one-row-ish partitions here), and a per-request
-        # probe scan pays one task DISPATCH per partition — pure scheduler
-        # tax at O(k) serving scale. Coalesce to ~250k rows/partition and
-        # register as a temp view for the single-statement fast path.
-        import uuid
-
-        if self._docs_view is not None:
-            # Re-enable (e.g. after upsert_documents): release the prior
-            # serving copy — a leaked temp view would pin the OLD corpus
-            # checkpoint for the life of the session.
-            self.spark.catalog.dropTempView(self._docs_view)
         # The corpus frame can be LARGER than the embeddings frame the
         # row bound was checked on (user-supplied partial embeddings), so
-        # the doc-map tier and the serving-view sizing bound on the DOCS
-        # count — max_driver_rows is a promise about every driver copy.
+        # the doc-map tier bounds on the DOCS count — max_driver_rows is a
+        # promise about every driver copy.
         n_corpus = self.docs.count()
-        n_parts = max(1, int(max(n_docs_bound, n_corpus) // 250_000) + 1)
-        self._docs_serving = (self.docs.select(self.id_col, self.text_col)
-                              .coalesce(n_parts).localCheckpoint())
-        self._docs_view = f"serving_docs_{uuid.uuid4().hex[:12]}"
-        self._docs_serving.createOrReplaceTempView(self._docs_view)
 
         sc = self.index.scoring_view()
         if sc.count() <= max_driver_postings:
@@ -320,10 +300,8 @@ class HybridEngine:
         sensitive to any batch (recompute is one vectorized numpy pass
         over ≤max_driver_postings rows, no Spark job). n_docs/avgdl come
         exactly from the doc-level dl values (integer-valued doubles:
-        sums are exact, the division matches Spark's avg). The serving
-        corpus view delta-merges lazily (anti-join ∪ batch, lazy
-        checkpoint) so engines that never hit the generated-SQL tail
-        never pay for it.
+        sums are exact, the division matches Spark's avg). The Column
+        scoring tail needs no delta: it reads the upserted `self.docs`.
 
         Bound discipline mirrors enable_interactive: vector/doc-map rows
         over `max_driver_rows` → False (caller re-enables, which refuses
@@ -410,37 +388,13 @@ class HybridEngine:
             self._lex = self._fwd = None
             self._lex_vocab = None
 
-        # --- serving corpus view: lazy delta-merge --------------------
-        if self._docs_view is not None and self._docs_serving is not None:
-            batch_ids = changed.select(self.id_col)
-            if removed_ids is not None:
-                batch_ids = batch_ids.unionByName(
-                    removed_ids.select(F.col(removed_ids.columns[0])
-                                       .alias(self.id_col)))
-            n_parts = max(1, len(ids2) // 250_000 + 1)
-            self._docs_serving = (
-                self._docs_serving
-                .join(F.broadcast(batch_ids.distinct()), self.id_col,
-                      "left_anti")
-                .unionByName(changed.select(self.id_col, self.text_col))
-                .coalesce(n_parts)
-                # lazy: materializes (and flattens) only if the SQL tail
-                # actually reads it — repeated upserts before first use
-                # stack a batch-deep lazy tower, paid once then truncated
-                .localCheckpoint(eager=False))
-            self._docs_serving.createOrReplaceTempView(self._docs_view)
         return True
 
     def disable_interactive(self) -> None:
         """Release every driver-resident interactive tier (vector matrix,
-        lexical impact arrays, doc map, serving temp view); all calls fall
-        back to the full Spark paths. Idempotent; called automatically
-        when a re-enable crosses a bound so no tier can serve a stale
-        corpus snapshot."""
-        if self._docs_view is not None:
-            self.spark.catalog.dropTempView(self._docs_view)
-            self._docs_view = None
-            self._docs_serving = None
+        lexical impact arrays, doc map); all calls fall back to the full
+        Spark paths. Idempotent; called automatically when a re-enable
+        crosses a bound so no tier can serve a stale corpus snapshot."""
         self._ids = self._mat = None
         self._lex = self._fwd = self._doc_rows = None
         self._lex_vocab = None
@@ -521,139 +475,6 @@ class HybridEngine:
             f"{self._sql_atom(float(vs), 'DOUBLE')})"
             for rid, (fs, vs) in items)
 
-    def _interactive_scored_sql(self, items: list, terms: list[str],
-                                w, phrase: str | None, dedupe: bool,
-                                n_results: int) -> DataFrame:
-        """The interactive scoring tail as ONE generated SQL statement —
-        one py4j round trip instead of the ~900 the Column-expression
-        build costs (~250 ms/call of pure driver-side gateway chatter,
-        profiled; the expressions themselves are identical). This is a
-        deliberately narrow TEXT TWIN of `fusion.score` +
-        `dedup_ops.fused_result_dedup` + the final projection: every
-        expression below mirrors the Column build op-for-op (same
-        greatest/least shapes, same raw-vs-rounded usage, same window
-        spec, same tie-breaks), and row-for-row identity with the
-        pure-Spark path across modes/phrase/dedupe is pinned by
-        tests/test_api.py::test_interactive_mode_equals_batch_path. Used
-        only when no synonym_groups are requested (that path needs the
-        proximity probe join and stays on the shared Column build).
-
-        No join, no inline literals: in Spark 4 even a LocalRelation's
-        broadcast-exchange build runs its own Spark job (one task per
-        VALUES row, capped at default parallelism — measured ~100 ms of
-        pure scheduler floor per call), so the candidates enter as a
-        pushed membership filter on the 1-partition serving view and the
-        two leg scores as FOLDABLE `map_from_arrays` lookups — the whole
-        request plans as one narrow single-task stage (the window/sort
-        exchanges collapse because a SinglePartition child satisfies
-        every required distribution). All per-call values (ids, scores,
-        terms, phrase) travel as PARAMETERIZED-SQL args rather than SQL
-        text: the statement is one of a few fixed shapes, so parse cost
-        is flat and the folded array/map constants land in the generated
-        code as reference objects — whole-stage codegen compiles once
-        per shape, not once per query. The arrays ride as ONE delimited
-        string each, split+cast in SQL (foldable): PySpark converts
-        list-valued args element-by-element over py4j (~130 ms measured
-        for 300 elements), while a scalar string is one call. Numeric
-        id/score reprs round-trip exactly through CAST; string ids use
-        the unit separator (chr(31)) — an id containing it falls back to
-        the shared Column build rather than risk a bad split."""
-        q = lambda c: f"`{c}`"  # noqa: E731
-        idc, textc = q(self.id_col), q(self.text_col)
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
-        ids = [rid for rid, _ in items]
-        if isinstance(ids[0], str):
-            if any("\x1f" in s for s in ids):
-                return None
-            ids_expr = "split(:ids, chr(31))"
-            args: dict = {"ids": "\x1f".join(ids)}
-        else:
-            ids_expr = (f"transform(split(:ids, ','), "
-                        f"x -> CAST(x AS {id_t}))")
-            args = {"ids": ",".join(str(i) for i in ids)}
-        args.update({
-            "fts": ",".join(repr(float(s[0])) for _, s in items),
-            "vec": ",".join(repr(float(s[1])) for _, s in items),
-            "wv": float(w.vector), "wf": float(w.fts),
-            "wc": float(w.coverage),
-        })
-        dbl = "transform(split(:{}, ','), x -> CAST(x AS DOUBLE))"
-        vsig = "least(1.0D, greatest(0.0D, vector_sim))"
-        fsig = ("(greatest(0.0D, fts_score) / "
-                "(greatest(0.0D, fts_score) + 1.0D))")
-        if terms:
-            args["terms"] = ",".join(terms)
-            cov = (f"(CAST(size(filter(split(:terms, ','), "
-                   f"x -> instr(lower({textc}), x) > 0)) AS DOUBLE) "
-                   f"/ CAST(size(split(:terms, ',')) AS DOUBLE))")
-        else:
-            cov = "0.0D"
-        if phrase:
-            args["phrase"] = phrase.lower()
-            args["wp"] = float(w.phrase)
-            phr = (f"(CASE WHEN instr(lower({textc}), :phrase) > 0 "
-                   f"THEN :wp ELSE 0.0D END)")
-        else:
-            phr = "0.0D"
-        # Each raw signal is computed ONCE in an inner projection and
-        # referenced by alias — round() and the weighted total consume
-        # the same expression node, exactly as the Column build's shared
-        # Column objects do, and the analyzer tree stays small.
-        total = ("least(1.0D, greatest(0.0D, "
-                 "_vs * :wv + _fs * :wf + _cv * :wc + _ph + 0.0D))")
-        scored = f"""
-  SELECT {idc}, {textc},
-         round(_vs, 6) AS vec_signal,
-         round(_fs, 6) AS fts_sig,
-         round(_cv, 6) AS coverage,
-         round(_ph, 6) AS phrase_bonus,
-         0.0D AS proximity_bonus,
-         round({total}, 6) AS score
-  FROM (SELECT {idc}, {textc},
-               {vsig} AS _vs, {fsig} AS _fs, {cov} AS _cv, {phr} AS _ph
-        FROM (SELECT {idc}, {textc},
-                     element_at(map_from_arrays({ids_expr},
-                       {dbl.format('fts')}), {idc}) AS fts_score,
-                     element_at(map_from_arrays({ids_expr},
-                       {dbl.format('vec')}), {idc}) AS vector_sim
-              FROM {self._docs_view}
-              WHERE array_contains({ids_expr}, {idc})))"""
-        out_cols = (f"{idc}, score, vec_signal, fts_sig, coverage, "
-                    f"phrase_bonus, proximity_bonus, duplicates_filtered, "
-                    f"substring({textc}, 1, 120) AS preview")
-        if dedupe:
-            # Flattened equivalent of fused_result_dedup's two stacked
-            # windows: rn and the total candidate count compute in ONE
-            # block; the outer block's WHERE filters to survivors BEFORE
-            # its count(*) window evaluates (SQL WHERE precedes
-            # windowing), so dropped = total - survivors — the same
-            # number the sum(rn > 1) window produced, one nesting level
-            # and one CASE tree cheaper (~80 ms/call of per-request
-            # analysis+optimize, measured).
-            dkey = (f"coalesce(nullif(trim(substring({textc}, 1, 120)), "
-                    f"''), CAST({idc} AS STRING))")
-            glob = ("OVER (PARTITION BY 1 ROWS BETWEEN UNBOUNDED "
-                    "PRECEDING AND UNBOUNDED FOLLOWING)")
-            sql = f"""
-SELECT {idc}, score, vec_signal, fts_sig, coverage,
-       phrase_bonus, proximity_bonus,
-       CAST(_n_tot - count(*) {glob} AS BIGINT) AS duplicates_filtered,
-       substring({textc}, 1, 120) AS preview
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY {dkey}
-       ORDER BY score DESC, {idc} ASC) AS rn,
-       count(*) {glob} AS _n_tot
-  FROM ({scored})
-)
-WHERE rn = 1
-ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
-        else:
-            sql = f"""
-SELECT {out_cols}
-FROM (SELECT *, CAST(0 AS BIGINT) AS duplicates_filtered FROM ({scored}))
-ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
-        return self.spark.sql(sql, args=args)
-
     @staticmethod
     def _min_pair_distance_py(toks: list[str], ga: set, gb: set):
         """Driver twin of `proximity.min_pair_distance` over one doc's
@@ -684,8 +505,9 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         """The scoring tail computed entirely driver-side over the
         resident doc map — ZERO Spark jobs for a hybrid call when every
         tier is resident (the result returns as a VALUES LocalRelation,
-        like get_document). A strict python twin of
-        `_interactive_scored_sql`, expression-for-expression: same
+        like get_document). A strict python twin of the Column tail
+        (`_scored_column_tail`: `fusion.score` + `fused_result_dedup` +
+        the final projection), expression-for-expression: same
         greatest/least clamps, same raw-vs-rounded usage, same dedup key
         (space-trimmed 120-char preview, id-string fallback), same
         (score desc, id asc) tie-breaks, same global duplicates_filtered
@@ -703,17 +525,17 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         whenever the doc map is resident). Returns None when a candidate
         id is missing from the doc map (cannot mirror the inner join
         against a FRESHER corpus) — the caller falls through to the
-        one-job SQL tail.
+        Column tail. Equality with that tail on crafted candidates
+        (rounding boundaries, coverage, phrase bonus) is pinned by
+        test_local_and_column_scoring_tails_agree_on_rounding_boundaries.
 
         With `synonym_groups` this also twins the reference's group
-        scorer (the Column path's only remaining serving use): coverage
-        is per-group any-member SUBSTRING containment, and the proximity
-        bonus fires when the first two groups' TOKENS co-occur within
-        `near_window` kept-token positions (`_min_pair_distance_py`,
-        mirroring operators/proximity.min_pair_distance over
+        scorer: coverage is per-group any-member SUBSTRING containment,
+        and the proximity bonus fires when the first two groups' TOKENS
+        co-occur within `near_window` kept-token positions
+        (`_min_pair_distance_py`, mirroring
+        operators/proximity.min_pair_distance over
         py_tokenize — the tested driver twin of `tokenize`)."""
-        if int(n_results) < 0:
-            return None  # let the SQL tail raise, as the batch path does
         scored = self._score_local_py(items, terms, w, phrase, dedupe,
                                       n_results,
                                       synonym_groups=synonym_groups,
@@ -1314,6 +1136,8 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
         can return fewer than n_results, like a selective `where` does.
         Returns (id, score, vec_signal, fts_sig, coverage, phrase_bonus,
         proximity_bonus, duplicates_filtered, preview)."""
+        if int(n_results) < 0:
+            raise ValueError(f"n_results must be >= 0, got {n_results}")
         w = fusion.resolve_weights(scoring_mode, fts_available, vector_available)
         if weight_overrides:
             w = replace(w, **weight_overrides)
@@ -1366,13 +1190,8 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             # comes from the resident impact arrays when the tier is
             # built (no Spark job) or from collecting the O(k) Spark leg
             # otherwise (one job); the vector top-k and the exact
-            # max/coalesce fusion run driver-side, and the fused
-            # candidates re-enter as a LOCAL relation — its broadcast
-            # below builds without a Spark job, so the whole request is
-            # ONE job (the scoring plan) with both tiers resident.
-            # Fusion on collected values is exact arithmetic on ≤2k
-            # pairs; the scoring plan below is byte-identical to the
-            # batch path.
+            # max/coalesce fusion run driver-side. Fusion on collected
+            # values is exact arithmetic on ≤2k pairs.
             fused_map: dict = {}
             if fts_available and terms:
                 if nar_toks and self._narrator_tier() is not None:
@@ -1396,35 +1215,20 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
                 qvec = encode_query(intent.normalized, self.dim)
                 for rid, s in self._vec_topk_interactive(qvec, k):
                     fused_map.setdefault(rid, [0.0, 0.0])[1] = s
-            if fused_map:
-                # Zero-job tail first: with the doc map resident the
-                # scoring runs fully driver-side and the result is a
-                # VALUES LocalRelation (no Spark job at all — the
-                # reference's in-process latency class); it also twins
-                # the synonym-group scorer (group coverage + token
-                # proximity). Falls through to the single-statement SQL
-                # tail (one job, no synonym support) when the map is
-                # absent or can't mirror the corpus join; the SQL tail
-                # returns None for ids its delimited-string transport
-                # can't carry safely. All three tails are row-identical
-                # (test_interactive_mode_equals_batch_path).
-                out = None
-                if self._doc_rows is not None:
-                    out = self._interactive_scored_local(
-                        sorted(fused_map.items()), terms, w, intent.phrase,
-                        dedupe, n_results, synonym_groups=synonym_groups,
-                        near_window=near_window)
-                # (the single-statement SQL tail has no narrator-bonus
-                # expression; narrator engines fall through to the batch
-                # Column tail instead, which has it)
-                if out is None and not synonym_groups \
-                        and self.narrator_col is None:
-                    out = self._interactive_scored_sql(
-                        sorted(fused_map.items()), terms, w, intent.phrase,
-                        dedupe, n_results)
+            items = sorted(fused_map.items())
+            if items and self._doc_rows is not None:
+                # Zero-job tail: with the doc map resident the scoring
+                # runs fully driver-side and the result is a VALUES
+                # LocalRelation (the reference's in-process latency
+                # class), synonym-group scorer included. It returns None
+                # when it can't mirror the corpus join; the call then
+                # scores the same candidates on the Column tail below.
+                out = self._interactive_scored_local(
+                    items, terms, w, intent.phrase, dedupe, n_results,
+                    synonym_groups=synonym_groups, near_window=near_window)
                 if out is not None:
                     return out
-            fused = self._fused_literal_df(sorted(fused_map.items()))
+            fused = self._fused_literal_df(items)
         else:
             fts = (self._narrator_leg(intent.narrator_query, k, allowed)
                    if nar_toks
@@ -1443,6 +1247,22 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             else:
                 vec = self._empty_leg("sim")
             fused = fusion.fuse(fts, vec, key=self.id_col)
+        return self._scored_column_tail(fused, terms, w, intent.phrase,
+                                        dedupe, n_results,
+                                        synonym_groups=synonym_groups,
+                                        near_window=near_window)
+
+    def _scored_column_tail(self, fused: DataFrame, terms: list[str], w,
+                            phrase: str | None, dedupe: bool,
+                            n_results: int,
+                            synonym_groups: list[list[str]] | None = None,
+                            near_window: int = 5) -> DataFrame:
+        """The Spark scoring tail over fused (id, fts_score, vector_sim)
+        candidates: join the corpus text, `fusion.score` (coverage, phrase,
+        proximity and narrator bonuses), `fused_result_dedup`, and the
+        hybrid projection ranked (score desc, id asc), top n. Serves every
+        Spark-path call, and resident calls the zero-job local tail
+        (`_interactive_scored_local`) cannot serve."""
         # Candidates are O(k) -> broadcast them into the documents scan.
         # INNER join: candidates come from this engine's own index and
         # embeddings, so every id resolves; the reference likewise skips
@@ -1487,8 +1307,8 @@ ORDER BY score DESC, {idc} ASC LIMIT {int(n_results)}"""
             with_text = with_text.join(F.broadcast(prox), self.id_col, "left")
             prox_hit = F.col("min_dist") <= max(1, near_window)
 
-        phrase_hit = (F.instr(text_lower, intent.phrase.lower()) > 0
-                      if intent.phrase else None)
+        phrase_hit = (F.instr(text_lower, phrase.lower()) > 0
+                      if phrase else None)
         narrator_hit = None
         if self.narrator_col and terms:
             # spec:330-332 — ANY query term, case-folded, in the narrator

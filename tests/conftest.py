@@ -19,6 +19,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # Keys are `<file basename>::<test name>` so they match from any rootdir.
 SLOW_TESTS = frozenset({
     "test_api.py::test_batch_fast_path_mixed_narrator_filtered_zero_jobs",
+    "test_api.py::test_column_tail_serves_without_doc_map",
     "test_api.py::test_engine_borrows_store_resident_matrix",
     "test_api.py::test_hybrid_search_batch_synonyms_and_fallback",
     "test_api.py::test_hybrid_search_batch_tier_matches_single_calls",
@@ -28,7 +29,6 @@ SLOW_TESTS = frozenset({
     "test_api.py::test_metadata_filters_restrict_candidates_on_every_tier",
     "test_api.py::test_narrator_intent_uses_narrator_field_leg",
     "test_api.py::test_narrator_leg_fresh_after_upsert",
-    "test_api.py::test_sql_tail_still_serves_without_doc_map",
     "test_api.py::test_synonym_groups_local_twin_equals_batch",
     "test_api.py::test_upsert_delta_equals_fresh_enable",
     "test_api.py::test_upsert_delta_skips_recollect",
@@ -99,7 +99,41 @@ SLOW_TESTS = frozenset({
 })
 
 
+class _DefinedTests:
+    """Every test each collected file defines, as SLOW_TESTS-style keys,
+    read from the collect reports: before -k/-m/--deselect or a node-id
+    argument narrows the run, so a partial selection never looks like a
+    missing test."""
+
+    def __init__(self) -> None:
+        self.files: set[str] = set()
+        self.keys: set[str] = set()
+
+    def pytest_collectreport(self, report) -> None:
+        if report.passed:
+            for node in report.result:
+                if isinstance(node, pytest.Item):
+                    base = os.path.basename(str(node.path))
+                    self.files.add(base)
+                    self.keys.add(f"{base}::{node.name}")
+
+
+def pytest_configure(config):
+    config.pluginmanager.register(_DefinedTests(), "defined-tests")
+
+
 def pytest_collection_modifyitems(config, items):
+    # A stale key (a renamed or deleted slow test) would silently move
+    # the renamed test into the default gate. --lf collects only the
+    # last failures of a file, so the check cannot run there.
+    defined = config.pluginmanager.get_plugin("defined-tests")
+    stale = sorted(k for k in SLOW_TESTS
+                   if k.split("::")[0] in defined.files
+                   and k not in defined.keys)
+    if stale and not config.getoption("lf", False):
+        raise pytest.UsageError(
+            "SLOW_TESTS in tests/conftest.py names tests that their file "
+            "does not define (renamed or deleted?): " + ", ".join(stale))
     for item in items:
         key = f"{os.path.basename(str(item.fspath))}::{item.name}"
         if key in SLOW_TESTS:

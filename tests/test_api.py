@@ -188,7 +188,7 @@ def test_interactive_mode_equals_batch_path(spark):
     inter = HybridEngine(spark, docs)
     assert inter.enable_interactive()
     assert inter._mat is not None
-    assert inter._lex is not None  # both tiers resident -> one-job hybrid
+    assert inter._lex is not None  # both tiers resident -> zero-job hybrid
     for q, mode in [("patience and prayer", "balanced"),
                     ("window merge sort batch", "term-priority"),
                     ("charity given in secret", "semantic"),
@@ -200,7 +200,7 @@ def test_interactive_mode_equals_batch_path(spark):
              inter.hybrid_search(q, n_results=10,
                                  scoring_mode=mode).collect()]
         assert a == b, (q, mode)
-    # flag combinations route through the generated-SQL tail too
+    # flag combinations through the zero-job local tail too
     for kw in [{"dedupe": False}, {"vector_available": False},
                {"fts_available": False}, {"fts": 0.9}]:
         a = [r.asDict() for r in
@@ -473,7 +473,7 @@ def test_upsert_past_bound_releases_interactive_tiers(spark):
     eng.upsert_documents(incoming)
     assert not eng.interactive_enabled
     assert eng._lex is None and eng._fwd is None
-    assert eng._doc_rows is None and eng._docs_view is None
+    assert eng._doc_rows is None
     fresh = HybridEngine(spark, eng.docs)
     a = [r.asDict() for r in eng.hybrid_search("patience", 10).collect()]
     b = [r.asDict() for r in fresh.hybrid_search("patience", 10).collect()]
@@ -609,41 +609,58 @@ def test_local_tail_adversarial_corpus_equals_batch(spark):
             assert a == b, (q, kw)
 
 
-def test_local_and_sql_scoring_tails_agree_on_rounding_boundaries(spark):
+def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
     """Spark's round(x, 6) rounds the SHORTEST decimal repr of the
     double (BigDecimal.valueOf), not its exact binary expansion — e.g.
     0.9050355 (exactly 0.90503549999... in binary) rounds UP. The local
-    tail must agree on exactly these half-way values (it once used the
-    exact expansion and scored 0.905035 where every Spark tail said
-    0.905036)."""
+    tail must agree with the Column tail on exactly these half-way
+    values (it once used the exact expansion and scored 0.905035 where
+    Spark said 0.905036), and on coverage and the phrase bonus when the
+    query has terms and a phrase. Both tails score the same crafted
+    candidates; the Column tail reads them from `_fused_literal_df`."""
     from dataclasses import replace
 
     from hadith_vector_search_spark.operators import fusion
 
     docs = spark.createDataFrame(
-        [(i, f"doc {i} body") for i in range(1, 9)],
+        [(i, f"doc {i} body") for i in range(1, 9)]
+        + [(9, "patience and prayer at dawn"), (10, "prayer alone"),
+           (11, "patience and prayer at dawn")],
         "doc_id int, text string")
     eng = HybridEngine(spark, docs)
     assert eng.enable_interactive()
-    w = replace(fusion.resolve_weights("balanced", True, True),
-                vector=1.0, fts=0.0, coverage=0.0, phrase=0.0)
+    base = fusion.resolve_weights("balanced", True, True)
+    w = replace(base, vector=1.0, fts=0.0, coverage=0.0, phrase=0.0)
     boundary = [0.9050355, 0.1234565, 0.2500005, 0.7772435,
                 3.15e-05, 0.9999995, 1.0 / 3, 0.123456749999]
     items = sorted((i + 1, (0.0, v)) for i, v in enumerate(boundary))
-    for dedupe in (True, False):
-        a = [r.asDict() for r in eng._interactive_scored_local(
-            items, [], w, None, dedupe, 10).collect()]
-        b = [r.asDict() for r in eng._interactive_scored_sql(
-            items, [], w, None, dedupe, 10).collect()]
-        assert a == b, dedupe
-    assert any(r["score"] == 0.905036 for r in a)  # the half-way case
+    texty = [(9, (2.5, 0.31)), (10, (1.25, 0.2)), (11, (2.5, 0.31))]
+    cases = [(items, [], w, None),
+             (items + texty, ["dawn", "patience", "prayer"], base,
+              "patience and prayer")]
+    out = []
+    for cands, terms, wts, phrase in cases:
+        for dedupe in (True, False):
+            a = [r.asDict() for r in eng._interactive_scored_local(
+                cands, terms, wts, phrase, dedupe, 12).collect()]
+            b = [r.asDict() for r in eng._scored_column_tail(
+                eng._fused_literal_df(cands), terms, wts, phrase, dedupe,
+                12).collect()]
+            assert a == b, (terms, dedupe)
+            out.append(a)
+    assert any(r["score"] == 0.905036 for r in out[0])  # the half-way case
+    assert out[2][0]["duplicates_filtered"] == 1  # docs 9 and 11 collapse
+    hit = {r["doc_id"]: r for r in out[3]}
+    assert hit[9]["phrase_bonus"] > 0 and hit[9]["coverage"] == 1.0
+    assert hit[10]["phrase_bonus"] == 0.0
+    assert 0.0 < hit[10]["coverage"] < 1.0
 
 
-def test_sql_tail_still_serves_without_doc_map(spark):
+def test_column_tail_serves_without_doc_map(spark):
     """With the doc map absent (e.g. a non-atomic corpus column blocks
-    it), the hybrid call must fall back to the one-job generated-SQL
-    tail and stay row-identical to the batch path end-to-end — keeps the
-    middle tail covered now that the local tail serves by default."""
+    it), a resident hybrid call scores its driver-fused candidates on
+    the Column tail and must stay row-identical to the batch path
+    end-to-end."""
     from hadith_vector_search_spark.sources import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -853,8 +870,8 @@ def test_upsert_delta_equals_fresh_enable(spark):
     # removed doc is gone from every tier
     assert eng.get_document_row(3) is None
     assert all(r["doc_id"] != 3 for r in a["hybrid"])
-    # the lazily delta-merged serving VIEW is correct too: force the
-    # generated-SQL tail (doc map off) on both engines
+    # the Column tail over the upserted eng.docs is correct too: force
+    # it (doc map off) on both engines
     eng._doc_rows = None
     fresh._doc_rows = None
     a2 = [r.asDict() for r in eng.hybrid_search(
@@ -936,6 +953,9 @@ def test_exact_reference_dispatches_to_point_lookup(spark):
     # n_results contract matches the other tiers
     with pytest.raises(ValueError):
         inter.hybrid_search("book 7", n_results=-1)
+    for eng in (batch, inter):  # a non-exact query raises up front too
+        with pytest.raises(ValueError):
+            eng.hybrid_search("patience and prayer", n_results=-1)
     assert inter.hybrid_search("book 7", n_results=0).collect() == []
 
     # zero Spark jobs with the doc map resident
