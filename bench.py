@@ -119,17 +119,13 @@ def main() -> None:
         sem_plans.get_kmeans_codebook(spark, sf_dir)
         # the published vector stores are likewise per-corpus-snapshot
         # artifacts (publish iff the manifest says the table drifted):
-        # IVF cells, the kmeans-codebook twin, and the LSH bucket store
-        sem_plans.get_published_vector_index(spark, sf_dir)
-        sem_plans.get_ivfpq_published_index(spark, sf_dir)
-        sem_plans.get_ivfpq_residual_published_index(spark, sf_dir)
+        # every VECTOR_STORES tier, the two trained-codebook stores, the
+        # LSH bucket store and the CLI-built full-ladder store
+        for name in sem_plans.VECTOR_STORES:
+            sem_plans.get_vector_store(spark, sf_dir, name)
         sem_plans.get_kmeans_published_vector_index(spark, sf_dir)
         sem_plans.get_ivfpq_kmeans_published_index(spark, sf_dir)
         sem_plans.get_published_lsh_index(spark, sf_dir)
-        # the quantized tiers and the CLI-built full-ladder store are the
-        # same per-corpus-snapshot artifacts (manifest-gated publish)
-        sem_plans.get_sq8_published_index(spark, sf_dir)
-        sem_plans.get_bq_published_index(spark, sf_dir)
         sem_plans.get_cli_vector_index(spark, sf_dir)
         print(f"bench: derived index build {time.time() - t0:.1f}s",
               file=sys.stderr)

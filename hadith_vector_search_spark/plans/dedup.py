@@ -7,10 +7,10 @@ are DERIVED INDEX TABLES — on a cluster they are computed once per corpus
 snapshot and persisted (parquet, bucketed by doc_id), then shared by every
 dedup job over that corpus; the reference likewise queries prebuilt FTS /
 vector indexes rather than re-tokenizing per query. `get_shingle_index` /
-`get_simhash_index` are the single-session equivalent: one checkpointed
-build per (session, sf_dir, params), reused by every query in the family.
-The DuckDB oracles rebuild everything from raw text each run, so the cache
-is correctness-checked on every gate pass."""
+`get_simhash_index` serve them from published frame stores (one publish
+per corpus snapshot, reopened by every later session), reused by every
+query in the family. The DuckDB oracles rebuild everything from raw text
+each run, so the stores are correctness-checked on every gate pass."""
 
 from __future__ import annotations
 
@@ -33,64 +33,55 @@ def _cache_key(spark: SparkSession, sf_dir: str, *params) -> tuple:
 def get_published_frame_store(spark: SparkSession, sf_dir: str,
                               deriver: str, params: dict):
     """Ensure-and-open the published frame store HANDLE for this
-    (deriver, params) — None when the index root is unwritable (the
-    `get_index` fallback discipline). The dir-level view of
-    `_frame_store_or_pin`, for callers that fork the whole artifact
-    rather than read its rows (the streaming maintenance twins'
-    `commit.clone_store`); handle cached per session so the ensure's
-    count + manifest check run once, not per twin invocation."""
+    (deriver, params), under the index root `lexical.publish_and_open`
+    resolves. The dir-level view of `_frame_store_rows`, for callers
+    that fork the whole artifact rather than read its rows (the
+    streaming maintenance twins' `commit.clone_store`); handle cached
+    per session so the ensure's count + manifest check run once, not
+    per twin invocation."""
     from ..sources import frame_store
-    from .lexical import _index_root
+    from .lexical import publish_and_open
 
     key = _cache_key(spark, sf_dir, "frame_handle", deriver,
                      tuple(sorted(params.items())))
     if key not in _INDEX_CACHE:
-        token = sf_dir.strip("/").replace("/", "_")
+        docs = load_table(spark, sf_dir, "documents")
         ptok = "_".join(f"{k}{params[k]}" for k in sorted(params))
-        idx_dir = os.path.join(_index_root(), f"{token}_{deriver}_{ptok}")
-        try:
-            docs = load_table(spark, sf_dir, "documents")
-            fidx, _ = frame_store.ensure_frame_store(
+        _INDEX_CACHE[key] = publish_and_open(
+            sf_dir, f"_{deriver}_{ptok}",
+            lambda d: frame_store.ensure_frame_store(
                 spark, docs, os.path.join(sf_dir, "documents.parquet"),
-                idx_dir, deriver, params)
-        except OSError:
-            return None
-        _INDEX_CACHE[key] = fidx
+                d, deriver, params)[0])
     return _INDEX_CACHE[key]
 
 
-def _frame_store_or_pin(spark: SparkSession, sf_dir: str, deriver: str,
-                        params: dict, pin_tag: str, build):
-    """The store-first discipline every derived dedup frame now follows
-    (round-10 verdict item 4; `get_window_index` was the prototype):
-    serve from the PUBLISHED doc-bucket-partitioned frame store
-    (`sources.frame_store` — publish iff the manifest says the corpus or
-    the derivation identity drifted, reopen the bytes otherwise; a
-    second session never repays the text pass), falling back to the
-    round-5 session pin when the index root is unwritable. Both paths
-    stay continuously oracle-checked: every consumer's DuckDB oracle
-    rebuilds the derivation from raw text each gate pass. Store dirs are
-    keyed by deriver+params so two widths never thrash one artifact."""
+def _frame_store_rows(spark: SparkSession, sf_dir: str, deriver: str,
+                      params: dict, audit_tag: str, build) -> DataFrame:
+    """The rows of the PUBLISHED doc-bucket-partitioned frame store
+    (`sources.frame_store`) that every derived dedup frame is served
+    from (`get_window_index` was the prototype): publish iff the manifest says the corpus or the
+    derivation identity drifted, reopen the bytes otherwise, so a second
+    session never repays the text pass. `build` is the derivation the
+    store publishes; every consumer's DuckDB oracle rebuilds it from raw
+    text each gate pass. Store dirs are keyed by deriver+params so two
+    widths never thrash one artifact."""
     # record the BUILD plan unconditionally (plan-string capture only,
     # nothing materializes): the hygiene sweep must see the derivation
     # that runs at publish/refresh time even when the store is a
     # byte-for-byte reuse this session
-    pin_audit.record(pin_tag, sf_dir, build())
-    fidx = get_published_frame_store(spark, sf_dir, deriver, params)
-    if fidx is not None:
-        return fidx.rows
-    return build().localCheckpoint()
+    pin_audit.record(audit_tag, sf_dir, build())
+    return get_published_frame_store(spark, sf_dir, deriver, params).rows
 
 
 def get_shingle_index(spark: SparkSession, sf_dir: str,
                       w: int = dedup.SHINGLE_W) -> DataFrame:
     """Shingle index over `documents` — the (doc_id, shingles, gkey)
     frame every shingle-based dedup query shares, served from the
-    published frame store (see `_frame_store_or_pin`)."""
+    published frame store (see `_frame_store_rows`)."""
     key = _cache_key(spark, sf_dir, "shingles", w)
     if key not in _INDEX_CACHE:
         docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = _frame_store_or_pin(
+        _INDEX_CACHE[key] = _frame_store_rows(
             spark, sf_dir, "shingles", {"w": w}, "dedup_shingles",
             lambda: dedup._collapsed_shingles_lazy(docs, "text", "doc_id",
                                                    w))
@@ -103,7 +94,7 @@ def get_simhash_index(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFram
     key = _cache_key(spark, sf_dir, "simhash", n_bits)
     if key not in _INDEX_CACHE:
         docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = _frame_store_or_pin(
+        _INDEX_CACHE[key] = _frame_store_rows(
             spark, sf_dir, "simhash", {"n_bits": n_bits}, "dedup_simhash",
             lambda: dedup.simhash_long(docs, n_bits=n_bits))
     return _INDEX_CACHE[key]
@@ -124,7 +115,7 @@ def get_winnow_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                      dedup.DUPSPAN_W, dedup.WINNOW_GUARANTEE)
     if key not in _INDEX_CACHE:
         docs = load_table(spark, sf_dir, "documents")
-        pinned = _frame_store_or_pin(
+        pinned = _frame_store_rows(
             spark, sf_dir, "winnow",
             {"w": dedup.DUPSPAN_W, "guarantee": dedup.WINNOW_GUARANTEE},
             "dedup_winnow",
@@ -156,7 +147,7 @@ def get_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature."""
     key = _cache_key(spark, sf_dir, "minhash", dedup.SHINGLE_W, N_HASHES)
     if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = _frame_store_or_pin(
+        _INDEX_CACHE[key] = _frame_store_rows(
             spark, sf_dir, "minhash",
             {"w": dedup.SHINGLE_W, "n_hashes": N_HASHES},
             "dedup_minhash_sigs",
@@ -321,52 +312,38 @@ def get_window_index(spark: SparkSession, sf_dir: str,
     """Positional token-window index over `documents`, served from the
     PUBLISHED doc-bucket-partitioned store (`sources.window_store` —
     publish iff the manifest says the corpus drifted, reopen the bytes
-    otherwise; a second session never re-tokenizes the corpus). The
-    round-5 session pin remains the fallback when the index root is
-    unwritable (the `get_index` discipline), and both paths stay
-    continuously oracle-checked: every consumer's DuckDB oracle rebuilds
-    from raw text each gate pass."""
+    otherwise; a second session never re-tokenizes the corpus). Every
+    consumer's DuckDB oracle rebuilds the windows from raw text each
+    gate pass."""
     key = _cache_key(spark, sf_dir, "windows", w)
     if key not in _INDEX_CACHE:
-        widx = get_published_window_store(spark, sf_dir, w)
-        if widx is not None:
-            _INDEX_CACHE[key] = widx.windows
-        else:
-            docs = load_table(spark, sf_dir, "documents")
-            _INDEX_CACHE[key] = pin_audit.record(
-                "dedup_window_index", sf_dir,
-                dedup.window_index(docs, w)).localCheckpoint()
+        _INDEX_CACHE[key] = get_published_window_store(spark, sf_dir,
+                                                       w).windows
     return _INDEX_CACHE[key]
 
 
 def get_published_window_store(spark: SparkSession, sf_dir: str,
                                w: int = dedup.DUPSPAN_W):
-    """Ensure-and-open the published window store HANDLE (None when the
-    index root is unwritable) — the dir-level view of
-    `get_window_index`, for callers that fork the whole artifact rather
-    than read its rows (the streaming window twin's
-    `commit.clone_store`); handle cached per session so the ensure's
-    count + manifest check run once, not per twin invocation."""
-    import os as _os
-
+    """Ensure-and-open the published window store HANDLE — the
+    dir-level view of `get_window_index`, for callers that fork the
+    whole artifact rather than read its rows (the streaming window
+    twin's `commit.clone_store`); handle cached per session so the
+    ensure's count + manifest check run once, not per twin
+    invocation."""
     from ..sources import window_store
-    from .lexical import _index_root
+    from .lexical import publish_and_open
 
     key = _cache_key(spark, sf_dir, "window_handle", w)
     if key not in _INDEX_CACHE:
         docs = load_table(spark, sf_dir, "documents")
-        token = sf_dir.strip("/").replace("/", "_")
         # dir keyed by w: two consumers at different widths must not
         # thrash one artifact (the manifest would flip stale each call
         # and a cached frame could silently read the other w's rows)
-        idx_dir = _os.path.join(_index_root(), f"{token}_win_w{w}")
-        try:
-            widx, _ = window_store.ensure_window_index(
-                spark, docs, _os.path.join(sf_dir, "documents.parquet"),
-                idx_dir, w)
-        except OSError:
-            return None
-        _INDEX_CACHE[key] = widx
+        _INDEX_CACHE[key] = publish_and_open(
+            sf_dir, f"_win_w{w}",
+            lambda d: window_store.ensure_window_index(
+                spark, docs, os.path.join(sf_dir, "documents.parquet"),
+                d, w)[0])
     return _INDEX_CACHE[key]
 
 

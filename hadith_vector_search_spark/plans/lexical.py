@@ -7,7 +7,11 @@ them with the same rules it indexes with (SURVEY §4.2.4 tokenizer unification).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import sys
+import tempfile
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,9 +58,41 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
 
+# The temp root every store of the process publishes under once
+# `publish_and_open` has found the configured root unwritable.
+_FALLBACK_ROOT: str | None = None
+
+
 def _index_root() -> str:
-    return (os.environ.get("SPARK_GRAFT_INDEX_ROOT")
+    """The directory every published store lives under:
+    SPARK_GRAFT_INDEX_ROOT (default `spark-warehouse/indexes`), or the
+    process's temp root once that root proved unwritable."""
+    return (_FALLBACK_ROOT or os.environ.get("SPARK_GRAFT_INDEX_ROOT")
             or os.path.join(_REPO_ROOT, "spark-warehouse", "indexes"))
+
+
+def publish_and_open(sf_dir: str, suffix: str, fn):
+    """Ensure-and-open one store: `fn(idx_dir)` on
+    `<index root>/<sf token><suffix>`, returning its handle. The one
+    unwritable-root policy of every store getter: the first OSError
+    under the configured root switches the process to a single
+    `graft_index_*` temp root (warned once on stderr, removed at exit)
+    and retries there, so no caller ever runs without a store; an
+    OSError under the temp root propagates."""
+    global _FALLBACK_ROOT
+    name = sf_dir.strip("/").replace("/", "_") + suffix
+    root = _index_root()
+    try:
+        return fn(os.path.join(root, name))
+    except OSError as exc:
+        if _FALLBACK_ROOT is not None:
+            raise
+        _FALLBACK_ROOT = tempfile.mkdtemp(prefix="graft_index_")
+        atexit.register(shutil.rmtree, _FALLBACK_ROOT, True)
+        print(f"index root {root} is unwritable ({exc}); publishing "
+              f"stores under {_FALLBACK_ROOT} for the rest of this "
+              f"process", file=sys.stderr)
+        return fn(os.path.join(_FALLBACK_ROOT, name))
 
 
 def _corpus_fingerprint(sf_dir: str) -> tuple:
@@ -70,33 +106,26 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
 
 def clear_index_cache() -> None:
     """Drop every cached index handle (the published artifact stays on
-    disk; checkpoint blocks of in-session fallbacks are released by
-    Spark's ContextCleaner once unreferenced)."""
+    disk)."""
     _INDEX_CACHE.clear()
 
 
 def get_index(spark: SparkSession, sf_dir: str) -> bm25.LexicalIndex:
     key = (spark.sparkContext.applicationId, sf_dir, _corpus_fingerprint(sf_dir))
-    idx = _INDEX_CACHE.get(key)
-    if idx is None:
-        corpus = load_table(spark, sf_dir, "documents")
-        from .pin_audit import record
-        probe = lambda tag, df: record(tag, sf_dir, df)  # noqa: E731
-        try:
-            from ..sources import index_store
-            token = sf_dir.strip("/").replace("/", "_")
-            idx, _ = index_store.ensure_lexical_index(
-                spark, corpus, os.path.join(sf_dir, "documents.parquet"),
-                os.path.join(_index_root(), token), plan_probe=probe)
-        except OSError:
-            # Read-only/unwritable index root: keep serving from the
-            # in-session build (same results, no durable artifact).
-            idx = bm25.build_index(corpus, plan_probe=probe)
-        _INDEX_CACHE[key] = idx
-        while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
-            _INDEX_CACHE.popitem(last=False)
-    else:
+    if key in _INDEX_CACHE:
         _INDEX_CACHE.move_to_end(key)
+        return _INDEX_CACHE[key]
+    corpus = load_table(spark, sf_dir, "documents")
+    from ..sources import index_store
+    from .pin_audit import record
+    probe = lambda tag, df: record(tag, sf_dir, df)  # noqa: E731
+    idx = publish_and_open(
+        sf_dir, "", lambda d: index_store.ensure_lexical_index(
+            spark, corpus, os.path.join(sf_dir, "documents.parquet"),
+            d, plan_probe=probe)[0])
+    _INDEX_CACHE[key] = idx
+    while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
+        _INDEX_CACHE.popitem(last=False)
     return idx
 
 
@@ -842,14 +871,13 @@ def published_index_reopened(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import index_store
 
     corpus = load_table(spark, sf_dir, "documents")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = os.path.join(_index_root(), token)
-    try:
+
+    def ensure_reopen(idx_dir: str):
         index_store.ensure_lexical_index(
             spark, corpus, os.path.join(sf_dir, "documents.parquet"), idx_dir)
-        idx = index_store.open_index(spark, idx_dir)  # reopen, no cache
-    except OSError:
-        idx = bm25.build_index(corpus)  # unwritable root: same results
+        return index_store.open_index(spark, idx_dir)  # reopen, no cache
+
+    idx = publish_and_open(sf_dir, "", ensure_reopen)
     return bm25.bm25_topk(spark, corpus, BM25_QUERY, k=10, index=idx)
 
 

@@ -30,7 +30,8 @@ def release_sf_pins(spark: SparkSession, sf_dir: str,
     target = os.path.abspath(sf_dir)
     n = 0
     for cache in (dedup_plans._INDEX_CACHE, semantic_plans._PIN_CACHE,
-                  semantic_plans._VLSH_CACHE, semantic_plans._CODEBOOK_CACHE):
+                  semantic_plans._VLSH_CACHE, semantic_plans._CODEBOOK_CACHE,
+                  semantic_plans._VIDX_CACHE):
         for key in [k for k in cache
                     if len(k) >= 2 and isinstance(k[1], str)
                     and os.path.abspath(k[1]) == target]:

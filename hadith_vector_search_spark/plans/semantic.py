@@ -30,6 +30,8 @@ IVF_PROBE = 2
 # lazily inside ann_topk_bq_cli_store's oracle twin would hide a drift,
 # so the shared constant is asserted equal by test)
 CLI_EMBED_DIM = 384
+PQ_CENTS = 4
+PQ_RERANK = 20
 
 
 _PIN_CACHE: dict[tuple, DataFrame] = {}
@@ -85,15 +87,18 @@ def _emb_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     return _STATS_CACHE[key]
 
 
-def _cached_open_vidx(spark: SparkSession, idx_dir: str):
-    """Session-scoped PublishedVectorIndex handle cache, keyed on the
-    artifact's manifest stamp: within a session the get_* ensure/open
-    helpers are called once per registered query, and an open collects
-    the codebook + sidecars each time — worse, a RESIDENT point tier
+def _cached_open(spark: SparkSession, sf_dir: str, name: str, idx_dir: str,
+                 opener=None):
+    """Session-scoped store handle cache, keyed on (application, corpus
+    dir, store name, manifest stamp): within a session the store getters
+    are called once per registered query, and an open collects the
+    codebook + sidecars each time — worse, a RESIDENT point tier
     (enable_interactive) lives on the handle, so a fresh open per call
     re-collected every quantized table per gate/bench pass (round-12
     ADVICE). The manifest mtime in the key means a republish (stale
-    manifest -> rebuild) still reopens fresh."""
+    manifest -> rebuild) still reopens fresh; the corpus dir lets
+    `pins.release_sf_pins` drop one scale dir's handles. `opener`
+    defaults to `vector_store.open_vector_index`."""
     import os as _os
 
     from ..sources import vector_store
@@ -101,29 +106,56 @@ def _cached_open_vidx(spark: SparkSession, idx_dir: str):
 
     man = _os.path.join(idx_dir, MANIFEST_NAME)
     stamp = _os.stat(man).st_mtime_ns if _os.path.exists(man) else None
-    key = (spark.sparkContext.applicationId, _os.path.abspath(idx_dir),
+    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), name,
            stamp)
     if key not in _VIDX_CACHE:
-        _VIDX_CACHE[key] = vector_store.open_vector_index(spark, idx_dir)
+        _VIDX_CACHE[key] = (opener or vector_store.open_vector_index)(
+            spark, idx_dir)
     return _VIDX_CACHE[key]
 
 
-def _cached_open_lidx(spark: SparkSession, idx_dir: str):
-    """`_cached_open_vidx` for the LSH store: an open collects the
-    hyperplane sidecar (a job) per call; the manifest-mtime key keeps a
-    republish reopening fresh."""
+# The published IVF stores over `embeddings` that differ only in their
+# `ensure_vector_index` flags, keyed by their artifact-dir suffix — the
+# FAISS index-factory idea (Johnson et al. 2017) as a table: every
+# store has the data codebook at IVF_CENTROIDS cells, and the flags pick
+# the tiers it carries (the flags ride in the manifest identity, so a
+# store without a tier is STALE for a consumer expecting it, never
+# silently reused). Own dir per entry keeps each store's bytes
+# reuse-stable; a deployment publishes ONE store with every tier set.
+VECTOR_STORES = {
+    "vec": {},                                  # raw IVF cells
+    "vecsq": {"sq8": True},                     # + SQ8 int8 codes
+    "vecbq": {"bq1": True},                     # + 1-bit packed signs
+    "vecpq": {"pq_cents": PQ_CENTS},            # + IVFADC codes
+    "vecpqr": {"pq_cents": PQ_CENTS,            # + residual IVFADC codes
+               "pq_residual": True},
+}
+
+
+def get_vector_store(spark: SparkSession, sf_dir: str, name: str):
+    """Ensure-and-reopen the published vector store `name` (a
+    `VECTOR_STORES` key) for this SF: publishes iff the embeddings table
+    drifted, else reuses the on-disk artifact byte-for-byte (the
+    reference reopening its persistent Chroma dir at startup). Shared by
+    the published-ANN queries, the streaming vector twin and bench.py's
+    derived-index warm-up — the publish is a once-per-corpus-snapshot
+    cost, not query cost."""
     import os as _os
 
     from ..sources import vector_store
-    from ..sources.manifest import MANIFEST_NAME
+    from .lexical import publish_and_open
 
-    man = _os.path.join(idx_dir, MANIFEST_NAME)
-    stamp = _os.stat(man).st_mtime_ns if _os.path.exists(man) else None
-    key = (spark.sparkContext.applicationId, _os.path.abspath(idx_dir),
-           "lsh", stamp)
-    if key not in _VIDX_CACHE:
-        _VIDX_CACHE[key] = vector_store.open_lsh_index(spark, idx_dir)
-    return _VIDX_CACHE[key]
+    flags = VECTOR_STORES[name]
+
+    def ensure_open(idx_dir: str):
+        n_rows, dim = _emb_stats(spark, sf_dir)
+        vector_store.ensure_vector_index(
+            spark, load_table(spark, sf_dir, "embeddings"),
+            _os.path.join(sf_dir, "embeddings.parquet"), idx_dir,
+            n_cells=IVF_CENTROIDS, n_rows=n_rows, dim=dim, **flags)
+        return _cached_open(spark, sf_dir, name, idx_dir)
+
+    return publish_and_open(sf_dir, f"_{name}", ensure_open)
 
 
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -270,24 +302,22 @@ def get_published_lsh_index(spark: SparkSession, sf_dir: str):
     this SF (`sources.vector_store.publish_lsh_index`) — the durable
     artifact for the sign-LSH ANN family, closing round-9 verdict item 8
     (IVF had `vectors/cell=K/` dirs while LSH rebuilt per-session pins).
-    Publish iff the manifest says the embeddings table drifted; None when
-    the index root is unwritable (the get_index fallback discipline)."""
+    Publish iff the manifest says the embeddings table drifted."""
     import os as _os
 
     from ..sources import vector_store
-    from .lexical import _index_root
+    from .lexical import publish_and_open
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_lsh")
-    try:
+    def ensure_open(idx_dir: str):
         n_rows, dim = _emb_stats(spark, sf_dir)
         vector_store.ensure_lsh_index(
-            spark, emb, _os.path.join(sf_dir, "embeddings.parquet"),
+            spark, load_table(spark, sf_dir, "embeddings"),
+            _os.path.join(sf_dir, "embeddings.parquet"),
             idx_dir, n_planes=LSH_PLANES, n_rows=n_rows, dim=dim)
-        return _cached_open_lidx(spark, idx_dir)  # reopen
-    except OSError:
-        return None
+        return _cached_open(spark, sf_dir, "lsh", idx_dir,
+                            vector_store.open_lsh_index)  # reopen
+
+    return publish_and_open(sf_dir, "_lsh", ensure_open)
 
 
 def ann_topk_lsh_published(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -297,11 +327,8 @@ def ann_topk_lsh_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-session banding rebuild. Same semantics and same DuckDB oracle
     as the in-session `ann_topk_lsh`, which is exactly what the shared
     oracle pins (the `ann_topk_ivf_published` discipline)."""
-    lidx = get_published_lsh_index(spark, sf_dir)
-    if lidx is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        return similarity.ann_topk_lsh(emb, QUERY_VEC_ID, LSH_PLANES, 5)
-    return lidx.lsh_topk(QUERY_VEC_ID, k=5)
+    return get_published_lsh_index(spark, sf_dir).lsh_topk(QUERY_VEC_ID,
+                                                           k=5)
 
 
 def ann_topk_lsh_multiprobe_published(spark: SparkSession,
@@ -310,12 +337,8 @@ def ann_topk_lsh_multiprobe_published(spark: SparkSession,
     `ANN_N_FLIP` lowest-|margin| flips, all as ONE in-list partition
     predicate (multi-directory pruning). Shares `ann_topk_lsh_multiprobe`'s
     oracle."""
-    lidx = get_published_lsh_index(spark, sf_dir)
-    if lidx is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        return similarity.ann_topk_lsh_multiprobe(emb, QUERY_VEC_ID,
-                                                  LSH_PLANES, 5, ANN_N_FLIP)
-    return lidx.lsh_topk(QUERY_VEC_ID, k=5, n_flip=ANN_N_FLIP)
+    return get_published_lsh_index(spark, sf_dir).lsh_topk(
+        QUERY_VEC_ID, k=5, n_flip=ANN_N_FLIP)
 
 
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,32 +373,6 @@ def ann_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                ANN_K, allowed=allowed))
 
 
-def get_published_vector_index(spark: SparkSession, sf_dir: str):
-    """Ensure-and-reopen the published IVF vector store for this SF
-    (sources.vector_store): publishes iff the embeddings table drifted,
-    else reuses the on-disk artifact byte-for-byte. Returns None when the
-    index root is unwritable (the lexical get_index fallback discipline).
-    Shared by `ann_topk_ivf_published` and bench.py's derived-index
-    warm-up — the publish is a once-per-corpus-snapshot cost, not query
-    cost."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import _index_root
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_vec")
-    try:
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        vector_store.ensure_vector_index(
-            spark, emb, _os.path.join(sf_dir, "embeddings.parquet"),
-            idx_dir, n_cells=IVF_CENTROIDS, n_rows=n_rows, dim=dim)
-        return _cached_open_vidx(spark, idx_dir)  # reopen
-    except OSError:
-        return None
-
-
 def ann_topk_ivf_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The durable-VECTOR-index proof (the vector twin of
     `lexical.published_index_reopened`): answer an IVF ANN query from a
@@ -389,39 +386,8 @@ def ann_topk_ivf_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe list as a PARTITION predicate (directory pruning, asserted
     by tests/PLAN_AUDIT). Hash-equality with the in-session
     `ann_topk_ivf` build is exactly what the shared oracle pins."""
-    vidx = get_published_vector_index(spark, sf_dir)
-    if vidx is None:
-        # Read-only/unwritable index root: same results, no durable
-        # artifact.
-        emb = load_table(spark, sf_dir, "embeddings")
-        return similarity.ivf_topk(emb, QUERY_VEC_ID, IVF_CENTROIDS,
-                                   IVF_PROBE, ANN_K)
-    return vidx.ivf_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K)
-
-
-def get_sq8_published_index(spark: SparkSession, sf_dir: str):
-    """Ensure-and-reopen the published IVF store WITH the SQ8 tier for
-    this SF (own `_vecsq` artifact dir so the plain store's bytes stay
-    reuse-stable; a deployment publishes ONE store with sq8=True). The
-    sq8 marker rides in the manifest identity — a store without the
-    quantized table is STALE for this consumer, never silently reused."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import _index_root
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_vecsq")
-    try:
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        vector_store.ensure_vector_index(
-            spark, emb, _os.path.join(sf_dir, "embeddings.parquet"),
-            idx_dir, n_cells=IVF_CENTROIDS, sq8=True,
-            n_rows=n_rows, dim=dim)
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
+    return get_vector_store(spark, sf_dir, "vec").ivf_topk(
+        QUERY_VEC_ID, IVF_PROBE, ANN_K)
 
 
 def ann_topk_sq8_published(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,66 +404,8 @@ def ann_topk_sq8_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     both-sides-quantized semantics restricted to probed cells. The
     oracle replays assignment, probes, the int8 round trip AND the
     quantized dot from raw vectors."""
-    vidx = get_sq8_published_index(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    if vidx is not None:
-        return vidx.sq_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K)
-    # Read-only index root: same results through the storeless compose —
-    # quantize in-pass over the probed cells (scale materialized as its
-    # own column first, the same one-pass-per-row discipline).
-    import numpy as np
-
-    from ..functions.vector import dot as vdot
-    from ..functions.vector import vector_lit
-
-    cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-        similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-        key=lambda r: r.cent_id)]
-    qvec = [float(x) for x in emb.filter(
-        F.col("vec_id") == QUERY_VEC_ID).select("embedding").collect()[0][0]]
-    qd = [float(x) for x in similarity._int8_roundtrip_np(
-        np.asarray([qvec], dtype=np.float64))[0]]
-    probes = {int(c) for c, _ in sorted(
-        cents, key=lambda cv: (-round(float(
-            np.asarray(cv[1]) @ np.asarray(qvec)), 6), cv[0]))[:IVF_PROBE]}
-    scan = (emb.select("vec_id", "embedding",
-                       similarity.cell_of(cents).alias("cell"))
-            .filter(F.col("cell").isin(sorted(probes)))
-            .withColumn("scale", F.array_max(F.transform(
-                "embedding", lambda x: F.abs(x.cast("double"))))))
-    dequant = F.transform(
-        "embedding",
-        lambda x: F.when(F.col("scale") == 0.0, F.lit(0.0))
-        .otherwise(F.round(x.cast("double") / F.col("scale") * 127.0, 0)
-                   * F.col("scale") / 127.0))
-    return (scan.select("vec_id",
-                        F.round(vdot(dequant, vector_lit(qd)), 6)
-                        .alias("sim_q"))
-            .orderBy(F.desc("sim_q"), F.asc("vec_id"))
-            .limit(ANN_K))
-
-
-def get_bq_published_index(spark: SparkSession, sf_dir: str):
-    """Ensure-and-reopen the published IVF store WITH the binary (1-bit)
-    tier for this SF (own `_vecbq` artifact dir; bq1 in the manifest
-    identity)."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import _index_root
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_vecbq")
-    try:
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        vector_store.ensure_vector_index(
-            spark, emb, _os.path.join(sf_dir, "embeddings.parquet"),
-            idx_dir, n_cells=IVF_CENTROIDS, bq1=True,
-            n_rows=n_rows, dim=dim)
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
+    return get_vector_store(spark, sf_dir, "vecsq").sq_topk(
+        QUERY_VEC_ID, IVF_PROBE, ANN_K)
 
 
 def ann_topk_bq_published(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -512,13 +420,8 @@ def ann_topk_bq_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-dimension sign-mismatch count (the SEMANTICS of packed
     xor+popcount — so a packing bug cannot hide in a shared
     representation) and the exact rerank from raw vectors."""
-    vidx = get_bq_published_index(spark, sf_dir)
-    if vidx is not None:
-        return vidx.bq_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
-    # Read-only index root: storeless compose — pack in-pass over the
-    # probed cells, same arithmetic (one definition, shared with the
-    # batch fallback).
-    return _bq_storeless_one(spark, sf_dir, QUERY_VEC_ID)
+    return get_vector_store(spark, sf_dir, "vecbq").bq_topk(
+        QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
 
 
 def ann_topk_bq_resident(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,11 +433,9 @@ def ann_topk_bq_resident(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME DuckDB oracle that replays the store path from raw vectors
     (per-dimension sign mismatches, never the packed representation)
     value-hash-checks the resident arithmetic too. Falls back to the
-    store/storeless plan when the tier cannot enable (unwritable root,
-    bounds) — same rows either way, which is exactly the contract."""
-    vidx = get_bq_published_index(spark, sf_dir)
-    if vidx is None:
-        return _bq_storeless_one(spark, sf_dir, QUERY_VEC_ID)
+    store plan when the tier cannot enable (bounds) — same rows either
+    way, which is exactly the contract."""
+    vidx = get_vector_store(spark, sf_dir, "vecbq")
     # the store handle is session-cached and the artifact manifest-gated,
     # so an already-resident tier needs no re-collect (enable_interactive
     # unconditionally re-pulls every tier's table otherwise)
@@ -576,41 +477,13 @@ def bq_batch_published(spark: SparkSession, sf_dir: str,
 
     from ..functions.vector import dot as vdot
 
-    vidx = get_bq_published_index(spark, sf_dir)
-    if vidx is None:
-        # Read-only index root: the SAME single broadcast-batch plan as
-        # the store path (round-11 review's last borderline shape — the
-        # previous fallback unioned one plan per query), with the cell
-        # tags and packed signs computed in-pass instead of scanned from
-        # the celled tables: one tagged scan, one window, one rerank —
-        # O(1) jobs in N either way.
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        dim = len(cents[0][1])
-        qrows = sorted(emb.filter(F.col("vec_id") < n_queries)
-                       .select("vec_id", "embedding").collect(),
-                       key=lambda r: r[0])
-        qvecs = [[float(x) for x in r[1]] for r in qrows]
-        probe_lists = select_probes_batch(cents, qvecs, IVF_PROBE)
-        n_words = -(-dim // 64)
-        tagged = (emb.select("vec_id", "embedding",
-                             similarity.cell_of(cents).alias("cell"),
-                             similarity.bq_pack_expr("embedding", dim)
-                             .alias("bq"))
-                  .localCheckpoint(eager=False))
-        bq_codes = tagged.select("vec_id", "cell", "bq")
-        raw_src = tagged.select("vec_id", "embedding", "cell")
-    else:
-        qrows = sorted(vidx.vectors.filter(F.col("vec_id") < n_queries)
-                       .select("vec_id", "embedding").collect(),
-                       key=lambda r: r[0])
-        qvecs = [[float(x) for x in r[1]] for r in qrows]
-        probe_lists = select_probes_batch(vidx.centroids, qvecs, IVF_PROBE)
-        n_words = int(vidx.bq["words"])
-        bq_codes = vidx.bq_codes
-        raw_src = vidx.vectors
+    vidx = get_vector_store(spark, sf_dir, "vecbq")
+    qrows = sorted(vidx.vectors.filter(F.col("vec_id") < n_queries)
+                   .select("vec_id", "embedding").collect(),
+                   key=lambda r: r[0])
+    qvecs = [[float(x) for x in r[1]] for r in qrows]
+    probe_lists = select_probes_batch(vidx.centroids, qvecs, IVF_PROBE)
+    n_words = int(vidx.bq["words"])
     batch = [(int(r[0]), qv, [int(p) for p in ps],
               similarity.bq_pack_np(np.asarray(qv, dtype=np.float64)))
              for r, qv, ps in zip(qrows, qvecs, probe_lists)]
@@ -626,7 +499,7 @@ def bq_batch_published(spark: SparkSession, sf_dir: str,
                                 .bitwiseXOR(F.element_at("qwords", w + 1)))
     wq = Window.partitionBy("query_id").orderBy(F.asc("hamming"),
                                                 F.asc("vec_id"))
-    cands = (bq_codes.filter(F.col("cell").isin(union_probes))
+    cands = (vidx.bq_codes.filter(F.col("cell").isin(union_probes))
              .select("vec_id", "bq", F.col("cell").cast("int").alias("cell"))
              .join(F.broadcast(bdf),
                    F.array_contains(F.col("probes"), F.col("cell")))
@@ -634,7 +507,7 @@ def bq_batch_published(spark: SparkSession, sf_dir: str,
              .withColumn("hrank", F.row_number().over(wq))
              .filter(F.col("hrank") <= PQ_RERANK)
              .drop("hrank"))
-    raw = (raw_src.filter(F.col("cell").isin(union_probes))
+    raw = (vidx.vectors.filter(F.col("cell").isin(union_probes))
            .select("vec_id", "embedding"))
     w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"),
                                                 F.asc("vec_id"))
@@ -647,43 +520,6 @@ def bq_batch_published(spark: SparkSession, sf_dir: str,
             .filter(F.col("rank") <= ANN_K)
             .select("query_id", "vec_id", "hamming", "sim",
                     F.col("rank").cast("int").alias("rank")))
-
-
-def _bq_storeless_one(spark: SparkSession, sf_dir: str,
-                      qid: int) -> DataFrame:
-    """One query of the storeless BQ compose (shared by the point and
-    batch fallbacks on read-only index roots)."""
-    import numpy as np
-
-    from ..functions.vector import dot as vdot
-    from ..functions.vector import vector_lit
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-        similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-        key=lambda r: r.cent_id)]
-    qvec = [float(x) for x in emb.filter(
-        F.col("vec_id") == qid).select("embedding").collect()[0][0]]
-    dim = len(qvec)
-    qwords = similarity.bq_pack_np(np.asarray(qvec, dtype=np.float64))
-    probes = {int(c) for c, _ in sorted(
-        cents, key=lambda cv: (-round(float(
-            np.asarray(cv[1]) @ np.asarray(qvec)), 6), cv[0]))[:IVF_PROBE]}
-    scan = (emb.select("vec_id", "embedding",
-                       similarity.cell_of(cents).alias("cell"))
-            .filter(F.col("cell").isin(sorted(probes))))
-    cands = (scan.select("vec_id",
-                         similarity.bq_hamming_expr(
-                             similarity.bq_pack_expr("embedding", dim),
-                             qwords).cast("int").alias("hamming"))
-             .orderBy(F.asc("hamming"), F.asc("vec_id"))
-             .limit(PQ_RERANK))
-    return (scan.join(F.broadcast(cands), "vec_id")
-            .select("vec_id", "hamming",
-                    F.round(vdot(F.col("embedding"), vector_lit(qvec)), 6)
-                    .alias("sim"))
-            .orderBy(F.desc("sim"), F.asc("vec_id"))
-            .limit(ANN_K))
 
 
 def ann_topk_bq_batch_published_oracle() -> str:
@@ -864,62 +700,22 @@ LIMIT {ANN_K}
 """
 
 
-def get_ivfpq_residual_published_index(spark: SparkSession, sf_dir: str):
-    """Ensure-and-reopen the RESIDUAL IVFADC store — FAISS's IVFPQ
-    proper: codes quantize `v - centroid(cell)` (the residual
-    distribution is far tighter than raw vectors, so the same code
-    budget reconstructs better), ADC adds dot(q, centroid_cell) back per
-    candidate. Data-derived residual sub-books keep the whole path
-    raw-value oracle-replayable (float->double subtraction is exact and
-    identical in both engines). Own artifact dir (`_vecpqr`), own
-    manifest identity (`-pqr` tag — a raw-coded store is STALE for a
-    residual consumer)."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import _index_root
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_vecpqr")
-    try:
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        vector_store.ensure_vector_index(
-            spark, emb, _os.path.join(sf_dir, "embeddings.parquet"),
-            idx_dir, n_cells=IVF_CENTROIDS, pq_cents=PQ_CENTS,
-            pq_residual=True, n_rows=n_rows, dim=dim)
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
-
-
 def ann_topk_ivfpq_residual_published(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """Residual-coded IVFADC off the published store: probe-pruned CODE
     scan, ADC = per-probe cell dot (a tiny literal map) + residual LUT
     terms, exact rerank inside the probed raw cells. The DuckDB oracle
     replays assignment → residuals → residual sub-codebooks → codes →
-    cell-term ADC → rerank end to end."""
-    import numpy as np
-
-    vidx = get_ivfpq_residual_published_index(spark, sf_dir)
-    if vidx is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        cmap = {c: np.asarray(v, dtype=np.float64) for c, v in cents}
-        rows = (emb.select("vec_id", "embedding",
-                           similarity.cell_of(cents).alias("cell"))
-                .orderBy(F.asc("vec_id")).limit(PQ_CENTS).collect())
-        R = np.array([np.asarray(r[1], dtype=np.float64)
-                      - cmap[int(r[2])] for r in rows])
-        subbooks = [R[:, lo:hi]
-                    for lo, hi in similarity.pq_bounds(R.shape[1])]
-        return similarity.ivfpq_topk(emb, QUERY_VEC_ID, cents, subbooks,
-                                     IVF_PROBE, ANN_K, PQ_RERANK,
-                                     residual=True)
-    return vidx.ivfpq_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
+    cell-term ADC → rerank end to end. The store is the `vecpqr` entry of
+    `VECTOR_STORES` — FAISS's IVFPQ proper: codes quantize
+    `v - centroid(cell)` (the residual distribution is far tighter than
+    raw vectors, so the same code budget reconstructs better), and
+    data-derived residual sub-books keep the whole path raw-value
+    oracle-replayable (float->double subtraction is exact and identical
+    in both engines); the `-pqr` manifest tag makes a raw-coded store
+    STALE for this consumer."""
+    return get_vector_store(spark, sf_dir, "vecpqr").ivfpq_topk(
+        QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
 
 
 def ann_topk_ivfpq_residual_published_oracle() -> str:
@@ -1040,22 +836,13 @@ def ivf_batch_published(spark: SparkSession, sf_dir: str,
     pruned scan itself (asserted by a job-census test)."""
     from ..sources.vector_store import select_probes_batch
 
-    vidx = get_published_vector_index(spark, sf_dir)
-    if vidx is not None:
-        centroids = vidx.centroids
-        scan = vidx.vectors          # cell = partition column (pruned)
-    else:
-        emb = load_table(spark, sf_dir, "embeddings")
-        centroids = [(r.cent_id, list(r.cvec)) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        scan = emb.select("vec_id", "embedding",
-                          similarity.cell_of(centroids).alias("cell"))
+    vidx = get_vector_store(spark, sf_dir, "vec")
+    scan = vidx.vectors          # cell = partition column (pruned)
     qrows = sorted(scan.filter(F.col("vec_id") < n_queries)
                    .select("vec_id", "embedding").collect(),
                    key=lambda r: r[0])
     qvecs = [[float(x) for x in r[1]] for r in qrows]
-    probe_lists = select_probes_batch(centroids, qvecs, IVF_PROBE)
+    probe_lists = select_probes_batch(vidx.centroids, qvecs, IVF_PROBE)
     batch = [(int(r[0]), qv, ps)
              for r, qv, ps in zip(qrows, qvecs, probe_lists)]
     union_probes = sorted({p for _, _, ps in batch for p in ps})
@@ -1148,28 +935,7 @@ def ivfpq_batch_published(spark: SparkSession, sf_dir: str,
 
     from ..sources.vector_store import select_probes_batch
 
-    vidx = get_ivfpq_published_index(spark, sf_dir)
-    if vidx is None:
-        # Read-only index root: per-query storeless compose, unioned
-        # with the query id attached — same rows, no store.
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        subbooks = similarity.pq_subbooks(emb, PQ_CENTS)
-        out = None
-        for qid in range(n_queries):
-            one = (similarity.ivfpq_topk(emb, qid, cents, subbooks,
-                                         IVF_PROBE, ANN_K, PQ_RERANK)
-                   .select(F.lit(qid).cast("long").alias("query_id"),
-                           "vec_id", "adc_sim", "sim"))
-            out = one if out is None else out.unionByName(one)
-        w0 = Window.partitionBy("query_id").orderBy(F.desc("sim"),
-                                                    F.asc("vec_id"))
-        return (out.withColumn("rank", F.row_number().over(w0))
-                .select("query_id", "vec_id", "adc_sim", "sim",
-                        F.col("rank").cast("int").alias("rank")))
-
+    vidx = get_vector_store(spark, sf_dir, "vecpq")
     qrows = sorted(vidx.vectors.filter(F.col("vec_id") < n_queries)
                    .select("vec_id", "embedding").collect(),
                    key=lambda r: r[0])
@@ -1319,31 +1085,28 @@ def get_kmeans_published_vector_index(spark: SparkSession, sf_dir: str):
     own manifest model identity. Training is gated behind the staleness
     manifest: a FRESH store reopens with its STORED centroids sidecar
     and never re-trains (MLlib's fit is the once-per-corpus-snapshot
-    cost; the reference's analogue is Chroma's one-off collection build,
-    /root/reference/mcp_server/apps/embeddings.py:224-255). Returns None
-    when the index root is unwritable (the get_index fallback
-    discipline)."""
+    cost; the reference's analogue is Chroma's one-off collection
+    build)."""
     import os as _os
 
     from ..sources import vector_store
-    from .lexical import _index_root
+    from .lexical import publish_and_open
 
-    emb = load_table(spark, sf_dir, "embeddings")
     src = _os.path.join(sf_dir, "embeddings.parquet")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_veck")
     model = f"ivf-kmeans-v1-c{IVF_CENTROIDS}"
-    try:
+
+    def ensure_open(idx_dir: str):
         n_rows, dim = _emb_stats(spark, sf_dir)
         if not vector_store.vector_index_is_fresh(
                 idx_dir, src, n_rows, dim, IVF_CENTROIDS, model):
             vector_store.ensure_vector_index(
-                spark, emb, src, idx_dir, IVF_CENTROIDS,
+                spark, load_table(spark, sf_dir, "embeddings"), src,
+                idx_dir, IVF_CENTROIDS,
                 centroids=get_kmeans_codebook(spark, sf_dir),
                 model_name=model)
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
+        return _cached_open(spark, sf_dir, "veck", idx_dir)
+
+    return publish_and_open(sf_dir, "_veck", ensure_open)
 
 
 def ann_topk_ivf_kmeans_published(spark: SparkSession,
@@ -1356,11 +1119,8 @@ def ann_topk_ivf_kmeans_published(spark: SparkSession,
     in-session `ann_topk_ivf_kmeans`, so the trained-codebook published
     path is oracle-checked end-to-end: the oracle recomputes the exact
     top-k and asserts the measured recall clears the floor."""
-    vidx = get_kmeans_published_vector_index(spark, sf_dir)
-    if vidx is None:
-        ann = kmeans_ann_rows(spark, sf_dir).select("vec_id")
-    else:
-        ann = vidx.ivf_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K).select("vec_id")
+    ann = (get_kmeans_published_vector_index(spark, sf_dir)
+           .ivf_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K).select("vec_id"))
     exact = (cosine_topk(spark, sf_dir)
              .orderBy(F.desc("sim"), F.asc("vec_id")).limit(ANN_K)
              .select("vec_id"))
@@ -1387,32 +1147,31 @@ def get_ivfpq_kmeans_published_index(spark: SparkSession, sf_dir: str):
     k-means IVF codebook (cell geometry tracks density) AND per-subspace
     k-means PQ sub-codebooks (reconstruction error tracks the subvector
     distribution) — the quality configuration a deployment publishes
-    with, vs `get_ivfpq_published_index`'s all-data-derived twin that
+    with, vs the `vecpq` store's all-data-derived twin that
     the raw-value oracle replays. Both trainings are gated behind the
     staleness manifest: a FRESH store reopens its stored centroid AND
     sub-codebook sidecars, never re-fits (pinned by test)."""
     import os as _os
 
     from ..sources import vector_store
-    from .lexical import _index_root
+    from .lexical import publish_and_open
 
-    emb = load_table(spark, sf_dir, "embeddings")
     src = _os.path.join(sf_dir, "embeddings.parquet")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_vecpqk")
     model = f"ivfpq-kmeans-v1-c{IVF_CENTROIDS}-pq{PQ_CENTS}"
-    try:
+
+    def ensure_open(idx_dir: str):
         n_rows, dim = _emb_stats(spark, sf_dir)
         if not vector_store.vector_index_is_fresh(
                 idx_dir, src, n_rows, dim, IVF_CENTROIDS, model):
+            emb = load_table(spark, sf_dir, "embeddings")
             vector_store.ensure_vector_index(
                 spark, emb, src, idx_dir, IVF_CENTROIDS,
                 centroids=get_kmeans_codebook(spark, sf_dir),
                 model_name=model, pq_cents=PQ_CENTS,
                 pq_subbooks=similarity.kmeans_subbooks(emb, PQ_CENTS))
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
+        return _cached_open(spark, sf_dir, "vecpqk", idx_dir)
+
+    return publish_and_open(sf_dir, "_vecpqk", ensure_open)
 
 
 def ann_topk_ivfpq_kmeans_published(spark: SparkSession,
@@ -1424,16 +1183,9 @@ def ann_topk_ivfpq_kmeans_published(spark: SparkSession,
     iterative/FP-order dependent, so the registered query is the
     recall-bound REPORT both kmeans paths use (exact leg + floor; raw
     rows remain available on the index handle)."""
-    vidx = get_ivfpq_kmeans_published_index(spark, sf_dir)
-    if vidx is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        ann = similarity.ivfpq_topk(
-            emb, QUERY_VEC_ID, get_kmeans_codebook(spark, sf_dir),
-            similarity.kmeans_subbooks(emb, PQ_CENTS), IVF_PROBE, ANN_K,
-            PQ_RERANK).select("vec_id")
-    else:
-        ann = (vidx.ivfpq_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
-               .select("vec_id"))
+    ann = (get_ivfpq_kmeans_published_index(spark, sf_dir)
+           .ivfpq_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
+           .select("vec_id"))
     exact = (cosine_topk(spark, sf_dir)
              .orderBy(F.desc("sim"), F.asc("vec_id")).limit(ANN_K)
              .select("vec_id"))
@@ -1466,15 +1218,8 @@ def vector_index_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute); the DuckDB oracle recomputes every assignment from raw
     vectors, so the published partitioning itself is what gets
     hash-checked. One row per occupied cell: (cell, n_vecs, share)."""
-    vidx = get_published_vector_index(spark, sf_dir)
-    if vidx is not None:
-        vecs = vidx.vectors.select(F.col("cell").cast("int").alias("cell"))
-    else:
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = [(r.cent_id, r.cvec) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        vecs = emb.select(similarity.cell_of(cents).alias("cell"))
+    vecs = (get_vector_store(spark, sf_dir, "vec").vectors
+            .select(F.col("cell").cast("int").alias("cell")))
     total = vecs.agg(F.count(F.lit(1)).alias("total"))
     return (vecs.groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -1526,27 +1271,19 @@ def ivf_probe_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the target-quantile of that rank distribution — no grid search
     (what FAISS autotune measures by re-querying per candidate value).
 
-    Runs against the PUBLISHED store's own assignments when the artifact
-    exists (the partition column is what gets governed), else the
-    in-session `data_centroids` twin; the DuckDB oracle recomputes
+    Runs against the PUBLISHED store's own assignments (the partition
+    column is what gets governed); the DuckDB oracle recomputes
     truth, assignments, probe ranks, AND the order statistic from raw
     vectors, so the chosen n_probe — and the `measured_recall >=
     recall_target` invariant — is value-hash-checked end to end."""
     from .pin_audit import record
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vidx = get_published_vector_index(spark, sf_dir)
-    if vidx is not None:
-        cents = vidx.centroids
-        assigned = vidx.vectors.select("vec_id", "cell")
-    else:
-        cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        assigned = None
+    vidx = get_vector_store(spark, sf_dir, "vec")
     return similarity.governed_probe_report(
-        emb, cents, sample_n=PROBE_GOV_SAMPLE, truth_k=ANN_K,
-        target_recall=PROBE_GOV_TARGET, assigned=assigned,
+        emb, vidx.centroids, sample_n=PROBE_GOV_SAMPLE, truth_k=ANN_K,
+        target_recall=PROBE_GOV_TARGET,
+        assigned=vidx.vectors.select("vec_id", "cell"),
         pin=lambda df: record("probe_gov_depths", sf_dir,
                               df).localCheckpoint())
 
@@ -1633,22 +1370,13 @@ def ivfpq_rerank_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin = lambda df: record("rerank_gov_depths", sf_dir,  # noqa: E731
                             df).localCheckpoint()
-    vidx = get_ivfpq_published_index(spark, sf_dir)
+    vidx = get_vector_store(spark, sf_dir, "vecpq")
     emb = load_table(spark, sf_dir, "embeddings")
-    if vidx is not None:
-        return similarity.governed_rerank_report(
-            emb, vidx.centroids, vidx.pq_subbooks, n_probe=IVF_PROBE,
-            sample_n=PROBE_GOV_SAMPLE, truth_k=ANN_K,
-            target_recall=PROBE_GOV_TARGET, codes=vidx.codes,
-            residual=bool(vidx.pq.get("residual")), pin=pin)
-    cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-        similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-        key=lambda r: r.cent_id)]
-    subbooks = similarity.pq_subbooks(emb, PQ_CENTS)
     return similarity.governed_rerank_report(
-        emb, cents, subbooks, n_probe=IVF_PROBE,
+        emb, vidx.centroids, vidx.pq_subbooks, n_probe=IVF_PROBE,
         sample_n=PROBE_GOV_SAMPLE, truth_k=ANN_K,
-        target_recall=PROBE_GOV_TARGET, pin=pin)
+        target_recall=PROBE_GOV_TARGET, codes=vidx.codes,
+        residual=bool(vidx.pq.get("residual")), pin=pin)
 
 
 def ivfpq_rerank_governance_oracle() -> str:
@@ -1787,8 +1515,8 @@ def bq_rerank_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank at a target CONDITIONAL recall is that distribution's
     target-quantile — the `governed_rerank_report` machinery applied
     verbatim with ADC rank swapped for Hamming rank (round-11 verdict
-    item 3). Runs against the PUBLISHED store's own packed signs when
-    the artifact exists (the stamp audits the artifact); the DuckDB
+    item 3). Runs against the PUBLISHED store's own packed signs (the
+    stamp audits the artifact); the DuckDB
     oracle replays truth, assignments, probes, per-(query, candidate)
     SIGN-MISMATCH counts, the rank window AND the order statistic from
     raw vectors — so Spark's packed xor+popcount ranking is checked
@@ -1797,21 +1525,13 @@ def bq_rerank_governance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin = lambda df: record("bq_rerank_gov_depths", sf_dir,  # noqa: E731
                             df).localCheckpoint()
-    vidx = get_bq_published_index(spark, sf_dir)
+    vidx = get_vector_store(spark, sf_dir, "vecbq")
     emb = load_table(spark, sf_dir, "embeddings")
-    if vidx is not None:
-        return similarity.governed_bq_rerank_report(
-            emb, vidx.centroids, n_probe=IVF_PROBE,
-            sample_n=PROBE_GOV_SAMPLE, truth_k=ANN_K,
-            target_recall=PROBE_GOV_TARGET, bq_codes=vidx.bq_codes,
-            dim=vidx.dim, pin=pin)
-    cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-        similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-        key=lambda r: r.cent_id)]
     return similarity.governed_bq_rerank_report(
-        emb, cents, n_probe=IVF_PROBE,
+        emb, vidx.centroids, n_probe=IVF_PROBE,
         sample_n=PROBE_GOV_SAMPLE, truth_k=ANN_K,
-        target_recall=PROBE_GOV_TARGET, pin=pin)
+        target_recall=PROBE_GOV_TARGET, bq_codes=vidx.bq_codes,
+        dim=vidx.dim, pin=pin)
 
 
 def bq_rerank_governance_oracle() -> str:
@@ -2033,24 +1753,22 @@ def get_cli_vector_index(spark: SparkSession, sf_dir: str):
     n_probe/rerank stamps; round-11 verdict item 2). Same staleness
     manifest as `ingest.update_indexes`' vector entry, so the artifact
     a product deployment maintains is the artifact this query serves
-    from. Returns None when the index root is unwritable."""
+    from."""
     import os as _os
 
     from ..ingest import _vector_index_build, _vector_manifest
-    from ..sources import vector_store
     from ..sources.manifest import ensure_index
-    from .lexical import _index_root
+    from .lexical import publish_and_open
 
     src = _os.path.join(sf_dir, "documents.parquet")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_veccli")
-    try:
+
+    def ensure_open(idx_dir: str):
         n_rows = spark.read.parquet(src).count()
         ensure_index(idx_dir, _vector_manifest(src, n_rows),
                      lambda: _vector_index_build(spark, src, idx_dir))
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
+        return _cached_open(spark, sf_dir, "veccli", idx_dir)
+
+    return publish_and_open(sf_dir, "_veccli", ensure_open)
 
 
 def ann_topk_bq_cli_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2075,19 +1793,12 @@ def ann_topk_bq_cli_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stored vectors are the L2-normalized encoder output, so
     round6(dot(v, q_store)) equals the oracle's integer replay
     round6(num / (sqrt(ssq) * qn)) — same quotient, the store's single
-    normalize division folded in; the raw-integer re-encode remains
-    only as the unwritable-root fallback where no artifact exists."""
+    normalize division folded in."""
     from ..functions.vector import dot as vdot
     from ..functions.vector import norm as vnorm
     from ..functions.vector import vector_lit
 
     vidx = get_cli_vector_index(spark, sf_dir)
-    if vidx is None:
-        # unwritable index root: no artifact to serve or regress — the
-        # raw-integer exact leg (the embed_and_search discipline)
-        # doubles as the ANN leg and the report stays green
-        exact = _cli_exact_topk_reencode(spark, sf_dir)
-        return _kmeans_recall_report("ann_topk_bq_cli_store", exact, exact)
     q_store = vidx.query_vector(0)
     exact = (vidx.vectors
              .filter(F.col(vidx.id_col) != 0)
@@ -2105,40 +1816,6 @@ def ann_topk_bq_cli_store(spark: SparkSession, sf_dir: str) -> DataFrame:
            .limit(ANN_K)
            .select(F.col("doc_id").alias("vec_id")))
     return _kmeans_recall_report("ann_topk_bq_cli_store", ann, exact)
-
-
-def _cli_exact_topk_reencode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fallback exact top-k when no CLI store artifact can exist
-    (unwritable index root): re-encode the corpus with the raw-integer
-    hash embedder and rank by the bit-stable integer cosine."""
-    import math as _math
-
-    from ..functions.vector import dot as vdot
-    from ..functions.vector import norm as vnorm
-    from ..functions.vector import vector_lit
-    from ..operators.embedder import (embed_column, encode_query,
-                                      spread_for_encode)
-
-    docs = load_table(spark, sf_dir, "documents")
-    q_text = docs.filter(F.col("doc_id") == 0).select("text").collect()[0][0]
-    docs = spread_for_encode(docs)
-    q_raw = encode_query(q_text, CLI_EMBED_DIM, backend="hash",
-                         normalize=False)
-    qn = _math.sqrt(sum(t * t for t in q_raw))
-    raw = embed_column("text", CLI_EMBED_DIM, backend="hash",
-                       normalize=False)
-    raw_emb = (docs.filter(F.col("doc_id") != 0)
-               .select("doc_id", raw.alias("emb"))
-               .localCheckpoint(eager=False))
-    return (raw_emb
-            .select("doc_id", "emb", vnorm("emb").alias("emb_norm"))
-            .filter(F.col("emb_norm") > 0)
-            .select(F.col("doc_id").alias("vec_id"),
-                    F.round(vdot("emb", vector_lit(q_raw))
-                            / (F.col("emb_norm") * F.lit(qn)), 6)
-                    .alias("sim"))
-            .orderBy(F.desc("sim"), F.asc("vec_id")).limit(ANN_K)
-            .select("vec_id"))
 
 
 def ann_topk_bq_cli_store_oracle() -> str:
@@ -2262,9 +1939,6 @@ LIMIT {ANN_K}
 """
 
 
-PQ_CENTS = 4
-PQ_RERANK = 20
-
 
 def ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-compressed ANN with ADC + exact rerank (see
@@ -2345,33 +2019,6 @@ LIMIT {ANN_K}
 """
 
 
-def get_ivfpq_published_index(spark: SparkSession, sf_dir: str):
-    """Ensure-and-reopen the published IVFADC store for this SF — the
-    same celled layout as `get_published_vector_index` plus the
-    `codes/cell=K/` PQ table and sub-codebook sidecar (pq_cents in the
-    manifest identity, so the IVF-only artifact is never silently
-    reused). Own artifact dir (`_vecpq`) keeps the IVF-only store's
-    bytes stable for its reuse tests; a deployment publishes ONE store
-    with pq_cents set."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import _index_root
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    token = sf_dir.strip("/").replace("/", "_")
-    idx_dir = _os.path.join(_index_root(), f"{token}_vecpq")
-    try:
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        vector_store.ensure_vector_index(
-            spark, emb, _os.path.join(sf_dir, "embeddings.parquet"),
-            idx_dir, n_cells=IVF_CENTROIDS, pq_cents=PQ_CENTS,
-            n_rows=n_rows, dim=dim)
-        return _cached_open_vidx(spark, idx_dir)
-    except OSError:
-        return None
-
-
 def ann_topk_ivfpq_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC off the published store — FAISS's billion-scale IVF+PQ
     serving shape (cf. the HNSW recall/rerank trade the reference
@@ -2382,19 +2029,11 @@ def ann_topk_ivfpq_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's LUT inlined as literals (JVM projection, no Python on the
     corpus-sized path), and only the ADC top-`PQ_RERANK` survivors touch
     raw vectors inside the same probed cells. The DuckDB oracle replays
-    encode → cell restriction → ADC → exact rerank end to end."""
-    vidx = get_ivfpq_published_index(spark, sf_dir)
-    if vidx is None:
-        # Read-only index root: same results through the storeless
-        # compose (encode-in-pass over the probed cells).
-        emb = load_table(spark, sf_dir, "embeddings")
-        cents = [(r.cent_id, list(r.cvec)) for r in sorted(
-            similarity.data_centroids(emb, IVF_CENTROIDS).collect(),
-            key=lambda r: r.cent_id)]
-        subbooks = similarity.pq_subbooks(emb, PQ_CENTS)
-        return similarity.ivfpq_topk(emb, QUERY_VEC_ID, cents, subbooks,
-                                     IVF_PROBE, ANN_K, PQ_RERANK)
-    return vidx.ivfpq_topk(QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
+    encode → cell restriction → ADC → exact rerank end to end. The
+    store is the `vecpq` entry of `VECTOR_STORES`: the celled layout
+    plus the `codes/cell=K/` PQ table and sub-codebook sidecar."""
+    return get_vector_store(spark, sf_dir, "vecpq").ivfpq_topk(
+        QUERY_VEC_ID, IVF_PROBE, ANN_K, PQ_RERANK)
 
 
 def ann_topk_ivfpq_batch_published_oracle() -> str:

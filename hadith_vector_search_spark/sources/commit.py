@@ -102,7 +102,11 @@ def clone_store(src_dir: str, dst_dir: str) -> None:
     re-publish of the same rows pays a full read + exchange + write +
     per-partition-dir task commits for bytes that already exist in
     exactly the target layout (on a lake this is a table-format shallow
-    clone / snapshot branch, the same metadata-only operation)."""
+    clone / snapshot branch, the same metadata-only operation). Raises
+    FileExistsError when `dst_dir` exists and is not empty: linking
+    over a stale tree would mix its files with the source's."""
+    if os.path.isdir(dst_dir) and os.listdir(dst_dir):
+        raise FileExistsError(f"clone destination {dst_dir} is not empty")
     recover(src_dir)
     os.makedirs(dst_dir, exist_ok=True)
     skip = {JOURNAL_NAME, f".{JOURNAL_NAME}.tmp", STAGING_NAME}

@@ -718,7 +718,6 @@ def streaming_vector_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..plans import semantic as sem_plans
-    from ..plans.semantic import IVF_CENTROIDS
     from ..sources import load_table, vector_store
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -728,21 +727,16 @@ def streaming_vector_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(work, "ckpt")
     try:
         # Fork the working store off the published per-corpus-snapshot
-        # IVF index when it is available — a FILE-LEVEL clone
-        # (`commit.clone_store`: hardlink/copy of the settled dirs), not
-        # a Spark re-publish of rows the published store already holds
-        # in exactly this layout (guide §6; the seeded publish paid a
-        # read + rebalance exchange + per-cell-dir write per
-        # invocation). Same codebook, same assignment arithmetic, same
-        # layout stamps. Unwritable index root (pub is None) falls back
-        # to the live publish; the oracle recomputes every assignment
-        # from raw vectors either way.
-        pub = sem_plans.get_published_vector_index(spark, sf_dir)
-        if pub is not None:
-            commit_store.clone_store(pub.index_dir, store)
-        else:
-            vector_store.publish_vector_index(emb, store,
-                                              n_cells=IVF_CENTROIDS)
+        # IVF index — a FILE-LEVEL clone (`commit.clone_store`:
+        # hardlink/copy of the settled dirs), not a Spark re-publish of
+        # rows the published store already holds in exactly this layout
+        # (the seeded publish paid a read + rebalance exchange + per-
+        # cell-dir write per invocation). Same codebook, same
+        # assignment arithmetic, same layout stamps; the oracle
+        # recomputes every assignment from raw vectors.
+        commit_store.clone_store(
+            sem_plans.get_vector_store(spark, sf_dir, "vec").index_dir,
+            store)
         _vector_change_feed(emb).repartition(3).write.mode(
             "overwrite").parquet(src)
 
@@ -849,7 +843,6 @@ def streaming_lsh_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..plans import semantic as sem_plans
-    from ..plans.semantic import LSH_PLANES
     from ..sources import load_table, vector_store
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -859,25 +852,17 @@ def streaming_lsh_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(work, "ckpt")
     try:
         # Fork the working store off the published per-corpus-snapshot
-        # LSH index when available — a FILE-LEVEL clone
-        # (`commit.clone_store`), not a Spark re-publish of the sigs
-        # rows the published store already holds bucket-partitioned
-        # (guide §6, as the vector twin; the seeded publish paid a read
-        # + rebalance exchange + ~2^n_planes per-bucket-dir writes per
-        # invocation). Same planes, same sign arithmetic, same layout
-        # stamps (the published n_flip governance stamp rides along
-        # inert — nothing in the twin resolves it, which is what
-        # govern=False skipped on the old seeded path). Unwritable index
-        # root falls back to the live publish (govern=False: the twin's
-        # throwaway store never serves, so the publish-time flip-count
-        # measurement pass is pure overhead there).
-        pub = sem_plans.get_published_lsh_index(spark, sf_dir)
-        if pub is not None:
-            commit_store.clone_store(pub.index_dir, store)
-        else:
-            vector_store.publish_lsh_index(emb, store,
-                                           n_planes=LSH_PLANES,
-                                           govern=False)
+        # LSH index — a FILE-LEVEL clone (`commit.clone_store`), not a
+        # Spark re-publish of the sigs rows the published store already
+        # holds bucket-partitioned (as the vector twin; the
+        # seeded publish paid a read + rebalance exchange + ~2^n_planes
+        # per-bucket-dir writes per invocation). Same planes, same sign
+        # arithmetic, same layout stamps (the published n_flip
+        # governance stamp rides along inert — nothing in the twin
+        # resolves it).
+        commit_store.clone_store(
+            sem_plans.get_published_lsh_index(spark, sf_dir).index_dir,
+            store)
         _vector_change_feed(emb).repartition(3).write.mode(
             "overwrite").parquet(src)
 
@@ -996,19 +981,13 @@ def streaming_window_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # invocation (guide §6 — the streaming_neardup_ingest store-read
         # discipline applied to the old side); the batch side stays
         # live, and the oracle replays windowing from raw text. The fork
-        # is a FILE-LEVEL clone (`commit.clone_store`) when the
-        # published store exists — the seeded Spark re-publish paid a
-        # docs.count() (bucket derivation) + read + rebalance exchange +
-        # per-dbucket-dir writes per invocation for rows already on disk
-        # in exactly this layout; the session-pin fallback keeps the
-        # seeded publish when the index root is unwritable.
-        widx_pub = dedup_plans.get_published_window_store(spark, sf_dir)
-        if widx_pub is not None:
-            commit_store.clone_store(widx_pub.index_dir, store)
-        else:
-            window_store.publish_window_index(
-                docs, store,
-                windows=dedup_plans.get_window_index(spark, sf_dir))
+        # is a FILE-LEVEL clone (`commit.clone_store`) — the seeded Spark
+        # re-publish paid a docs.count() (bucket derivation) + read +
+        # rebalance exchange + per-dbucket-dir writes per invocation for
+        # rows already on disk in exactly this layout.
+        commit_store.clone_store(
+            dedup_plans.get_published_window_store(spark, sf_dir).index_dir,
+            store)
         upd = (docs.filter((F.col("doc_id") % 5 == 0)
                            & (F.col("doc_id") % 13 != 0))
                .select("doc_id",
@@ -1142,20 +1121,15 @@ def streaming_simhash_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # identity) instead of re-fingerprinting the corpus per
         # invocation — guide §6, the neardup-twin store-read discipline;
         # the oracle recomputes every fingerprint from merged raw text.
-        # The seed is a FILE-LEVEL clone (`commit.clone_store`) when the
-        # store exists — the seeded Spark re-publish paid a docs.count()
-        # + read + rebalance exchange + per-dbucket-dir writes per
-        # invocation for rows already on disk in this exact layout; the
-        # session-pin fallback keeps the seeded publish.
-        fidx_pub = dedup_plans.get_published_frame_store(
-            spark, sf_dir, "simhash", {"n_bits": SIMHASH_BITS})
-        if fidx_pub is not None:
-            commit_store.clone_store(fidx_pub.index_dir, store)
-        else:
-            frame_store.publish_frame_store(
-                docs, store, "simhash", {"n_bits": SIMHASH_BITS},
-                rows=dedup_plans.get_simhash_index(spark, sf_dir,
-                                                   SIMHASH_BITS))
+        # The seed is a FILE-LEVEL clone (`commit.clone_store`) — the
+        # seeded Spark re-publish paid a docs.count() + read + rebalance
+        # exchange + per-dbucket-dir writes per invocation for rows
+        # already on disk in this exact layout.
+        commit_store.clone_store(
+            dedup_plans.get_published_frame_store(
+                spark, sf_dir, "simhash",
+                {"n_bits": SIMHASH_BITS}).index_dir,
+            store)
         upd = (docs.filter((F.col("doc_id") % 5 == 0)
                            & (F.col("doc_id") % 13 != 0))
                .select("doc_id",
@@ -1230,19 +1204,13 @@ def streaming_minhash_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Seed from the published minhash signature store (guide §6, as
         # the simhash twin): the shingle+sha pass was paid once at that
         # store's publish; the oracle re-shingles merged raw text. The
-        # seed is a FILE-LEVEL clone (`commit.clone_store`) when the
-        # store exists, the seeded Spark publish only the unwritable-
-        # index-root fallback (see the simhash twin).
-        fidx_pub = dedup_plans.get_published_frame_store(
-            spark, sf_dir, "minhash",
-            {"w": SHINGLE_W, "n_hashes": N_HASHES})
-        if fidx_pub is not None:
-            commit_store.clone_store(fidx_pub.index_dir, store)
-        else:
-            frame_store.publish_frame_store(
-                docs, store, "minhash",
-                {"w": SHINGLE_W, "n_hashes": N_HASHES},
-                rows=dedup_plans.get_minhash_index(spark, sf_dir))
+        # seed is a FILE-LEVEL clone (`commit.clone_store`, see the
+        # simhash twin).
+        commit_store.clone_store(
+            dedup_plans.get_published_frame_store(
+                spark, sf_dir, "minhash",
+                {"w": SHINGLE_W, "n_hashes": N_HASHES}).index_dir,
+            store)
         upd = (docs.filter((F.col("doc_id") % 5 == 0)
                            & (F.col("doc_id") % 13 != 0))
                .select("doc_id",

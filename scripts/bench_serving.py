@@ -59,11 +59,9 @@ def bench_sf(spark, sf_dir: str, n: int) -> dict:
                  if r.source is not None]
     assert narrators
     # reopened quantized-tier store handles for the point-serving rows
-    sq_idx = semantic.get_sq8_published_index(spark, sf_dir)
-    bq_idx = semantic.get_bq_published_index(spark, sf_dir)
-    pq_idx = semantic.get_ivfpq_published_index(spark, sf_dir)
-    assert sq_idx is not None and bq_idx is not None
-    assert pq_idx is not None
+    sq_idx = semantic.get_vector_store(spark, sf_dir, "vecsq")
+    bq_idx = semantic.get_vector_store(spark, sf_dir, "vecbq")
+    pq_idx = semantic.get_vector_store(spark, sf_dir, "vecpq")
     assert pq_idx.enable_interactive(), "resident PQ row needs the tier"
     # resident quantized point tier (round-11 verdict item 4): the same
     # opt-in bounded discipline as the engine tiers; assert it actually

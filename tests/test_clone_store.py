@@ -10,8 +10,11 @@ immutable; every mutation is a dir swap)."""
 
 from __future__ import annotations
 
+import errno
 import math
 import os
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -121,3 +124,59 @@ def test_refresh_on_clone_never_touches_source(spark, tmp_path):
     assert got == _sig_rows(spark, ref)
     ids = {r[0] for r in got}
     assert 7 not in ids and 30 in ids
+
+
+def _plain_store(root) -> dict[str, bytes]:
+    """A settled store tree of plain files (no Spark): what clone_store
+    walks is directory structure and bytes, whatever the format."""
+    files = {"_lshlayout.json": b'{"n_planes": 3}',
+             os.path.join("sigs", "bucket=b0", "part-0.parquet"): b"PAR1\x00a",
+             os.path.join("sigs", "bucket=b1", "part-0.parquet"): b"PAR1\x01b",
+             os.path.join("planes", "part-0.parquet"): b"PAR1\x02c"}
+    for rel, data in files.items():
+        path = os.path.join(root, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as fh:
+            fh.write(data)
+    return files
+
+
+def test_clone_refuses_non_empty_destination(tmp_path):
+    """A leftover tree at the destination would mix its files with the
+    source's links: the clone fails fast and leaves it untouched, while
+    an existing EMPTY destination is fine."""
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    files = _plain_store(src)
+    os.makedirs(dst)
+    with open(os.path.join(dst, "stale.parquet"), "wb") as fh:
+        fh.write(b"old")
+    with pytest.raises(FileExistsError):
+        commitlog.clone_store(src, dst)
+    assert os.listdir(dst) == ["stale.parquet"]
+
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    commitlog.clone_store(src, empty)
+    assert set(_file_states(empty)) == set(files)
+
+
+def test_clone_copies_when_hardlink_crosses_devices(tmp_path, monkeypatch):
+    """`os.link` fails with EXDEV when source and destination sit on
+    different devices: every file is then copied — same bytes, and no
+    file shares an inode with the source."""
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    files = _plain_store(src)
+
+    def cross_device(a, b, *args, **kwargs):
+        raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), a, None, b)
+
+    monkeypatch.setattr(os, "link", cross_device)
+    commitlog.clone_store(src, dst)
+    assert set(_file_states(dst)) == set(files)
+    for rel, data in files.items():
+        with open(os.path.join(dst, rel), "rb") as fh:
+            assert fh.read() == data
+        assert (os.stat(os.path.join(dst, rel)).st_ino
+                != os.stat(os.path.join(src, rel)).st_ino)

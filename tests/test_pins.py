@@ -49,9 +49,16 @@ def test_release_covers_semantic_pins_too(spark):
 
     a = sp.cosine_topk(spark, SF_A)
     b = sp.cosine_topk(spark, SF_B)
+    # store handles carry resident tiers: they are released too
+    ha = sp.get_vector_store(spark, SF_A, "vec")
+    hb = sp.get_vector_store(spark, SF_B, "vec")
     n = release_sf_pins(spark, SF_A)
-    assert n >= 1
+    assert n >= 2
     assert sp.cosine_topk(spark, SF_B) is b      # other dir untouched
+    assert sp.get_vector_store(spark, SF_B, "vec") is hb
     a2 = sp.cosine_topk(spark, SF_A)             # released dir rebuilds
     assert a2 is not a
     assert a2.count() == a.count()
+    ha2 = sp.get_vector_store(spark, SF_A, "vec")  # released dir reopens
+    assert ha2 is not ha
+    assert ha2.index_dir == ha.index_dir

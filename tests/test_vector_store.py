@@ -1115,8 +1115,7 @@ def test_bq_batch_parity_with_point_path(spark, tmp_path, sf_dir):
     from hadith_vector_search_spark.plans import semantic
 
     batch = semantic.bq_batch_published(spark, sf_dir, 4).collect()
-    vidx = semantic.get_bq_published_index(spark, sf_dir)
-    assert vidx is not None
+    vidx = semantic.get_vector_store(spark, sf_dir, "vecbq")
     for qid in range(4):
         got = sorted((r.vec_id, r.hamming, r.sim)
                      for r in batch if r.query_id == qid)
@@ -1359,20 +1358,54 @@ def test_split_crash_mid_commit_recovers_whole_epoch(spark, tmp_path,
     assert read_manifest(idx).model_name == "kill-v1+split5"
 
 
-def test_bq_batch_storeless_fallback_matches_store_path(
-        spark, sf_dir, monkeypatch):
-    """Read-only index root: the storeless BQ batch compose (in-pass
-    cell tags + packed signs, ONE broadcast-batch plan — no per-query
-    unions) returns exactly the store path's rows."""
-    from hadith_vector_search_spark.plans import semantic
+def test_unwritable_index_root_falls_back_to_temp_root_once(
+        spark, sf_dir, tmp_path, monkeypatch, capfd):
+    """An index root that cannot be written (here: a path under a
+    regular file — chmod does not stop root) moves the process to ONE
+    temp root: the first store getter tries the configured root once,
+    warns once, and publishes under the temp root; every later getter
+    goes straight there. Rows equal the writable root's."""
+    from hadith_vector_search_spark.plans import dedup as dplans
+    from hadith_vector_search_spark.plans import lexical, semantic
 
-    want = sorted(map(tuple, semantic.bq_batch_published(
-        spark, sf_dir, 4).collect()))
-    monkeypatch.setattr(semantic, "get_bq_published_index",
-                        lambda *_: None)
-    got = sorted(map(tuple, semantic.bq_batch_published(
-        spark, sf_dir, 4).collect()))
-    assert got == want
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def serve():
+        return (rows(semantic.bq_batch_published(spark, sf_dir, 4)),
+                rows(semantic.ann_topk_sq8_published(spark, sf_dir)),
+                rows(dplans.get_window_index(spark, sf_dir)))
+
+    want = serve()
+    blocker = tmp_path / "a_regular_file"
+    blocker.write_text("not a directory")
+    bad_root = str(blocker / "indexes")
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", bad_root)
+    monkeypatch.setattr(lexical, "_FALLBACK_ROOT", None)
+    # fresh handle caches so every getter runs its ensure
+    monkeypatch.setattr(semantic, "_VIDX_CACHE", {})
+    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
+    tries = []
+    publish_and_open = lexical.publish_and_open
+
+    def spy(sf, suffix, fn):
+        def attempt(idx_dir):
+            if idx_dir.startswith(bad_root):
+                tries.append(idx_dir)
+            return fn(idx_dir)
+        return publish_and_open(sf, suffix, attempt)
+
+    monkeypatch.setattr(lexical, "publish_and_open", spy)
+    capfd.readouterr()
+    assert serve() == want
+    assert len(tries) == 1, tries
+    temp_root = lexical._index_root()
+    assert os.path.basename(temp_root).startswith("graft_index_")
+    assert sorted(os.listdir(temp_root)) == sorted(
+        sf_dir.strip("/").replace("/", "_") + sfx
+        for sfx in ("_vecbq", "_vecsq",
+                    f"_win_w{dplans.dedup.DUPSPAN_W}"))
+    assert capfd.readouterr().err.count("is unwritable") == 1
 
 
 def test_ivfpq_resident_point_tier_row_identity(spark, tmp_path):
