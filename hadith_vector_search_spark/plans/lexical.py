@@ -800,32 +800,68 @@ def fts_match_compiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 REFRESH_NEW_ID_OFFSET = 10_000_000
 
 
+def doc_change_feed(docs: DataFrame) -> DataFrame:
+    """The synthetic lexical change feed `(doc_id, text, action)` (same
+    fixture family as plans/lifecycle): revised text for doc_id % 5 == 0,
+    brand-new docs for % 11 == 0 under REFRESH_NEW_ID_OFFSET, deletions of
+    % 13 == 0 (a deletion wins over a revision). Every doc_id appears
+    exactly once — revisions and deletions target disjoint original ids,
+    new docs live above the offset — so per-doc delete + reinsert commutes
+    across any split of the feed into batches. `MERGED_DOCS_SQL` is the
+    corpus it drains to."""
+    did = F.col("doc_id")
+    upd = (docs.filter((did % 5 == 0) & (did % 13 != 0))
+           .select("doc_id",
+                   F.concat(F.col("text"), F.lit(" [rev2]")).alias("text"),
+                   F.lit("upsert").alias("action")))
+    fresh = (docs.filter(did % 11 == 0)
+             .select((did + REFRESH_NEW_ID_OFFSET).alias("doc_id"), "text",
+                     F.lit("upsert").alias("action")))
+    dels = (docs.filter(did % 13 == 0)
+            .select("doc_id", F.lit(None).cast("string").alias("text"),
+                    F.lit("delete").alias("action")))
+    return upd.unionByName(fresh).unionByName(dels)
+
+
+# `doc_change_feed` applied to `documents` in SQL: the `merged` CTE every
+# lexical-feed oracle replays.
+MERGED_DOCS_SQL = f"""merged AS (
+  SELECT doc_id, text || ' [rev2]' AS text
+  FROM documents WHERE doc_id % 5 = 0 AND doc_id % 13 <> 0
+  UNION ALL
+  SELECT doc_id + {REFRESH_NEW_ID_OFFSET}, text
+  FROM documents WHERE doc_id % 11 = 0
+  UNION ALL
+  SELECT doc_id, text
+  FROM documents WHERE doc_id % 5 <> 0 AND doc_id % 13 <> 0
+)"""
+
+
+def split_feed(feed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A change feed's upsert rows (every column but `action`) and its
+    delete ids (the id column, first in the feed)."""
+    action = F.col("action")
+    return (feed.filter(action == "upsert").drop("action"),
+            feed.filter(action == "delete").select(feed.columns[0]))
+
+
 def incremental_postings_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 closed: incremental lexical-index maintenance proven by
-    rebuild-equivalence. A synthetic change batch (same fixture family as
-    plans/lifecycle: revised text for doc_id % 5 == 0, brand-new docs for
-    % 11 == 0 under an id offset, plus deletions for % 13 == 0) is
-    delta-merged into the session's pinned base index with
-    `operators.bm25.refresh_index` — delete + reinsert of the changed
-    docs' postings/doc_len rows, term_df and scoring-view delta merges,
-    exact-stats recompute over the narrow doc_len. The emitted frame is
-    the refreshed DENORMALIZED SCORING VIEW (doc_id, term, tf, dl, df):
-    it folds all three index tables into one checkable relation, so the
-    DuckDB oracle building the same index FROM SCRATCH over the merged
-    corpus pins full equivalence — the incremental path must land on
-    byte-identical global statistics, not just matching postings.
-    Mirrors the reference's per-doc FTS upsert
+    rebuild-equivalence. The whole `doc_change_feed` is delta-merged into
+    the session's pinned base index with `operators.bm25.refresh_index` —
+    delete + reinsert of the changed docs' postings/doc_len rows, term_df
+    and scoring-view delta merges, exact-stats recompute over the narrow
+    doc_len. The emitted frame is the refreshed DENORMALIZED SCORING VIEW
+    (doc_id, term, tf, dl, df): it folds all three index tables into one
+    checkable relation, so the DuckDB oracle building the same index FROM
+    SCRATCH over the merged corpus pins full equivalence — the incremental
+    path must land on byte-identical global statistics, not just matching
+    postings. Mirrors the reference's per-doc FTS upsert
     (/root/reference/mcp_server/apps/fts.py:150-181) at batch scale."""
     docs = load_table(spark, sf_dir, "documents")
     base = get_index(spark, sf_dir)
     base.scoring_view()  # force the delta path, not a lazy full rebuild
-    upd = (docs.filter((F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 13 != 0))
-           .withColumn("text", F.concat(F.col("text"), F.lit(" [rev2]"))))
-    fresh = (docs.filter(F.col("doc_id") % 11 == 0)
-             .withColumn("doc_id", F.col("doc_id") + REFRESH_NEW_ID_OFFSET))
-    changed = upd.unionByName(fresh).select("doc_id", "text")
-    removed = docs.filter(F.col("doc_id") % 13 == 0).select("doc_id")
-    refreshed = bm25.refresh_index(base, changed, removed)
+    refreshed = bm25.refresh_index(base, *split_feed(doc_change_feed(docs)))
     return refreshed.scoring_view()
 
 
@@ -833,14 +869,7 @@ def incremental_postings_refresh_oracle() -> str:
     """From-scratch index build over the merged corpus — the
     rebuild-equivalence side of the refresh check."""
     return f"""
-WITH merged AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN text || ' [rev2]' ELSE text END AS text
-  FROM documents WHERE doc_id % 13 <> 0
-  UNION ALL
-  SELECT doc_id + {REFRESH_NEW_ID_OFFSET} AS doc_id, text
-  FROM documents WHERE doc_id % 11 = 0
-),
+WITH {MERGED_DOCS_SQL},
 toks AS (
   SELECT doc_id, t.term
   FROM merged,

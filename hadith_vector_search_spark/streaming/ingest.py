@@ -1,20 +1,31 @@
 """Structured Streaming surface (SURVEY §2.11): the reference has no
 streaming operators — its closest analogues are checksum-incremental
 indexing and resumable scrapes. Both map naturally onto file-source streams
-with `Trigger.AvailableNow`:
+with `Trigger.AvailableNow`, and every stream here is drained by one of two
+calls:
 
-- `streaming_event_rollup`: event-time tumbling-window aggregation with a
-  watermark over the `events` table read AS A STREAM. AvailableNow drains
-  all available files in one checkpointed run, so the result equals the
-  batch rollup — which is exactly what the DuckDB oracle checks. At scale
-  the same query runs continuously against arriving files with state
+- `_drain_to_memory`: the stateful queries over a table read AS A STREAM
+  (`_table_stream`) — the event-time rollup, gap sessions, per-user totals
+  and arrival-time dedup — land in a memory sink. AvailableNow drains all
+  available files in one checkpointed run, so each result equals its batch
+  counterpart, which is exactly what the DuckDB oracles check. At scale
+  the same queries run continuously against arriving files with state
   bounded by the watermark.
-- `stream_merge_jsonl`: the incremental-ingest DAG (§3.3) as a streaming
-  pipe — new JSONL files arrive, each micro-batch MERGEs into the target
-  table via `foreachBatch` (checksum skip included). On a lake deployment
-  the `foreachBatch` body is a Delta/Iceberg `MERGE INTO`; here it is the
-  plain-parquet merge (read-merge-rewrite), which is the honest local
-  equivalent.
+- `_drain`: every `foreachBatch` loop. `stream_merge_jsonl` is the
+  incremental-ingest DAG (§3.3) as a streaming pipe — new JSONL files
+  arrive, each micro-batch MERGEs into the target table (checksum skip
+  included). On a lake deployment the `foreachBatch` body is a
+  Delta/Iceberg `MERGE INTO`; here it is the plain-parquet merge
+  (read-merge-rewrite), which is the honest local equivalent.
+
+The store twins — streaming queries that keep a lexical index or a
+published store fresh while a change feed arrives (the reference's per-doc
+FTS upsert loop, `mcp_server/apps/fts.py:150-181`) — share one harness,
+`_refresh_twin`, and one of two change feeds, each with one SQL replay of
+the corpus it drains to: `plans.lexical.doc_change_feed` /
+`MERGED_DOCS_SQL` for the postings, window, simhash and minhash twins,
+`_vector_change_feed` / `_MERGED_VECTORS_SQL` for the vector and LSH
+twins.
 
 Snapshot-read recipe for external readers of a merge target: the publish
 protocol swaps each staged partition with two atomic renames, so after a
@@ -37,12 +48,15 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..plans.lexical import MERGED_DOCS_SQL, doc_change_feed, split_feed
 from ..sources import commit as commit_store
+from ..sources import load_table
 from ..sources.ingest import merge_upsert
 
 _MEMSINK_IDS = itertools.count()
@@ -62,6 +76,34 @@ def _memsink_name(kind: str, sf_dir: str) -> str:
     return f"stream_{kind}_sf{sf_token(sf_dir)}_{next(_MEMSINK_IDS)}"
 
 
+def _drain(stream: DataFrame, process, ckpt: str) -> None:
+    """Run `process(batch_df, batch_id)` on every micro-batch available
+    now, checkpointed at `ckpt`, and wait until the source is drained."""
+    (stream.writeStream.foreachBatch(process)
+     .option("checkpointLocation", ckpt)
+     .trigger(availableNow=True).start().awaitTermination())
+
+
+def _drain_to_memory(df: DataFrame, kind: str, sf_dir: str,
+                     mode: str) -> DataFrame:
+    """Drain the streaming `df` into a memory sink named for `kind` and
+    `sf_dir` (see `sf_token`) with output mode `mode`; returns the sink
+    table."""
+    name = _memsink_name(kind, sf_dir)
+    (df.writeStream.format("memory").queryName(name)
+     .outputMode(mode).trigger(availableNow=True).start().awaitTermination())
+    return df.sparkSession.table(name)
+
+
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File-source stream over `<sf_dir>/<table>.parquet`, its schema taken
+    from a batch probe of the same file."""
+    fname = f"{table}.parquet"
+    schema = spark.read.parquet(os.path.join(sf_dir, fname)).schema
+    return (spark.readStream.schema(schema)
+            .option("pathGlobFilter", fname).parquet(sf_dir))
+
+
 def streaming_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily tumbling-window event rollup computed BY THE STREAMING ENGINE
     (file source -> watermark -> window agg -> memory sink, AvailableNow),
@@ -75,11 +117,7 @@ def streaming_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
            .agg(F.count(F.lit(1)).alias("event_count"),
                 F.round(F.sum("value"), 4).alias("sum_value")))
-    name = _memsink_name("rollup", sf_dir)
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.table(name)
+    return (_drain_to_memory(agg, "rollup", sf_dir, "complete")
             .select(F.to_date(F.col("w.start")).alias("day"),
                     "event_type", "event_count", "sum_value"))
 
@@ -88,18 +126,14 @@ SESSION_GAP = "30 minutes"
 
 
 def _events_stream(spark: SparkSession, sf_dir: str):
-    """File-source stream over the events table (shared reader: schema from
-    a batch probe, nanos-as-long conf, event-time normalization). The `ts`
-    column must land as TIMESTAMP for `withWatermark`: nano-long payloads
-    are downcast to micros, and TIMESTAMP_NTZ (how recent parquet writers
-    encode naive timestamps) is cast — value-preserving because the session
-    timezone is pinned to UTC in session.py."""
+    """`_table_stream` over the events table under the nanos-as-long conf,
+    with event-time normalization. The `ts` column must land as TIMESTAMP
+    for `withWatermark`: nano-long payloads are downcast to micros, and
+    TIMESTAMP_NTZ (how recent parquet writers encode naive timestamps) is
+    cast — value-preserving because the session timezone is pinned to UTC
+    in session.py."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    events_path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(events_path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
+    stream = _table_stream(spark, sf_dir, "events")
     dt = dict(stream.dtypes).get("ts")
     if dt == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -123,11 +157,7 @@ def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 4).alias("sum_value")))
-    name = _memsink_name("sessions", sf_dir)
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.table(name)
+    return (_drain_to_memory(agg, "sessions", sf_dir, "complete")
             .select("user_id",
                     F.col("w.start").alias("session_start"),
                     F.col("w.end").alias("session_end"),
@@ -146,19 +176,10 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT text). In production the key set is bounded with
     `withWatermark` + dropDuplicatesWithinWatermark; AvailableNow over a
     static snapshot has no late data, so state here is the full key set."""
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir))
-    kept = (stream
+    kept = (_table_stream(spark, sf_dir, "documents")
             .withColumn("checksum", F.sha2(F.col("text"), 256))
             .dropDuplicates(["source", "checksum"]))
-    name = _memsink_name("dedup", sf_dir)
-    q = (kept.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return (spark.table(name)
+    return (_drain_to_memory(kept, "dedup", sf_dir, "append")
             .groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_unique_docs")))
 
@@ -180,21 +201,14 @@ def streaming_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at-least-once replay overwrites, never double-appends). Per-doc
     matching is stateless, so the drained AvailableNow result equals
     batch `percolate_matches` exactly — the shared oracle checks that."""
-    import tempfile
-
     from ..functions.text import tokenize
     from ..operators.bm25 import percolate
     from ..plans.lexical import BATCH_QUERIES, get_index
 
     term_df = get_index(spark, sf_dir).term_df
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir))
+    stream = _table_stream(spark, sf_dir, "documents")
     work = tempfile.mkdtemp(prefix="stream_percolate_")
     out = os.path.join(work, "alerts")
-    ckpt = os.path.join(work, "ckpt")
     try:
         def process(batch_df: DataFrame, batch_id: int) -> None:
             toks = (batch_df.select(
@@ -205,10 +219,7 @@ def streaming_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             alerts.write.mode("overwrite").parquet(
                 os.path.join(out, f"batch={batch_id}"))
 
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        _drain(stream, process, os.path.join(work, "ckpt"))
         if not os.path.isdir(out):
             return spark.createDataFrame([], "query_id int, doc_id long")
         return (spark.read.parquet(out)
@@ -249,11 +260,7 @@ def streaming_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFram
                stateStructType="n long, total double",
                outputMode="update",
                timeoutConf=GroupStateTimeout.NoTimeout))
-    name = _memsink_name("totals", sf_dir)
-    q = (out.writeStream.format("memory").queryName(name)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(out, "totals", sf_dir, "update")
 
 
 MERGE_PART_COL = "part"
@@ -283,8 +290,6 @@ def _apply_publish(target_dir: str, staging_dir: str, parts: list) -> None:
     should call `recover_pending_publish` first and snapshot the file
     list (or read through a lake-format table layer, which is what this
     publish protocol is standing in for)."""
-    import shutil
-
     for i, p in enumerate(parts):
         if _PUBLISH_FAULT is not None:
             _PUBLISH_FAULT(i)
@@ -311,7 +316,6 @@ def _recover_pending_publish(target_dir: str) -> None:
     pre-commit leftovers — the target was never touched, so just GC them."""
     import glob as _glob
     import json
-    import shutil
 
     mpath = os.path.join(target_dir, MERGE_MANIFEST)
     if os.path.exists(mpath):
@@ -374,8 +378,6 @@ def stream_merge_jsonl(spark: SparkSession, src_dir: str, schema: StructType,
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         import json
-        import os as _os
-        import tempfile
 
         sess = batch.sparkSession
         incoming = batch.dropDuplicates([key])
@@ -391,7 +393,7 @@ def stream_merge_jsonl(spark: SparkSession, src_dir: str, schema: StructType,
         # consuming job and the write reads the pinned blocks (§1.2).
         incoming = (incoming.withColumn(MERGE_PART_COL, part_of)
                     .localCheckpoint(eager=False))
-        staging = f"{target_dir}.staging-{batch_id}-{_os.getpid()}"
+        staging = f"{target_dir}.staging-{batch_id}-{os.getpid()}"
         if os.path.exists(target_dir):
             _recover_pending_publish(target_dir)
             # Touched-partition list via a global collect_set aggregate:
@@ -414,22 +416,19 @@ def stream_merge_jsonl(spark: SparkSession, src_dir: str, schema: StructType,
              .partitionBy(MERGE_PART_COL).parquet(staging))
             # Commit point: manifest lands atomically (write + os.replace).
             fd, tmp = tempfile.mkstemp(dir=target_dir, prefix=".commit-")
-            with _os.fdopen(fd, "w") as fh:
+            with os.fdopen(fd, "w") as fh:
                 json.dump({"staging": staging, "parts": touched}, fh)
-            _os.replace(tmp, os.path.join(target_dir, MERGE_MANIFEST))
+            os.replace(tmp, os.path.join(target_dir, MERGE_MANIFEST))
             _apply_publish(target_dir, staging, touched)
         else:
             # Initial load: stage the whole table, publish with ONE rename.
             (incoming.hint("rebalance", MERGE_PART_COL)
              .write.mode("overwrite")
              .partitionBy(MERGE_PART_COL).parquet(staging))
-            _os.rename(staging, target_dir)
+            os.rename(staging, target_dir)
 
-    stream = spark.readStream.schema(schema).json(src_dir)
-    q = (stream.writeStream.foreachBatch(merge_batch)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
+    _drain(spark.readStream.schema(schema).json(src_dir), merge_batch,
+           checkpoint_dir)
 
 
 def streaming_merge_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,10 +441,7 @@ def streaming_merge_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch MERGE — the oracle IS `incremental_merge_preview`'s SQL, so the
     streaming path is hash-checked against batch semantics, not just
     row-counted."""
-    import tempfile
-
     from ..plans.lifecycle import _incoming
-    from ..sources import load_table
 
     work = tempfile.mkdtemp(prefix="stream_merge_q_")
     src = os.path.join(work, "src")
@@ -480,12 +476,9 @@ def streaming_embed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL with the hash-encoder replay, checking incremental == from-scratch
     at the VECTOR level. Emitted exploded (doc_id, dim, value) like
     `embed_documents_preview`."""
-    import tempfile
-
     from ..operators.embedder import embed_column
     from ..plans.embedding import DIM
     from ..plans.lifecycle import _incoming
-    from ..sources import load_table
 
     def embed_tf(df: DataFrame) -> DataFrame:
         return df.select(
@@ -527,17 +520,13 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-order independent and equals `near_dup_incremental` exactly,
     which is what the shared oracle checks. `maxFilesPerTrigger=1` forces
     genuinely multiple micro-batches over the incoming set."""
-    import tempfile
-
     from ..operators import dedup as dedup_ops
     from ..plans import dedup as dedup_plans
-    from ..sources import load_table
 
     work = tempfile.mkdtemp(prefix="stream_neardup_")
     src = os.path.join(work, "src")
     out = os.path.join(work, "pairs")
     idx = os.path.join(work, "index")
-    ckpt = os.path.join(work, "ckpt")
     try:
         docs = load_table(spark, sf_dir, "documents")
         sharr = dedup_plans.get_shingle_index(spark, sf_dir)
@@ -582,10 +571,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             sigs_new.write.mode("overwrite").parquet(
                 os.path.join(idx, f"batch={batch_id}"))
 
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
+        _drain(stream, process, os.path.join(work, "ckpt"))
 
         if not os.path.isdir(out):
             return spark.createDataFrame(
@@ -598,80 +584,86 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _refresh_twin(spark: SparkSession, feed: DataFrame,
+                  seed_dir: str | None, start, emit, prefix: str) -> DataFrame:
+    """The store-twin harness: keep a store fresh while `feed` arrives.
+
+    In a fresh workdir (`prefix`), forks the working store off the
+    published one at `seed_dir` with a FILE-LEVEL clone
+    (`commit.clone_store`: hardlink/copy of the settled dirs — same
+    derivation identity and layout stamps, no Spark re-publish of rows
+    already on disk in exactly this layout), or skips the clone when
+    `seed_dir` is None (the in-session postings twin). Writes the feed as
+    three parquet files (parquet round-trips every payload exactly,
+    float vectors included) and streams them back one file per
+    micro-batch. `start(store)` is called once, before the drain, and
+    returns the per-batch `refresh(upserts, deletes)` (`split_feed` of
+    each micro-batch). Returns `emit(store)`, computed before the workdir
+    is removed.
+
+    Why a drained store equals a from-scratch build of the merged corpus
+    (what every twin's oracle replays): every refresh is a MERGE by id
+    (delete + reinsert), so a retried micro-batch (foreachBatch's
+    at-least-once contract) is idempotent, and every id appears exactly
+    once across the feed (`doc_change_feed`, `_vector_change_feed`), so
+    per-id delete + reinsert commutes across batches and the result is
+    batch-order independent."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    store = os.path.join(work, "store")
+    src = os.path.join(work, "src")
+    try:
+        if seed_dir is not None:
+            commit_store.clone_store(seed_dir, store)
+        feed.repartition(3).write.mode("overwrite").parquet(src)
+        stream = (spark.readStream.schema(feed.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(src))
+        refresh = start(store)
+        _drain(stream, lambda batch_df, _: refresh(*split_feed(batch_df)),
+               os.path.join(work, "ckpt"))
+        return emit(store)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def streaming_postings_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical-index maintenance AT INGEST — the streaming twin of
     `incremental_postings_refresh` and the full analogue of the
     reference's per-doc FTS upsert loop running against an arriving feed
-    (/root/reference/mcp_server/apps/fts.py:150-181): the same synthetic
-    change feed (revised %5 docs, new %11 docs under an id offset,
-    deletions of %13 docs) streams from JSON files in several
-    micro-batches (`maxFilesPerTrigger=1`), and each batch is
-    delta-merged into the evolving index snapshot with
-    `operators.bm25.refresh_index` inside `foreachBatch` — delete +
-    reinsert of that batch's docs, term_df/scoring-view delta merges,
-    exact-stats recompute. Every doc_id appears exactly once in the feed
-    (deletes target original ids; new docs live above the offset), so
-    per-doc delete+reinsert commutes across batches and the drained
-    snapshot is batch-order independent — it must equal a FROM-SCRATCH
-    build over the merged corpus, which is exactly what the shared
+    (`mcp_server/apps/fts.py:150-181`): `doc_change_feed`
+    drains through `_refresh_twin` with no store to clone, and each
+    micro-batch is delta-merged into the evolving in-session index
+    snapshot with `operators.bm25.refresh_index` — delete + reinsert of
+    that batch's docs, term_df/scoring-view delta merges, exact-stats
+    recompute. The drained snapshot must equal a FROM-SCRATCH build over
+    the merged corpus, which is exactly what the shared
     rebuild-equivalence oracle checks. Emits the final denormalized
     scoring view (doc_id, term, tf, dl, df)."""
-    import tempfile
-
     from ..operators import bm25
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET, get_index
-    from ..sources import load_table
+    from ..plans.lexical import get_index
 
     docs = load_table(spark, sf_dir, "documents")
-    base = get_index(spark, sf_dir)
-    base.scoring_view()  # each batch exercises the delta path
-    upd = (docs.filter((F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 13 != 0))
-           .select("doc_id",
-                   F.concat(F.col("text"), F.lit(" [rev2]")).alias("text"),
-                   F.lit("upsert").alias("action")))
-    fresh = (docs.filter(F.col("doc_id") % 11 == 0)
-             .select((F.col("doc_id") + REFRESH_NEW_ID_OFFSET).alias("doc_id"),
-                     "text", F.lit("upsert").alias("action")))
-    dels = (docs.filter(F.col("doc_id") % 13 == 0)
-            .select("doc_id", F.lit(None).cast("string").alias("text"),
-                    F.lit("delete").alias("action")))
-    feed = upd.unionByName(fresh).unionByName(dels)
+    state = {"idx": get_index(spark, sf_dir)}
+    state["idx"].scoring_view()  # each batch exercises the delta path
 
-    work = tempfile.mkdtemp(prefix="stream_postings_")
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        feed.repartition(3).write.mode("overwrite").json(src)
-        schema = spark.createDataFrame(
-            [], "doc_id long, text string, action string").schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).json(src))
-        state = {"idx": base}
+    def refresh(ups: DataFrame, rms: DataFrame) -> None:
+        state["idx"] = bm25.refresh_index(state["idx"], ups, rms)
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            ups = (batch_df.filter(F.col("action") == "upsert")
-                   .select("doc_id", "text"))
-            rms = batch_df.filter(F.col("action") == "delete").select("doc_id")
-            state["idx"] = bm25.refresh_index(state["idx"], ups, rms)
-
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        return state["idx"].scoring_view()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _refresh_twin(spark, doc_change_feed(docs), None,
+                         lambda _store: refresh,
+                         lambda _store: state["idx"].scoring_view(),
+                         "stream_postings_")
 
 
 VECREF_NEW_ID_OFFSET = 1_000_000
 
 
 def _vector_change_feed(emb: DataFrame) -> DataFrame:
-    """The synthetic embedding change feed the published-store streaming
-    twins share (vector cells AND LSH buckets — both must drain to the
-    same merged corpus their oracles replay): revised %5 vectors
-    (negated — float-exact, replayable), new %11 vectors under an id
-    offset, deletions of %13."""
+    """The synthetic embedding change feed `(vec_id, embedding, label,
+    action)` of the vector and LSH twins: revised % 5 vectors (negated —
+    float-exact, replayable), new % 11 vectors under VECREF_NEW_ID_OFFSET,
+    deletions of % 13 (a deletion wins over a revision). Every vec_id
+    appears exactly once. `_MERGED_VECTORS_SQL` is the corpus it drains
+    to."""
     vid = F.col("vec_id")
     upd = (emb.filter((vid % 5 == 0) & (vid % 13 != 0))
            .select("vec_id",
@@ -690,6 +682,31 @@ def _vector_change_feed(emb: DataFrame) -> DataFrame:
     return upd.unionByName(fresh).unionByName(dels)
 
 
+# `_vector_change_feed` applied to `embeddings` in SQL: the `merged` CTE
+# (vec_id, v) the vector and LSH oracles replay.
+_MERGED_VECTORS_SQL = f"""merged AS (
+  SELECT vec_id, list_transform(embedding, x -> -x) AS v
+  FROM embeddings WHERE vec_id % 5 = 0 AND vec_id % 13 <> 0
+  UNION ALL
+  SELECT vec_id + {VECREF_NEW_ID_OFFSET}, embedding
+  FROM embeddings WHERE vec_id % 11 = 0
+  UNION ALL
+  SELECT vec_id, embedding
+  FROM embeddings WHERE vec_id % 5 <> 0 AND vec_id % 13 <> 0
+)"""
+
+
+def _exploded_vectors(rows: DataFrame, key) -> DataFrame:
+    """A drained vector store's rows as (vec_id, key, dim, value), the
+    values rounded to 6 places — the emit of the vector and LSH twins."""
+    return (rows.select("vec_id", key,
+                        F.posexplode(F.transform(
+                            "embedding",
+                            lambda x: F.round(x.cast("double"), 6)))
+                        .alias("dim", "value"))
+            .localCheckpoint())
+
+
 def streaming_vector_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Published-VECTOR-store maintenance AT INGEST — the streaming twin
     of `ingest._vector_index_delta` and the vector analogue of
@@ -697,80 +714,36 @@ def streaming_vector_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta maintained the published cells, but a streaming corpus left
     them stale until the next batch ingest).
 
-    A base store is published from the raw embeddings table into a
-    workdir (data codebook = the first-IVF_CENTROIDS ids, so the whole
-    run is SQL-replayable), then a synthetic change feed — revised %5
-    vectors (negated: float-exact, replayable), new %11 vectors under an
-    id offset, deletions of %13 — streams in several parquet
-    micro-batches (`maxFilesPerTrigger=1`; parquet feed because JSON
-    would round-trip the float payload lossily), each delta-merged into
-    the store by `sources.vector_store.write_vector_refresh` inside
-    `foreachBatch`: only the touched cell directories rewrite, the
+    `_vector_change_feed` drains through `_refresh_twin` into a clone of
+    the published per-corpus-snapshot IVF store (data codebook = the
+    first-IVF_CENTROIDS ids, so the whole run is SQL-replayable); each
+    micro-batch is delta-merged by `sources.vector_store.
+    write_vector_refresh`: only the touched cell directories rewrite, the
     codebook never moves, and every write goes through the crash-safe
-    staged-journal commit. Refresh is a MERGE by id (delete + reinsert),
-    so a retried micro-batch (foreachBatch's at-least-once contract) is
-    idempotent, and since every id appears exactly once across the feed
-    the drained store is batch-order independent — it must equal a
-    from-scratch publish of the merged corpus under the SAME codebook,
-    which is exactly what the oracle replays (assignment recomputed from
-    raw vectors, the `vector_index_cells` discipline). Emits the final
-    store content exploded as (vec_id, cell, dim, value)."""
-    import tempfile
-
+    staged-journal commit. The drained store must equal a from-scratch
+    publish of the merged corpus under the SAME codebook, which is
+    exactly what the oracle replays (assignment recomputed from raw
+    vectors, the `vector_index_cells` discipline). Emits the final store
+    content exploded as (vec_id, cell, dim, value)."""
     from ..plans import semantic as sem_plans
-    from ..sources import load_table, vector_store
+    from ..sources import vector_store
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="stream_vecref_")
-    store = os.path.join(work, "store")
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        # Fork the working store off the published per-corpus-snapshot
-        # IVF index — a FILE-LEVEL clone (`commit.clone_store`:
-        # hardlink/copy of the settled dirs), not a Spark re-publish of
-        # rows the published store already holds in exactly this layout
-        # (the seeded publish paid a read + rebalance exchange + per-
-        # cell-dir write per invocation). Same codebook, same
-        # assignment arithmetic, same layout stamps; the oracle
-        # recomputes every assignment from raw vectors.
-        commit_store.clone_store(
-            sem_plans.get_vector_store(spark, sf_dir, "vec").index_dir,
-            store)
-        _vector_change_feed(emb).repartition(3).write.mode(
-            "overwrite").parquet(src)
-
-        stream = (spark.readStream.schema(_vector_change_feed(emb).schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
+    def start(store: str):
         # One handle for the whole drain: the codebook sidecar is
         # immutable under refresh and the table reads are lazy, so the
         # per-batch open (a centroid collect job) and the post-commit
         # reopen this loop discards are pure fixed cost (guide §1.2).
         base = vector_store.open_vector_index(spark, store)
+        return lambda ups, rms: vector_store.write_vector_refresh(
+            spark, store, ups, rms, vidx=base, reopen=False)
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            ups = (batch_df.filter(F.col("action") == "upsert")
-                   .select("vec_id", "embedding", "label"))
-            rms = (batch_df.filter(F.col("action") == "delete")
-                   .select("vec_id"))
-            vector_store.write_vector_refresh(spark, store, ups, rms,
-                                              vidx=base, reopen=False)
-
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        vidx = vector_store.open_vector_index(spark, store)
-        return (vidx.vectors
-                .select("vec_id", F.col("cell").cast("int").alias("cell"),
-                        F.posexplode(F.transform(
-                            "embedding",
-                            lambda x: F.round(x.cast("double"), 6)))
-                        .alias("dim", "value"))
-                .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _refresh_twin(
+        spark, _vector_change_feed(load_table(spark, sf_dir, "embeddings")),
+        sem_plans.get_vector_store(spark, sf_dir, "vec").index_dir, start,
+        lambda store: _exploded_vectors(
+            vector_store.open_vector_index(spark, store).vectors,
+            F.col("cell").cast("int").alias("cell")),
+        "stream_vecref_")
 
 
 def streaming_vector_refresh_oracle() -> str:
@@ -785,16 +758,7 @@ WITH cents AS (
   SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings
   WHERE vec_id < {IVF_CENTROIDS}
 ),
-merged AS (
-  SELECT vec_id, list_transform(embedding, x -> -x) AS v
-  FROM embeddings WHERE vec_id % 5 = 0 AND vec_id % 13 <> 0
-  UNION ALL
-  SELECT vec_id + {VECREF_NEW_ID_OFFSET}, embedding
-  FROM embeddings WHERE vec_id % 11 = 0
-  UNION ALL
-  SELECT vec_id, embedding
-  FROM embeddings WHERE vec_id % 5 <> 0 AND vec_id % 13 <> 0
-),
+{_MERGED_VECTORS_SQL},
 cd AS (
   SELECT vec_id, cent_id, round(sum(mv * cv), 6) AS cd
   FROM (
@@ -829,74 +793,34 @@ def streaming_lsh_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh under a streaming corpus; the CLI ingest already maintained
     all three in batch).
 
-    A base `sigs/bucket=B/` store is published from the raw embeddings
-    (hyperplanes = the first-LSH_PLANES ids, immutable under refresh —
-    every stored bucket depends on them), then the SAME synthetic change
-    feed as the vector twin streams in micro-batches, each delta-merged
-    by `sources.vector_store.write_lsh_refresh` inside `foreachBatch`:
-    only touched bucket directories rewrite, through the crash-safe
-    staged-journal commit, idempotent under micro-batch retry (MERGE by
-    id). The drained store must equal a from-scratch publish of the
-    merged corpus under the same planes — the oracle recomputes every
-    sign bucket from raw vectors. Emits the final store content exploded
-    as (vec_id, bucket, dim, value)."""
-    import tempfile
-
+    The same `_vector_change_feed` drains through `_refresh_twin` into a
+    clone of the published `sigs/bucket=B/` store (hyperplanes = the
+    first-LSH_PLANES ids, immutable under refresh — every stored bucket
+    depends on them; the published n_flip governance stamp rides along
+    inert — nothing in the twin resolves it). Each micro-batch is
+    delta-merged by `sources.vector_store.write_lsh_refresh`: only
+    touched bucket directories rewrite, through the crash-safe
+    staged-journal commit. The drained store must equal a from-scratch
+    publish of the merged corpus under the same planes — the oracle
+    recomputes every sign bucket from raw vectors. Emits the final store
+    content exploded as (vec_id, bucket, dim, value)."""
     from ..plans import semantic as sem_plans
-    from ..sources import load_table, vector_store
+    from ..sources import vector_store
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="stream_lshref_")
-    store = os.path.join(work, "store")
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        # Fork the working store off the published per-corpus-snapshot
-        # LSH index — a FILE-LEVEL clone (`commit.clone_store`), not a
-        # Spark re-publish of the sigs rows the published store already
-        # holds bucket-partitioned (as the vector twin; the
-        # seeded publish paid a read + rebalance exchange + ~2^n_planes
-        # per-bucket-dir writes per invocation). Same planes, same sign
-        # arithmetic, same layout stamps (the published n_flip
-        # governance stamp rides along inert — nothing in the twin
-        # resolves it).
-        commit_store.clone_store(
-            sem_plans.get_published_lsh_index(spark, sf_dir).index_dir,
-            store)
-        _vector_change_feed(emb).repartition(3).write.mode(
-            "overwrite").parquet(src)
-
-        schema = _vector_change_feed(emb).schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
+    def start(store: str):
         # One handle for the whole drain (the vector twin's argument:
         # planes are immutable under refresh, reopens were discarded).
         base = vector_store.open_lsh_index(spark, store)
+        return lambda ups, rms: vector_store.write_lsh_refresh(
+            spark, store, ups, rms, lidx=base, reopen=False)
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            ups = (batch_df.filter(F.col("action") == "upsert")
-                   .select("vec_id", "embedding", "label"))
-            rms = (batch_df.filter(F.col("action") == "delete")
-                   .select("vec_id"))
-            vector_store.write_lsh_refresh(spark, store, ups, rms,
-                                           lidx=base, reopen=False)
-
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        lidx = vector_store.open_lsh_index(spark, store)
-        return (lidx.sigs
-                .select("vec_id", F.col("bucket").cast("string")
-                        .alias("bucket"),
-                        F.posexplode(F.transform(
-                            "embedding",
-                            lambda x: F.round(x.cast("double"), 6)))
-                        .alias("dim", "value"))
-                .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _refresh_twin(
+        spark, _vector_change_feed(load_table(spark, sf_dir, "embeddings")),
+        sem_plans.get_published_lsh_index(spark, sf_dir).index_dir, start,
+        lambda store: _exploded_vectors(
+            vector_store.open_lsh_index(spark, store).sigs,
+            F.col("bucket").cast("string").alias("bucket")),
+        "stream_lshref_")
 
 
 def streaming_lsh_refresh_oracle() -> str:
@@ -910,16 +834,7 @@ WITH planes AS (
   SELECT vec_id AS plane_id, embedding AS pvec FROM embeddings
   WHERE vec_id < {LSH_PLANES}
 ),
-merged AS (
-  SELECT vec_id, list_transform(embedding, x -> -x) AS v
-  FROM embeddings WHERE vec_id % 5 = 0 AND vec_id % 13 <> 0
-  UNION ALL
-  SELECT vec_id + {VECREF_NEW_ID_OFFSET}, embedding
-  FROM embeddings WHERE vec_id % 11 = 0
-  UNION ALL
-  SELECT vec_id, embedding
-  FROM embeddings WHERE vec_id % 5 <> 0 AND vec_id % 13 <> 0
-),
+{_MERGED_VECTORS_SQL},
 pd AS (
   SELECT vec_id, plane_id, sum(mv * pv) AS d
   FROM (
@@ -951,82 +866,30 @@ def streaming_window_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH buckets, and now the span-dedup window store all stay fresh
     under a streaming corpus).
 
-    A base doc-bucket-partitioned window store is published from the
-    documents table, then the lexical change feed (revised %5 docs, new
-    %11 docs above an id offset, deletions of %13) streams in JSON
-    micro-batches, each delta-merged by
-    `sources.window_store.write_window_refresh` inside `foreachBatch`:
-    only the `dbucket` dirs the batch's doc ids hash to rewrite, through
-    the crash-safe staged-journal commit, idempotent under micro-batch
-    retry (delete + reinsert by doc id). Every doc id appears once in
-    the feed, so the drained store equals a from-scratch window index of
-    the merged corpus. Emits the SPAN REPORT computed off the drained
+    `doc_change_feed` drains through `_refresh_twin` into a clone of the
+    per-corpus-snapshot published window store (the corpus is never
+    re-tokenized per invocation — guide §6, the streaming_neardup_ingest
+    store-read discipline applied to the old side; the oracle replays
+    windowing from raw text). Each micro-batch is delta-merged by
+    `sources.window_store.write_window_refresh`: only the `dbucket` dirs
+    the batch's doc ids hash to rewrite, through the crash-safe
+    staged-journal commit. Emits the SPAN REPORT computed off the drained
     store — the consumer-visible result — which the oracle replays from
     the merged raw text (windowing + duplication + island merge)."""
-    import tempfile
-
     from ..operators import dedup as dedup_ops
     from ..plans import dedup as dedup_plans
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET
-    from ..sources import load_table, window_store
+    from ..sources import window_store
 
     docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="stream_winref_")
-    store = os.path.join(work, "store")
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        # Fork the working store off the per-corpus-snapshot published
-        # window index instead of re-tokenizing the corpus per
-        # invocation (guide §6 — the streaming_neardup_ingest store-read
-        # discipline applied to the old side); the batch side stays
-        # live, and the oracle replays windowing from raw text. The fork
-        # is a FILE-LEVEL clone (`commit.clone_store`) — the seeded Spark
-        # re-publish paid a docs.count() (bucket derivation) + read +
-        # rebalance exchange + per-dbucket-dir writes per invocation for
-        # rows already on disk in exactly this layout.
-        commit_store.clone_store(
-            dedup_plans.get_published_window_store(spark, sf_dir).index_dir,
-            store)
-        upd = (docs.filter((F.col("doc_id") % 5 == 0)
-                           & (F.col("doc_id") % 13 != 0))
-               .select("doc_id",
-                       F.concat(F.col("text"), F.lit(" [rev2]"))
-                       .alias("text"),
-                       F.lit("upsert").alias("action")))
-        fresh = (docs.filter(F.col("doc_id") % 11 == 0)
-                 .select((F.col("doc_id") + REFRESH_NEW_ID_OFFSET)
-                         .alias("doc_id"),
-                         "text", F.lit("upsert").alias("action")))
-        dels = (docs.filter(F.col("doc_id") % 13 == 0)
-                .select("doc_id", F.lit(None).cast("string").alias("text"),
-                        F.lit("delete").alias("action")))
-        feed = upd.unionByName(fresh).unionByName(dels)
-        feed.repartition(3).write.mode("overwrite").json(src)
-
-        schema = spark.createDataFrame(
-            [], "doc_id long, text string, action string").schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).json(src))
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            ups = (batch_df.filter(F.col("action") == "upsert")
-                   .select("doc_id", "text"))
-            rms = (batch_df.filter(F.col("action") == "delete")
-                   .select("doc_id"))
-            window_store.write_window_refresh(spark, store, ups, rms)
-
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        drained = window_store.open_window_index(spark, store)
-        return (dedup_ops.duplicated_spans(docs,
-                                           windows=drained.windows)
-                .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _refresh_twin(
+        spark, doc_change_feed(docs),
+        dedup_plans.get_published_window_store(spark, sf_dir).index_dir,
+        lambda store: lambda ups, rms: window_store.write_window_refresh(
+            spark, store, ups, rms),
+        lambda store: dedup_ops.duplicated_spans(
+            docs, windows=window_store.open_window_index(spark, store).windows
+        ).localCheckpoint(),
+        "stream_winref_")
 
 
 def streaming_window_refresh_oracle() -> str:
@@ -1034,20 +897,10 @@ def streaming_window_refresh_oracle() -> str:
     SQL, then the `duplicated_span_report` windowing + duplication +
     island-merge replay over the MERGED text."""
     from ..operators import dedup as dedup_ops
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET
 
     w = dedup_ops.DUPSPAN_W
     return f"""
-WITH merged AS (
-  SELECT doc_id, text || ' [rev2]' AS text
-  FROM documents WHERE doc_id % 5 = 0 AND doc_id % 13 <> 0
-  UNION ALL
-  SELECT doc_id + {REFRESH_NEW_ID_OFFSET}, text
-  FROM documents WHERE doc_id % 11 = 0
-  UNION ALL
-  SELECT doc_id, text
-  FROM documents WHERE doc_id % 5 <> 0 AND doc_id % 13 <> 0
-),
+WITH {MERGED_DOCS_SQL},
 toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9_؀-ۿ]+'),
@@ -1082,6 +935,33 @@ FROM isl GROUP BY doc_id, gid
 """
 
 
+def _frame_twin(spark: SparkSession, sf_dir: str, deriver: str,
+                params: dict, emit_rows, prefix: str) -> DataFrame:
+    """The frame-store twin: `doc_change_feed` drains through
+    `_refresh_twin` into a clone of the published `deriver` frame store
+    (the per-doc derivation was paid once at that store's publish — guide
+    §6, the neardup-twin store-read discipline), each micro-batch
+    delta-merged by `sources.frame_store.write_frame_refresh` (only the
+    `dbucket` dirs the batch's doc ids hash to rewrite, through the
+    crash-safe staged-journal commit; the derivation comes from the
+    store's layout stamp, never the caller). Emits
+    `emit_rows(docs, drained store rows)`."""
+    from ..plans import dedup as dedup_plans
+    from ..sources import frame_store
+
+    docs = load_table(spark, sf_dir, "documents")
+    return _refresh_twin(
+        spark, doc_change_feed(docs),
+        dedup_plans.get_published_frame_store(
+            spark, sf_dir, deriver, params).index_dir,
+        lambda store: lambda ups, rms: frame_store.write_frame_refresh(
+            spark, store, ups, rms),
+        lambda store: emit_rows(
+            docs, frame_store.open_frame_store(spark, store).rows
+        ).localCheckpoint(),
+        prefix)
+
+
 def streaming_simhash_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Published FRAME-store maintenance AT INGEST — the round-11 member
     of the streaming x durable-store matrix (postings, IVF cells, LSH
@@ -1089,167 +969,39 @@ def streaming_simhash_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     `sources.frame_store`). One twin covers the whole frame family:
     shingles/simhash/winnow share the same store core and the same
     per-doc delta soundness, so maintaining the simhash store here
-    exercises the shared `write_frame_refresh` path end to end.
-
-    A base doc-bucket-partitioned simhash store is published from the
-    documents table, then the SAME lexical change feed as the window
-    twin (revised %5 docs, new %11 docs above the id offset, deletions
-    of %13) streams in JSON micro-batches, each delta-merged by
-    `sources.frame_store.write_frame_refresh` inside `foreachBatch`:
-    only the `dbucket` dirs the batch's doc ids hash to rewrite, through
-    the crash-safe staged-journal commit, idempotent under micro-batch
-    retry (delete + reinsert by doc id; the derivation comes from the
-    store's layout stamp, never the caller). The drained store must
-    equal a from-scratch simhash of the merged corpus — the oracle
-    recomputes every fingerprint from the merged raw text. Emits the
-    bit-string fingerprint view off the drained store."""
-    import tempfile
-
+    exercises the shared `write_frame_refresh` path end to end
+    (`_frame_twin`). The drained store must equal a from-scratch simhash
+    of the merged corpus — the oracle recomputes every fingerprint from
+    the merged raw text. Emits the bit-string fingerprint view off the
+    drained store."""
     from ..operators import dedup as dedup_ops
-    from ..plans import dedup as dedup_plans
     from ..plans.dedup import SIMHASH_BITS
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET
-    from ..sources import frame_store, load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="stream_simref_")
-    store = os.path.join(work, "store")
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        # Seed from the published simhash frame store (same derivation
-        # identity) instead of re-fingerprinting the corpus per
-        # invocation — guide §6, the neardup-twin store-read discipline;
-        # the oracle recomputes every fingerprint from merged raw text.
-        # The seed is a FILE-LEVEL clone (`commit.clone_store`) — the
-        # seeded Spark re-publish paid a docs.count() + read + rebalance
-        # exchange + per-dbucket-dir writes per invocation for rows
-        # already on disk in this exact layout.
-        commit_store.clone_store(
-            dedup_plans.get_published_frame_store(
-                spark, sf_dir, "simhash",
-                {"n_bits": SIMHASH_BITS}).index_dir,
-            store)
-        upd = (docs.filter((F.col("doc_id") % 5 == 0)
-                           & (F.col("doc_id") % 13 != 0))
-               .select("doc_id",
-                       F.concat(F.col("text"), F.lit(" [rev2]"))
-                       .alias("text"),
-                       F.lit("upsert").alias("action")))
-        fresh = (docs.filter(F.col("doc_id") % 11 == 0)
-                 .select((F.col("doc_id") + REFRESH_NEW_ID_OFFSET)
-                         .alias("doc_id"),
-                         "text", F.lit("upsert").alias("action")))
-        dels = (docs.filter(F.col("doc_id") % 13 == 0)
-                .select("doc_id", F.lit(None).cast("string").alias("text"),
-                        F.lit("delete").alias("action")))
-        feed = upd.unionByName(fresh).unionByName(dels)
-        feed.repartition(3).write.mode("overwrite").json(src)
-
-        schema = spark.createDataFrame(
-            [], "doc_id long, text string, action string").schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).json(src))
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            ups = (batch_df.filter(F.col("action") == "upsert")
-                   .select("doc_id", "text"))
-            rms = (batch_df.filter(F.col("action") == "delete")
-                   .select("doc_id"))
-            frame_store.write_frame_refresh(spark, store, ups, rms)
-
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        drained = frame_store.open_frame_store(spark, store)
-        return (dedup_ops.simhash(docs, n_bits=SIMHASH_BITS,
-                                  sigs=drained.rows)
-                .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _frame_twin(
+        spark, sf_dir, "simhash", {"n_bits": SIMHASH_BITS},
+        lambda docs, rows: dedup_ops.simhash(docs, n_bits=SIMHASH_BITS,
+                                             sigs=rows),
+        "stream_simref_")
 
 
 def streaming_minhash_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance for the MINHASH signature frame store —
     round-12 verdict item 6: round 12 made the signatures durable
     (`sources.frame_store._derive_minhash`) but only batch ingest
-    maintained them; postings, vector, LSH, simhash, and window stores
-    all have `foreachBatch` twins, so the signature store gets the same
-    one. Identical harness to `streaming_simhash_refresh` (the shared
-    `write_frame_refresh` core makes the twins one code path): a base
-    doc-bucket-partitioned store of h0..h{N_HASHES-1} signature columns
-    is published from the documents table, the standard change feed
-    (revised %5, new %11 above the id offset, deleted %13) streams in
-    JSON micro-batches, each delta-merged under the crash-safe staged
-    journal — only the touched `dbucket` dirs rewrite, idempotent under
-    retry. The drained store must equal a from-scratch signature build
-    of the merged corpus; the oracle re-shingles and re-hashes the
-    MERGED raw text. Emits the drained signature table."""
-    import tempfile
-
+    maintained them, so the signature store gets the same `_frame_twin`
+    as the simhash store: a doc-bucket-partitioned store of
+    h0..h{N_HASHES-1} signature columns kept fresh under
+    `doc_change_feed`. The drained store must equal a from-scratch
+    signature build of the merged corpus; the oracle re-shingles and
+    re-hashes the MERGED raw text. Emits the drained signature table."""
     from ..operators.dedup import SHINGLE_W
-    from ..plans import dedup as dedup_plans
     from ..plans.dedup import N_HASHES
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET
-    from ..sources import frame_store, load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="stream_mhref_")
-    store = os.path.join(work, "store")
-    src = os.path.join(work, "src")
-    ckpt = os.path.join(work, "ckpt")
-    try:
-        # Seed from the published minhash signature store (guide §6, as
-        # the simhash twin): the shingle+sha pass was paid once at that
-        # store's publish; the oracle re-shingles merged raw text. The
-        # seed is a FILE-LEVEL clone (`commit.clone_store`, see the
-        # simhash twin).
-        commit_store.clone_store(
-            dedup_plans.get_published_frame_store(
-                spark, sf_dir, "minhash",
-                {"w": SHINGLE_W, "n_hashes": N_HASHES}).index_dir,
-            store)
-        upd = (docs.filter((F.col("doc_id") % 5 == 0)
-                           & (F.col("doc_id") % 13 != 0))
-               .select("doc_id",
-                       F.concat(F.col("text"), F.lit(" [rev2]"))
-                       .alias("text"),
-                       F.lit("upsert").alias("action")))
-        fresh = (docs.filter(F.col("doc_id") % 11 == 0)
-                 .select((F.col("doc_id") + REFRESH_NEW_ID_OFFSET)
-                         .alias("doc_id"),
-                         "text", F.lit("upsert").alias("action")))
-        dels = (docs.filter(F.col("doc_id") % 13 == 0)
-                .select("doc_id", F.lit(None).cast("string").alias("text"),
-                        F.lit("delete").alias("action")))
-        feed = upd.unionByName(fresh).unionByName(dels)
-        feed.repartition(3).write.mode("overwrite").json(src)
-
-        schema = spark.createDataFrame(
-            [], "doc_id long, text string, action string").schema
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).json(src))
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            ups = (batch_df.filter(F.col("action") == "upsert")
-                   .select("doc_id", "text"))
-            rms = (batch_df.filter(F.col("action") == "delete")
-                   .select("doc_id"))
-            frame_store.write_frame_refresh(spark, store, ups, rms)
-
-        q = (stream.writeStream.foreachBatch(process)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-        drained = frame_store.open_frame_store(spark, store)
-        return (drained.rows
-                .select("doc_id", *[f"h{j}" for j in range(N_HASHES)])
-                .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _frame_twin(
+        spark, sf_dir, "minhash", {"w": SHINGLE_W, "n_hashes": N_HASHES},
+        lambda _docs, rows: rows.select(
+            "doc_id", *[f"h{j}" for j in range(N_HASHES)]),
+        "stream_mhref_")
 
 
 def streaming_minhash_refresh_oracle() -> str:
@@ -1259,19 +1011,9 @@ def streaming_minhash_refresh_oracle() -> str:
     fewer than SHINGLE_W tokens produce no shingles — absent from the
     store and from the replay alike."""
     from ..plans.dedup import N_HASHES, _sig_cols
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET
 
     return f"""
-WITH merged AS (
-  SELECT doc_id, text || ' [rev2]' AS text
-  FROM documents WHERE doc_id % 5 = 0 AND doc_id % 13 <> 0
-  UNION ALL
-  SELECT doc_id + {REFRESH_NEW_ID_OFFSET}, text
-  FROM documents WHERE doc_id % 11 = 0
-  UNION ALL
-  SELECT doc_id, text
-  FROM documents WHERE doc_id % 5 <> 0 AND doc_id % 13 <> 0
-),
+WITH {MERGED_DOCS_SQL},
 toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '[^a-z0-9_؀-ۿ]+'),
@@ -1293,20 +1035,10 @@ def streaming_simhash_refresh_oracle() -> str:
     SQL, then the standard simhash replay (`plans.dedup.simhash_oracle`)
     over the MERGED text."""
     from ..plans.dedup import SIMHASH_BITS, simhash_oracle
-    from ..plans.lexical import REFRESH_NEW_ID_OFFSET
 
     base = simhash_oracle(SIMHASH_BITS, source="merged").strip()
     assert base.startswith("WITH")
     return f"""
-WITH merged AS (
-  SELECT doc_id, text || ' [rev2]' AS text
-  FROM documents WHERE doc_id % 5 = 0 AND doc_id % 13 <> 0
-  UNION ALL
-  SELECT doc_id + {REFRESH_NEW_ID_OFFSET}, text
-  FROM documents WHERE doc_id % 11 = 0
-  UNION ALL
-  SELECT doc_id, text
-  FROM documents WHERE doc_id % 5 <> 0 AND doc_id % 13 <> 0
-),
+WITH {MERGED_DOCS_SQL},
 {base[len("WITH"):].lstrip()}
 """

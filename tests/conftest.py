@@ -72,6 +72,7 @@ SLOW_TESTS = frozenset({
     "test_layout.py::test_plan_shape_invariant_across_scale_factors",
     "test_lifecycle_streaming.py::test_drop_duplicates_within_watermark_bounds_state",
     "test_lifecycle_streaming.py::test_matches_oracle[embed_documents_preview]",
+    "test_lifecycle_streaming.py::test_matches_oracle[streaming_lsh_refresh]",
     "test_pipeline.py::test_clean_cli_module",
     "test_pipeline.py::test_materialize_clean_corpus_end_to_end",
     "test_plan_hygiene.py::test_no_row_at_a_time_python_and_no_cartesian",
@@ -99,38 +100,37 @@ SLOW_TESTS = frozenset({
 })
 
 
-class _DefinedTests:
-    """Every test each collected file defines, as SLOW_TESTS-style keys,
-    read from the collect reports: before -k/-m/--deselect or a node-id
-    argument narrows the run, so a partial selection never looks like a
-    missing test."""
-
-    def __init__(self) -> None:
-        self.files: set[str] = set()
-        self.keys: set[str] = set()
-
-    def pytest_collectreport(self, report) -> None:
-        if report.passed:
-            for node in report.result:
-                if isinstance(node, pytest.Item):
-                    base = os.path.basename(str(node.path))
-                    self.files.add(base)
-                    self.keys.add(f"{base}::{node.name}")
+# Every test module the run collects, by file name. -k/-m/--deselect, --lf
+# or a node-id argument narrow the items a module yields but leave the
+# module itself collected, so the stale-key check asks the module, never
+# the (possibly partial) item list.
+_MODULES: dict[str, pytest.Module] = {}
 
 
-def pytest_configure(config):
-    config.pluginmanager.register(_DefinedTests(), "defined-tests")
+def pytest_collectstart(collector):
+    if isinstance(collector, pytest.Module):
+        _MODULES[os.path.basename(str(collector.path))] = collector
+
+
+def _is_stale(key: str) -> bool:
+    """A key whose file was collected but whose module-level test function
+    does not generate that item: the function is gone, or, for a
+    `name[param]` key, no longer has that parameter set."""
+    file, name = key.split("::")
+    module = _MODULES.get(file)
+    if module is None:
+        return False
+    func = name.split("[")[0]
+    made = module.ihook.pytest_pycollect_makeitem(
+        collector=module, name=func, obj=getattr(module.obj, func, None))
+    return name not in {item.name for item in made or ()}
 
 
 def pytest_collection_modifyitems(config, items):
     # A stale key (a renamed or deleted slow test) would silently move
-    # the renamed test into the default gate. --lf collects only the
-    # last failures of a file, so the check cannot run there.
-    defined = config.pluginmanager.get_plugin("defined-tests")
-    stale = sorted(k for k in SLOW_TESTS
-                   if k.split("::")[0] in defined.files
-                   and k not in defined.keys)
-    if stale and not config.getoption("lf", False):
+    # the renamed test into the default gate.
+    stale = sorted(k for k in SLOW_TESTS if _is_stale(k))
+    if stale:
         raise pytest.UsageError(
             "SLOW_TESTS in tests/conftest.py names tests that their file "
             "does not define (renamed or deleted?): " + ", ".join(stale))

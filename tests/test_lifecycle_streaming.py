@@ -29,6 +29,15 @@ ORACLE_CHECKED = [
     "streaming_user_sessions",
     "streaming_user_totals_stateful",
     "streaming_merge_jsonl",
+    "incremental_postings_refresh",
+    "streaming_postings_refresh",
+    "streaming_vector_refresh",
+    "streaming_lsh_refresh",
+    "streaming_window_refresh",
+    "streaming_simhash_refresh",
+    "streaming_minhash_refresh",
+    "streaming_percolate",
+    "streaming_neardup_ingest",
 ]
 
 DOC_SCHEMA = StructType([StructField("doc_id", LongType()),
@@ -41,6 +50,39 @@ def test_matches_oracle(spark, duck, sf_dir, name):
     assert name in queries and name in oracles
     problems = compare_query(spark, duck, queries[name], oracles[name], sf_dir)
     assert not problems, problems
+
+
+def test_change_feeds_name_each_id_once_and_split_partitions(spark, sf_dir):
+    """The premise of every store twin's batch-order independence: each id
+    appears exactly once in its change feed, and `split_feed` partitions
+    the feed into upserts (the feed's rows minus `action`) and delete
+    ids."""
+    from hadith_vector_search_spark.plans.lexical import (
+        doc_change_feed, split_feed)
+    from hadith_vector_search_spark.sources import load_table
+    from hadith_vector_search_spark.streaming.ingest import _vector_change_feed
+
+    feeds = [
+        (doc_change_feed(load_table(spark, sf_dir, "documents")), "doc_id"),
+        (_vector_change_feed(load_table(spark, sf_dir, "embeddings")),
+         "vec_id"),
+    ]
+    for feed, key in feeds:
+        rows = feed.collect()
+        by_id = {r[key]: r for r in rows}
+        assert len(by_id) == len(rows), f"{key} repeats in its feed"
+        assert {r.action for r in rows} == {"upsert", "delete"}
+
+        ups, dels = split_feed(feed)
+        assert ups.columns == [c for c in feed.columns if c != "action"]
+        assert dels.columns == [key]
+        up_rows, del_ids = ups.collect(), [r[key] for r in dels.collect()]
+        assert len(up_rows) + len(del_ids) == len(rows)
+        for r in up_rows:
+            full = by_id[r[key]].asDict()
+            assert full.pop("action") == "upsert"
+            assert r.asDict() == full
+        assert all(by_id[i].action == "delete" for i in del_ids)
 
 
 def _write_jsonl(path, rows):
