@@ -117,10 +117,9 @@ class HybridEngine:
         architecture (quran_mcp/search.py's numpy matmul over a loaded
         matrix), and the point-serving layer SCALE.md prescribes for
         sub-second latency, collapsed into this engine for corpora that
-        fit one node. With the doc map resident, scoring, bonuses and
-        dedup also run driver-side in `_score_local_py`, the one Python
-        twin of the Column scoring tail (`_scored_column_tail`); without
-        it the resident candidates are scored by that Column tail.
+        fit one node. Scoring, bonuses and dedup also run driver-side in
+        `_score_local_py`, the one Python twin of the Column scoring tail
+        (`_scored_column_tail`), over the resident doc map.
 
         Bounded: refuses (returns False) above `max_driver_rows` vectors,
         and for id column types that cannot round-trip through the VALUES
@@ -140,9 +139,9 @@ class HybridEngine:
         score idf(df)·sat(tf, dl) is query-independent — the classic
         impact-ordered-index observation — so a request's lexical leg is
         a gather over its terms' arrays plus one grouped sum, no Spark
-        job. With every tier resident a hybrid call runs no Spark job;
-        if the postings bound is exceeded the lexical leg simply stays
-        on Spark (one more job per call).
+        job. A hybrid call runs resident only when every tier its
+        queries use is resident (`_resident_hybrid`); if the postings
+        bound is exceeded, text-leg hybrid calls take the Spark path.
 
         `borrow_vectors_from` (opt-in): a `PublishedVectorIndex` whose
         resident raw matrix this engine SHARES instead of collecting its
@@ -306,8 +305,9 @@ class HybridEngine:
         Bound discipline mirrors enable_interactive: vector/doc-map rows
         over `max_driver_rows` → False (caller re-enables, which refuses
         and releases); postings over `max_driver_postings` → the lexical
-        tier alone degrades to the Spark leg. Returns True when the
-        resident tiers now serve the post-upsert corpus. Row-identity
+        tier alone is dropped (text-leg hybrid calls take the Spark
+        path). Returns True when the resident tiers now serve the
+        post-upsert corpus. Row-identity
         with a fresh enable is pinned by
         test_upsert_delta_equals_fresh_enable."""
         from collections import Counter
@@ -406,24 +406,6 @@ class HybridEngine:
         tiers degrade independently per their own bounds)."""
         return self._mat is not None
 
-    def _fused_literal_df(self, items: list) -> DataFrame:
-        """Fused candidates as a SQL VALUES literal — a genuine
-        LocalRelation, which matters: PySpark's createDataFrame builds an
-        RDD-backed frame whose broadcast-exchange build runs a full Spark
-        job (default-parallelism tasks), while a LocalRelation broadcast
-        builds driver-side with NO job. Doubles travel as
-        CAST('repr' AS DOUBLE) (bare decimal literals parse as DECIMAL in
-        Spark SQL; the string cast round-trips the exact double)."""
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
-        if not items:
-            return (self.docs.select(self.id_col).limit(0)
-                    .withColumn("fts_score", F.lit(0.0))
-                    .withColumn("vector_sim", F.lit(0.0)))
-        return self.spark.sql(
-            f"SELECT CAST(col1 AS {id_t}) AS {self.id_col}, "
-            f"col2 AS fts_score, col3 AS vector_sim "
-            f"FROM VALUES {self._values_clause(items)}")
-
     def _sql_atom(self, v, type_str: str) -> str:
         """One atomic value as a typed SQL literal: everything round-trips
         through a quoted string + CAST (ints, doubles via repr, booleans,
@@ -465,16 +447,6 @@ class HybridEngine:
         definition all VALUES builders share."""
         return self._sql_str(v) if isinstance(v, str) else str(v)
 
-    def _values_clause(self, items: list) -> str:
-        """(id, fts_score, vector_sim) rows as a VALUES clause. Doubles
-        travel as CAST('repr' AS DOUBLE) (bare decimal literals parse as
-        DECIMAL in Spark SQL; the string cast round-trips the exact
-        double)."""
-        return ", ".join(
-            f"({self._fmt_id(rid)}, {self._sql_atom(float(fs), 'DOUBLE')}, "
-            f"{self._sql_atom(float(vs), 'DOUBLE')})"
-            for rid, (fs, vs) in items)
-
     @staticmethod
     def _min_pair_distance_py(toks: list[str], ga: set, gb: set):
         """Driver twin of `proximity.min_pair_distance` over one doc's
@@ -496,37 +468,37 @@ class HybridEngine:
             prev_grp, prev_pos = grp, pos
         return best
 
-    def _interactive_scored_local(self, items: list, terms: list[str],
-                                  w, phrase: str | None, dedupe: bool,
-                                  n_results: int,
-                                  synonym_groups: list[list[str]] | None
-                                  = None,
-                                  near_window: int = 5) -> DataFrame | None:
+    def _score_local_py(self, items: list, terms: list[str], w,
+                        phrase: str | None, dedupe: bool, n_results: int,
+                        synonym_groups: list[list[str]] | None = None,
+                        near_window: int = 5
+                        ) -> tuple[list[tuple], int] | None:
         """The scoring tail computed entirely driver-side over the
-        resident doc map — ZERO Spark jobs for a hybrid call when every
-        tier is resident (the result returns as a VALUES LocalRelation,
-        like get_document). A strict python twin of the Column tail
+        resident doc map, for every resident hybrid call
+        (`_resident_hybrid`). A strict python twin of the Column tail
         (`_scored_column_tail`: `fusion.score` + `fused_result_dedup` +
         the final projection), expression-for-expression: same
         greatest/least clamps, same raw-vs-rounded usage, same dedup key
         (space-trimmed 120-char preview, id-string fallback), same
         (score desc, id asc) tie-breaks, same global duplicates_filtered
-        algebra. Rounding: Spark's round(x, 6) rounds the SHORTEST
-        decimal repr of the double (BigDecimal.valueOf = Double.toString),
-        not its exact binary expansion — Decimal(repr(x)) reproduces that
-        (Python repr is also shortest-round-trip; verified against Spark
-        on half-way values like 0.9050355, where the exact expansion
-        ...49999 rounds DOWN but both engines round UP). Residual
-        divergence needs a double where Java 17's Double.toString emits a
-        non-shortest repr AND the 6-dp boundary falls inside the extra
-        digits — vanishingly rarer than the np.round class. Row-identity
-        with the batch path is pinned by
-        test_interactive_mode_equals_batch_path (this path serves it
-        whenever the doc map is resident). Returns None when a candidate
-        id is missing from the doc map (cannot mirror the inner join
-        against a FRESHER corpus) — the caller falls through to the
-        Column tail. Equality with that tail on crafted candidates
-        (rounding boundaries, coverage, phrase bonus) is pinned by
+        algebra. Returns (top rows, dropped count), or None when a
+        candidate id is missing from the doc map (it cannot mirror the
+        inner join against a FRESHER corpus, so the call takes the Spark
+        path). Each row is (id, score, vec, fts, cov, phrase, prox,
+        narrator, preview), all already HALF_UP-rounded to 6 dp.
+
+        Rounding: Spark's round(x, 6) rounds the SHORTEST decimal repr of
+        the double (BigDecimal.valueOf = Double.toString), not its exact
+        binary expansion — Decimal(repr(x)) reproduces that (Python repr
+        is also shortest-round-trip; verified against Spark on half-way
+        values like 0.9050355, where the exact expansion ...49999 rounds
+        DOWN but both engines round UP). Residual divergence needs a
+        double where Java 17's Double.toString emits a non-shortest repr
+        AND the 6-dp boundary falls inside the extra digits — vanishingly
+        rarer than the np.round class. Row-identity with the Spark path
+        is pinned by test_interactive_mode_equals_batch_path; equality
+        with the Column tail on crafted candidates (rounding boundaries,
+        coverage, phrase bonus) by
         test_local_and_column_scoring_tails_agree_on_rounding_boundaries.
 
         With `synonym_groups` this also twins the reference's group
@@ -536,28 +508,6 @@ class HybridEngine:
         (`_min_pair_distance_py`, mirroring
         operators/proximity.min_pair_distance over
         py_tokenize — the tested driver twin of `tokenize`)."""
-        scored = self._score_local_py(items, terms, w, phrase, dedupe,
-                                      n_results,
-                                      synonym_groups=synonym_groups,
-                                      near_window=near_window)
-        if scored is None:
-            return None
-        top, dropped = scored
-        if not top:
-            return None
-        return self._scored_values_df([(None, top, dropped)])
-
-    def _score_local_py(self, items: list, terms: list[str], w,
-                        phrase: str | None, dedupe: bool, n_results: int,
-                        synonym_groups: list[list[str]] | None = None,
-                        near_window: int = 5
-                        ) -> tuple[list[tuple], int] | None:
-        """The pure-Python scoring tail shared by the single-query local
-        path and the batch serving tier: returns (top rows, dropped
-        count), or None when a candidate id is missing from the doc map
-        (the caller must fall through to a Spark tail). Each row is
-        (id, score, vec, fts, cov, phrase, prox, narrator, preview),
-        all already HALF_UP-rounded to 6 dp."""
         from decimal import ROUND_HALF_UP, Decimal
 
         q6 = Decimal("0.000001")
@@ -632,11 +582,20 @@ class HybridEngine:
         — a single (None, ...) group emits the plain hybrid schema; the
         batch tier passes N indexed groups and gains a leading
         `query_idx` column, paying ONE statement parse for the whole
-        batch instead of one per query."""
+        batch instead of one per query. Groups with no rows at all render
+        one typed placeholder row under `WHERE false`: the optimizer
+        prunes it to an empty LocalRelation, so the zero-row result keeps
+        this one schema and still runs no Spark job."""
         id_t = self.docs.schema[self.id_col].dataType.simpleString()
         dbl = lambda x: self._sql_atom(float(x), "DOUBLE")  # noqa: E731
         with_nar = self.narrator_col is not None
         with_qidx = groups[0][0] is not None
+        rows = [(qidx, dropped, r) for qidx, top, dropped in groups
+                for r in top]
+        where = ""
+        if not rows:
+            rows = [(0, 0, (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, None))]
+            where = " WHERE false"
         vals = ", ".join(
             "({}{}, {}, {}, {}, {}, {}, {}, {}{}, {})"
             .format(f"{int(qidx)}, " if with_qidx else "",
@@ -646,8 +605,7 @@ class HybridEngine:
                     int(dropped),
                     "CAST(NULL AS STRING)" if prev is None
                     else self._sql_str(prev))
-            for qidx, top, dropped in groups
-            for rid, sc, v, f, c, p, px, nb, prev in top)
+            for qidx, dropped, (rid, sc, v, f, c, p, px, nb, prev) in rows)
         off = 1 if with_qidx else 0
         c = lambda i: f"col{i + off}"  # noqa: E731
         qidx_sel = (f"CAST(col1 AS INT) AS query_idx, " if with_qidx else "")
@@ -660,21 +618,7 @@ class HybridEngine:
             f"{c(5)} AS coverage, {c(6)} AS phrase_bonus, "
             f"{c(7)} AS proximity_bonus, {nar_sel}"
             f"CAST({c_dropped} AS BIGINT) AS duplicates_filtered, "
-            f"{c_prev} AS preview FROM VALUES {vals}")
-
-    def _vec_topk_interactive(self, qvec: list[float], k: int) -> list:
-        """Driver-side exact cosine top-k over the resident matrix:
-        one BLAS matvec + argsort by (rounded sim desc, id asc) — the
-        same rounding-then-tie-break contract as the Spark leg. FP note:
-        BLAS pairwise summation can differ from the JVM fold at ~1e-16,
-        visible only if a product sits exactly on a 5e-7 rounding
-        boundary (p ≈ 2e-10 per pair; equivalence is pinned by
-        tests/test_api.py on the real corpus)."""
-        import numpy as np
-
-        sims = _round6_arr(self._mat @ np.asarray(qvec))
-        order = np.lexsort((self._ids, -sims))[:k]
-        return [(self._ids[i].item(), float(sims[i])) for i in order]
+            f"{c_prev} AS preview FROM VALUES {vals}{where}")
 
     @staticmethod
     def _group_sum(ids, vals):
@@ -861,7 +805,7 @@ class HybridEngine:
         SAME postings bound interactive enabling promised; invalidated
         with `_nar_index` on upsert. Returns None when interactive tiers
         are not resident, there is no narrator column, or the bound is
-        exceeded (callers fall back to the Spark narrator leg)."""
+        exceeded (narrator-intent calls then take the Spark path)."""
         if (self.narrator_col is None or self._mat is None
                 or self._interactive_bounds is None):
             return None
@@ -917,7 +861,8 @@ class HybridEngine:
         return [(uids[i].item(), float(tot[i])) for i in order]
 
     def _fast_allowed_ids(self, filters: dict | None):
-        """Metadata filters as a DRIVER id set for the batch fast path —
+        """Metadata filters as a DRIVER id set for the resident hybrid
+        path (`_resident_hybrid`, single and batch calls alike) —
         WITHOUT re-implementing Spark's comparison coercion (the round-8
         review hazard: a Python `==` twin diverges from Column `==` on
         coercible pairs like {"book_id": "1"} against an int column).
@@ -928,7 +873,7 @@ class HybridEngine:
         Column equality provably agree and NULL never matches either
         way. Anything else (floats, coercible mismatches, unknown
         columns, no resident doc map) returns the DEGRADE sentinel and
-        the call takes the Spark union path, preserving exact Column
+        the call takes the Spark path, preserving exact Column
         semantics. Returns None (no filters), a set (restrict to these
         ids), or `NotImplemented` (degrade)."""
         if not filters:
@@ -988,19 +933,14 @@ class HybridEngine:
                 self.docs, text_col=self.narrator_col, id_col=self.id_col)
         return self._nar_index
 
-    def _narrator_leg(self, narrator_query: str, k: int,
-                      allowed: DataFrame | None = None) -> DataFrame | None:
-        """The narrator-intent lexical leg: the reference routes narrator
-        queries to a narrator-FIELD prefix-AND match
-        (`narrator:t1* AND narrator:t2*`, router.py:93-99 consumed at
-        tools.py:84-88) instead of scoring the document text. Returns
-        None when the narrator phrase yields no tokens (the caller falls
-        back to the plain lexical leg, like the reference's
-        `if not toks: toks = intent.tokens`). `allowed` restricts before
-        the top-k cutoff, like `_spark_lex_leg`."""
-        toks = py_tokenize(narrator_query)[:6]
-        if not toks:
-            return None
+    def _narrator_leg(self, toks: list[str], k: int,
+                      allowed: DataFrame | None = None) -> DataFrame:
+        """The narrator-intent lexical leg over `_narrator_tokens`: the
+        reference routes narrator queries to a narrator-FIELD prefix-AND
+        match (`narrator:t1* AND narrator:t2*`, router.py:93-99 consumed
+        at tools.py:84-88) instead of scoring the document text.
+        `allowed` restricts before the top-k cutoff, like
+        `_spark_lex_leg`."""
         allowed_did = (allowed.withColumnRenamed(self.id_col, "doc_id")
                        if allowed is not None else None)
         return (bm25.prefix_and_match(self._narrator_index(), toks, k=k,
@@ -1037,83 +977,107 @@ class HybridEngine:
 
     # -- the reference's tool surface --------------------------------------
 
+    def _reference_key(self, query: str):
+        """The id a reference-shaped query names (§1): the LAST number in
+        the query — the batch exact leg's semantics (plans/routed.py) —
+        as an int for an integral id column, as the digit string
+        otherwise. None when it cannot resolve: a number past bigint
+        matches nothing in an integral id column (and would overflow the
+        literal under ANSI). The one resolver the Spark lookup and the
+        resident loop share."""
+        import re
+
+        num = re.search(r"([0-9]+)[^0-9]*$", query).group(1)
+        id_t = self.docs.schema[self.id_col].dataType.simpleString()
+        if id_t not in ("tinyint", "smallint", "int", "bigint"):
+            return num
+        return int(num) if len(num) <= 18 else None
+
     def _exact_reference_lookup(self, query: str, n_results: int,
                                 filters: dict | None = None) -> DataFrame:
-        """Point lookup for a reference-shaped query (§1): resolve the
-        LAST number in the query against the id column — the batch exact
-        leg's semantics (plans/routed.py) — and return it as a 1-row
-        hybrid result (score 1.0, zeroed signals, 120-char preview).
-        Unresolvable references (no such id; a non-integral id column
-        that cannot carry the number; a number past bigint) return the
-        EMPTY frame rather than falling back to fuzzy retrieval — the
-        spec's single-exact-match contract (TEST_QUERIES.md:48-53);
-        construct the engine with `exact_ref_fallback=True` to fall back
-        to retrieval instead (the SHIPPED reference's behavior, which
-        never dispatches this intent). With the doc map resident an
-        UNFILTERED hit returns as a VALUES LocalRelation (zero Spark
-        jobs, the <5ms class); filtered or cold lookups pay one
-        pushed-filter scan."""
-        import re as _re
-
-        if int(n_results) < 0:
-            raise ValueError(f"n_results must be >= 0, got {n_results}")
-        num = _re.search(r"([0-9]+)[^0-9]*$", query).group(1)
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
-        integral = id_t in ("tinyint", "smallint", "int", "bigint")
-        # A number past bigint can match nothing in an integral id column
-        # (and would overflow the literal under ANSI); resolve to empty.
-        resolvable = not (integral and len(num) > 18)
-        key = int(num) if integral and resolvable else num
-
+        """Point lookup for a reference-shaped query on the Spark path:
+        the `_reference_key` row, ANDed with the metadata filters under
+        Column `==`, as a 1-row hybrid result (score 1.0, zeroed signals,
+        120-char preview). Unresolvable references (no such id; a
+        non-integral id column that cannot carry the number; a number
+        past bigint) return the EMPTY frame rather than falling back to
+        fuzzy retrieval — the spec's single-exact-match contract
+        (TEST_QUERIES.md:48-53); construct the engine with
+        `exact_ref_fallback=True` to fall back to retrieval instead (the
+        SHIPPED reference's behavior, which never dispatches this
+        intent). Resident calls resolve the same lookup off the doc map
+        (`_exact_local_rows`); this path pays one pushed-filter scan."""
+        key = self._reference_key(query)
+        matched = (F.col(self.id_col) == F.lit(key) if key is not None
+                   else F.lit(False))
+        for col, val in (filters or {}).items():
+            matched = matched & (F.col(col) == F.lit(val))
         nar_lit = ([F.lit(0.0).alias("narrator_bonus")]
                    if self.narrator_col else [])
+        return (self.docs
+                .filter(matched)
+                .select(F.col(self.id_col),
+                        F.lit(1.0).alias("score"),
+                        F.lit(0.0).alias("vec_signal"),
+                        F.lit(0.0).alias("fts_sig"),
+                        F.lit(0.0).alias("coverage"),
+                        F.lit(0.0).alias("phrase_bonus"),
+                        F.lit(0.0).alias("proximity_bonus"),
+                        *nar_lit,
+                        F.lit(0).cast("long").alias("duplicates_filtered"),
+                        F.substring(F.col(self.text_col), 1, 120)
+                        .alias("preview"))
+                .limit(n_results))
 
-        def spark_path() -> DataFrame:
-            preview = F.substring(F.col(self.text_col), 1, 120)
-            matched = (F.col(self.id_col) == F.lit(key) if resolvable
-                       else F.lit(False))
-            for col, val in (filters or {}).items():
-                matched = matched & (F.col(col) == F.lit(val))
-            return (self.docs
-                    .filter(matched)
-                    .select(F.col(self.id_col),
-                            F.lit(1.0).alias("score"),
-                            F.lit(0.0).alias("vec_signal"),
-                            F.lit(0.0).alias("fts_sig"),
-                            F.lit(0.0).alias("coverage"),
-                            F.lit(0.0).alias("phrase_bonus"),
-                            F.lit(0.0).alias("proximity_bonus"),
-                            *nar_lit,
-                            F.lit(0).cast("long").alias("duplicates_filtered"),
-                            preview.alias("preview"))
-                    .limit(n_results))
-
-        # Filtered lookups take the Spark path UNCONDITIONALLY: the filter
-        # predicate must be Spark's Column `==` (type-coercing, NULL never
-        # matches) on every tier, and a driver-side Python `!=` twin
-        # diverges on coercible pairs (e.g. {"book_id": "1"} against an
-        # int column matches under Column ==, not under Python ==) — the
-        # same reason filtered hybrid calls use the batch legs.
-        if self._doc_rows is None or not resolvable or filters:
-            return spark_path()
-        row = self._doc_rows.get(key)
-        if row is None or n_results == 0:
-            return spark_path()  # empty either way; rare path, one tiny job
+    def _exact_local_rows(self, query: str, n_results: int,
+                          allowed: set | None) -> list[tuple]:
+        """Driver twin of `_exact_reference_lookup` over the resident doc
+        map: the 0/1-row top list in `_score_local_py`'s row shape. A
+        filtered lookup keeps the row only when its id is in `allowed`,
+        the filter's driver id set. That set exists only under
+        strict-type equality (`_fast_allowed_ids`), where Python `==` and
+        Column `==` agree and NULL never matches, so this returns the
+        Spark lookup's row; a coercible pair such as {"book": "1"}
+        against an int column never gets here — it sends the whole call
+        to the Spark lookup."""
+        key = self._reference_key(query)
+        row = self._doc_rows.get(key) if key is not None else None
+        if row is None or n_results == 0 or (
+                allowed is not None and key not in allowed):
+            return []
         txt = row[self.text_col]
-        prev = ("CAST(NULL AS STRING)" if txt is None
-                else self._sql_str(txt[:120]))
-        nar_sql = ("CAST(0.0 AS DOUBLE) AS narrator_bonus, "
-                   if self.narrator_col else "")
-        return self.spark.sql(
-            f"SELECT CAST(col1 AS {id_t}) AS `{self.id_col}`, "
-            f"CAST(1.0 AS DOUBLE) AS score, "
-            f"CAST(0.0 AS DOUBLE) AS vec_signal, "
-            f"CAST(0.0 AS DOUBLE) AS fts_sig, "
-            f"CAST(0.0 AS DOUBLE) AS coverage, "
-            f"CAST(0.0 AS DOUBLE) AS phrase_bonus, "
-            f"CAST(0.0 AS DOUBLE) AS proximity_bonus, {nar_sql}"
-            f"CAST(0 AS BIGINT) AS duplicates_filtered, "
-            f"col2 AS preview FROM VALUES ({self._fmt_id(key)}, {prev})")
+        prev = txt[:120] if txt is not None else None
+        return [(key, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, prev)]
+
+    def _checked_weights(self, n_results: int, scoring_mode: str,
+                         fts_available: bool, vector_available: bool,
+                         filters: dict | None,
+                         weight_overrides: dict) -> fusion.Weights:
+        """The argument checks both hybrid entry points make up front, on
+        every tier: `n_results >= 0`, filter columns that exist in the
+        corpus, and weight overrides naming real weights (`replace`
+        raises TypeError otherwise). Returns the call's weights."""
+        if int(n_results) < 0:
+            raise ValueError(f"n_results must be >= 0, got {n_results}")
+        if filters:
+            bad = sorted(set(filters) - set(self.docs.columns))
+            if bad:
+                raise ValueError(f"filter columns not in docs: {bad}")
+        w = fusion.resolve_weights(scoring_mode, fts_available,
+                                   vector_available)
+        return replace(w, **weight_overrides) if weight_overrides else w
+
+    def _narrator_tokens(self, intent, fts_available: bool):
+        """The narrator-field leg's tokens, or None when the query takes
+        the text leg. Narrator intent + a narrator field: the lexical leg
+        is the reference's narrator-FIELD prefix-AND match, not text BM25
+        (router.py:93-99 via tools.py:84-88). Empty narrator tokens fall
+        back to the text leg (the reference's
+        `if not toks: toks = intent.tokens`)."""
+        if (intent.intent != INTENT_NARRATOR or self.narrator_col is None
+                or not fts_available or not intent.narrator_query):
+            return None
+        return py_tokenize(intent.narrator_query)[:6] or None
 
     def hybrid_search(self, query: str, n_results: int = 10,
                       scoring_mode: str = "balanced",
@@ -1134,34 +1098,133 @@ class HybridEngine:
         predicates ANDed over the candidate set before scoring (NULL never
         matches), applied identically on every tier; a selective filter
         can return fewer than n_results, like a selective `where` does.
+        On an engine with the interactive tiers resident the call is a
+        batch of one through `_resident_hybrid` — zero Spark jobs,
+        filtered calls included; it takes the Spark path
+        (`_spark_hybrid`) when a tier its query needs is not resident or
+        a filter value's type only coerces to its column's.
         Returns (id, score, vec_signal, fts_sig, coverage, phrase_bonus,
         proximity_bonus, duplicates_filtered, preview)."""
-        if int(n_results) < 0:
-            raise ValueError(f"n_results must be >= 0, got {n_results}")
-        w = fusion.resolve_weights(scoring_mode, fts_available, vector_available)
-        if weight_overrides:
-            w = replace(w, **weight_overrides)
-        if filters:
-            bad = sorted(set(filters) - set(self.docs.columns))
-            if bad:
-                raise ValueError(f"filter columns not in docs: {bad}")
+        w = self._checked_weights(n_results, scoring_mode, fts_available,
+                                  vector_available, filters,
+                                  weight_overrides)
         # Driver-side router twin: one serving call routes ONE string, and
         # a 1-row Spark job costs ~400 ms of scheduler overhead per request
         # (route_one is equivalence-tested against the column router).
         intent = route_one(query)
+        call = dict(n_results=n_results, w=w, fts_available=fts_available,
+                    vector_available=vector_available,
+                    synonym_groups=synonym_groups, near_window=near_window,
+                    dedupe=dedupe)
+        groups = self._resident_hybrid([query], [intent],
+                                       self._fast_allowed_ids(filters),
+                                       **call)
+        if groups is None:
+            return self._spark_hybrid(query, intent, filters, **call)
+        return self._scored_values_df([(None, *groups[0][1:])])
+
+    def _resident_hybrid(self, queries: list[str], intents: list,
+                         allowed, n_results: int, w, fts_available: bool,
+                         vector_available: bool,
+                         synonym_groups: list[list[str]] | None,
+                         near_window: int, dedupe: bool) -> list | None:
+        """The one resident hybrid loop, for a single call (a batch of
+        one) and a batch alike: ONE BLAS matmul scores every query's
+        vector leg against the resident matrix, lexical legs gather from
+        the resident impact arrays, narrator-intent queries from the
+        resident narrator-field tier (`_narrator_tier`), exact references
+        resolve off the doc map (`_exact_local_rows`), the filter's
+        driver id set `allowed` (`_fast_allowed_ids`) restricts every leg
+        BEFORE its cutoff, and `_score_local_py` scores. Returns
+        [(query_idx, top rows, dropped)], one group per query.
+
+        Returns None — the whole call takes the Spark path — unless every
+        tier its queries use is resident: the vector matrix and the doc
+        map always; the text lexical tier when a query takes the text leg
+        (an exact reference does only on a miss under
+        `exact_ref_fallback`); the narrator tier when a narrator-intent
+        query is present (built lazily here, never for thematic calls).
+        Also None for the `NotImplemented` filter degrade and for a
+        candidate missing from the doc map. No call is partly resident.
+
+        FP note: BLAS pairwise summation can differ from the JVM fold at
+        ~1e-16, visible only if a product sits exactly on a 5e-7 rounding
+        boundary (p ≈ 2e-10 per pair; equivalence with the Spark path is
+        pinned by tests/test_api.py on the real corpus)."""
+        import numpy as np
+
+        if (self._mat is None or self._doc_rows is None
+                or allowed is NotImplemented):
+            return None
+        nar_toks = [self._narrator_tokens(it, fts_available)
+                    for it in intents]
+        if fts_available:
+            text_leg = [self.exact_ref_fallback if it.intent == INTENT_EXACT
+                        else not toks for it, toks in zip(intents, nar_toks)]
+            if self._lex is None and any(text_leg):
+                return None
+            if any(nar_toks) and self._narrator_tier() is None:
+                return None
+        k = max(OVERFETCH_FLOOR, 5 * n_results)
+        ids, sims_all = self._ids, None
+        if vector_available:
+            qmat = np.stack([encode_query(it.normalized, self.dim)
+                             for it in intents], axis=1)
+            sims_all = _round6_arr(self._mat @ qmat)  # one matmul
+            if allowed is not None:
+                # restrict BEFORE the per-query top-k cutoff — the
+                # semi-join placement of the Spark vector leg
+                keep = np.fromiter((i in allowed for i in ids.tolist()),
+                                   dtype=bool, count=len(ids))
+                ids, sims_all = ids[keep], sims_all[keep]
+        groups = []
+        for i, (query, it, toks) in enumerate(zip(queries, intents,
+                                                  nar_toks)):
+            if it.intent == INTENT_EXACT:
+                rows = self._exact_local_rows(query, n_results, allowed)
+                if rows or not self.exact_ref_fallback or n_results == 0:
+                    groups.append((i, rows, 0))
+                    continue
+                # exact_ref_fallback: an unresolvable reference retrieves
+            fused: dict = {}
+            terms = sorted(set(py_tokenize(it.normalized)))
+            if fts_available and terms:
+                pairs = (self._narrator_topk_interactive(toks, k, allowed)
+                         if toks
+                         else self._lex_topk_interactive(terms, k, allowed))
+                for rid, s in pairs:
+                    fused[rid] = [s, 0.0]
+            if sims_all is not None and len(ids):
+                sims = sims_all[:, i]
+                for j in np.lexsort((ids, -sims))[:k]:
+                    fused.setdefault(ids[j].item(),
+                                     [0.0, 0.0])[1] = float(sims[j])
+            scored = self._score_local_py(
+                sorted(fused.items()), terms, w, it.phrase, dedupe,
+                n_results, synonym_groups=synonym_groups,
+                near_window=near_window)
+            if scored is None:
+                return None
+            groups.append((i, *scored))
+        return groups
+
+    def _spark_hybrid(self, query: str, intent, filters: dict | None,
+                      n_results: int, w, fts_available: bool,
+                      vector_available: bool,
+                      synonym_groups: list[list[str]] | None,
+                      near_window: int, dedupe: bool) -> DataFrame:
+        """One hybrid query on the Spark path: both legs as Spark plans,
+        `fusion.fuse`, then `_scored_column_tail`. Serves every call
+        `_resident_hybrid` declines, per query."""
         if intent.intent == INTENT_EXACT:
             # §1 dispatch: a reference-shaped query goes straight to point
             # lookup, never the retrieval legs (TEST_QUERIES.md:48-53
             # "Use FTS5 direct lookup, not vector search" — the shipped
             # reference computes this intent but nothing dispatches on
-            # it). Same last-number semantics as the batch exact leg
-            # (plans/routed.py); same result schema as every other hybrid
-            # return. With `exact_ref_fallback` a MISS (empty lookup)
-            # falls through to the retrieval legs below — the shipped
-            # reference's behavior for unresolvable references. The
-            # take(1) emptiness probe costs one tiny extra job on
-            # SPARK-PATH lookups (filters / no doc map) whether they hit
-            # or miss; doc-map lookups stay zero-job (LocalRelation).
+            # it). With `exact_ref_fallback` a MISS (empty lookup) falls
+            # through to the retrieval legs below — the shipped
+            # reference's behavior for unresolvable references; its
+            # take(1) emptiness probe costs one tiny extra job.
             hit = self._exact_reference_lookup(query, n_results, filters)
             if not self.exact_ref_fallback or n_results == 0 or hit.take(1):
                 return hit
@@ -1170,83 +1233,25 @@ class HybridEngine:
         # Metadata filters restrict the SEARCH SPACE (each leg semi-joins
         # the allowed-id set before its top-k cutoff — the reference's
         # Chroma `where=` semantics; a post-cutoff filter would silently
-        # lose matching docs that score below the global top-k). Filtered
-        # calls therefore take the batch legs even on interactive
-        # engines: the resident tiers rank over the whole corpus.
+        # lose matching docs that score below the global top-k).
         allowed = self._allowed_ids(filters)
-        # Narrator intent + a narrator field: the lexical leg is the
-        # reference's narrator-FIELD prefix-AND match, not text BM25
-        # (router.py:93-99 via tools.py:84-88). Empty narrator tokens
-        # fall back to the plain leg below (the reference's
-        # `if not toks: toks = intent.tokens`).
-        nar_toks = (py_tokenize(intent.narrator_query)[:6]
-                    if (intent.intent == INTENT_NARRATOR
-                        and self.narrator_col is not None
-                        and fts_available
-                        and intent.narrator_query) else None) or None
-
-        if self._mat is not None and allowed is None:
-            # Interactive fast path (enable_interactive): the lexical leg
-            # comes from the resident impact arrays when the tier is
-            # built (no Spark job) or from collecting the O(k) Spark leg
-            # otherwise (one job); the vector top-k and the exact
-            # max/coalesce fusion run driver-side. Fusion on collected
-            # values is exact arithmetic on ≤2k pairs.
-            fused_map: dict = {}
-            if fts_available and terms:
-                if nar_toks and self._narrator_tier() is not None:
-                    # narrator-field leg off the resident narrator tier
-                    # (zero Spark jobs, pinned row-identical to the
-                    # Spark prefix_and_match leg)
-                    lex_pairs = self._narrator_topk_interactive(nar_toks, k)
-                elif nar_toks:
-                    # narrator tier over bound: one Spark job
-                    lex_pairs = [(r[0], float(r[1])) for r in
-                                 self._narrator_leg(intent.narrator_query,
-                                                    k, allowed).collect()]
-                elif self._lex is not None:
-                    lex_pairs = self._lex_topk_interactive(terms, k)
-                else:
-                    lex_pairs = [(r[0], float(r[1])) for r in
-                                 self._spark_lex_leg(terms, k).collect()]
-                for rid, s in lex_pairs:
-                    fused_map[rid] = [s, 0.0]
-            if vector_available:
-                qvec = encode_query(intent.normalized, self.dim)
-                for rid, s in self._vec_topk_interactive(qvec, k):
-                    fused_map.setdefault(rid, [0.0, 0.0])[1] = s
-            items = sorted(fused_map.items())
-            if items and self._doc_rows is not None:
-                # Zero-job tail: with the doc map resident the scoring
-                # runs fully driver-side and the result is a VALUES
-                # LocalRelation (the reference's in-process latency
-                # class), synonym-group scorer included. It returns None
-                # when it can't mirror the corpus join; the call then
-                # scores the same candidates on the Column tail below.
-                out = self._interactive_scored_local(
-                    items, terms, w, intent.phrase, dedupe, n_results,
-                    synonym_groups=synonym_groups, near_window=near_window)
-                if out is not None:
-                    return out
-            fused = self._fused_literal_df(items)
+        nar_toks = self._narrator_tokens(intent, fts_available)
+        fts = (self._narrator_leg(nar_toks, k, allowed) if nar_toks
+               else self._spark_lex_leg(terms, k, allowed)
+               if fts_available and terms
+               else self._empty_leg("bm25"))
+        if vector_available:
+            qvec = encode_query(intent.normalized, self.dim)
+            vec = similarity.cosine_scores(self.emb, qvec, self.id_col)
+            if allowed is not None:
+                vec = vec.join(F.broadcast(allowed), self.id_col,
+                               "left_semi")
+            vec = (vec.select(self.id_col,
+                              F.round("sim", 6).alias("sim"))
+                   .orderBy(F.desc("sim"), F.asc(self.id_col)).limit(k))
         else:
-            fts = (self._narrator_leg(intent.narrator_query, k, allowed)
-                   if nar_toks
-                   else self._spark_lex_leg(terms, k, allowed)
-                   if fts_available and terms
-                   else self._empty_leg("bm25"))
-            if vector_available:
-                qvec = encode_query(intent.normalized, self.dim)
-                vec = similarity.cosine_scores(self.emb, qvec, self.id_col)
-                if allowed is not None:
-                    vec = vec.join(F.broadcast(allowed), self.id_col,
-                                   "left_semi")
-                vec = (vec.select(self.id_col,
-                                  F.round("sim", 6).alias("sim"))
-                       .orderBy(F.desc("sim"), F.asc(self.id_col)).limit(k))
-            else:
-                vec = self._empty_leg("sim")
-            fused = fusion.fuse(fts, vec, key=self.id_col)
+            vec = self._empty_leg("sim")
+        fused = fusion.fuse(fts, vec, key=self.id_col)
         return self._scored_column_tail(fused, terms, w, intent.phrase,
                                         dedupe, n_results,
                                         synonym_groups=synonym_groups,
@@ -1261,8 +1266,8 @@ class HybridEngine:
         candidates: join the corpus text, `fusion.score` (coverage, phrase,
         proximity and narrator bonuses), `fused_result_dedup`, and the
         hybrid projection ranked (score desc, id asc), top n. Serves every
-        Spark-path call, and resident calls the zero-job local tail
-        (`_interactive_scored_local`) cannot serve."""
+        Spark-path call (`_spark_hybrid`); resident calls score with its
+        Python twin `_score_local_py`."""
         # Candidates are O(k) -> broadcast them into the documents scan.
         # INNER join: candidates come from this engine's own index and
         # embeddings, so every id resolves; the reference likewise skips
@@ -1340,25 +1345,6 @@ class HybridEngine:
             .limit(n_results)
         )
 
-    def _exact_local_rows(self, query: str, n_results: int) -> list[tuple]:
-        """Driver twin of `_exact_reference_lookup` for the batch fast
-        path (doc map resident, no filters): the 0/1-row top list in
-        `_score_local_py`'s row shape. Same last-number / integral-id /
-        past-bigint resolution rules."""
-        import re as _re
-
-        num = _re.search(r"([0-9]+)[^0-9]*$", query).group(1)
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
-        integral = id_t in ("tinyint", "smallint", "int", "bigint")
-        resolvable = not (integral and len(num) > 18)
-        key = int(num) if integral and resolvable else num
-        row = self._doc_rows.get(key) if resolvable else None
-        if row is None or int(n_results) == 0:
-            return []
-        txt = row[self.text_col]
-        prev = txt[:120] if txt is not None else None
-        return [(key, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, prev)]
-
     def hybrid_search_batch(self, queries: list[str], n_results: int = 10,
                             scoring_mode: str = "balanced",
                             fts_available: bool = True,
@@ -1374,138 +1360,36 @@ class HybridEngine:
         this is the amortized shape SCALE.md prescribes for offline
         evaluation and agent fan-out.
 
-        Fast path (every interactive tier resident): ONE BLAS matmul
-        scores every query's vector leg against the resident matrix,
-        lexical legs gather from the resident impact arrays,
-        narrator-intent queries gather from the resident NARRATOR-field
-        tier (`_narrator_tier` — prefix-AND pseudo-terms driver-side),
-        exact-reference queries resolve off the doc map, metadata
-        filters restrict every leg BEFORE its cutoff via a driver id set
-        (`_fast_allowed_ids` — strict-type equality only, so Column `==`
-        semantics are never re-implemented), scoring runs driver-side,
-        and the whole batch re-enters as a SINGLE VALUES LocalRelation —
-        zero Spark jobs and one statement parse for the batch,
-        amortizing the per-call overhead that dominates single-query p50
-        (SERVING_LATENCY.md). Anything the resident tiers can't mirror
-        exactly (coercible filter types, a narrator tier over its
-        postings bound, missing tiers, a doc-map gap) degrades the call
-        to a union of single-query plans — same rows, Spark-side cost."""
+        On a resident engine the whole batch runs through
+        `_resident_hybrid` (one matmul for every vector leg) and
+        re-enters as a SINGLE VALUES LocalRelation — zero Spark jobs and
+        one statement parse for the batch, amortizing the per-call
+        overhead that dominates single-query p50 (SERVING_LATENCY.md).
+        When that loop declines the call (a tier some query needs is not
+        resident, a coercible filter type, a doc-map gap), every query
+        takes the Spark path and the call returns their union — same
+        rows, Spark-side cost."""
         from functools import reduce
 
         if not queries:
             raise ValueError("queries must be a non-empty list")
-        if int(n_results) < 0:
-            raise ValueError(f"n_results must be >= 0, got {n_results}")
+        w = self._checked_weights(n_results, scoring_mode, fts_available,
+                                  vector_available, filters,
+                                  weight_overrides)
         intents = [route_one(q) for q in queries]
-        allowed = self._fast_allowed_ids(filters)
-        fast = (self._mat is not None and self._doc_rows is not None
-                and allowed is not NotImplemented)
-        if fast and fts_available:
-            def _is_narrator(it) -> bool:
-                return (it.intent == INTENT_NARRATOR
-                        and self.narrator_col is not None
-                        and bool(it.narrator_query)
-                        and bool(py_tokenize(it.narrator_query)[:6]))
-
-            def _needs_text_lex(it) -> bool:
-                if it.intent == INTENT_EXACT:
-                    # a hit never touches the lexical leg; a miss only
-                    # falls through to retrieval under the fallback flag
-                    return self.exact_ref_fallback
-                return not _is_narrator(it)
-
-            # the TEXT lexical tier is required only by queries that
-            # actually take the text leg (narrator-only / exact-only
-            # batches stay fast with _lex unresident — the single-query
-            # path's altitude); narrator legs need the narrator tier,
-            # which is built lazily HERE and only when a narrator query
-            # is actually present (never eagerly for thematic batches)
-            if self._lex is None and any(_needs_text_lex(it)
-                                         for it in intents):
-                fast = False
-            if fast and any(_is_narrator(it) for it in intents):
-                fast = self._narrator_tier() is not None
-        groups: list[tuple] = []
-        if fast:
-            import numpy as np
-
-            w = fusion.resolve_weights(scoring_mode, fts_available,
-                                       vector_available)
-            if weight_overrides:
-                w = replace(w, **weight_overrides)
-            k = max(OVERFETCH_FLOOR, 5 * n_results)
-            sims_all = None
-            ids_f = self._ids
-            if vector_available:
-                qmat = np.stack([encode_query(it.normalized, self.dim)
-                                 for it in intents], axis=1)
-                sims_all = _round6_arr(self._mat @ qmat)  # one matmul
-                if allowed is not None:
-                    # restrict BEFORE the per-query top-k cutoff — the
-                    # semi-join placement of the Spark vector leg
-                    keep = np.array([i in allowed
-                                     for i in self._ids.tolist()])
-                    ids_f = self._ids[keep]
-                    sims_all = sims_all[keep]
-            for i, it in enumerate(intents):
-                if it.intent == INTENT_EXACT:
-                    rows = self._exact_local_rows(queries[i], n_results)
-                    if allowed is not None:
-                        # filtered exact = id match AND the row passes
-                        # the filters (the allowed set IS that test)
-                        rows = [r for r in rows if r[0] in allowed]
-                    if rows or not self.exact_ref_fallback \
-                            or n_results == 0:
-                        groups.append((i, rows, 0))
-                        continue
-                    # exact_ref_fallback: unresolvable ref -> retrieval
-                fused_map: dict = {}
-                terms = sorted(set(py_tokenize(it.normalized)))
-                nar_toks = (py_tokenize(it.narrator_query)[:6]
-                            if (it.intent == INTENT_NARRATOR
-                                and self.narrator_col is not None
-                                and fts_available
-                                and it.narrator_query) else None) or None
-                if fts_available and terms:
-                    lex_pairs = (
-                        self._narrator_topk_interactive(nar_toks, k, allowed)
-                        if nar_toks
-                        else self._lex_topk_interactive(terms, k, allowed))
-                    for rid, s in lex_pairs:
-                        fused_map[rid] = [s, 0.0]
-                if sims_all is not None and len(ids_f):
-                    sims = sims_all[:, i]
-                    order = np.lexsort((ids_f, -sims))[:k]
-                    for j in order:
-                        fused_map.setdefault(ids_f[j].item(),
-                                             [0.0, 0.0])[1] = float(sims[j])
-                scored = self._score_local_py(
-                    sorted(fused_map.items()), terms, w, it.phrase, dedupe,
-                    n_results, synonym_groups=synonym_groups,
-                    near_window=near_window) if fused_map else ([], 0)
-                if scored is None:  # doc-map gap: mirror the corpus join
-                    groups = []     # on Spark instead (rare; stale map)
-                    fast = False
-                    break
-                groups.append((i, scored[0], scored[1]))
-        if fast:
-            if not any(top for _, top, _ in groups):
-                nar = ("narrator_bonus double, " if self.narrator_col
-                       else "")
-                id_t = self.docs.schema[self.id_col].dataType.simpleString()
-                return self.spark.createDataFrame([], (
-                    f"query_idx int, `{self.id_col}` {id_t}, score double, "
-                    f"vec_signal double, fts_sig double, coverage double, "
-                    f"phrase_bonus double, proximity_bonus double, {nar}"
-                    f"duplicates_filtered bigint, preview string"))
+        call = dict(n_results=n_results, w=w, fts_available=fts_available,
+                    vector_available=vector_available,
+                    synonym_groups=synonym_groups, near_window=near_window,
+                    dedupe=dedupe)
+        groups = self._resident_hybrid(queries, intents,
+                                       self._fast_allowed_ids(filters),
+                                       **call)
+        if groups is not None:
             return self._scored_values_df(groups)
         frames = [
-            self.hybrid_search(q, n_results, scoring_mode, fts_available,
-                               vector_available, synonym_groups,
-                               near_window, dedupe, filters,
-                               **weight_overrides)
+            self._spark_hybrid(q, it, filters, **call)
             .select(F.lit(i).cast("int").alias("query_idx"), "*")
-            for i, q in enumerate(queries)]
+            for i, (q, it) in enumerate(zip(queries, intents))]
         return reduce(lambda a, b: a.unionByName(b), frames)
 
     def fts_match(self, terms: list[str] | None = None, prefix: str | None = None,

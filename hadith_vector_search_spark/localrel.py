@@ -6,8 +6,8 @@ every downstream action evaluates them through Python workers — measured
 ~0.2-0.5 s per action on this host for a handful of rows, and ~6 s when a
 `coalesce(1)` forces one task to drain all (mostly empty) pickled
 partitions sequentially (one Python-worker round trip each). The serving
-layer has dodged this for rounds with SQL VALUES literals
-(`api.HybridEngine._fused_literal_df`); this module is the same fix for
+layer dodges this with SQL VALUES literals
+(`api.HybridEngine._scored_values_df`); this module is the same fix for
 the plan layer's many small driver-side relations (query batches, probe
 tables, codebooks, hyperplanes): hand Spark a pyarrow Table, which lands
 as a JVM LocalRelation — no Python workers at action time, broadcast

@@ -9,6 +9,14 @@ from pyspark.sql import functions as F
 from hadith_vector_search_spark.api import HybridEngine
 
 
+def _spark_jobs(spark, fn):
+    """Run `fn()`; return (number of Spark jobs it launched, its result)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return len(set(tracker.getJobIdsForGroup()) - before), out
+
+
 @pytest.fixture(scope="module")
 def engine(spark):
     rows = [
@@ -210,7 +218,7 @@ def test_interactive_mode_equals_batch_path(spark):
              inter.hybrid_search("patience and prayer", n_results=10,
                                  **kw).collect()]
         assert a == b, kw
-    # synonym_groups falls back to the shared Column build — still equal
+    # synonym_groups: the local twin of the group scorer — still equal
     sg = [["patience", "endurance"], ["prayer", "worship"]]
     a = [r.asDict() for r in
          batch.hybrid_search("patience and prayer", n_results=10,
@@ -293,9 +301,10 @@ def test_interactive_refuses_unsupported_id_type(spark):
 
 
 def test_interactive_postings_bound_degrades_to_spark_leg(spark):
-    """Exceeding the postings bound must leave the lexical tier off (the
-    leg stays on Spark) while the vector tier still serves — and results
-    must still equal the pure-Spark path."""
+    """Exceeding the postings bound must leave the lexical tier off while
+    the vector tier stays resident; text-leg hybrid calls then take the
+    Spark path whole, and results must still equal the pure-Spark
+    engine's."""
     from hadith_vector_search_spark.sources import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -565,12 +574,39 @@ def test_hybrid_local_tail_launches_no_spark_jobs(spark):
     assert eng._doc_rows is not None and eng._lex is not None
     # warm call absorbs any lazy first-use materialization
     assert eng.hybrid_search("patience and prayer", 10).collect()
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    rows = eng.hybrid_search("window merge sort batch", 10).collect()
-    after = set(tracker.getJobIdsForGroup())
+    n_jobs, rows = _spark_jobs(
+        spark, lambda: eng.hybrid_search("window merge sort batch", 10)
+        .collect())
     assert rows
-    assert after == before, f"launched jobs: {sorted(after - before)}"
+    assert n_jobs == 0
+
+
+def test_empty_resident_results_launch_no_spark_jobs(spark):
+    """An empty resident result is a zero-row LocalRelation, not a
+    pickled-RDD frame: `n_results=0` and a filter that matches no row
+    each run ZERO Spark jobs, as a batch and as a single call, and
+    return the Spark path's hybrid schema — `query_idx` on the batch
+    only."""
+    docs = spark.createDataFrame(
+        [(1, "patience and prayer during hardship", "bk1"),
+         (2, "charity and kindness at night", "bk2")],
+        "doc_id int, text string, book string")
+    spark_eng = HybridEngine(spark, docs)
+    inter = HybridEngine(spark, docs)
+    assert inter.enable_interactive()
+    qs = ["patience prayer", "hadith 2"]
+    nowhere = {"book": "no such book"}
+    cases = [(lambda e: e.hybrid_search_batch(qs, 0), True),
+             (lambda e: e.hybrid_search_batch(qs, 3, filters=nowhere), True),
+             (lambda e: e.hybrid_search(qs[0], 0), False),
+             (lambda e: e.hybrid_search(qs[0], 3, filters=nowhere), False),
+             (lambda e: e.hybrid_search(qs[1], 3, filters=nowhere), False)]
+    for i, (call, batched) in enumerate(cases):
+        n_jobs, rows = _spark_jobs(spark, lambda: call(inter).collect())
+        assert (n_jobs, rows) == (0, []), i
+        dtypes = call(inter).dtypes
+        assert dtypes == call(spark_eng).dtypes, i
+        assert (dtypes[0][0] == "query_idx") == batched, i
 
 
 def test_local_tail_adversarial_corpus_equals_batch(spark):
@@ -617,9 +653,11 @@ def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
     values (it once used the exact expansion and scored 0.905035 where
     Spark said 0.905036), and on coverage and the phrase bonus when the
     query has terms and a phrase. Both tails score the same crafted
-    candidates; the Column tail reads them from `_fused_literal_df`."""
+    candidates: `_score_local_py` rendered by `_scored_values_df`, and
+    `_scored_column_tail` reading them from a `local_df` relation."""
     from dataclasses import replace
 
+    from hadith_vector_search_spark.localrel import local_df
     from hadith_vector_search_spark.operators import fusion
 
     docs = spark.createDataFrame(
@@ -641,11 +679,13 @@ def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
     out = []
     for cands, terms, wts, phrase in cases:
         for dedupe in (True, False):
-            a = [r.asDict() for r in eng._interactive_scored_local(
-                cands, terms, wts, phrase, dedupe, 12).collect()]
+            a = [r.asDict() for r in eng._scored_values_df([(
+                None, *eng._score_local_py(cands, terms, wts, phrase,
+                                           dedupe, 12))]).collect()]
+            fused = local_df(spark, [(i, fs, vs) for i, (fs, vs) in cands],
+                             "doc_id int, fts_score double, vector_sim double")
             b = [r.asDict() for r in eng._scored_column_tail(
-                eng._fused_literal_df(cands), terms, wts, phrase, dedupe,
-                12).collect()]
+                fused, terms, wts, phrase, dedupe, 12).collect()]
             assert a == b, (terms, dedupe)
             out.append(a)
     assert any(r["score"] == 0.905036 for r in out[0])  # the half-way case
@@ -658,9 +698,9 @@ def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
 
 def test_column_tail_serves_without_doc_map(spark):
     """With the doc map absent (e.g. a non-atomic corpus column blocks
-    it), a resident hybrid call scores its driver-fused candidates on
-    the Column tail and must stay row-identical to the batch path
-    end-to-end."""
+    it), an engine whose vector tier is still resident takes the Spark
+    path whole — Spark legs and the Column tail — and must stay
+    row-identical to the pure-Spark engine end-to-end."""
     from hadith_vector_search_spark.sources import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -818,12 +858,7 @@ def test_get_document_row_equals_frame(spark):
         assert eng.get_document_row(999) is None
         assert eng.get_document(999).count() == 0
     # the resident path really is zero Spark jobs
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    inter.get_document_row(3)
-    after = set(tracker.getJobIdsForGroup(None) or [])
-    assert before == after
+    assert _spark_jobs(spark, lambda: inter.get_document_row(3))[0] == 0
 
 
 def _serving_snapshot(eng, seed_doc):
@@ -870,8 +905,8 @@ def test_upsert_delta_equals_fresh_enable(spark):
     # removed doc is gone from every tier
     assert eng.get_document_row(3) is None
     assert all(r["doc_id"] != 3 for r in a["hybrid"])
-    # the Column tail over the upserted eng.docs is correct too: force
-    # it (doc map off) on both engines
+    # with the doc map off both engines take the Spark path: its legs
+    # and Column tail over the upserted eng.docs are correct too
     eng._doc_rows = None
     fresh._doc_rows = None
     a2 = [r.asDict() for r in eng.hybrid_search(
@@ -959,12 +994,10 @@ def test_exact_reference_dispatches_to_point_lookup(spark):
     assert inter.hybrid_search("book 7", n_results=0).collect() == []
 
     # zero Spark jobs with the doc map resident
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    hit = inter.hybrid_search("book 12", n_results=3).collect()
-    after = set(tracker.getJobIdsForGroup())
+    n_jobs, hit = _spark_jobs(
+        spark, lambda: inter.hybrid_search("book 12", n_results=3).collect())
     assert hit[0].doc_id == 12
-    assert after == before, f"launched jobs: {sorted(after - before)}"
+    assert n_jobs == 0
 
     # string-id corpora: the number cannot resolve -> empty, no error
     sdocs = spark.createDataFrame(
@@ -1059,9 +1092,12 @@ def test_narrator_intent_uses_narrator_field_leg(spark):
 def test_metadata_filters_restrict_candidates_on_every_tier(spark):
     """The spec's metadata filter (HADITH_SEARCH_SPEC.md:420, the
     reference's Chroma `where=`): {column: value} equality predicates
-    restrict the candidate set before scoring, identically on the batch
-    Column tail, the driver-local tail, and the exact-reference
-    dispatch; NULL column values never match; unknown columns raise."""
+    restrict the candidate set before scoring, identically on the Spark
+    path and on the resident path, which serves every strict-type filter
+    here from the driver id set with zero Spark jobs (a {col: None}
+    filter degrades to the Spark path) — retrieval and exact-reference
+    dispatch alike, including a selective filter that returns fewer than
+    n_results; NULL column values never match; unknown columns raise."""
     rows = [
         (1, "patience and prayer during hardship", "sahih", "bk1"),
         (2, "patience and prayer during travel", "daif", "bk1"),
@@ -1137,12 +1173,13 @@ def test_rerank_search_respects_filters(spark):
 
 
 def test_exact_reference_filter_type_coercion_tier_identity(spark):
-    """Filtered exact lookups take the Spark path on EVERY tier, so the
-    filter predicate is Column `==` (type-coercing) everywhere: a
-    {"book": "1"} filter against an int column matches on the
-    interactive tier exactly as it does on the batch tier — a driver-side
-    Python `!=` twin would reject the coercible pair and desync the
-    tiers."""
+    """Filtered exact lookups return the Column `==` (type-coercing)
+    rows on every tier. On the resident engine the strict-type
+    {"book": 1} filter is served from the driver id set, where Python
+    `==` and Column `==` agree; the coercible {"book": "1"} (string
+    literal, int column) degrades to the Spark lookup, so it matches
+    there exactly as on the Spark engine — a Python `==` twin would
+    reject the coercible pair and desync the tiers."""
     rows = [(1, "doc one text body", 1), (2, "doc two text body", 2)]
     docs = spark.createDataFrame(rows, "doc_id int, text string, book int")
     batch = HybridEngine(spark, docs)
@@ -1225,11 +1262,10 @@ def test_hybrid_search_batch_tier_matches_single_calls(spark):
             assert by_q.get(i, []) == single, (i, q)
 
     # fast path: zero Spark jobs with every tier resident
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    res = inter.hybrid_search_batch(queries, n_results=3).collect()
-    after = set(tracker.getJobIdsForGroup())
-    assert after == before, f"launched jobs: {sorted(after - before)}"
+    n_jobs, res = _spark_jobs(
+        spark, lambda: inter.hybrid_search_batch(queries, n_results=3)
+        .collect())
+    assert n_jobs == 0
     assert res
 
     # error contracts match the single-query surface
@@ -1238,7 +1274,7 @@ def test_hybrid_search_batch_tier_matches_single_calls(spark):
     with pytest.raises(ValueError):
         inter.hybrid_search_batch(["x"], n_results=-1)
 
-    # filters force the Spark path; rows still identical per query
+    # filtered batches on the Spark path: rows still identical per query
     fdocs = spark.createDataFrame(
         [(1, "patience and prayer", "bk1"), (2, "patience travel", "bk2"),
          (3, "prayer at night time", "bk1")],
@@ -1254,8 +1290,7 @@ def test_hybrid_search_batch_tier_matches_single_calls(spark):
                   feng.hybrid_search(q, 3, filters={"book": "bk1"}).collect()]
         assert by_q.get(i, []) == single, (i, q)
 
-    # narrator engines (narrator-intent queries need the Spark leg):
-    # identical per query on both tiers
+    # narrator engines: identical per query on both tiers
     ndocs = spark.createDataFrame(
         [(1, "patience and prayer during hardship", "Abu Huraira"),
          (2, "patience and prayer during travel", "Umar bin Al-Khattab")],
@@ -1342,15 +1377,20 @@ def test_batch_fast_path_mixed_narrator_filtered_zero_jobs(spark):
                           eng.hybrid_search(q, 3, filters=filters).collect()]
                 assert by_q.get(i, []) == single, (filters, i, q)
 
-    # zero Spark jobs once the narrator tier is resident (built above)
-    tracker = spark.sparkContext.statusTracker()
+    # zero Spark jobs once the narrator tier is resident (built above),
+    # for the batch and for each query as a single call — the filtered
+    # exact reference ("hadith 3") included
     for filters in cases:
-        before = set(tracker.getJobIdsForGroup())
-        res = inter.hybrid_search_batch(queries, 3,
-                                        filters=filters).collect()
-        after = set(tracker.getJobIdsForGroup())
-        assert after == before, (filters, sorted(after - before))
+        n_jobs, res = _spark_jobs(
+            spark, lambda: inter.hybrid_search_batch(
+                queries, 3, filters=filters).collect())
+        assert n_jobs == 0, filters
         assert res
+        for q in queries:
+            n_jobs, _ = _spark_jobs(
+                spark, lambda: inter.hybrid_search(
+                    q, 3, filters=filters).collect())
+            assert n_jobs == 0, (filters, q)
 
     # coercible filter types DEGRADE to the Spark union path (the
     # round-8 hazard: a Python == twin diverges from Column == there);
@@ -1426,11 +1466,10 @@ def test_batch_gate_lazy_narrator_tier_and_lexless_narrator_batches(spark):
         single = [tuple(r) for r in eng.hybrid_search(q, 2).collect()]
         assert by_q.get(i, []) == single, (i, q)
     # zero jobs once the narrator tier is resident (built above)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    assert eng.hybrid_search_batch(nq, 2).collect()
-    after = set(tracker.getJobIdsForGroup())
-    assert after == before, sorted(after - before)
+    n_jobs, res = _spark_jobs(
+        spark, lambda: eng.hybrid_search_batch(nq, 2).collect())
+    assert res
+    assert n_jobs == 0
 
 
 def test_engine_borrows_store_resident_matrix(spark, tmp_path):
