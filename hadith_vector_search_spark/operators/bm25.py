@@ -201,7 +201,7 @@ def refresh_index(index: LexicalIndex, changed_docs: DataFrame,
     """Incremental lexical-index maintenance — the Spark re-expression of
     the reference's per-doc FTS upsert (delete + reinsert of one doc's
     index rows, /root/reference/mcp_server/apps/fts.py:150-181) and the
-    same discipline as `operators.dedup.refresh_window_index`: every
+    checksum-anti-join discipline of `sources.ingest.classify_changes`: every
     corpus-sized frame is touched only through a broadcast anti-join of
     the (small) changed-ID set against the PINNED base frames, and every
     rebuild is narrow over the changed docs — cost tracks the batch,

@@ -818,26 +818,6 @@ def window_index(docs: DataFrame, w: int = DUPSPAN_W,
                     F.crc32(F.col("_w")).alias("_h2")))
 
 
-def refresh_window_index(index: DataFrame, changed_docs: DataFrame,
-                         removed_ids: DataFrame | None = None,
-                         w: int = DUPSPAN_W, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """Incremental maintenance for the substring-dedup window index —
-    the same checksum-anti-join discipline the embedding cache uses
-    (`sources/ingest.classify_changes`): rows belonging to changed or
-    removed docs are anti-joined out, changed docs' windows are rebuilt
-    narrow and unioned in. Cost tracks the CHANGED set, never corpus
-    size; equivalence with a from-scratch rebuild is pinned by
-    `test_refresh_window_index_equals_rebuild`."""
-    drop = changed_docs.select(F.col(id_col).alias("doc_id"))
-    if removed_ids is not None:
-        drop = drop.unionByName(
-            removed_ids.select(F.col(removed_ids.columns[0]).alias("doc_id")))
-    kept = index.join(drop.distinct(), "doc_id", "left_anti")
-    fresh = window_index(changed_docs, w, text_col, id_col)
-    return kept.unionByName(fresh)
-
-
 def duplicated_spans(docs: DataFrame, w: int = DUPSPAN_W, min_docs: int = 2,
                      text_col: str = "text", id_col: str = "doc_id",
                      windows: DataFrame | None = None) -> DataFrame:

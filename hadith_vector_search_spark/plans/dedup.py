@@ -1,16 +1,18 @@
 """Dedup-family queries over `documents` (LLM-pipeline operators) with
-generated DuckDB oracles: exact/window dedup, MinHash signatures,
-MinHash+LSH near-dup detection, SimHash fingerprints.
+generated DuckDB oracles: exact/window dedup, substring span dedup,
+MinHash signatures, MinHash+LSH near-dup detection, SimHash fingerprints.
 
-Derived-index caches: the shingle frame and the simhash fingerprint frame
-are DERIVED INDEX TABLES — on a cluster they are computed once per corpus
+Derived-index caches: the span-dedup window index, the shingle frame, the
+simhash fingerprints, the winnow selection and the minhash signatures are
+DERIVED INDEX TABLES — on a cluster they are computed once per corpus
 snapshot and persisted (parquet, bucketed by doc_id), then shared by every
 dedup job over that corpus; the reference likewise queries prebuilt FTS /
-vector indexes rather than re-tokenizing per query. `get_shingle_index` /
-`get_simhash_index` serve them from published frame stores (one publish
-per corpus snapshot, reopened by every later session), reused by every
-query in the family. The DuckDB oracles rebuild everything from raw text
-each run, so the stores are correctness-checked on every gate pass."""
+vector indexes rather than re-tokenizing per query. The `get_*_index`
+getters serve them from published frame stores (`sources.frame_store`:
+one publish per corpus snapshot, reopened by every later session), reused
+by every query in the family. The DuckDB oracles rebuild everything from
+raw text each run, so the stores are correctness-checked on every gate
+pass."""
 
 from __future__ import annotations
 
@@ -59,8 +61,8 @@ def _frame_store_rows(spark: SparkSession, sf_dir: str, deriver: str,
                       params: dict, audit_tag: str, build) -> DataFrame:
     """The rows of the PUBLISHED doc-bucket-partitioned frame store
     (`sources.frame_store`) that every derived dedup frame is served
-    from (`get_window_index` was the prototype): publish iff the manifest says the corpus or the
-    derivation identity drifted, reopen the bytes otherwise, so a second
+    from: publish iff the manifest says the corpus or the derivation
+    identity drifted, reopen the bytes otherwise, so a second
     session never repays the text pass. `build` is the derivation the
     store publishes; every consumer's DuckDB oracle rebuilds it from raw
     text each gate pass. Store dirs are keyed by deriver+params so two
@@ -309,41 +311,15 @@ def dedup_removal_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def get_window_index(spark: SparkSession, sf_dir: str,
                      w: int = dedup.DUPSPAN_W) -> DataFrame:
-    """Positional token-window index over `documents`, served from the
-    PUBLISHED doc-bucket-partitioned store (`sources.window_store` —
-    publish iff the manifest says the corpus drifted, reopen the bytes
-    otherwise; a second session never re-tokenizes the corpus). Every
-    consumer's DuckDB oracle rebuilds the windows from raw text each
-    gate pass."""
+    """Positional token-window index over `documents` — the (doc_id,
+    pos, _h1, _h2) frame the span-dedup queries share, served from the
+    published frame store (see `_frame_store_rows`)."""
     key = _cache_key(spark, sf_dir, "windows", w)
     if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = get_published_window_store(spark, sf_dir,
-                                                       w).windows
-    return _INDEX_CACHE[key]
-
-
-def get_published_window_store(spark: SparkSession, sf_dir: str,
-                               w: int = dedup.DUPSPAN_W):
-    """Ensure-and-open the published window store HANDLE — the
-    dir-level view of `get_window_index`, for callers that fork the
-    whole artifact rather than read its rows (the streaming window
-    twin's `commit.clone_store`); handle cached per session so the
-    ensure's count + manifest check run once, not per twin
-    invocation."""
-    from ..sources import window_store
-    from .lexical import publish_and_open
-
-    key = _cache_key(spark, sf_dir, "window_handle", w)
-    if key not in _INDEX_CACHE:
         docs = load_table(spark, sf_dir, "documents")
-        # dir keyed by w: two consumers at different widths must not
-        # thrash one artifact (the manifest would flip stale each call
-        # and a cached frame could silently read the other w's rows)
-        _INDEX_CACHE[key] = publish_and_open(
-            sf_dir, f"_win_w{w}",
-            lambda d: window_store.ensure_window_index(
-                spark, docs, os.path.join(sf_dir, "documents.parquet"),
-                d, w)[0])
+        _INDEX_CACHE[key] = _frame_store_rows(
+            spark, sf_dir, "windows", {"w": w}, "dedup_windows",
+            lambda: dedup.window_index(docs, w, "text", "doc_id"))
     return _INDEX_CACHE[key]
 
 

@@ -1,19 +1,23 @@
 """Published on-disk DERIVED-FRAME stores — the doc-bucket-partitioned
-durable home for the per-doc derivations the dedup family pinned per
-session until round 11 (round-10 verdict item 4): shingle sets, simhash
-fingerprints, and winnowed fingerprint selections. One module because
-the three share every property that matters:
+durable home for every per-doc derivation the dedup and text-stats
+families read: positional span-dedup windows (Lee et al. 2022), shingle
+sets, simhash fingerprints, winnowed fingerprint selections, minhash
+signatures and per-doc text signals. One module because they share every
+property that matters:
 
 - each derivation is PER-DOC (a row depends only on its own document's
   text), so a delta refresh recomputing only the changed docs is exact;
 - rows are keyed by `doc_id` and consumed by CORPUS-WIDE key
-  aggregations/joins, so — exactly like `window_store` — partitioning
-  serves MAINTENANCE, not pruning: doc-hash `dbucket` dirs mean a
-  changed doc rewrites one bucket, never the table;
+  aggregations/joins, so no partition predicate helps them and
+  partitioning serves MAINTENANCE, not pruning: doc-hash `dbucket` dirs
+  mean a changed doc rewrites one bucket, never the table (key-partitioned
+  dirs would invert that — every doc scatters over all key buckets, making
+  the delta a full rewrite), and at lake scale the bucket count is the
+  write-parallelism knob;
 - the expensive part is the text pass (tokenize/sha256), which a second
   session must never repay — the reference reopens its prebuilt FTS /
   vector indexes at startup for the same reason
-  (/root/reference/mcp_server/apps/embeddings.py:224-255).
+  (its `mcp_server/apps/embeddings.py:224-255`).
 
 Layout under ``<index_dir>/``::
 
@@ -28,9 +32,10 @@ parameters stamped in the layout — a reopened store can therefore
 refresh itself with the exact derivation it was published under, and a
 parameter change is a different model identity (staleness rebuild), the
 same rule every other store follows. Writes go through the shared
-staged-journal commit (`sources.commit`) via `_partitioned_refresh`.
-The bucket count derives from the doc count (`window_store.
-window_buckets`) unless overridden.
+staged-journal commit (`sources.commit`) via `_partitioned_refresh`; a
+derivation with zero rows publishes an empty-but-schema'd table that
+reopens like any other. The bucket count derives from the doc count
+(`window_buckets`) unless overridden.
 """
 
 from __future__ import annotations
@@ -47,10 +52,41 @@ from .manifest import (IndexManifest, ensure_index, read_manifest,
                        source_fingerprint, staleness_reasons)
 from .vector_store import (_partitioned_refresh, _write_json_sidecar,
                            _write_parted_table)
-from .window_store import _dbucket, window_buckets
 
 FLAYOUT_NAME = "_flayout.json"
 FRAME_MODEL = "frame-index-v1"
+DEFAULT_DBUCKETS = 16     # floor of the derived bucket count
+MAX_DBUCKETS = 65536      # sidecar/namenode-friendly directory bound
+WINDOW_BUCKET_DOCS = 2048  # target docs per bucket dir at publish time
+
+
+def window_buckets(n_docs: int) -> int:
+    """Derived doc-hash bucket count — the write-parallelism knob sized
+    from corpus stats at publish time: the smallest power of two holding
+    expected <= WINDOW_BUCKET_DOCS docs per bucket, clamped to
+    [DEFAULT_DBUCKETS, MAX_DBUCKETS]. Power-of-two steps + the clamp
+    keep the value a step function of the count (no flapping on small
+    growth); pure integer arithmetic so two sessions derive identically.
+    A delta refresh rewrites one bucket per changed doc-hash, so at any
+    N the rewrite unit stays ~WINDOW_BUCKET_DOCS docs' rows; the
+    manifest carries the value, so growth across a boundary is a
+    STALENESS REBUILD at the new geometry (the vector store's sqrt-rule
+    discipline), never a silently mis-sized reuse."""
+    need = (max(int(n_docs), 1) + WINDOW_BUCKET_DOCS - 1) \
+        // WINDOW_BUCKET_DOCS
+    b = 1 << (need - 1).bit_length()
+    return max(DEFAULT_DBUCKETS, min(MAX_DBUCKETS, b))
+
+
+def _dbucket(id_col: str, n_buckets: int):
+    """Stable doc-hash partition value. Writer and refresher must agree
+    (the value is stored data, recorded in the layout); no oracle ever
+    reads it, so the hash needs stability, not cross-engine parity."""
+    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
+
+
+def _derive_windows(docs: DataFrame, params: dict) -> DataFrame:
+    return dedup.window_index(docs, int(params["w"]), "text", "doc_id")
 
 
 def _derive_shingles(docs: DataFrame, params: dict) -> DataFrame:
@@ -107,6 +143,7 @@ def _derive_textsignals(docs: DataFrame, params: dict) -> DataFrame:
 # the shared delta refresh exact; a corpus-global derivation (df counts,
 # trained codebooks) does NOT belong in this registry.
 DERIVERS = {
+    "windows": _derive_windows,
     "shingles": _derive_shingles,
     "simhash": _derive_simhash,
     "winnow": _derive_winnow,
@@ -143,23 +180,11 @@ def frame_manifest(source_path: str, n_docs: int, deriver: str,
 
 
 def publish_frame_store(docs: DataFrame, index_dir: str, deriver: str,
-                        params: dict, n_buckets: int | None = None,
-                        rows: DataFrame | None = None) -> None:
+                        params: dict, n_buckets: int | None = None) -> None:
     """Full overwrite publish: run the named derivation once and write
     it doc-bucket-partitioned. `n_buckets=None` derives the bucket count
     from the doc count (`window_buckets`, stamped as derived). Settles
-    any crashed refresh first.
-
-    `rows` (optional) seeds the publish with an ALREADY-DERIVED frame —
-    it must equal `DERIVERS[deriver](docs, params)` (same corpus, same
-    derivation identity). The intended caller is a maintenance twin
-    forking a working store off the per-corpus-snapshot published frame
-    store (plans.dedup.get_*_index): the text pass was already paid at
-    that store's publish, so re-deriving it here is pure waste (guide
-    §6 — don't recompute what a published index already holds). The
-    layout stamp still records the DERIVER + params, so every subsequent
-    `write_frame_refresh` re-derives its batches exactly as a live
-    publish would; consumers' oracles rebuild from raw text either way."""
+    any crashed refresh first."""
     if deriver not in DERIVERS:
         raise KeyError(f"unknown frame deriver {deriver!r}; "
                        f"registry has {sorted(DERIVERS)}")
@@ -172,9 +197,8 @@ def publish_frame_store(docs: DataFrame, index_dir: str, deriver: str,
                         {"deriver": deriver, "params": params,
                          "n_buckets": n_buckets, "id_col": "doc_id",
                          "derived": derived})
-    if rows is None:
-        rows = DERIVERS[deriver](docs, params)
-    rows = rows.select("*", _dbucket("doc_id", n_buckets).alias("dbucket"))
+    rows = (DERIVERS[deriver](docs, params)
+            .select("*", _dbucket("doc_id", n_buckets).alias("dbucket")))
     _write_parted_table(rows, os.path.join(index_dir, "rows"), "dbucket",
                         "doc_id")
 

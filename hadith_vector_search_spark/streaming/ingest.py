@@ -861,34 +861,18 @@ JOIN g ON g.j < len(m.v)
 
 
 def streaming_window_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Published-WINDOW-index maintenance AT INGEST — the substring-dedup
-    member of the streaming x durable-store matrix (postings, IVF cells,
-    LSH buckets, and now the span-dedup window store all stay fresh
-    under a streaming corpus).
-
-    `doc_change_feed` drains through `_refresh_twin` into a clone of the
-    per-corpus-snapshot published window store (the corpus is never
-    re-tokenized per invocation — guide §6, the streaming_neardup_ingest
-    store-read discipline applied to the old side; the oracle replays
-    windowing from raw text). Each micro-batch is delta-merged by
-    `sources.window_store.write_window_refresh`: only the `dbucket` dirs
-    the batch's doc ids hash to rewrite, through the crash-safe
-    staged-journal commit. Emits the SPAN REPORT computed off the drained
-    store — the consumer-visible result — which the oracle replays from
-    the merged raw text (windowing + duplication + island merge)."""
+    """Published span-dedup WINDOW-store maintenance AT INGEST — the
+    `windows` member of the frame-store twins (`_frame_twin`):
+    `doc_change_feed` drains into a clone of the published window frame
+    store, each micro-batch re-windowing only its changed docs. Emits the
+    SPAN REPORT computed off the drained store — the consumer-visible
+    result — which the oracle replays from the merged raw text
+    (windowing + duplication + island merge)."""
     from ..operators import dedup as dedup_ops
-    from ..plans import dedup as dedup_plans
-    from ..sources import window_store
 
-    docs = load_table(spark, sf_dir, "documents")
-    return _refresh_twin(
-        spark, doc_change_feed(docs),
-        dedup_plans.get_published_window_store(spark, sf_dir).index_dir,
-        lambda store: lambda ups, rms: window_store.write_window_refresh(
-            spark, store, ups, rms),
-        lambda store: dedup_ops.duplicated_spans(
-            docs, windows=window_store.open_window_index(spark, store).windows
-        ).localCheckpoint(),
+    return _frame_twin(
+        spark, sf_dir, "windows", {"w": dedup_ops.DUPSPAN_W},
+        lambda docs, rows: dedup_ops.duplicated_spans(docs, windows=rows),
         "stream_winref_")
 
 

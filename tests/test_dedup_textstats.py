@@ -390,36 +390,6 @@ def test_duplicated_spans_hot_window_bounded(spark):
         assert (r.span_start, r.span_len, r.n_windows) == (3, 12, 3), r
 
 
-def test_refresh_window_index_equals_rebuild(spark):
-    """Incremental window-index refresh (drop changed/removed, rebuild
-    changed narrow) must equal a from-scratch rebuild of the new corpus."""
-    from hadith_vector_search_spark.operators.dedup import (
-        refresh_window_index, window_index)
-
-    v1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa one"),
-         (2, "some other document body with plenty of distinct token text"),
-         (3, "third doc that will be deleted in the second corpus version"),
-         (4, "fourth doc left completely untouched across both versions ok")],
-        "doc_id long, text string")
-    # v2: doc 1 edited, doc 3 removed, doc 5 added, docs 2/4 untouched.
-    v2 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa two"),
-         (2, "some other document body with plenty of distinct token text"),
-         (4, "fourth doc left completely untouched across both versions ok"),
-         (5, "a brand new fifth document arriving in the second snapshot")],
-        "doc_id long, text string")
-    changed = v2.filter(F.col("doc_id").isin(1, 5))
-    removed = spark.createDataFrame([(3,)], "doc_id long")
-
-    idx_v1 = window_index(v1, w=10)
-    refreshed = refresh_window_index(idx_v1, changed, removed, w=10)
-    rebuilt = window_index(v2, w=10)
-    key = lambda r: (r.doc_id, r.pos, r._h1, r._h2)  # noqa: E731
-    assert sorted(map(key, refreshed.collect())) == \
-        sorted(map(key, rebuilt.collect()))
-
-
 def test_chunk_documents_semantics(spark):
     """Chunk coverage invariants: every token lands in some chunk, chunks
     overlap by exactly `overlap` in the interior, no chunk is fully

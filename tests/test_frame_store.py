@@ -1,9 +1,11 @@
 """Published derived-frame stores (sources/frame_store.py): the durable
-home for the dedup family's per-doc derivations (shingles, simhash,
-winnow selection). Publish/reopen equivalence against the in-session
-derivations, manifest reuse across sessions, parameter/geometry identity,
-doc-bucket delta refresh with untouched buckets byte-invariant, and the
-store-first getter wiring in plans.dedup."""
+home for the dedup family's per-doc derivations (span-dedup windows,
+shingles, simhash, winnow selection, minhash signatures, text signals).
+Publish/reopen equivalence against the in-session derivations (including
+a derivation with zero rows), manifest reuse across sessions,
+parameter/geometry identity, doc-bucket delta refresh with untouched
+buckets byte-invariant, crash safety via the shared staged-journal
+commit, and the store-first getter wiring in plans.dedup."""
 
 from __future__ import annotations
 
@@ -13,7 +15,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadith_vector_search_spark.operators import dedup
+from hadith_vector_search_spark.sources import commit as commitlog
 from hadith_vector_search_spark.sources import frame_store
+
+# The store mechanics (refresh, crash recovery, geometry) are
+# deriver-generic; each check runs over the window index and one other
+# derivation of a different row shape.
+MECHANICS = pytest.mark.parametrize(
+    "deriver,params", [("windows", {"w": 4}), ("shingles", {"w": 3})],
+    ids=["windows", "shingles"])
 
 
 def _docs(spark, rows):
@@ -26,8 +36,18 @@ def _corpus(spark, n=10):
             f"iota kappa tail{i} more body") for i in range(n)])
 
 
+def _short_docs(spark):
+    # fewer tokens than any width below: windows/shingles derive no rows
+    return _docs(spark, [(1, "tiny"), (2, "two words")])
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _fields(df):
+    # simpleString: parquet reads every array back as containsNull
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
 
 
 def _file_states(root):
@@ -50,16 +70,21 @@ def _file_states(root):
     ("winnow", {"w": 4, "guarantee": 4},
      lambda d: dedup._winnow_selected(d, 4, 4, "text", "doc_id")
      .select("doc_id", "n_windows", "_sel").distinct()),
+    ("windows", {"w": 4}, lambda d: dedup.window_index(d, 4)),
 ])
 def test_publish_then_open_matches_in_session(spark, tmp_path, deriver,
                                               params, build):
-    idx_dir = str(tmp_path / f"fs_{deriver}")
-    docs = _corpus(spark)
-    frame_store.publish_frame_store(docs, idx_dir, deriver, params,
-                                    n_buckets=4)
-    fidx = frame_store.open_frame_store(spark, idx_dir)
-    assert fidx.deriver == deriver and fidx.n_buckets == 4
-    assert _rows(fidx.rows) == _rows(build(docs))
+    """The short corpus derives zero rows for windows and shingles: the
+    store must still reopen, as an empty table with the schema."""
+    for name, docs in (("body", _corpus(spark)),
+                       ("short", _short_docs(spark))):
+        idx_dir = str(tmp_path / f"fs_{deriver}_{name}")
+        frame_store.publish_frame_store(docs, idx_dir, deriver, params,
+                                        n_buckets=4)
+        fidx = frame_store.open_frame_store(spark, idx_dir)
+        assert fidx.deriver == deriver and fidx.n_buckets == 4
+        assert _fields(fidx.rows) == _fields(build(docs))
+        assert _rows(fidx.rows) == _rows(build(docs))
 
 
 def test_ensure_reuses_across_sessions_and_gates_params(spark, tmp_path):
@@ -83,6 +108,12 @@ def test_ensure_reuses_across_sessions_and_gates_params(spark, tmp_path):
         spark, spark.read.parquet(src), src, idx_dir, "shingles",
         {"w": 5})
     assert any("model" in r for r in reasons3), reasons3
+    # corpus drift (rewrite in place) invalidates too
+    _corpus(spark, 11).write.mode("overwrite").parquet(src)
+    _, reasons4 = frame_store.ensure_frame_store(
+        spark, spark.read.parquet(src), src, idx_dir, "shingles",
+        {"w": 5})
+    assert reasons4
 
 
 def test_refresh_equals_rebuild_and_untouched_buckets_invariant(
@@ -120,6 +151,186 @@ def test_refresh_equals_rebuild_and_untouched_buckets_invariant(
     # manifest re-stamped against the merged corpus at stored geometry
     assert frame_store.frame_store_is_fresh(idx_dir, src, 11, "simhash",
                                             {"n_bits": 16}, n_buckets=6)
+
+
+@MECHANICS
+def test_refresh_touches_only_affected_buckets(spark, tmp_path, deriver,
+                                               params):
+    """Doc-bucket delta: the refreshed store equals a from-scratch
+    publish over the merged corpus, and every bucket dir holding none of
+    the batch's doc ids keeps its files byte-invariant — the
+    partitioning exists exactly for this property."""
+    idx_dir = str(tmp_path / "fs")
+    docs = _corpus(spark, 12)
+    frame_store.publish_frame_store(docs, idx_dir, deriver, params,
+                                    n_buckets=4)
+    before = _file_states(os.path.join(idx_dir, "rows"))
+
+    changed = _docs(spark, [(3, "totally rewritten text body for doc"),
+                            (50, "a brand new document joins the corpus")])
+    removed = spark.createDataFrame([(7,)], "doc_id long")
+    refreshed = frame_store.write_frame_refresh(spark, idx_dir, changed,
+                                                removed)
+
+    merged = (docs.filter(~F.col("doc_id").isin([3, 7]))
+              .unionByName(changed))
+    scratch = str(tmp_path / "scratch")
+    frame_store.publish_frame_store(merged, scratch, deriver, params,
+                                    n_buckets=4)
+    assert _rows(refreshed.rows) == _rows(
+        frame_store.open_frame_store(spark, scratch).rows)
+
+    touched = {r[0] for r in
+               _docs(spark, [(3, "x"), (7, "x"), (50, "x")])
+               .select(frame_store._dbucket("doc_id", 4)).collect()}
+    after = _file_states(os.path.join(idx_dir, "rows"))
+    untouched = [rel for rel in before if int(
+        rel.split("dbucket=")[1].split(os.sep)[0]) not in touched]
+    assert untouched
+    for rel in untouched:
+        assert after.get(rel) == before[rel], \
+            f"untouched bucket rewritten: {rel}"
+
+
+@MECHANICS
+def test_refresh_crash_mid_commit_rolls_forward(spark, tmp_path,
+                                                monkeypatch, deriver,
+                                                params):
+    idx_dir = str(tmp_path / "fs")
+    docs = _corpus(spark, 12)
+    frame_store.publish_frame_store(docs, idx_dir, deriver, params,
+                                    n_buckets=4)
+    changed = _docs(spark, [(3, "rewritten body after the crash test")])
+
+    def partial(store_dir, ops):
+        assert ops
+        commitlog._apply_op(store_dir, ops[0])
+        raise RuntimeError("killed mid-commit")
+
+    monkeypatch.setattr(commitlog, "_apply_ops", partial)
+    with pytest.raises(RuntimeError):
+        frame_store.write_frame_refresh(spark, idx_dir, changed)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(idx_dir, commitlog.JOURNAL_NAME))
+
+    reopened = frame_store.open_frame_store(spark, idx_dir)  # recovers
+    assert not os.path.exists(os.path.join(idx_dir,
+                                           commitlog.JOURNAL_NAME))
+    merged = docs.filter(F.col("doc_id") != 3).unionByName(changed)
+    assert _rows(reopened.rows) == _rows(
+        frame_store.DERIVERS[deriver](merged, params))
+
+
+@MECHANICS
+def test_refresh_requires_doc_count_with_source_path(spark, tmp_path,
+                                                     deriver, params):
+    idx_dir = str(tmp_path / "fs")
+    frame_store.publish_frame_store(_corpus(spark), idx_dir, deriver,
+                                    params, n_buckets=4)
+    with pytest.raises(ValueError):
+        frame_store.write_frame_refresh(
+            spark, idx_dir, _docs(spark, [(1, "x y z w v")]),
+            source_path="/tmp/whatever")
+
+
+@MECHANICS
+def test_refresh_all_docs_removed_keeps_store_openable(spark, tmp_path,
+                                                       deriver, params):
+    """Removing every doc leaves an empty-but-schema'd placeholder, and
+    a later refresh on top of it rebuilds real bucket dirs (the vector
+    store's degenerate-shape discipline on the doc-bucket layout)."""
+    idx_dir = str(tmp_path / "fs")
+    frame_store.publish_frame_store(_corpus(spark, 6), idx_dir, deriver,
+                                    params, n_buckets=4)
+    all_ids = spark.createDataFrame([(i,) for i in range(6)],
+                                    "doc_id long")
+    emptied = frame_store.write_frame_refresh(spark, idx_dir,
+                                              _docs(spark, []), all_ids)
+    assert emptied.rows.count() == 0
+    assert frame_store.open_frame_store(spark, idx_dir).rows.count() == 0
+
+    batch = _docs(spark, [(30, "fresh alpha beta gamma delta body"),
+                          (31, "fresh alpha beta gamma delta body")])
+    refreshed = frame_store.write_frame_refresh(spark, idx_dir, batch)
+    assert _rows(refreshed.rows) == _rows(
+        frame_store.DERIVERS[deriver](batch, params))
+    assert any(d.startswith("dbucket=")
+               for d in os.listdir(os.path.join(idx_dir, "rows")))
+
+
+def test_window_buckets_rule():
+    """Derived bucket count: power-of-two step function of the doc
+    count, clamped — pure integer arithmetic, no flapping."""
+    wb = frame_store.window_buckets
+    t = frame_store.WINDOW_BUCKET_DOCS
+    assert wb(0) == frame_store.DEFAULT_DBUCKETS
+    assert wb(t * 16) == 16              # at the floor boundary
+    assert wb(t * 16 + 1) == 32          # first doc past it doubles
+    assert wb(t * 100) == 128
+    assert wb(10**12) == frame_store.MAX_DBUCKETS
+    last = 0
+    for n in [0, 10, t, t * 17, t * 40, t * 1000, 10**9]:
+        assert wb(n) >= last
+        last = wb(n)
+
+
+@MECHANICS
+def test_bucket_geometry_derives_stamps_and_gates(spark, tmp_path,
+                                                  monkeypatch, deriver,
+                                                  params):
+    """Two corpus sizes publish DIFFERENT derived bucket counts, the
+    layout stamps the value (+derived flag), a reopened refresh uses the
+    STORED count (untouched buckets stay byte-invariant under it), and
+    growth across a `window_buckets` boundary flips the manifest
+    stale."""
+    # shrink the target so test-sized corpora cross a boundary
+    monkeypatch.setattr(frame_store, "WINDOW_BUCKET_DOCS", 2)
+    monkeypatch.setattr(frame_store, "DEFAULT_DBUCKETS", 4)
+
+    small, big = _corpus(spark, 8), _corpus(spark, 40)
+    src_s = str(tmp_path / "small.parquet")
+    src_b = str(tmp_path / "big.parquet")
+    small.write.parquet(src_s)
+    big.write.parquet(src_b)
+
+    got = {}
+    for tag, src, docs in (("s", src_s, small), ("b", src_b, big)):
+        idx = str(tmp_path / f"fs_{tag}")
+        fidx, reasons = frame_store.ensure_frame_store(
+            spark, spark.read.parquet(src), src, idx, deriver, params)
+        assert reasons  # first publish
+        expect = frame_store.window_buckets(docs.count())
+        assert fidx.n_buckets == expect
+        lay = frame_store.read_flayout(idx)
+        assert lay["n_buckets"] == expect and lay["derived"] is True
+        got[tag] = expect
+        # fresh for the same corpus at derived geometry
+        assert frame_store.frame_store_is_fresh(idx, src, docs.count(),
+                                                deriver, params)
+    assert got["s"] != got["b"]
+
+    # growth across the boundary is STALE at derived geometry
+    idx_s = str(tmp_path / "fs_s")
+    assert not frame_store.frame_store_is_fresh(idx_s, src_s, 40, deriver,
+                                                params)
+
+    # reopened refresh uses the STORED bucket count: change one doc,
+    # assert only its bucket rewrote and the result equals a rebuild
+    changed = _docs(spark, [(3, "completely new body text for doc three "
+                                "alpha beta gamma delta")])
+    before = _file_states(os.path.join(idx_s, "rows"))
+    fidx2 = frame_store.write_frame_refresh(spark, idx_s, changed)
+    assert fidx2.n_buckets == got["s"]
+    after = _file_states(os.path.join(idx_s, "rows"))
+    merged = small.filter(F.col("doc_id") != 3).unionByName(changed)
+    scratch = str(tmp_path / "fs_scratch")
+    frame_store.publish_frame_store(merged, scratch, deriver, params,
+                                    n_buckets=got["s"])
+    assert _rows(fidx2.rows) == _rows(
+        frame_store.open_frame_store(spark, scratch).rows)
+    # at least one bucket untouched byte-for-byte (8 docs, >=4 buckets)
+    untouched = [k for k in before if k in after and before[k] == after[k]]
+    assert untouched, (before, after)
 
 
 def test_getters_serve_from_store_and_reuse(spark, tmp_path, monkeypatch,

@@ -1404,7 +1404,7 @@ def test_unwritable_index_root_falls_back_to_temp_root_once(
     assert sorted(os.listdir(temp_root)) == sorted(
         sf_dir.strip("/").replace("/", "_") + sfx
         for sfx in ("_vecbq", "_vecsq",
-                    f"_win_w{dplans.dedup.DUPSPAN_W}"))
+                    f"_windows_w{dplans.dedup.DUPSPAN_W}"))
     assert capfd.readouterr().err.count("is unwritable") == 1
 
 

@@ -1,31 +1,22 @@
-"""Published substring-dedup WINDOW index (sources/window_store.py):
-publish/reopen equivalence against the in-session derivation, manifest
-reuse across sessions, doc-bucket delta refresh, and crash safety via
-the shared staged-journal commit."""
+"""Published substring-dedup WINDOW index, served by the generic frame
+store (sources/frame_store.py, deriver "windows"): manifest reuse across
+sessions and corpus-drift invalidation."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
 from hadith_vector_search_spark.operators import dedup
-from hadith_vector_search_spark.sources import commit as commitlog
-from hadith_vector_search_spark.sources import window_store
+from hadith_vector_search_spark.sources import frame_store
 
 W = 4
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def _corpus(spark, n=12):
     shared = "alpha beta gamma delta epsilon zeta"
     rows = [(i, f"{shared} tail words {i} more body text here") for i in
             range(n)]
-    return _docs(spark, rows)
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def _rows(df):
@@ -44,215 +35,26 @@ def _file_states(root):
     return out
 
 
-def test_publish_then_open_matches_in_session_index(spark, tmp_path):
-    idx_dir = str(tmp_path / "winidx")
-    docs = _corpus(spark)
-    window_store.publish_window_index(docs, idx_dir, w=W, n_buckets=4)
-    widx = window_store.open_window_index(spark, idx_dir)
-    assert (widx.w, widx.n_buckets) == (W, 4)
-    assert _rows(widx.windows) == _rows(dedup.window_index(docs, W))
-    # span dedup off the store equals span dedup off the derivation
-    got = dedup.duplicated_spans(docs, w=W, windows=widx.windows)
-    want = dedup.duplicated_spans(docs, w=W)
-    assert _rows(got) == _rows(want) and got.count() > 0
-
-
 def test_ensure_reuses_across_sessions(spark, tmp_path):
     src = str(tmp_path / "docs.parquet")
     _corpus(spark).write.parquet(src)
     idx_dir = str(tmp_path / "winidx")
     docs = spark.read.parquet(src)
 
-    _, reasons1 = window_store.ensure_window_index(spark, docs, src,
-                                                   idx_dir, w=W)
+    _, reasons1 = frame_store.ensure_frame_store(
+        spark, docs, src, idx_dir, "windows", {"w": W})
     assert reasons1 == ["no manifest"]
     before = _file_states(idx_dir)
     assert before
 
-    widx2, reasons2 = window_store.ensure_window_index(
-        spark, spark.read.parquet(src), src, idx_dir, w=W)
+    widx2, reasons2 = frame_store.ensure_frame_store(
+        spark, spark.read.parquet(src), src, idx_dir, "windows", {"w": W})
     assert reasons2 == []
     assert _file_states(idx_dir) == before  # byte-for-byte reuse
-    assert _rows(widx2.windows) == _rows(dedup.window_index(docs, W))
+    assert _rows(widx2.rows) == _rows(dedup.window_index(docs, W))
 
     # corpus drift (rewrite in place) invalidates
     _corpus(spark, 13).write.mode("overwrite").parquet(src)
-    _, reasons3 = window_store.ensure_window_index(
-        spark, spark.read.parquet(src), src, idx_dir, w=W)
+    _, reasons3 = frame_store.ensure_frame_store(
+        spark, spark.read.parquet(src), src, idx_dir, "windows", {"w": W})
     assert reasons3
-
-
-def test_refresh_touches_only_affected_buckets(spark, tmp_path):
-    """Doc-bucket delta: the refreshed store equals a from-scratch
-    publish over the merged corpus, and bucket dirs holding none of the
-    batch's doc ids keep their files byte-invariant — the partitioning
-    exists exactly for this property."""
-    idx_dir = str(tmp_path / "winidx")
-    docs = _corpus(spark)
-    window_store.publish_window_index(docs, idx_dir, w=W, n_buckets=4)
-    before = _file_states(idx_dir)
-
-    changed = _docs(spark, [(3, "totally rewritten text body for doc"),
-                            (50, "a brand new document joins the corpus")])
-    removed = spark.createDataFrame([(7,)], "doc_id long")
-    refreshed = window_store.write_window_refresh(spark, idx_dir, changed,
-                                                  removed)
-
-    merged = _docs(spark,
-                   [(i, f"alpha beta gamma delta epsilon zeta tail words "
-                        f"{i} more body text here")
-                    for i in range(12) if i not in (3, 7)]
-                   + [(3, "totally rewritten text body for doc"),
-                      (50, "a brand new document joins the corpus")])
-    scratch_dir = str(tmp_path / "scratch")
-    window_store.publish_window_index(merged, scratch_dir, w=W,
-                                      n_buckets=4)
-    scratch = window_store.open_window_index(spark, scratch_dir)
-    assert _rows(refreshed.windows) == _rows(scratch.windows)
-    # storeless twin agrees too
-    assert _rows(refreshed.windows) == _rows(dedup.window_index(merged, W))
-
-    touched = {r[0] for r in
-               _docs(spark, [(3, "x"), (7, "x"), (50, "x")])
-               .select(window_store._dbucket("doc_id", 4)).collect()}
-    after = _file_states(idx_dir)
-    for rel, st in before.items():
-        if not rel.startswith("windows"):
-            continue
-        b = int(rel.split("dbucket=")[1].split(os.sep)[0])
-        if b not in touched:
-            assert after.get(rel) == st, f"untouched bucket rewritten: {rel}"
-
-
-def test_refresh_crash_mid_commit_rolls_forward(spark, tmp_path,
-                                                monkeypatch):
-    idx_dir = str(tmp_path / "winidx")
-    docs = _corpus(spark)
-    window_store.publish_window_index(docs, idx_dir, w=W, n_buckets=4)
-    changed = _docs(spark, [(3, "rewritten body after the crash test")])
-
-    def partial(store_dir, ops):
-        assert ops
-        commitlog._apply_op(store_dir, ops[0])
-        raise RuntimeError("killed mid-commit")
-
-    monkeypatch.setattr(commitlog, "_apply_ops", partial)
-    with pytest.raises(RuntimeError):
-        window_store.write_window_refresh(spark, idx_dir, changed)
-    monkeypatch.undo()
-    assert os.path.exists(os.path.join(idx_dir, commitlog.JOURNAL_NAME))
-
-    reopened = window_store.open_window_index(spark, idx_dir)  # recovers
-    assert not os.path.exists(os.path.join(idx_dir,
-                                           commitlog.JOURNAL_NAME))
-    merged = _docs(spark,
-                   [(i, f"alpha beta gamma delta epsilon zeta tail words "
-                        f"{i} more body text here")
-                    for i in range(12) if i != 3]
-                   + [(3, "rewritten body after the crash test")])
-    assert _rows(reopened.windows) == _rows(dedup.window_index(merged, W))
-
-
-def test_refresh_requires_doc_count_with_source_path(spark, tmp_path):
-    idx_dir = str(tmp_path / "winidx")
-    window_store.publish_window_index(_corpus(spark), idx_dir, w=W,
-                                      n_buckets=4)
-    with pytest.raises(ValueError):
-        window_store.write_window_refresh(
-            spark, idx_dir, _docs(spark, [(1, "x y z w v")]),
-            source_path="/tmp/whatever")
-
-
-def test_refresh_all_docs_removed_keeps_store_openable(spark, tmp_path):
-    """Removing every doc leaves an empty-but-schema'd placeholder, and
-    a later refresh on top of it rebuilds real bucket dirs (the vector
-    store's degenerate-shape discipline on the window layout)."""
-    idx_dir = str(tmp_path / "winidx")
-    docs = _corpus(spark, 6)
-    window_store.publish_window_index(docs, idx_dir, w=W, n_buckets=4)
-    empty = _docs(spark, [])
-    all_ids = spark.createDataFrame([(i,) for i in range(6)],
-                                    "doc_id long")
-    emptied = window_store.write_window_refresh(spark, idx_dir, empty,
-                                                all_ids)
-    assert emptied.windows.count() == 0
-    reopened = window_store.open_window_index(spark, idx_dir)
-    assert reopened.windows.count() == 0
-
-    batch = _docs(spark, [(30, "fresh alpha beta gamma delta body"),
-                          (31, "fresh alpha beta gamma delta body")])
-    refreshed = window_store.write_window_refresh(spark, idx_dir, batch)
-    assert _rows(refreshed.windows) == _rows(dedup.window_index(batch, W))
-
-
-def test_window_buckets_rule():
-    """Derived bucket count: power-of-two step function of the doc
-    count, clamped — pure integer arithmetic, no flapping."""
-    wb = window_store.window_buckets
-    t = window_store.WINDOW_BUCKET_DOCS
-    assert wb(0) == window_store.DEFAULT_DBUCKETS
-    assert wb(t * 16) == 16              # at the floor boundary
-    assert wb(t * 16 + 1) == 32          # first doc past it doubles
-    assert wb(t * 100) == 128
-    assert wb(10**12) == window_store.MAX_DBUCKETS
-    last = 0
-    for n in [0, 10, t, t * 17, t * 40, t * 1000, 10**9]:
-        assert wb(n) >= last
-        last = wb(n)
-
-
-def test_window_geometry_derives_stamps_and_gates(spark, tmp_path,
-                                                  monkeypatch):
-    """Round-10 verdict item 3: two corpus sizes publish DIFFERENT
-    derived bucket counts, the layout stamps the value (+derived flag),
-    a reopened refresh uses the STORED count (untouched buckets stay
-    byte-invariant under it), and growth across a `window_buckets`
-    boundary flips the manifest stale."""
-    # shrink the target so test-sized corpora cross a boundary
-    monkeypatch.setattr(window_store, "WINDOW_BUCKET_DOCS", 2)
-    monkeypatch.setattr(window_store, "DEFAULT_DBUCKETS", 4)
-
-    small, big = _corpus(spark, 8), _corpus(spark, 40)
-    src_s = str(tmp_path / "small.parquet")
-    src_b = str(tmp_path / "big.parquet")
-    small.write.parquet(src_s)
-    big.write.parquet(src_b)
-
-    got = {}
-    for tag, src, docs in (("s", src_s, small), ("b", src_b, big)):
-        idx = str(tmp_path / f"win_{tag}")
-        widx, reasons = window_store.ensure_window_index(
-            spark, spark.read.parquet(src), src, idx, w=W)
-        assert reasons  # first publish
-        expect = window_store.window_buckets(docs.count())
-        assert widx.n_buckets == expect
-        lay = window_store.read_wlayout(idx)
-        assert lay["n_buckets"] == expect and lay["derived"] is True
-        got[tag] = expect
-        # fresh for the same corpus at derived geometry
-        assert window_store.window_index_is_fresh(idx, src, docs.count(),
-                                                  w=W)
-    assert got["s"] != got["b"]
-
-    # growth across the boundary is STALE at derived geometry
-    assert not window_store.window_index_is_fresh(
-        str(tmp_path / "win_s"), src_s, 40, w=W)
-
-    # reopened refresh uses the STORED bucket count: change one doc,
-    # assert only its bucket rewrote and the result equals a rebuild
-    idx_s = str(tmp_path / "win_s")
-    changed = _docs(spark, [(3, "completely new body text for doc three "
-                                "alpha beta gamma delta")])
-    before = _file_states(os.path.join(idx_s, "windows"))
-    widx2 = window_store.write_window_refresh(spark, idx_s, changed)
-    assert widx2.n_buckets == got["s"]
-    after = _file_states(os.path.join(idx_s, "windows"))
-    merged = small.filter(F.col("doc_id") != 3).unionByName(changed)
-    scratch = str(tmp_path / "win_scratch")
-    window_store.publish_window_index(merged, scratch, w=W,
-                                      n_buckets=got["s"])
-    fresh = window_store.open_window_index(spark, scratch)
-    assert _rows(widx2.windows) == _rows(fresh.windows)
-    # at least one bucket untouched byte-for-byte (8 docs, >=4 buckets)
-    untouched = [k for k in before if k in after and before[k] == after[k]]
-    assert untouched, (before, after)
