@@ -50,10 +50,10 @@ def main() -> None:
                 pass
             gc.collect()  # release checkpointed RDD blocks promptly
         # The warm pass exists only to populate the codegen cache; its
-        # warm-SF index pins and memory-sink tables are dead weight for
-        # the timed pass (which pins its own SF) — carrying them inflated
-        # the timed pass measurably once the registry passed ~100 queries
-        # (GC pressure on the 16g driver).
+        # warm-SF session-cache entries and memory-sink tables are dead
+        # weight for the timed pass (which pins its own SF) — carrying them
+        # inflated the timed pass measurably once the registry passed ~100
+        # queries (GC pressure on the 16g driver).
         from hadith_vector_search_spark.plans.pins import release_sf_pins
         released = release_sf_pins(spark, warm_dir)
         print(f"bench: released {released} warm-SF pins", file=sys.stderr)
@@ -249,10 +249,11 @@ def main() -> None:
             # (the r5 bench showed streaming_user_sessions drifting
             # 2.2s -> 6.4s purely from session-scale state; fresh-session
             # steady state is flat at ~2.0s — see SCALE.md).
-            # Scope the drop to the timed SF's own sinks (same ownership
-            # rule as plans.pins.release_sf_pins): the warm-SF pass's
-            # sinks were already released with its pins, and a future
-            # multi-SF bench must not tear down another dir's live sinks.
+            # Scope the drop to the timed SF's own sinks (the sink rule
+            # plans.pins.release_sf_pins applies beside its session-cache
+            # eviction): the warm-SF pass's sinks were already released
+            # with its session-cache entries, and a future multi-SF bench
+            # must not tear down another dir's live sinks.
             tok = f"_sf{sf_token(sf_dir)}_"
             for t in spark.catalog.listTables():
                 if t.name.startswith("stream_") and tok in t.name:

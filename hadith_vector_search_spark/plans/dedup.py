@@ -2,17 +2,19 @@
 generated DuckDB oracles: exact/window dedup, substring span dedup,
 MinHash signatures, MinHash+LSH near-dup detection, SimHash fingerprints.
 
-Derived-index caches: the span-dedup window index, the shingle frame, the
+Derived indexes: the span-dedup window index, the shingle frame, the
 simhash fingerprints, the winnow selection and the minhash signatures are
 DERIVED INDEX TABLES — on a cluster they are computed once per corpus
 snapshot and persisted (parquet, bucketed by doc_id), then shared by every
 dedup job over that corpus; the reference likewise queries prebuilt FTS /
-vector indexes rather than re-tokenizing per query. The `get_*_index`
-getters serve them from published frame stores (`sources.frame_store`:
-one publish per corpus snapshot, reopened by every later session), reused
-by every query in the family. The DuckDB oracles rebuild everything from
-raw text each run, so the stores are correctness-checked on every gate
-pass."""
+vector indexes rather than re-tokenizing per query. Each `get_*_index`
+getter reads the rows of one published frame store (`sources.frame_store`
+`DERIVERS` row: one publish per corpus snapshot, reopened by every later
+session) through one session-cache entry (`plans.pins`), which a rewrite
+of `documents.parquet` invalidates like every other entry. The near-dup
+pair set and its clusters are `pins.pinned` outputs. The DuckDB oracles
+rebuild everything from raw text each run, so the stores are
+correctness-checked on every gate pass."""
 
 from __future__ import annotations
 
@@ -24,54 +26,46 @@ from pyspark.sql import functions as F
 from ..operators import dedup
 from ..sources import load_table
 from . import pin_audit
-
-_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str, *params) -> tuple:
-    return (spark.sparkContext.applicationId, os.path.abspath(sf_dir), *params)
+from .pins import cached, pinned
 
 
 def get_published_frame_store(spark: SparkSession, sf_dir: str,
                               deriver: str, params: dict):
-    """Ensure-and-open the published frame store HANDLE for this
-    (deriver, params), under the index root `lexical.publish_and_open`
-    resolves. The dir-level view of `_frame_store_rows`, for callers
-    that fork the whole artifact rather than read its rows (the
-    streaming maintenance twins' `commit.clone_store`); handle cached
-    per session so the ensure's count + manifest check run once, not
-    per twin invocation."""
+    """The published frame store HANDLE for this (deriver, params),
+    ensured and opened once per session-cache entry (`plans.pins`)
+    under the index root `lexical.publish_and_open` resolves: publish
+    iff the manifest says the corpus or the derivation identity
+    drifted, reopen the bytes otherwise, so a second session never
+    repays the text pass. Store dirs are keyed by deriver+params so two
+    widths never thrash one artifact. The entry's build records the
+    pin-time plan `frame_<deriver>` of `frame_store.DERIVERS[deriver]`,
+    the derivation publish runs, even when the store is a byte-for-byte
+    reuse. The streaming maintenance twins fork this handle's dir
+    (`commit.clone_store`); the getters read its rows."""
     from ..sources import frame_store
     from .lexical import publish_and_open
 
-    key = _cache_key(spark, sf_dir, "frame_handle", deriver,
-                     tuple(sorted(params.items())))
-    if key not in _INDEX_CACHE:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
+        pin_audit.record(f"frame_{deriver}", sf_dir,
+                         frame_store.DERIVERS[deriver](docs, params))
         ptok = "_".join(f"{k}{params[k]}" for k in sorted(params))
-        _INDEX_CACHE[key] = publish_and_open(
+        return publish_and_open(
             sf_dir, f"_{deriver}_{ptok}",
             lambda d: frame_store.ensure_frame_store(
                 spark, docs, os.path.join(sf_dir, "documents.parquet"),
                 d, deriver, params)[0])
-    return _INDEX_CACHE[key]
+
+    return cached(spark, sf_dir, "documents",
+                  ("frame", deriver, tuple(sorted(params.items()))), build)
 
 
 def _frame_store_rows(spark: SparkSession, sf_dir: str, deriver: str,
-                      params: dict, audit_tag: str, build) -> DataFrame:
-    """The rows of the PUBLISHED doc-bucket-partitioned frame store
+                      params: dict) -> DataFrame:
+    """The rows of the published doc-bucket-partitioned frame store
     (`sources.frame_store`) that every derived dedup frame is served
-    from: publish iff the manifest says the corpus or the derivation
-    identity drifted, reopen the bytes otherwise, so a second
-    session never repays the text pass. `build` is the derivation the
-    store publishes; every consumer's DuckDB oracle rebuilds it from raw
-    text each gate pass. Store dirs are keyed by deriver+params so two
-    widths never thrash one artifact."""
-    # record the BUILD plan unconditionally (plan-string capture only,
-    # nothing materializes): the hygiene sweep must see the derivation
-    # that runs at publish/refresh time even when the store is a
-    # byte-for-byte reuse this session
-    pin_audit.record(audit_tag, sf_dir, build())
+    from; every consumer's DuckDB oracle rebuilds the derivation from
+    raw text each gate pass."""
     return get_published_frame_store(spark, sf_dir, deriver, params).rows
 
 
@@ -80,26 +74,13 @@ def get_shingle_index(spark: SparkSession, sf_dir: str,
     """Shingle index over `documents` — the (doc_id, shingles, gkey)
     frame every shingle-based dedup query shares, served from the
     published frame store (see `_frame_store_rows`)."""
-    key = _cache_key(spark, sf_dir, "shingles", w)
-    if key not in _INDEX_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = _frame_store_rows(
-            spark, sf_dir, "shingles", {"w": w}, "dedup_shingles",
-            lambda: dedup._collapsed_shingles_lazy(docs, "text", "doc_id",
-                                                   w))
-    return _INDEX_CACHE[key]
+    return _frame_store_rows(spark, sf_dir, "shingles", {"w": w})
 
 
 def get_simhash_index(spark: SparkSession, sf_dir: str, n_bits: int) -> DataFrame:
     """Simhash fingerprint index over `documents` — (doc_id, fp) at the
     given width, served from the published frame store."""
-    key = _cache_key(spark, sf_dir, "simhash", n_bits)
-    if key not in _INDEX_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = _frame_store_rows(
-            spark, sf_dir, "simhash", {"n_bits": n_bits}, "dedup_simhash",
-            lambda: dedup.simhash_long(docs, n_bits=n_bits))
-    return _INDEX_CACHE[key]
+    return _frame_store_rows(spark, sf_dir, "simhash", {"n_bits": n_bits})
 
 
 def get_winnow_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,23 +94,15 @@ def get_winnow_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake scale this IS the persisted fingerprint index a MOSS-style
     service maintains incrementally — `write_frame_refresh` is that
     maintenance."""
-    key = _cache_key(spark, sf_dir, "winnow",
-                     dedup.DUPSPAN_W, dedup.WINNOW_GUARANTEE)
-    if key not in _INDEX_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        pinned = _frame_store_rows(
-            spark, sf_dir, "winnow",
-            {"w": dedup.DUPSPAN_W, "guarantee": dedup.WINNOW_GUARANTEE},
-            "dedup_winnow",
-            lambda: dedup._winnow_selected(
-                docs, dedup.DUPSPAN_W, dedup.WINNOW_GUARANTEE, "text",
-                "doc_id").select("doc_id", "n_windows", "_sel").distinct())
-        # Tag the selection with the constants it was built under so the
-        # consumers can refuse a mismatched (w, guarantee) hand-off
-        # instead of silently producing wrong pairs.
-        pinned._winnow_params = (dedup.DUPSPAN_W, dedup.WINNOW_GUARANTEE)
-        _INDEX_CACHE[key] = pinned
-    return _INDEX_CACHE[key]
+    sel = _frame_store_rows(
+        spark, sf_dir, "winnow",
+        {"w": dedup.DUPSPAN_W, "guarantee": dedup.WINNOW_GUARANTEE})
+    # Tag the selection with the constants it was built under so the
+    # consumers can refuse a mismatched (w, guarantee) hand-off instead
+    # of silently producing wrong pairs.
+    sel._winnow_params = (dedup.DUPSPAN_W, dedup.WINNOW_GUARANTEE)
+    return sel
+
 
 PREVIEW_LEN = 40
 N_HASHES = 8
@@ -147,16 +120,8 @@ def get_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves the narrower `minhash_signatures` query too — per-slice
     minimums are independent, so a column prefix IS the narrower
     signature."""
-    key = _cache_key(spark, sf_dir, "minhash", dedup.SHINGLE_W, N_HASHES)
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = _frame_store_rows(
-            spark, sf_dir, "minhash",
-            {"w": dedup.SHINGLE_W, "n_hashes": N_HASHES},
-            "dedup_minhash_sigs",
-            lambda: dedup.minhash_signatures(
-                get_shingle_index(spark, sf_dir)
-                .select("doc_id", "shingles"), N_HASHES))
-    return _INDEX_CACHE[key]
+    return _frame_store_rows(spark, sf_dir, "minhash",
+                             {"w": dedup.SHINGLE_W, "n_hashes": N_HASHES})
 
 
 def dedup_exact_preview(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -187,17 +152,15 @@ def near_dup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived table the cluster/removal steps consume, so it is built once
     per session (first consumer pays; the oracle rebuilds it from raw
     text each gate pass)."""
-    key = _cache_key(spark, sf_dir, "neardup_pairs")
-    if key not in _INDEX_CACHE:
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = pin_audit.record(
-            "dedup_neardup_pairs", sf_dir,
-            dedup.near_dup_minhash(
-                docs, n_hashes=N_HASHES, band_size=BAND_SIZE,
-                threshold=JACCARD_THRESHOLD,
-                sharr=get_shingle_index(spark, sf_dir),
-                sigs=get_minhash_index(spark, sf_dir))).localCheckpoint()
-    return _INDEX_CACHE[key]
+        return dedup.near_dup_minhash(
+            docs, n_hashes=N_HASHES, band_size=BAND_SIZE,
+            threshold=JACCARD_THRESHOLD,
+            sharr=get_shingle_index(spark, sf_dir),
+            sigs=get_minhash_index(spark, sf_dir))
+
+    return pinned(spark, sf_dir, "documents", "dedup_neardup_pairs", build)
 
 
 # Deterministic stand-in for "the incoming ingest batch": docs whose id is
@@ -287,15 +250,11 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the edge list (O(diameter) rounds); oracle = recursive-CTE
     transitive closure over the SAME pair SQL, so both the pair pipeline
     and the clustering are independently verified."""
-    key = _cache_key(spark, sf_dir, "neardup_clusters")
-    if key not in _INDEX_CACHE:
-        pairs = near_dup_minhash(spark, sf_dir)
-        # the captured plan is the FINAL propagation round's (earlier
-        # rounds materialize mid-iteration by design)
-        _INDEX_CACHE[key] = pin_audit.record(
-            "dedup_neardup_clusters", sf_dir,
-            dedup.connected_components(pairs)).localCheckpoint()
-    return _INDEX_CACHE[key]
+    # the captured plan is the FINAL propagation round's (earlier rounds
+    # materialize mid-iteration by design)
+    return pinned(spark, sf_dir, "documents", "dedup_neardup_clusters",
+                  lambda: dedup.connected_components(
+                      near_dup_minhash(spark, sf_dir)))
 
 
 def dedup_removal_list(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,13 +273,7 @@ def get_window_index(spark: SparkSession, sf_dir: str,
     """Positional token-window index over `documents` — the (doc_id,
     pos, _h1, _h2) frame the span-dedup queries share, served from the
     published frame store (see `_frame_store_rows`)."""
-    key = _cache_key(spark, sf_dir, "windows", w)
-    if key not in _INDEX_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = _frame_store_rows(
-            spark, sf_dir, "windows", {"w": w}, "dedup_windows",
-            lambda: dedup.window_index(docs, w, "text", "doc_id"))
-    return _INDEX_CACHE[key]
+    return _frame_store_rows(spark, sf_dir, "windows", {"w": w})
 
 
 def duplicated_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,18 +1,21 @@
 """Pin-time plan capture — hygiene visibility for materialized frames.
 
-Session pins (`plans.semantic._pinned`, the dedup index caches, the
-vector-LSH index) eagerly materialize their build plan and hand consumers
-a flat LogicalRDD, so the whole-registry hygiene sweep
-(tests/test_plan_hygiene.py) and scripts/audit_plans.py would otherwise
-never SEE the plan that actually ran at pin time — a pin could hide a
-BatchEvalPython or a Cartesian behind the checkpoint facade. Every pin
-site calls `record(tag, sf_dir, df)` with the UNCHECKPOINTED build frame
-right before materializing; the captured formatted plan string is kept in
-`PIN_PLANS` for the hygiene test and the audit script to assert over.
+Session-cache entries (`plans.pins.pinned` outputs, the frame-store
+handles of `plans.dedup.get_published_frame_store`, the vector-LSH
+index, the lexical index) materialize their build plan eagerly or
+publish it to a store, and hand consumers a flat LogicalRDD or a parquet
+scan, so the whole-registry hygiene sweep (tests/test_plan_hygiene.py)
+and scripts/audit_plans.py would otherwise never SEE the plan that
+actually ran — a pin could hide a BatchEvalPython or a Cartesian behind
+the checkpoint facade. Every entry build calls `record(tag, sf_dir, df)`
+with the UNCHECKPOINTED build frame (for a frame store, the deriver's
+frame, tagged `frame_<deriver>`); the captured formatted plan string is
+kept in `PIN_PLANS` for the hygiene test and the audit script to assert
+over.
 
-Capture cost is one explainString per (session, sf_dir, tag) — planning
-work Spark does anyway when the checkpoint materializes — and the store
-holds strings, never frames, so it pins no Spark state."""
+Capture cost is one explainString per entry build — planning work Spark
+does anyway when the checkpoint materializes — and the store holds
+strings, never frames, so it pins no Spark state."""
 
 from __future__ import annotations
 

@@ -22,16 +22,9 @@ def get_textsignals_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the store; their DuckDB oracles rebuild every signal
     from raw text each gate pass, so the durable path stays
     hash-checked (the `_frame_store_rows` discipline)."""
-    from ..sources import frame_store
-    from .dedup import _INDEX_CACHE, _cache_key, _frame_store_rows
+    from .dedup import _frame_store_rows
 
-    key = _cache_key(spark, sf_dir, "textsignals")
-    if key not in _INDEX_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _INDEX_CACHE[key] = _frame_store_rows(
-            spark, sf_dir, "textsignals", {"v": 1}, "textsignals",
-            lambda: frame_store._derive_textsignals(docs, {}))
-    return _INDEX_CACHE[key]
+    return _frame_store_rows(spark, sf_dir, "textsignals", {"v": 1})
 
 
 def lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -217,8 +218,10 @@ class PublishedFrameStore:
         self.n_buckets = int(lay["n_buckets"])
         self.rows_path = os.path.join(index_dir, "rows")
 
-    @property
+    @cached_property
     def rows(self) -> DataFrame:
+        """The stored rows, read once per handle (a parquet read plans a
+        schema job; every getter call reuses this frame)."""
         return self.spark.read.parquet(self.rows_path).drop("dbucket")
 
 

@@ -1367,9 +1367,10 @@ def ensure_vector_index(spark: SparkSession, emb: DataFrame,
     part of the manifest's model identity, so a corpus growing across a
     sqrt(N) geometry boundary is a STALENESS REBUILD at the new
     geometry, never a silently mis-sized reuse. `n_rows`/`dim` accept
-    caller-known table stats (a fingerprint-keyed session cache — see
-    plans.semantic._emb_stats) so repeated ensures don't re-pay the
-    count/take jobs; the manifest COMPARISON is unchanged."""
+    caller-known table stats (`plans.semantic._emb_stats`, one entry of
+    the session cache `plans.pins`, restamped by the table's
+    fingerprint) so repeated ensures don't re-pay the count/take jobs;
+    the manifest COMPARISON is unchanged."""
     if os.path.isdir(index_dir):
         recover(index_dir)
     if dim is None:

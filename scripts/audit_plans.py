@@ -48,8 +48,9 @@ def main() -> int:
         print(f"{name:34} {shuffles:>8} {bcast:>5} {reused:>6} {cols:>9}  "
               f"{pushed if pushed else '-'}")
 
-    # Pin-time plans: every pin site (plans.semantic._pinned, the dedup
-    # index caches, the vector-LSH index, lexical-postings publishes)
+    # Pin-time plans: every session-cache build (plans.pins.pinned
+    # outputs, the frame-store handles, the vector-LSH index,
+    # lexical-postings publishes)
     # records the BUILD plan it materialized (plans.pin_audit) — the
     # checkpoint facade shows the registry sweep above a flat LogicalRDD,
     # so this section is the only place those plans are visible.

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadith_vector_search_spark.operators import dedup
+from hadith_vector_search_spark.plans.pins import release_sf_pins
 from hadith_vector_search_spark.sources import commit as commitlog
 from hadith_vector_search_spark.sources import frame_store
 
@@ -341,9 +342,9 @@ def test_getters_serve_from_store_and_reuse(spark, tmp_path, monkeypatch,
     build."""
     from hadith_vector_search_spark.plans import dedup as dplans
 
+    # the new index root restamps every session-cache entry, so the
+    # getter actually runs
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "root"))
-    # fresh cache epoch so the getter actually runs
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
     got = dplans.get_simhash_index(spark, sf_dir, 16)
     from hadith_vector_search_spark.sources import load_table
     docs = load_table(spark, sf_dir, "documents")
@@ -355,13 +356,12 @@ def test_getters_serve_from_store_and_reuse(spark, tmp_path, monkeypatch,
     store_dir = os.path.join(str(tmp_path / "root"),
                              f"{token}_simhash_n_bits16")
     before = _file_states(os.path.join(store_dir, "rows"))
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
+    release_sf_pins(spark, sf_dir, drop_stream_tables=False)
     got2 = dplans.get_simhash_index(spark, sf_dir, 16)
     assert _file_states(os.path.join(store_dir, "rows")) == before
     assert _rows(got2) == _rows(want)
 
     # winnow getter still tags its params for the consumer guard
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
     sel = dplans.get_winnow_selection(spark, sf_dir)
     assert sel._winnow_params == (dedup.DUPSPAN_W, dedup.WINNOW_GUARANTEE)
 
@@ -440,7 +440,6 @@ def test_minhash_and_textsignal_getters_serve_from_store(
     from hadith_vector_search_spark.sources import load_table
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "root"))
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
     docs = load_table(spark, sf_dir, "documents")
     got = dplans.get_minhash_index(spark, sf_dir)
     want = dedup.minhash_signatures(
@@ -454,10 +453,9 @@ def test_minhash_and_textsignal_getters_serve_from_store(
         str(tmp_path / "root"),
         f"{token}_minhash_n_hashes{dplans.N_HASHES}_w{dedup.SHINGLE_W}")
     before = _file_states(os.path.join(store_dir, "rows"))
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
+    release_sf_pins(spark, sf_dir, drop_stream_tables=False)
     assert _rows(dplans.get_minhash_index(spark, sf_dir)) == _rows(want)
     assert _file_states(os.path.join(store_dir, "rows")) == before
 
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
     sig = tplans.get_textsignals_index(spark, sf_dir)
     assert _rows(sig) == _rows(frame_store._derive_textsignals(docs, {}))

@@ -62,3 +62,116 @@ def test_release_covers_semantic_pins_too(spark):
     ha2 = sp.get_vector_store(spark, SF_A, "vec")  # released dir reopens
     assert ha2 is not ha
     assert ha2.index_dir == ha.index_dir
+
+
+def _spark_jobs(spark, fn):
+    """Run `fn()`; return (number of Spark jobs it launched, its result)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return len(set(tracker.getJobIdsForGroup()) - before), out
+
+
+def test_cache_rule_rebuilds_on_any_stamp_change(tmp_path, monkeypatch):
+    """One validity rule, checked without Spark: an entry is rebuilt when
+    the application id, the index root or the fingerprint of its source
+    table changes, and served as-is otherwise; releasing one scale dir
+    leaves another dir's entries alone."""
+    from types import SimpleNamespace
+
+    from hadith_vector_search_spark.plans.pins import cached
+
+    def session(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            applicationId=app_id))
+
+    sf_a, sf_b = tmp_path / "sf_a", tmp_path / "sf_b"
+    for d in (sf_a, sf_b):
+        d.mkdir()
+        (d / "documents.parquet").write_bytes(b"v1")
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "root1"))
+    builds = []
+
+    def get(spark, sf):
+        return cached(spark, str(sf), "documents", "entry",
+                      lambda: builds.append(sf) or len(builds))
+
+    app1, app2 = session("app-1"), session("app-2")
+    assert get(app1, sf_a) == 1
+    assert get(app1, sf_a) == 1                  # same stamp: served
+    assert get(app2, sf_a) == 2                  # application id changed
+    (sf_a / "documents.parquet").write_bytes(b"v2 rewritten")
+    assert get(app2, sf_a) == 3                  # fingerprint changed
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "root2"))
+    assert get(app2, sf_a) == 4                  # index root changed
+    assert get(app2, sf_a) == 4
+    assert get(app2, sf_b) == 5
+    assert release_sf_pins(app2, str(sf_a), drop_stream_tables=False) == 1
+    assert get(app2, sf_b) == 5                  # other dir untouched
+    assert get(app2, sf_a) == 6                  # released dir rebuilds
+
+
+def test_in_place_table_rewrite_invalidates_entries(spark, tmp_path,
+                                                    monkeypatch):
+    """A table rewritten in place mid-session is never served from the
+    entries built over its old contents: the frame-store rows, the
+    lexical index, the embeddings stats and a pinned top-k all see the
+    new rows."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadith_vector_search_spark.plans import lexical
+    from hadith_vector_search_spark.plans import semantic as sp
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("documents", "embeddings"):
+        shutil.copyfile(f"{SF_A}/{t}.parquet", sf / f"{t}.parquet")
+    sf = str(sf)
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "root"))
+
+    def ids(df, col="doc_id"):
+        return {r[0] for r in df.select(col).distinct().collect()}
+
+    def halve(table, col):
+        path = f"{sf}/{table}.parquet"
+        rows = pq.read_table(path)
+        rows = rows.filter(pc.equal(pc.bit_wise_and(rows[col], 1), 0))
+        pq.write_table(rows, path)
+        return set(rows[col].to_pylist())
+
+    def serve():
+        return (ids(dedup_plans.get_shingle_index(spark, sf)),
+                ids(dedup_plans.get_simhash_index(spark, sf, 16)),
+                ids(lexical.get_index(spark, sf).doc_len))
+
+    old = serve()
+    assert all(any(d % 2 for d in got) for got in old)
+    n_vecs, dim = sp._emb_stats(spark, sf)
+    assert any(v % 2 for v in ids(sp.cosine_topk(spark, sf), "vec_id"))
+
+    # every getter derives per doc, so the new rows are the old ones
+    # restricted to the surviving docs
+    new_docs = halve("documents", "doc_id")
+    assert serve() == tuple(got & new_docs for got in old)
+
+    new_vecs = halve("embeddings", "vec_id")
+    assert sp._emb_stats(spark, sf) == (len(new_vecs), dim) != (n_vecs, dim)
+    top = ids(sp.cosine_topk(spark, sf), "vec_id")
+    assert top and top <= new_vecs
+
+
+def test_warm_getter_calls_launch_no_spark_job(spark):
+    """A warm store getter returns its session-cache entry: no ensure
+    re-run, no reopen, no Spark job."""
+    from hadith_vector_search_spark.plans import semantic as sp
+
+    for get in (lambda: sp.get_vector_store(spark, SF_A, "vec"),
+                lambda: sp.get_published_lsh_index(spark, SF_A),
+                lambda: dedup_plans.get_simhash_index(spark, SF_A, 16)):
+        first = get()
+        jobs, again = _spark_jobs(spark, get)
+        assert jobs == 0
+        assert again is first

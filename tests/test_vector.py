@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from hadith_vector_search_spark.functions import vector as V
 from hadith_vector_search_spark.operators import similarity
+from hadith_vector_search_spark.plans.pins import release_sf_pins
 
 
 @pytest.fixture(scope="module")
@@ -351,13 +352,15 @@ def test_kmeans_published_store_reopens_without_retraining(
 
     first = semantic.get_kmeans_published_vector_index(spark, sf_dir)
     assert first is not None
-    # second entry: poison the training path — a fresh manifest must
+    # second entry, evicted from the session cache so the getter runs
+    # again: poison the training path — a fresh manifest must
     # short-circuit straight to open_vector_index
+    release_sf_pins(spark, sf_dir, drop_stream_tables=False)
     def boom(*a, **k):
         raise AssertionError("retrained a fresh store")
     monkeypatch.setattr(semantic, "get_kmeans_codebook", boom)
     again = semantic.get_kmeans_published_vector_index(spark, sf_dir)
-    assert again is not None
+    assert again is not None and again is not first
     assert again.centroids == first.centroids
     rows = again.ivf_topk(0, n_probe=2, k=3).collect()
     assert len(rows) == 3
@@ -469,13 +472,15 @@ def test_ivfpq_kmeans_published_store_reopens_without_retraining(
     first = semantic.get_ivfpq_kmeans_published_index(spark, sf_dir)
     assert first is not None and first.pq is not None
     books_before = [b.copy() for b in first.pq_subbooks]
+    # evicted from the session cache so the getter runs again
+    release_sf_pins(spark, sf_dir, drop_stream_tables=False)
 
     def boom(*a, **k):
         raise AssertionError("retrained a fresh store")
     monkeypatch.setattr(semantic, "get_kmeans_codebook", boom)
     monkeypatch.setattr(similarity, "kmeans_subbooks", boom)
     again = semantic.get_ivfpq_kmeans_published_index(spark, sf_dir)
-    assert again is not None
+    assert again is not None and again is not first
     assert again.centroids == first.centroids
     for b0, b1 in zip(books_before, again.pq_subbooks):
         assert np.array_equal(b0, b1)

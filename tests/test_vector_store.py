@@ -1382,9 +1382,8 @@ def test_unwritable_index_root_falls_back_to_temp_root_once(
     bad_root = str(blocker / "indexes")
     monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", bad_root)
     monkeypatch.setattr(lexical, "_FALLBACK_ROOT", None)
-    # fresh handle caches so every getter runs its ensure
-    monkeypatch.setattr(semantic, "_VIDX_CACHE", {})
-    monkeypatch.setattr(dplans, "_INDEX_CACHE", {})
+    # the new index root restamps every session-cache entry, so every
+    # getter runs its ensure
     tries = []
     publish_and_open = lexical.publish_and_open
 
