@@ -20,16 +20,23 @@ path instead.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from .functions.text import py_tokenize, snippet, term_coverage
 from .functions.vector import round6_arr
 from .operators import bm25, fusion, proximity, similarity
 from .operators import dedup as dedup_ops
-from .operators.embedder import DEFAULT_DIM, embed_column, encode_query
+from .operators.embedder import (
+    DEFAULT_DIM,
+    embed_column,
+    encode_query,
+    get_model,
+)
 from .operators.router import INTENT_EXACT, INTENT_NARRATOR, route_one
 from .localrel import local_df
 
@@ -39,6 +46,20 @@ OVERFETCH_FLOOR = 50   # max(50, 5*n) per the reference (tools.py:87,93)
 # the HALF_UP-on-shortest-repr rounding twin lives with the vector
 # helpers so the store-side BLAS paths share one implementation
 _round6_arr = round6_arr
+
+
+def _unpin(*frames) -> None:
+    """Free the blocks of each frame here that is a pin — a
+    `localCheckpoint` result, whose plan is one LogicalRDD — now, not
+    whenever the JVM next collects its RDD and Spark's cleaner runs.
+    Pass only superseded frames nothing reads again: a local checkpoint
+    has no lineage to recompute from."""
+    for df in frames:
+        if df is None:
+            continue
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
 
 
 def configure_interactive(spark: SparkSession,
@@ -96,7 +117,13 @@ class HybridEngine:
         self.narrator_col = narrator_col
         self._nar_index: bm25.LexicalIndex | None = None
         self._nar_tier = None  # narrator-field driver tier (lazy; False = over bound)
-        self.docs = docs.localCheckpoint()
+        self._docs = docs.localCheckpoint()  # Spark-side corpus snapshot
+        self._schema = self._docs.schema
+        # Upserts not yet folded into the Spark-side frames: id -> live
+        # row dict, or None for a removed id (`upsert_documents`, `_fold`)
+        self._pending: dict = {}
+        self._view = None  # (corpus view, live rows, tombstones) of _pending
+        self._fold_lock = threading.RLock()
         self._index: bm25.LexicalIndex | None = None
         self._emb: DataFrame | None = (
             embeddings.localCheckpoint() if embeddings is not None else None)
@@ -106,6 +133,7 @@ class HybridEngine:
         self._fwd = None   # doc-sorted forward arrays (interactive mode)
         self._doc_rows = None   # id -> row dict (interactive mode)
         self._lex_vocab = None  # sorted vocab keys of _lex
+        self._lex_stats = None  # (n_docs, avgdl) the _lex impacts use
         self._interactive_bounds = None  # set once enable_interactive runs
 
     def enable_interactive(self, max_driver_rows: int = 500_000,
@@ -157,8 +185,9 @@ class HybridEngine:
         so an upsert un-shares instead of corrupting the store tier."""
         import numpy as np
 
+        self._fold()
         self._interactive_bounds = (max_driver_rows, max_driver_postings)
-        id_type = self.docs.schema[self.id_col].dataType.simpleString()
+        id_type = self._schema[self.id_col].dataType.simpleString()
         if id_type not in ("string", "tinyint", "smallint", "int", "bigint"):
             self.disable_interactive()
             return False
@@ -174,7 +203,7 @@ class HybridEngine:
         # crosses a per-tier bound degrades that tier to the Spark path
         # instead of serving stale arrays.
         self._lex = self._fwd = self._doc_rows = None
-        self._lex_vocab = None
+        self._lex_vocab = self._lex_stats = None
         self._nar_tier = None  # lazy; rebuilt on first narrator leg
         if borrowed is not None:
             self._ids, self._mat = borrowed
@@ -207,7 +236,7 @@ class HybridEngine:
         if n_corpus <= max_driver_rows and all(
                 not f.dataType.simpleString().startswith(
                     ("array", "map", "struct", "binary"))
-                for f in self.docs.schema.fields):
+                for f in self._schema.fields):
             self._doc_rows = {r[self.id_col]: r.asDict()
                               for r in self.docs.collect()}
         return True
@@ -273,21 +302,22 @@ class HybridEngine:
         # sorted above), so this list is sorted — prefix queries
         # bisect an O(log V) range instead of scanning the vocab
         self._lex_vocab = list(self._lex)
+        self._lex_stats = (n_docs, avgdl)
         # doc-sorted forward view for MoreLikeThis seed mining
         # (searchsorted slice -> the seed's term rows)
         dorder = np.argsort(pids, kind="stable")
         self._fwd = (pids[dorder], terms[dorder], tf[dorder],
                      dl[dorder], df[dorder])
 
-    def _apply_interactive_delta(self, changed: DataFrame,
-                                 removed_ids: DataFrame | None,
-                                 fresh_emb: DataFrame | None) -> bool:
+    def _apply_interactive_delta(self, changed: list[dict],
+                                 removed: set) -> bool:
         """Apply an upsert batch to the RESIDENT interactive tiers in
         place — the O(batch) alternative to `enable_interactive`'s full
-        re-collect. `changed` carries the corpus-schema changed/new rows
-        (removal-wins already applied), `fresh_emb` their embeddings;
-        both are batch-sized checkpointed frames, so the only Spark work
-        here is two O(batch) collects.
+        re-collect, and no Spark job: `changed` holds the batch's
+        corpus-schema rows that change (removal-wins already applied) as
+        the upsert's one collect read them, `removed` the ids it drops.
+        Their vectors are encoded here in the driver with the model
+        `encode_query` uses — the values the embed UDF computes.
 
         Per tier: vector matrix/doc map drop the batch's rows and append
         the fresh ones; the lexical tier drops the batch's postings from
@@ -297,52 +327,50 @@ class HybridEngine:
         builder enable-time collection uses, because BM25's global
         n_docs/avgdl/df factors make per-posting impacts globally
         sensitive to any batch (recompute is one vectorized numpy pass
-        over ≤max_driver_postings rows, no Spark job). n_docs/avgdl come
-        exactly from the doc-level dl values (integer-valued doubles:
-        sums are exact, the division matches Spark's avg). The Column
-        scoring tail needs no delta: it reads the upserted `self.docs`.
+        over ≤max_driver_postings rows). n_docs/avgdl come exactly from
+        the doc-level dl values (integer-valued doubles: sums are exact,
+        the division matches Spark's avg).
 
         Bound discipline mirrors enable_interactive: vector/doc-map rows
-        over `max_driver_rows` → False (caller re-enables, which refuses
-        and releases); postings over `max_driver_postings` → the lexical
-        tier alone is dropped (text-leg hybrid calls take the Spark
-        path). Returns True when the resident tiers now serve the
-        post-upsert corpus. Row-identity
-        with a fresh enable is pinned by
+        over `max_driver_rows` → False before anything is installed
+        (the caller releases the tiers and re-enables, which refuses);
+        postings over `max_driver_postings` → the lexical tier alone is
+        dropped (text-leg hybrid calls take the Spark path). Returns True
+        when the resident tiers now serve the post-upsert corpus.
+        Row-identity with a fresh enable is pinned by
         test_upsert_delta_equals_fresh_enable."""
         from collections import Counter
 
         import numpy as np
 
-        if self._mat is None or fresh_emb is None:
+        if self._mat is None:
             return False
         max_rows, max_post = self._interactive_bounds
-        changed_rows = [r.asDict() for r in changed.collect()]
-        removed = ([r[0] for r in removed_ids.collect()]
-                   if removed_ids is not None else [])
-        drop = set(removed) | {r[self.id_col] for r in changed_rows}
+        drop = removed | {r[self.id_col] for r in changed}
         drop_arr = np.array(sorted(drop)) if drop else None
 
         # --- vector tier (bound: total resident vectors) ---------------
         keep = (~np.isin(self._ids, drop_arr) if drop_arr is not None
                 else np.ones(len(self._ids), dtype=bool))
-        fresh_rows = fresh_emb.collect()
-        if int(keep.sum()) + len(fresh_rows) > max_rows:
+        n_keep = int(keep.sum())
+        if n_keep + len(changed) > max_rows:
             return False
-        ids2, mat2 = self._ids[keep], self._mat[keep]
-        if fresh_rows:
+        ids2 = self._ids[keep]
+        # one new matrix, filled in place (no stacked temporaries)
+        mat2 = np.empty((n_keep + len(changed), self._mat.shape[1]))
+        np.compress(keep, self._mat, axis=0, out=mat2[:n_keep])
+        if changed:
             ids2 = np.concatenate(
-                [ids2, np.array([r[0] for r in fresh_rows])])
-            mat2 = np.vstack(
-                [mat2.reshape(-1, self._mat.shape[1]),
-                 np.array([list(r[1]) for r in fresh_rows])])
+                [ids2, np.array([r[self.id_col] for r in changed])])
+            mat2[n_keep:] = self._encode([r[self.text_col]
+                                          for r in changed])
 
         # --- doc-map tier (bound: corpus rows; degrades alone) ---------
         new_map = None
         if self._doc_rows is not None:
             new_map = {k: v for k, v in self._doc_rows.items()
                        if k not in drop}
-            for r in changed_rows:
+            for r in changed:
                 new_map[r[self.id_col]] = r
             if len(new_map) > max_rows:
                 new_map = None
@@ -355,7 +383,7 @@ class HybridEngine:
                 m = ~np.isin(pids, drop_arr)
                 pids, terms, tf, dl = pids[m], terms[m], tf[m], dl[m]
             a_ids, a_terms, a_tf, a_dl = [], [], [], []
-            for r in changed_rows:
+            for r in changed:
                 toks = py_tokenize(r[self.text_col] or "")
                 if not toks:
                     continue  # token-less docs have no index presence
@@ -386,9 +414,19 @@ class HybridEngine:
             self._install_lex_tiers(*lex_arrays)
         else:
             self._lex = self._fwd = None
-            self._lex_vocab = None
+            self._lex_vocab = self._lex_stats = None
 
         return True
+
+    def _encode(self, texts: list):
+        """Document vectors of `texts` as one (n, dim) float matrix,
+        encoded in the driver by the model `encode_query` uses. The embed
+        UDF runs the same `encode_batch` over NULL-filled text, so the
+        values are the ones the Spark-side embedding frame holds."""
+        import numpy as np
+
+        vecs = get_model(self.dim).encode_batch([t or "" for t in texts])
+        return np.array(vecs, dtype=float).reshape(len(texts), self.dim)
 
     def disable_interactive(self) -> None:
         """Release every driver-resident interactive tier (vector matrix,
@@ -397,7 +435,7 @@ class HybridEngine:
         crosses a bound so no tier can serve a stale corpus snapshot."""
         self._ids = self._mat = None
         self._lex = self._fwd = self._doc_rows = None
-        self._lex_vocab = None
+        self._lex_vocab = self._lex_stats = None
         self._nar_tier = None
 
     @property
@@ -430,9 +468,8 @@ class HybridEngine:
         zero-job return path for fully driver-computed legs (collect of
         a literal relation never launches a Spark job)."""
         if not hits:
-            return (self.docs.select(self.id_col).limit(0)
-                    .withColumn(score_col, F.lit(0.0)))
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
+            return self._empty_leg(score_col)
+        id_t = self._schema[self.id_col].dataType.simpleString()
         vals = ", ".join(
             f"({self._fmt_id(i)}, {self._sql_atom(float(s), 'DOUBLE')})"
             for i, s in hits)
@@ -586,7 +623,7 @@ class HybridEngine:
         one typed placeholder row under `WHERE false`: the optimizer
         prunes it to an empty LocalRelation, so the zero-row result keeps
         this one schema and still runs no Spark job."""
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
+        id_t = self._schema[self.id_col].dataType.simpleString()
         dbl = lambda x: self._sql_atom(float(x), "DOUBLE")  # noqa: E731
         with_nar = self.narrator_col is not None
         with_qidx = groups[0][0] is not None
@@ -689,7 +726,7 @@ class HybridEngine:
         hi = np.searchsorted(pids, doc_id, side="right")
         if hi == lo:
             return []
-        n_docs, avgdl = self.index.stats_literals()
+        n_docs, avgdl = self._lex_stats
         idf = np.log(1.0 + (n_docs - df[lo:hi] + 0.5) / (df[lo:hi] + 0.5))
         w = _round6_arr((tf[lo:hi] / dl[lo:hi]) * idf)
         seed_terms = terms_a[lo:hi]
@@ -735,7 +772,7 @@ class HybridEngine:
                 m = cnt == len(ts)
                 legs.append(dict(zip(uids[m].tolist(), tot[m])))
         if prefix:
-            n_docs, avgdl = self.index.stats_literals()
+            n_docs, avgdl = self._lex_stats
             legs.append(self._prefix_leg_local(
                 [(p[0], p[2], p[3]) for p in self._lex_members(
                     self._lex, self._lex_vocab, prefix)],
@@ -883,7 +920,7 @@ class HybridEngine:
         strict = {"string": str, "tinyint": int, "smallint": int,
                   "int": int, "bigint": int, "boolean": bool}
         types = {f.name: f.dataType.simpleString()
-                 for f in self.docs.schema.fields}
+                 for f in self._schema.fields}
         for col, val in filters.items():
             py = strict.get(types.get(col, ""))
             if py is None or val is None or type(val) is not py:
@@ -898,13 +935,105 @@ class HybridEngine:
     # -- derived state (lazy, pinned once) ---------------------------------
 
     @property
+    def docs(self) -> DataFrame:
+        """The current corpus as a Spark frame. With upserts pending it
+        is an unpinned view — the pinned snapshot with the pending rows
+        merged in (`_pending_frames`) — so reading it, `schema` and
+        `columns` included, runs no Spark job and never folds; the
+        engine's own Spark paths fold first (`_fold`)."""
+        return self._pending_frames()[0] if self._pending else self._docs
+
+    def _pending_frames(self) -> tuple:
+        """(corpus view, live rows, tombstone ids) of the pending delta:
+        the last-writer-wins rows and removed ids as driver-local
+        relations, and `merge_upsert` of the live rows into the pinned
+        snapshot minus the tombstones. Built without a Spark job once
+        per pending state; `docs` and `_fold` share it."""
+        from .sources.ingest import merge_upsert
+
+        with self._fold_lock:
+            if self._view is not None:
+                return self._view
+            names = self._schema.names
+            live = local_df(self.spark, [
+                tuple(r[c] for c in names)
+                for r in self._pending.values() if r is not None],
+                self._schema)
+            gone = local_df(self.spark, [
+                (i,) for i, r in self._pending.items() if r is None],
+                StructType([self._schema[self.id_col]]))
+            view = (merge_upsert(self._docs, live, key=self.id_col)
+                    .join(F.broadcast(gone), self.id_col, "left_anti"))
+            self._view = (view, live, gone)
+            return self._view
+
+    def _fold(self) -> None:
+        """Fold the pending upserts into the Spark-side frames, once,
+        before a Spark path reads them: the corpus view becomes the new
+        pinned `docs` snapshot, the lexical index takes one
+        `bm25.refresh_index` over every pending live row and tombstone,
+        and the embedding frame one anti-join + union whose fresh vectors
+        come from the resident matrix (which already holds them) or, with
+        no vector tier resident, from `_encode`. However many batches are
+        pending, it is this one set of frames and pins, so the fold's job
+        count does not grow with them.
+
+        The new index pins are materialized here, so the superseded index,
+        narrator-index and embedding pins are released at once
+        (`_unpin`) instead of whenever the JVM next collects them. The
+        superseded corpus snapshot is left to Spark's cleaner: callers
+        hold frames read from `docs`, and those must stay readable."""
+        with self._fold_lock:
+            if not self._pending:
+                return
+            view, live, gone = self._pending_frames()
+            rows = [r for r in self._pending.values() if r is not None]
+            old_index, old_emb, old_nar = (self._index, self._emb,
+                                           self._nar_index)
+            self._docs = view.localCheckpoint()
+            if old_index is not None:
+                index = bm25.refresh_index(old_index, live, gone,
+                                           text_col=self.text_col,
+                                           id_col=self.id_col)
+                index.scoring_view().count()  # materialize the lazy pins
+                index.stats_literals()
+                self._index = index
+            if old_emb is not None:
+                drop = live.select(self.id_col).unionByName(gone)
+                self._emb = (old_emb
+                             .join(F.broadcast(drop), self.id_col,
+                                   "left_anti")
+                             .unionByName(self._vectors_frame(rows))
+                             .localCheckpoint())
+            self._nar_index = None
+            self._pending, self._view = {}, None
+            _unpin(old_emb, *(f for idx in (old_index, old_nar)
+                              if idx is not None for f in idx.frames()))
+
+    def _vectors_frame(self, rows: list[dict]) -> DataFrame:
+        """(id, embedding) of `rows` as a driver-local relation: their
+        rows of the resident matrix when the vector tier is resident
+        (every upsert's delta put them there), else `_encode`d now."""
+        ids = [r[self.id_col] for r in rows]
+        if self._mat is not None:
+            pos = dict(zip(self._ids.tolist(), range(len(self._ids))))
+            mat = self._mat[[pos[i] for i in ids]]
+        else:
+            mat = self._encode([r[self.text_col] for r in rows])
+        return local_df(self.spark, list(zip(ids, mat)), StructType([
+            self._schema[self.id_col],
+            StructField("embedding", ArrayType(DoubleType()))]))
+
+    @property
     def index(self) -> bm25.LexicalIndex:
+        self._fold()
         if self._index is None:
             self._index = bm25.build_index(self.docs, self.text_col, self.id_col)
         return self._index
 
     @property
     def emb(self) -> DataFrame:
+        self._fold()
         if self._emb is None:
             from .operators.embedder import spread_for_encode
 
@@ -919,8 +1048,9 @@ class HybridEngine:
         return self._emb
 
     def _empty_leg(self, score_col: str) -> DataFrame:
-        """Zero-row leg with the right id type for any corpus id column."""
-        return (self.docs.select(self.id_col).limit(0)
+        """Zero-row leg with the right id type for any corpus id column
+        (from the pinned snapshot: no view build, no Spark job)."""
+        return (self._docs.select(self.id_col).limit(0)
                 .withColumn(score_col, F.lit(0.0)))
 
     def _narrator_index(self) -> bm25.LexicalIndex:
@@ -928,6 +1058,7 @@ class HybridEngine:
         FTS-indexed narrator column, fts.py schema) — built lazily and
         pinned once per engine; narrator vocabulary is names-sized, so
         this index is tiny next to the text index."""
+        self._fold()
         if self._nar_index is None:
             self._nar_index = bm25.build_index(
                 self.docs, text_col=self.narrator_col, id_col=self.id_col)
@@ -988,7 +1119,7 @@ class HybridEngine:
         import re
 
         num = re.search(r"([0-9]+)[^0-9]*$", query).group(1)
-        id_t = self.docs.schema[self.id_col].dataType.simpleString()
+        id_t = self._schema[self.id_col].dataType.simpleString()
         if id_t not in ("tinyint", "smallint", "int", "bigint"):
             return num
         return int(num) if len(num) <= 18 else None
@@ -1060,7 +1191,7 @@ class HybridEngine:
         if int(n_results) < 0:
             raise ValueError(f"n_results must be >= 0, got {n_results}")
         if filters:
-            bad = sorted(set(filters) - set(self.docs.columns))
+            bad = sorted(set(filters) - set(self._schema.names))
             if bad:
                 raise ValueError(f"filter columns not in docs: {bad}")
         w = fusion.resolve_weights(scoring_mode, fts_available,
@@ -1216,6 +1347,7 @@ class HybridEngine:
         """One hybrid query on the Spark path: both legs as Spark plans,
         `fusion.fuse`, then `_scored_column_tail`. Serves every call
         `_resident_hybrid` declines, per query."""
+        self._fold()
         if intent.intent == INTENT_EXACT:
             # §1 dispatch: a reference-shaped query goes straight to point
             # lookup, never the retrieval legs (TEST_QUERIES.md:48-53
@@ -1525,10 +1657,9 @@ class HybridEngine:
         if self._fwd is not None:
             hits = self._mlt_interactive(doc_id, n_terms, n_results)
             if not hits:
-                return (self.docs.select(self.id_col).limit(0)
-                        .withColumn("bm25", F.lit(0.0))
+                return (self._empty_leg("bm25")
                         .withColumn("matched", F.lit(0).cast("int")))
-            id_t = self.docs.schema[self.id_col].dataType.simpleString()
+            id_t = self._schema[self.id_col].dataType.simpleString()
             vals = ", ".join(
                 f"({self._fmt_id(i)}, "
                 f"{self._sql_atom(float(s), 'DOUBLE')}, {int(c)})"
@@ -1547,114 +1678,97 @@ class HybridEngine:
                          force: bool = False) -> dict:
         """The reference's incremental `upsert_documents` tool
         (/root/reference/mcp_server/apps/fts.py:118-181 and
-        embeddings.py:121) across EVERY engine tier: checksum-classified
-        change detection (unchanged re-arrivals skip, like the
-        reference's checksum short-circuit; `force` disables the skip),
-        documents MERGE, lexical-index delta refresh
-        (`bm25.refresh_index` — postings/doc_len delete+reinsert,
-        term_df/scoring-view delta merges), embedding-cache delta
-        (changed docs re-embed, others untouched), and — when interactive
-        serving was ever enabled — a tier rebuild under the same bounds.
-        A batch that grows the corpus past those bounds RELEASES the
-        interactive tiers (Spark paths take over; `interactive_enabled`
-        tells you which side you're on) rather than serving a stale
-        snapshot. `incoming` must carry the corpus schema. Cost tracks the CHANGED set on every Spark-side tier;
-        the driver-resident tiers re-collect (they are bounded by
-        definition). Returns reference-shaped counts
-        {processed, inserted, updated, skipped, removed}."""
-        from .sources.ingest import (
-            classify_changes,
-            merge_upsert,
-            row_checksum,
-        )
+        embeddings.py:121) across EVERY engine tier, at O(batch) cost.
+        One collect reads `incoming` (corpus schema) and `removed_ids`
+        together; each row is classified in Python against the resident
+        doc map by the checksum rule of `sources.ingest.row_checksum`
+        over (id, text) — for one id, text equality with NULL distinct
+        from '': a new id inserts, a changed text updates, an unchanged
+        re-arrival skips and writes NOTHING on any tier, like the
+        reference's checksum short-circuit (`force` disables the skip).
+        Removal wins over a same-batch update of an existing doc.
 
-        ck = row_checksum(self.id_col, self.text_col)
-        classified = classify_changes(
-            incoming.withColumn("_ck", ck),
-            self.docs.withColumn("_ck", ck),
-            key=self.id_col, checksum="_ck").localCheckpoint()
-        n_incoming = classified.count()
-        n_removed = 0
-        if removed_ids is not None:
-            removed_ids = (removed_ids
-                           .select(F.col(removed_ids.columns[0])
-                                   .alias(self.id_col))
-                           .join(self.docs.select(self.id_col), self.id_col,
-                                 "left_semi").localCheckpoint())
-            n_removed = removed_ids.count()
-        # Counts report what actually happened to each tier: a doc in both
-        # incoming and removed_ids is dropped everywhere (removal wins), so
-        # it counts ONLY as removed; under force the checksum-unchanged
-        # rows are genuinely reprocessed, so they count as updated, not
-        # skipped. `processed` stays the full incoming batch size.
-        stats_src = classified
-        if removed_ids is not None:
-            stats_src = stats_src.join(removed_ids, self.id_col, "left_anti")
-        st = stats_src.agg(
-            F.sum(F.when(F.col("action") == "insert", 1).otherwise(0))
-            .alias("ins"),
-            F.sum(F.when(F.col("action") == "update", 1).otherwise(0))
-            .alias("upd"),
-            F.sum(F.when(F.col("action") == "skip", 1).otherwise(0))
-            .alias("skp"),
-        ).first()
-        changed = (classified if force
-                   else classified.filter(F.col("action") != "skip"))
-        changed = changed.drop("action", "_ck")
-        if removed_ids is not None:
-            # Removal wins over a same-batch update: a doc in both sets
-            # must NOT be reinserted into any tier.
-            changed = changed.join(removed_ids, self.id_col, "left_anti")
-        changed = changed.localCheckpoint()
+        The changed rows then update the resident tiers in place
+        (`_apply_interactive_delta`, vectors encoded in the driver) and
+        join the pending delta (`_pending`: id -> live row or tombstone,
+        last writer wins) instead of rewriting `docs`, the embedding
+        frame or the lexical indexes: the next Spark path to read those
+        folds every pending batch in at once (`_fold`). So a resident
+        upsert runs one Spark job, the read of the batch, and pins
+        nothing. With no doc map resident, the upsert folds first and
+        classifies with one batch-sized Spark lookup.
 
-        merged = merge_upsert(self.docs, incoming.select(*self.docs.columns),
-                              key=self.id_col)
-        if removed_ids is not None:
-            merged = merged.join(removed_ids, self.id_col, "left_anti")
-        self.docs = merged.localCheckpoint()
-        # The narrator-field index (and its driver tier) is derived from
-        # self.docs — invalidate so the next narrator leg rebuilds against
-        # the merged corpus instead of serving the pre-upsert snapshot
-        # (the lazily-built _nar_index previously survived upserts stale).
-        self._nar_index = None
-        self._nar_tier = None
-
-        if self._index is not None:
-            self._index = bm25.refresh_index(
-                self._index, changed, removed_ids,
-                text_col=self.text_col, id_col=self.id_col)
-        fresh = None
-        if self._emb is not None:
-            drop = changed.select(self.id_col)
+        A batch that grows the corpus past the interactive bounds
+        RELEASES the interactive tiers (Spark paths take over;
+        `interactive_enabled` tells you which side you're on) rather than
+        serving a stale snapshot; a batch that shrinks it back under them
+        re-enables. Returns reference-shaped counts {processed, inserted,
+        updated, skipped, removed}; `processed` is the whole batch, and a
+        removed doc counts only as removed."""
+        with self._fold_lock:
+            if self._doc_rows is None:
+                self._fold()
+            id_c, names = self.id_col, self._schema.names
+            # SQL projections: one py4j call each, not several per column
+            cast = "CAST(`{}` AS {}) AS `{}`".format
+            read = incoming.selectExpr(
+                *[cast(f.name, f.dataType.simpleString(), f.name)
+                  for f in self._schema], "false AS _gone")
             if removed_ids is not None:
-                drop = drop.unionByName(removed_ids)
-            kept = self._emb.join(F.broadcast(drop.distinct()),
-                                  self.id_col, "left_anti")
-            fresh = changed.select(
-                F.col(self.id_col),
-                embed_column(F.col(self.text_col), self.dim)
-                .alias("embedding")).localCheckpoint()
-            self._emb = kept.unionByName(fresh).localCheckpoint()
-        if self._interactive_bounds is not None:
-            # Interactive was requested at some point. With tiers resident
-            # the batch delta-applies IN PLACE (O(batch) work — no
-            # enable-time corpus re-collect; job census pinned by
-            # test_upsert_delta_skips_recollect). Fall back to a full
-            # re-enable when no tiers are live, or when the batch pushes
-            # the row bound: enable then refuses and RELEASES every tier
-            # (its contract) so nothing serves the pre-upsert snapshot; a
-            # batch that shrinks the corpus back under the bounds
-            # re-enables. Check `interactive_enabled` after bulk loads to
-            # see which side you're on.
-            if not (self.interactive_enabled
-                    and self._apply_interactive_delta(changed, removed_ids,
-                                                      fresh)):
-                self.enable_interactive(*self._interactive_bounds)
-        ins, upd, skp = int(st.ins or 0), int(st.upd or 0), int(st.skp or 0)
-        if force:
-            upd, skp = upd + skp, 0
-        return {"processed": n_incoming, "inserted": ins, "updated": upd,
-                "skipped": skp, "removed": n_removed}
+                read = read.unionByName(removed_ids.selectExpr(
+                    cast(removed_ids.columns[0],
+                         self._schema[id_c].dataType.simpleString(), id_c),
+                    "true AS _gone"), allowMissingColumns=True)
+            rows, gone = [], set()
+            for r in read.collect():
+                if r["_gone"]:
+                    gone.add(r[id_c])
+                else:
+                    rows.append({c: r[c] for c in names})
+            old = self._corpus_texts({r[id_c] for r in rows} | gone)
+            removed = gone & old.keys()
+            counts = {"inserted": 0, "updated": 0, "skipped": 0}
+            changed: dict = {}
+            for r in rows:
+                i = r[id_c]
+                if i in removed:
+                    continue
+                action = ("inserted" if i not in old
+                          else "updated" if force or r[self.text_col] != old[i]
+                          else "skipped")
+                counts[action] += 1
+                if action != "skipped":
+                    changed[i] = r
+            if changed or removed:
+                self._pending.update(changed)
+                self._pending.update(dict.fromkeys(removed))
+                self._view = None
+                # the narrator tier has no delta: rebuilt on its next use
+                self._nar_tier = None
+                if self._interactive_bounds is not None and not (
+                        self.interactive_enabled
+                        and self._apply_interactive_delta(
+                            list(changed.values()), removed)):
+                    # no tiers live, or the batch crossed a bound: the
+                    # re-enable folds, then refuses and releases every
+                    # tier, or re-enables a corpus back under the bounds
+                    self.disable_interactive()
+                    self.enable_interactive(*self._interactive_bounds)
+            return {"processed": len(rows), **counts,
+                    "removed": len(removed)}
+
+    def _corpus_texts(self, ids: set) -> dict:
+        """{id: text} of the `ids` present in the current corpus — from
+        the resident doc map, else one batch-sized Spark lookup against
+        the folded snapshot."""
+        if self._doc_rows is not None:
+            return {i: self._doc_rows[i][self.text_col]
+                    for i in ids if i in self._doc_rows}
+        probe = local_df(self.spark, [(i,) for i in ids],
+                         StructType([self._schema[self.id_col]]))
+        return {r[0]: r[1] for r in
+                self._docs.join(F.broadcast(probe), self.id_col, "left_semi")
+                .select(self.id_col, self.text_col).collect()}
 
     def get_document(self, doc_id) -> DataFrame:
         """Q7 point lookup with a head snippet. With the interactive doc
@@ -1665,11 +1779,11 @@ class HybridEngine:
         if self._doc_rows is not None:
             row = self._doc_rows.get(doc_id)
             if row is None:
-                return (self.docs.limit(0)
+                return (self._docs.limit(0)
                         .select("*", F.lit("").alias("preview")))
             vals = ", ".join(
                 self._sql_atom(row[f.name], f.dataType.simpleString())
-                for f in self.docs.schema.fields)
+                for f in self._schema.fields)
             # NULL text must stay NULL (the Spark path's snippet(NULL)
             # is NULL) — '' here would break tier row-identity.
             txt = row[self.text_col]
@@ -1677,11 +1791,12 @@ class HybridEngine:
                        else self._sql_str(txt[:120]))
             cols = ", ".join(
                 f"col{i + 1} AS `{f.name}`"
-                for i, f in enumerate(self.docs.schema.fields))
-            n = len(self.docs.schema.fields)
+                for i, f in enumerate(self._schema.fields))
+            n = len(self._schema.fields)
             return self.spark.sql(
                 f"SELECT {cols}, col{n + 1} AS preview "
                 f"FROM VALUES ({vals}, {preview})")
+        self._fold()
         return (self.docs.filter(F.col(self.id_col) == doc_id)
                 .select("*", snippet(F.col(self.text_col),
                                      F.lit("")).alias("preview")))
@@ -1714,6 +1829,7 @@ class HybridEngine:
         (/root/reference/mcp_server/tools.py:14-27): embedding-index
         metadata — vector count, dim, whether the index is built (pinned)
         yet. Counting a pinned frame never re-embeds."""
+        self._fold()
         built = self._emb is not None
         n_vectors = self._emb.count() if built else 0
         dim = self.dim
@@ -1729,6 +1845,7 @@ class HybridEngine:
         """The reference's `fts_status` tool (tools.py:29-37): lexical-
         index metadata from the pinned postings/stats frames — doc count,
         distinct terms, postings rows, average doc length."""
+        self._fold()
         built = self._index is not None
         if not built:
             return local_df(
@@ -1750,6 +1867,7 @@ class HybridEngine:
         reference's index_status: never triggers a corpus embedding pass.
         The dim comes from the supplied embeddings (one-row probe, guarded
         for an empty frame) or falls back to the configured encoder dim."""
+        self._fold()
         n_docs = self.docs.count()
         dim = self.dim
         if self._emb is not None:

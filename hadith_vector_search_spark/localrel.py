@@ -20,6 +20,7 @@ from __future__ import annotations
 import logging
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 try:
     import pyarrow as pa
@@ -29,11 +30,13 @@ except ImportError:  # pragma: no cover — pyspark ships pyarrow
 _log = logging.getLogger(__name__)
 
 
-def local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+def local_df(spark: SparkSession, rows: list,
+             ddl: str | StructType) -> DataFrame:
     """`spark.createDataFrame(rows, ddl)` with a LocalTableScan plan.
 
-    Rows are positional tuples (or anything indexable) matching the DDL
-    field order, exactly like the classic call. Falls back to the classic
+    Rows are positional tuples (or anything indexable) matching the
+    field order of `ddl`, a DDL string or a `StructType`, exactly like
+    the classic call. Falls back to the classic
     pickled-RDD path on a NAMED set of Arrow conversion gaps (exotic
     types, values a pa.array refuses) — the fallback produces the same
     values, just slower. The except is deliberately narrow and the
@@ -44,9 +47,9 @@ def local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
         return spark.createDataFrame(rows, ddl)
     try:
         from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
 
-        schema = StructType.fromDDL(ddl)
+        schema = (ddl if isinstance(ddl, StructType)
+                  else StructType.fromDDL(ddl))
         arrow_schema = to_arrow_schema(schema)
         cols = [pa.array([r[i] for r in rows], type=f.type)
                 for i, f in enumerate(arrow_schema)]

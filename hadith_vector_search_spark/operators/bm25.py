@@ -67,6 +67,9 @@ class LexicalIndex:
     # pinned frames have no partition dirs to prune). Same 5-col schema
     # as scoring_view().
     prune: object | None = None
+    # the lazily pinned intermediates (fresh postings, df delta) of the
+    # refresh_index call that built this index, released with it
+    _steps: tuple = ()
 
     def cache(self) -> "LexicalIndex":
         self.postings.cache()
@@ -74,6 +77,13 @@ class LexicalIndex:
         self.stats.cache()
         self.term_df.cache()
         return self
+
+    def frames(self) -> list[DataFrame]:
+        """The index's own frames, pinned or derived, and its refresh's
+        intermediates — what an owner releases when it supersedes the
+        index."""
+        return [f for f in (self.postings, self.doc_len, self.term_df,
+                            self._scoring, *self._steps) if f is not None]
 
     def scoring_view(self) -> DataFrame:
         """Denormalized postings (doc_id, term, tf, dl, df), built once and
@@ -151,8 +161,7 @@ class LexicalIndex:
 
 
 def build_index(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", pin: bool = True,
-                plan_probe=None) -> LexicalIndex:
+                id_col: str = "doc_id", pin: bool = True) -> LexicalIndex:
     """Build the derived lexical-index tables. Replaces FTS5 index build
     (/root/reference/mcp_server/apps/fts.py:280-290) with partial-agg
     shuffles over the token stream.
@@ -164,15 +173,10 @@ def build_index(docs: DataFrame, text_col: str = "text",
     (4 full scans observed in the hybrid plan). On a lake deployment the
     pinned frame is the persisted postings table itself — build once,
     query many — so pinning is the faithful single-job analogue. Pass
-    pin=False when composing into a plan that materializes differently.
-
-    `plan_probe(tag, df)` — optional — is handed the postings frame right
-    before the eager checkpoint, so pin sites can capture the build plan
-    the checkpoint would otherwise hide (plans.pin_audit)."""
+    pin=False when composing into a plan that materializes differently
+    (or to read the build plan a pin would hide, plans.pin_audit)."""
     toks = doc_tokens(docs, text_col, id_col)
     postings = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    if plan_probe is not None:
-        plan_probe("lexical_postings", postings)
     if pin:
         postings = postings.localCheckpoint()
     # dl == token count == sum of per-term tfs; deriving it from `postings`
@@ -317,7 +321,7 @@ def refresh_index(index: LexicalIndex, changed_docs: DataFrame,
         F.avg("dl").alias("avgdl"),
     )
     out = LexicalIndex(postings=new_post, doc_len=new_dl, stats=new_stats,
-                       term_df=new_term_df)
+                       term_df=new_term_df, _steps=(fresh_post, delta))
 
     if index._scoring is not None:
         # Scoring-view delta: replace rows of dropped/changed docs and of

@@ -96,11 +96,15 @@ def get_index(spark: SparkSession, sf_dir: str) -> bm25.LexicalIndex:
 
     def build() -> bm25.LexicalIndex:
         corpus = load_table(spark, sf_dir, "documents")
-        probe = lambda tag, df: record(tag, sf_dir, df)  # noqa: E731
+        # the pin-time plan of the postings the store publishes, recorded
+        # on every handle build (a reused store included), like the
+        # frame stores
+        record("lexical_postings", sf_dir,
+               bm25.build_index(corpus, pin=False).postings)
         return publish_and_open(
             sf_dir, "", lambda d: index_store.ensure_lexical_index(
                 spark, corpus, os.path.join(sf_dir, "documents.parquet"),
-                d, plan_probe=probe)[0])
+                d)[0])
 
     return cached(spark, sf_dir, "documents", "lexical", build)
 

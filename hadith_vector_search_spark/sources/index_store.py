@@ -206,24 +206,19 @@ def ensure_lexical_index(spark: SparkSession, corpus: DataFrame,
                          corpus_path: str, index_dir: str,
                          n_buckets: int = DEFAULT_BUCKETS,
                          text_col: str = "text", id_col: str = "doc_id",
-                         plan_probe=None,
                          ) -> tuple[bm25.LexicalIndex, list[str]]:
     """Build-or-reuse entry (the analogue of the reference reopening
     fts.db at startup): publishes a fresh index iff the manifest says the
     corpus drifted, then opens the published artifact either way.
     Returns (opened index, staleness reasons) — reasons == [] means a
-    prior session's index was reused byte-for-byte. `plan_probe(tag, df)`
-    — optional — captures the postings build plan when a publish actually
-    runs (plans.pin_audit); a byte-for-byte reuse never builds, so no
-    plan is recorded."""
+    prior session's index was reused byte-for-byte."""
     if os.path.isdir(index_dir):
         recover(index_dir)  # settle a crashed refresh before staleness
     current = lexical_manifest(corpus_path, corpus.count(), n_buckets)
     reasons = ensure_index(
         index_dir, current,
         lambda: publish_index(
-            bm25.build_index(corpus, text_col, id_col,
-                             plan_probe=plan_probe), index_dir,
+            bm25.build_index(corpus, text_col, id_col), index_dir,
             n_buckets))
     return open_index(spark, index_dir), reasons
 

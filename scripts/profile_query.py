@@ -33,18 +33,27 @@ def main() -> None:
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     queries = get_queries()
-    jobs_of = lambda: (spark.sparkContext._jsc.sc()  # noqa: E731
-                       .statusStore().jobsList(None).size())
+
+    def newest_job_id() -> int:
+        # Job ids are sequential and the status store always retains the
+        # newest one (it trims the oldest at spark.ui.retainedJobs), so
+        # the id delta counts a run's jobs even once the list is trimmed.
+        # The list is id-ordered; the newest sits at one of its ends.
+        jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+        if not jobs.size():
+            return -1
+        return max(jobs.head().jobId(), jobs.last().jobId())
+
     for name in args:
         fn = queries[name]
         walls, jobs = [], []
         for i in range(runs + 1):
             gc.collect()
-            j0 = jobs_of()
+            j0 = newest_job_id()
             t0 = time.time()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             walls.append(round(time.time() - t0, 3))
-            jobs.append(jobs_of() - j0)
+            jobs.append(newest_job_id() - j0)
         print(f"{name}: cold={walls[0]}s/{jobs[0]}j warm="
               f"{sorted(walls[1:])} jobs={jobs[1:]} "
               f"min={min(walls[1:])}s")

@@ -545,6 +545,169 @@ def test_upsert_counts_removal_wins_and_force(spark):
                    "skipped": 0, "removed": 0}
 
 
+def test_skipped_rearrival_writes_nothing_on_any_tier(spark):
+    """A checksum-skipped re-arrival (same id and text) whose metadata
+    changed writes nothing on any tier, which is what `skipped` reports:
+    the Spark-side corpus and the resident doc map both keep the old
+    row, so a filtered search agrees on both paths."""
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} about spark streaming", "en") for i in range(50)],
+        "doc_id int, text string, lang string")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    st = eng.upsert_documents(spark.createDataFrame(
+        [(3, "doc 3 about spark streaming", "fr")], docs.schema))
+    assert st == {"processed": 1, "inserted": 0, "updated": 0,
+                  "skipped": 1, "removed": 0}
+    assert eng._doc_rows[3]["lang"] == "en"
+    assert [r.lang for r in
+            eng.docs.filter(F.col("doc_id") == 3).collect()] == ["en"]
+    fr = {"lang": "fr"}
+    assert eng.hybrid_search("spark", filters=fr).collect() == []
+    eng.disable_interactive()
+    assert eng.hybrid_search("spark", filters=fr).collect() == []
+
+
+def test_resident_mlt_and_prefix_fts_run_no_job_after_upsert(spark):
+    """The resident MoreLikeThis and prefix fts_match twins read the
+    corpus stats (n_docs, avgdl) from the lexical tier, never from the
+    Spark-side index, so neither runs a Spark job after an upsert."""
+    docs = spark.createDataFrame(
+        [(i, f"patience prayer charity {i} praise") for i in range(20)],
+        "doc_id int, text string")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    eng.upsert_documents(spark.createDataFrame(
+        [(1, "prayer at night"), (30, "praise and patience")],
+        docs.schema))
+    assert _spark_jobs(spark, lambda: eng.more_like_this(1).collect())[0] \
+        == 0
+    assert _spark_jobs(
+        spark, lambda: eng.fts_match(prefix="pra").collect())[0] == 0
+    assert _spark_jobs(spark, lambda: eng.fts_match(
+        terms=["patience"], prefix="pra").collect())[0] == 0
+
+
+def test_resident_upserts_run_one_job_and_fold_on_spark_read(spark):
+    """Resident upserts cost O(batch): each of five batches (edits,
+    inserts, unchanged re-arrivals, removals) runs at most one Spark job
+    (the read of the batch) and pins nothing, and reading `docs.schema`
+    never folds. The pending batches fold into the Spark-side frames on
+    the first Spark read, with the same job count after one pending
+    batch as after five, and the Spark paths then serve exactly what a
+    fresh engine over the same rows serves."""
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    model = {r.doc_id: tuple(r) for r in docs.collect()}
+    live = sorted(model)
+    proto = model[live[0]][2:]
+
+    def batch(step):
+        ids = live[step * 12:(step + 1) * 12]
+        rows = ([(i, f"edited {step} patience and prayer {i}",
+                  *model[i][2:]) for i in ids[:5]]
+                + [model[i] for i in ids[5:8]]
+                + [(900_000 + 10 * step + k,
+                    f"new {step} {k} window merge batch", *proto)
+                   for k in range(3)])
+        return (spark.createDataFrame(rows, docs.schema),
+                spark.createDataFrame([(i,) for i in ids[8:10]],
+                                      "doc_id long"), rows, ids[8:10])
+
+    jsc = spark.sparkContext._jsc.sc()
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    pins = []
+    for step in range(5):
+        incoming, removed, rows, gone = batch(step)
+        n_jobs, st = _spark_jobs(
+            spark, lambda: eng.upsert_documents(incoming, removed))
+        assert n_jobs <= 1, (step, n_jobs)
+        assert st == {"processed": 11, "inserted": 3, "updated": 5,
+                      "skipped": 3, "removed": 2}, (step, st)
+        pins.append(jsc.getPersistentRDDs().size())
+        model.update({r[0]: r for r in rows})
+        for i in gone:
+            del model[i]
+    assert len(set(pins[1:])) == 1, pins
+    assert _spark_jobs(spark, lambda: eng.docs.schema)[0] == 0
+    assert eng._pending
+
+    one = HybridEngine(spark, docs)
+    assert one.enable_interactive()
+    one.upsert_documents(*batch(0)[:2])
+    assert (_spark_jobs(spark, eng._fold)[0]
+            == _spark_jobs(spark, one._fold)[0])
+    assert not eng._pending and not one._pending
+
+    eng.disable_interactive()
+    fresh = HybridEngine(spark, spark.createDataFrame(
+        list(model.values()), docs.schema))
+
+    def served(e):
+        return ([r.asDict() for r in e.hybrid_search(
+                    "patience and prayer", n_results=10).collect()],
+                [r.asDict() for r in e.fts_match(
+                    terms=["prayer"], prefix="win", k=10).collect()],
+                [r.asDict() for r in e.more_like_this(
+                    live[0], n_results=10).collect()],
+                [r.asDict() for r in e.get_document(900_001).collect()],
+                e.status().collect())
+
+    assert served(eng) == served(fresh)
+
+
+def test_concurrent_spark_reads_fold_pending_upserts_once(spark):
+    """Spark-path reads racing on one engine with upserts pending: the
+    fold runs under the engine's lock, so one thread folds, the others
+    read its frames (none reads a released pin), and every thread gets
+    the fresh engine's answer."""
+    import sys
+    import threading
+
+    rows = [(i, f"patience prayer charity {i % 7} praise") for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    eng = HybridEngine(spark, docs)
+    eng.index, eng.emb
+    eng.upsert_documents(spark.createDataFrame(
+        [(1, "prayer at night"), (50, "praise and patience")], docs.schema),
+        spark.createDataFrame([(2,)], "doc_id int"))
+    eng.upsert_documents(spark.createDataFrame(
+        [(3, "charity in secret"), (51, "patience in prayer")], docs.schema))
+    model = dict(rows)
+    model.update({1: "prayer at night", 50: "praise and patience",
+                  3: "charity in secret", 51: "patience in prayer"})
+    del model[2]
+    fresh = HybridEngine(spark, spark.createDataFrame(
+        sorted(model.items()), docs.schema))
+    want = sorted(tuple(r) for r in
+                  fresh.fts_match(terms=["patience"], k=50).collect())
+
+    results, errors = [], []
+
+    def read():
+        try:
+            results.append(sorted(tuple(r) for r in eng.fts_match(
+                terms=["patience"], k=50).collect()))
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=read) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert results == [want] * 8
+
+
 def test_get_document_null_text_tier_identity(spark):
     """NULL-text rows must render identically (NULL preview) from the
     zero-job doc map and the Spark filter path."""

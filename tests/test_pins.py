@@ -175,3 +175,23 @@ def test_warm_getter_calls_launch_no_spark_job(spark):
         jobs, again = _spark_jobs(spark, get)
         assert jobs == 0
         assert again is first
+
+
+def test_reused_lexical_store_records_its_pin_plan(spark, tmp_path,
+                                                   monkeypatch):
+    """The lexical index handle records its pin-time plan
+    (`lexical_postings`) on every build, like the frame stores, so a
+    session that reuses an already published store still exposes it to
+    the plan-hygiene sweep."""
+    import os
+
+    from hadith_vector_search_spark.plans import lexical
+    from hadith_vector_search_spark.plans.pin_audit import PIN_PLANS
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_ROOT", str(tmp_path / "root"))
+    key = ("lexical_postings", os.path.abspath(SF_A))
+    lexical.get_index(spark, SF_A)  # publishes the store
+    release_sf_pins(spark, SF_A)
+    PIN_PLANS.pop(key, None)
+    lexical.get_index(spark, SF_A)  # reopens it byte-for-byte
+    assert "Exchange" in PIN_PLANS[key]

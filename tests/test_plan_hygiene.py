@@ -88,8 +88,8 @@ def test_no_row_at_a_time_python_and_no_cartesian(spark):
                  if sf == SF}
     assert pin_plans, "registry sweep should have populated session pins"
     # the big pinned derived indexes must all have been captured
-    assert {"frame_windows", "frame_shingles", "vlsh_sigs"} <= set(
-        pin_plans), sorted(pin_plans)
+    assert {"frame_windows", "frame_shingles", "vlsh_sigs",
+            "lexical_postings"} <= set(pin_plans), sorted(pin_plans)
     _assert_hygiene(pin_plans, PIN_ARROW_ALLOWED)
 
 
