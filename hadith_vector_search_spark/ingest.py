@@ -373,36 +373,32 @@ def _vector_index_delta(spark: SparkSession, table_path: str, out_dir: str,
     return getattr(out, "last_split_report", None)
 
 
+def _store_manifests(table_path: str,
+                     n_rows: int) -> list[tuple[str, IndexManifest]]:
+    """The staleness identity of each durable store the CLI maintains
+    (fts term buckets, IVF vector cells, LSH buckets)."""
+    from .sources.index_store import lexical_manifest
+
+    return [("fts", lexical_manifest(table_path, n_rows)),
+            ("vector", _vector_manifest(table_path, n_rows)),
+            ("lsh", _lsh_manifest(table_path, n_rows))]
+
+
 def update_indexes(spark: SparkSession, table_path: str, index_dir: str,
                    force: bool = False) -> dict[str, list[str]]:
     """Refresh the three derived index stores (fts term buckets, IVF
     vector cells, LSH buckets) behind their staleness manifests. Returns
     {index_name: rebuild reasons} ([] == reused). ``force`` rebuilds
     unconditionally, the reference's --force-index-refresh."""
-    from .sources.commit import recover
-    from .sources.index_store import DEFAULT_BUCKETS, LEXICAL_MODEL
-
-    # Settle any crashed refresh BEFORE the staleness decision: the
-    # journal may hold the newer manifest, and rolling it forward here
-    # turns a would-be full rebuild into a reuse (publish_* also
-    # recovers, so this is an incrementality optimization, not a
-    # correctness requirement).
-    for name in ("fts", "vector", "lsh"):
-        d = os.path.join(index_dir, name)
-        if os.path.isdir(d):
-            recover(d)
+    # ensure_index settles any crashed refresh before its staleness
+    # decision, so a committed delta's manifest is reused, not rebuilt
     n_rows = spark.read.parquet(table_path).count()
-    fp = source_fingerprint([table_path])
+    builds = {"fts": _fts_index_build, "vector": _vector_index_build,
+              "lsh": _lsh_index_build}
     out: dict[str, list[str]] = {}
-    for name, model, dim, build in (
-            ("fts", f"{LEXICAL_MODEL}-b{DEFAULT_BUCKETS}", 0,
-             _fts_index_build),
-            ("vector", _vec_model_n(n_rows), EMBED_DIM,
-             _vector_index_build),
-            ("lsh", _lsh_model_n(n_rows), EMBED_DIM, _lsh_index_build)):
+    for name, manifest in _store_manifests(table_path, n_rows):
+        build = builds[name]
         idx_dir = os.path.join(index_dir, name)
-        manifest = IndexManifest(model_name=model, dim=dim, n_rows=n_rows,
-                                 source_files=fp)
         if force:
             build(spark, table_path, idx_dir)
             write_manifest(idx_dir, manifest)
@@ -448,17 +444,11 @@ def run_ingestion(spark: SparkSession, data_dir: str, table_path: str,
     can_delta = False
     if (do_update_indexes and not force_index and n_changed
             and existing is not None):
-        from .sources.index_store import index_is_fresh
-        from .sources.manifest import read_manifest, staleness_reasons
-        old_n = existing.count()
-        can_delta = (
-            index_is_fresh(os.path.join(idx_root, "fts"), table_path, old_n)
-            and not staleness_reasons(
-                read_manifest(os.path.join(idx_root, "vector")),
-                _vector_manifest(table_path, old_n))
-            and not staleness_reasons(
-                read_manifest(os.path.join(idx_root, "lsh")),
-                _lsh_manifest(table_path, old_n)))
+        from .sources.manifest import is_fresh
+        can_delta = all(
+            is_fresh(os.path.join(idx_root, name), current)
+            for name, current in _store_manifests(table_path,
+                                                  existing.count()))
     incoming_all = None
     if n_changed:
         incoming_all = changed_frames[0]

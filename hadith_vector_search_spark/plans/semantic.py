@@ -1002,6 +1002,38 @@ def _kmeans_recall_report(method: str, ann: DataFrame,
                     .alias("recall_ok")))
 
 
+def _kmeans_vector_store(spark: SparkSession, sf_dir: str, suffix: str,
+                         model: str, pq_cents: int | None = None):
+    """Ensure-and-reopen the published store `_<suffix>` over a TRAINED
+    k-means IVF codebook (+ k-means PQ sub-codebooks when `pq_cents`),
+    under manifest model `model`. The trainings run inside
+    `ensure_index`'s build callback, so a FRESH store reopens its stored
+    sidecars and never re-fits. The handle is one session-cache entry."""
+    import os as _os
+
+    from ..sources import vector_store
+    from ..sources.manifest import ensure_index
+    from .lexical import publish_and_open
+
+    def publish(idx_dir: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        vector_store.publish_vector_index(
+            emb, idx_dir, centroids=get_kmeans_codebook(spark, sf_dir),
+            n_cells=IVF_CENTROIDS, pq_cents=pq_cents,
+            pq_subbooks=(similarity.kmeans_subbooks(emb, pq_cents)
+                         if pq_cents else None))
+
+    def ensure_open(idx_dir: str):
+        n_rows, dim = _emb_stats(spark, sf_dir)
+        ensure_index(idx_dir, vector_store.vector_manifest(
+            _os.path.join(sf_dir, "embeddings.parquet"), n_rows, dim,
+            IVF_CENTROIDS, model), lambda: publish(idx_dir))
+        return vector_store.open_vector_index(spark, idx_dir)
+
+    return cached(spark, sf_dir, "embeddings", ("store", suffix),
+                  lambda: publish_and_open(sf_dir, f"_{suffix}", ensure_open))
+
+
 def get_kmeans_published_vector_index(spark: SparkSession, sf_dir: str):
     """Ensure-and-reopen the published vector store with a TRAINED
     (k-means) codebook — the quality default a deployment publishes with
@@ -1013,26 +1045,8 @@ def get_kmeans_published_vector_index(spark: SparkSession, sf_dir: str):
     and never re-trains (MLlib's fit is the once-per-corpus-snapshot
     cost; the reference's analogue is Chroma's one-off collection
     build). The handle is one session-cache entry."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import publish_and_open
-
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    model = f"ivf-kmeans-v1-c{IVF_CENTROIDS}"
-
-    def ensure_open(idx_dir: str):
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        if vector_store.vector_index_is_fresh(
-                idx_dir, src, n_rows, dim, IVF_CENTROIDS, model):
-            return vector_store.open_vector_index(spark, idx_dir)
-        return vector_store.ensure_vector_index(
-            spark, load_table(spark, sf_dir, "embeddings"), src, idx_dir,
-            IVF_CENTROIDS, centroids=get_kmeans_codebook(spark, sf_dir),
-            model_name=model)[0]
-
-    return cached(spark, sf_dir, "embeddings", ("store", "veck"),
-                  lambda: publish_and_open(sf_dir, "_veck", ensure_open))
+    return _kmeans_vector_store(spark, sf_dir, "veck",
+                                f"ivf-kmeans-v1-c{IVF_CENTROIDS}")
 
 
 def ann_topk_ivf_kmeans_published(spark: SparkSession,
@@ -1078,28 +1092,9 @@ def get_ivfpq_kmeans_published_index(spark: SparkSession, sf_dir: str):
     staleness manifest: a FRESH store reopens its stored centroid AND
     sub-codebook sidecars, never re-fits (pinned by test). The handle
     is one session-cache entry."""
-    import os as _os
-
-    from ..sources import vector_store
-    from .lexical import publish_and_open
-
-    src = _os.path.join(sf_dir, "embeddings.parquet")
-    model = f"ivfpq-kmeans-v1-c{IVF_CENTROIDS}-pq{PQ_CENTS}"
-
-    def ensure_open(idx_dir: str):
-        n_rows, dim = _emb_stats(spark, sf_dir)
-        if vector_store.vector_index_is_fresh(
-                idx_dir, src, n_rows, dim, IVF_CENTROIDS, model):
-            return vector_store.open_vector_index(spark, idx_dir)
-        emb = load_table(spark, sf_dir, "embeddings")
-        return vector_store.ensure_vector_index(
-            spark, emb, src, idx_dir, IVF_CENTROIDS,
-            centroids=get_kmeans_codebook(spark, sf_dir),
-            model_name=model, pq_cents=PQ_CENTS,
-            pq_subbooks=similarity.kmeans_subbooks(emb, PQ_CENTS))[0]
-
-    return cached(spark, sf_dir, "embeddings", ("store", "vecpqk"),
-                  lambda: publish_and_open(sf_dir, "_vecpqk", ensure_open))
+    return _kmeans_vector_store(
+        spark, sf_dir, "vecpqk",
+        f"ivfpq-kmeans-v1-c{IVF_CENTROIDS}-pq{PQ_CENTS}", PQ_CENTS)
 
 
 def ann_topk_ivfpq_kmeans_published(spark: SparkSession,

@@ -31,16 +31,15 @@ The deriver is a NAME into the module registry (`DERIVERS`), with its
 parameters stamped in the layout — a reopened store can therefore
 refresh itself with the exact derivation it was published under, and a
 parameter change is a different model identity (staleness rebuild), the
-same rule every other store follows. Writes go through the shared
-staged-journal commit (`sources.commit`) via `_partitioned_refresh`; a
-derivation with zero rows publishes an empty-but-schema'd table that
-reopens like any other. The bucket count derives from the doc count
-(`window_buckets`) unless overridden.
+same rule every other store follows. Writes go through the store core
+(`sources.commit`): `write_parted_table` at publish (a zero-row
+derivation publishes an empty-but-schema'd table that reopens like any
+other) and `partitioned_refresh` for deltas. The bucket count derives
+from the doc count (`window_buckets`) unless overridden.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from functools import cached_property
 
@@ -48,11 +47,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
-from .commit import recover
-from .manifest import (IndexManifest, ensure_index, read_manifest,
-                       source_fingerprint, staleness_reasons)
-from .vector_store import (_partitioned_refresh, _write_json_sidecar,
-                           _write_parted_table)
+from .commit import (partitioned_refresh, read_sidecar, recover,
+                     write_parted_table, write_sidecar)
+from .manifest import IndexManifest, ensure_index, source_fingerprint
 
 FLAYOUT_NAME = "_flayout.json"
 FRAME_MODEL = "frame-index-v1"
@@ -161,11 +158,6 @@ DERIVER_INPUT_COLS = {
 DEFAULT_INPUT_COLS = ("doc_id", "text")
 
 
-def read_flayout(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, FLAYOUT_NAME)) as fh:
-        return json.load(fh)
-
-
 def _params_token(params: dict) -> str:
     return ",".join(f"{k}={params[k]}" for k in sorted(params))
 
@@ -189,19 +181,18 @@ def publish_frame_store(docs: DataFrame, index_dir: str, deriver: str,
     if deriver not in DERIVERS:
         raise KeyError(f"unknown frame deriver {deriver!r}; "
                        f"registry has {sorted(DERIVERS)}")
-    if os.path.isdir(index_dir):
-        recover(index_dir)
+    recover(index_dir)
     derived = n_buckets is None
     if derived:
         n_buckets = window_buckets(docs.count())
-    _write_json_sidecar(index_dir, FLAYOUT_NAME,
-                        {"deriver": deriver, "params": params,
-                         "n_buckets": n_buckets, "id_col": "doc_id",
-                         "derived": derived})
+    write_sidecar(index_dir, FLAYOUT_NAME,
+                  {"deriver": deriver, "params": params,
+                   "n_buckets": n_buckets, "id_col": "doc_id",
+                   "derived": derived})
     rows = (DERIVERS[deriver](docs, params)
             .select("*", _dbucket("doc_id", n_buckets).alias("dbucket")))
-    _write_parted_table(rows, os.path.join(index_dir, "rows"), "dbucket",
-                        "doc_id")
+    write_parted_table(rows, os.path.join(index_dir, "rows"), "dbucket",
+                       "doc_id")
 
 
 class PublishedFrameStore:
@@ -212,7 +203,7 @@ class PublishedFrameStore:
     def __init__(self, spark: SparkSession, index_dir: str) -> None:
         recover(index_dir)
         self.spark, self.index_dir = spark, index_dir
-        lay = read_flayout(index_dir)
+        lay = read_sidecar(index_dir, FLAYOUT_NAME)
         self.deriver = lay["deriver"]
         self.params = lay["params"]
         self.n_buckets = int(lay["n_buckets"])
@@ -237,8 +228,6 @@ def ensure_frame_store(spark: SparkSession, docs: DataFrame,
     """Build-or-reuse (the `ensure_vector_index` discipline): publishes
     iff the manifest says the corpus (or the derivation identity)
     drifted, opens the artifact either way."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)
     n_docs = docs.count()
     derived = n_buckets is None
     if derived:
@@ -250,18 +239,6 @@ def ensure_frame_store(spark: SparkSession, docs: DataFrame,
         lambda: publish_frame_store(docs, index_dir, deriver, params,
                                     None if derived else n_buckets))
     return open_frame_store(spark, index_dir), reasons
-
-
-def frame_store_is_fresh(index_dir: str, source_path: str, n_docs: int,
-                         deriver: str, params: dict,
-                         n_buckets: int | None = None) -> bool:
-    if os.path.isdir(index_dir):
-        recover(index_dir)
-    if n_buckets is None:
-        n_buckets = window_buckets(n_docs)
-    return not staleness_reasons(
-        read_manifest(index_dir),
-        frame_manifest(source_path, n_docs, deriver, params, n_buckets))
 
 
 def write_frame_refresh(spark: SparkSession, index_dir: str,
@@ -282,8 +259,7 @@ def write_frame_refresh(spark: SparkSession, index_dir: str,
                          "source_path: the manifest's n_rows counts DOCS "
                          "and the generic refresh core would count index "
                          "rows")
-    recover(index_dir)
-    fidx = open_frame_store(spark, index_dir)
+    fidx = open_frame_store(spark, index_dir)  # settles a crashed refresh
     derive = DERIVERS[fidx.deriver]
 
     def tag(df: DataFrame) -> DataFrame:
@@ -291,11 +267,10 @@ def write_frame_refresh(spark: SparkSession, index_dir: str,
                 .select("*", _dbucket("doc_id", fidx.n_buckets)
                         .alias("dbucket")))
 
-    _partitioned_refresh(
+    partitioned_refresh(
         spark, index_dir, part_col="dbucket",
         specs=[{"table": "rows",
-                "live": spark.read.parquet(fidx.rows_path),
-                "live_path": fidx.rows_path, "tag": tag}],
+                "live": spark.read.parquet(fidx.rows_path), "tag": tag}],
         id_col="doc_id",
         changed=changed_docs.select(
             *DERIVER_INPUT_COLS.get(fidx.deriver, DEFAULT_INPUT_COLS)),

@@ -31,9 +31,9 @@ Scale design (100 TB):
   session with zero metastore state, directory-level pruning fires on the
   bucket predicate (PartitionFilters — asserted by tests/PLAN_AUDIT),
   and a refresh replaces only touched bucket directories via the staged
-  journal commit (see `recover`). crc32 (not Murmur hash) because the SAME bucket
-  function is computable driver-side (`zlib.crc32`) — the query path
-  derives its bucket predicate without a Spark job.
+  journal commit (`sources.commit`). crc32 (not Murmur hash) because the
+  SAME bucket function is computable driver-side (`zlib.crc32`) — the
+  query path derives its bucket predicate without a Spark job.
 - In-file ``term`` sort gives parquet row-group min/max stats, so the
   pushed term filter skips row groups WITHIN the surviving buckets —
   two-level pruning, the moral equivalent of the FTS5 term b-tree.
@@ -49,28 +49,25 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import zlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import bm25
-from .manifest import (MANIFEST_NAME, IndexManifest, ensure_index,
-                       read_manifest, source_fingerprint)
+# The staged-write + commit-journal protocol and the partitioned writer
+# live in sources.commit (ONE implementation, shared with the vector and
+# frame stores); kill-mid-refresh tests intercept the hooks on the
+# commit module, which `commit` resolves at call time.
+from .commit import (JOURNAL_NAME, STAGING_NAME,  # noqa: F401
+                     read_sidecar, recover, stage_refresh,
+                     write_parted_table, write_sidecar)
+from .manifest import IndexManifest, ensure_index, source_fingerprint
 
 DEFAULT_BUCKETS = 16  # sized for the test SFs; a lake uses 1024+
 LAYOUT_NAME = "_layout.json"
 LEXICAL_MODEL = "lexical-index-v2"
-
-# The crash-safe staged-write + commit-journal protocol lives in
-# sources.commit (ONE implementation, shared with the published vector
-# store); kill-mid-refresh tests intercept the hooks on the commit
-# module, which `commit` resolves at call time.
-from .commit import (JOURNAL_NAME, STAGING_NAME,  # noqa: E402
-                     commit, recover)
 
 
 def bucket_of(term: str, n_buckets: int) -> int:
@@ -86,44 +83,15 @@ def _bucket_col(col: Column | str, n_buckets: int) -> Column:
                   F.lit(n_buckets)).cast("int")
 
 
-def _write_layout(index_dir: str, n_buckets: int) -> None:
-    os.makedirs(index_dir, exist_ok=True)
-    tmp = os.path.join(index_dir, f".{LAYOUT_NAME}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"n_buckets": n_buckets}, fh)
-    os.replace(tmp, os.path.join(index_dir, LAYOUT_NAME))
+def _n_buckets(index_dir: str) -> int:
+    return int(read_sidecar(index_dir, LAYOUT_NAME)["n_buckets"])
 
 
-def read_layout(index_dir: str) -> int:
-    with open(os.path.join(index_dir, LAYOUT_NAME)) as fh:
-        return int(json.load(fh)["n_buckets"])
-
-
-def _bucket_dirs(path: str) -> set[str]:
-    """term_bucket=K partition dirs under a table path ({} if none/absent)."""
-    if not os.path.isdir(path):
-        return set()
-    return {d for d in os.listdir(path) if d.startswith("term_bucket=")}
-
-
-def _write_bucketed(df: DataFrame, path: str, n_buckets: int,
-                    sort_col: str = "term") -> None:
-    """One partition-dir per term bucket, rows sorted by `sort_col`
-    in-file (row-group min/max pruning). Refresh deltas also come through
-    here — into the STAGING dir, whose bucket dirs the commit journal
-    then swaps/deletes one-by-one (the crash-safe replacement for dynamic
-    partition overwrite).
-
-    REBALANCE, not `repartition("term_bucket")`: writer-task count must
-    track the data, not the core count — a delta batch staged at
-    shuffle.partitions width pays dozens of near-empty writer tasks'
-    serialized commit round trips, while AQE sizes the rebalance to
-    advisory bytes at scale and splits hot buckets across writers (the
-    `vector_store._write_parted` rationale; guide §2.5/§6)."""
-    (df.hint("rebalance", "term_bucket")
-     .sortWithinPartitions("term_bucket", sort_col)
-     .write.mode("overwrite")
-     .partitionBy("term_bucket").parquet(path))
+def _whole_tables(index: bm25.LexicalIndex) -> list[tuple[str, DataFrame]]:
+    """The narrow corpus-global tables, written whole (see module
+    docstring)."""
+    return [("doc_len", index.doc_len), ("term_df", index.term_df),
+            ("stats", index.stats), ("doc_norm", index.doc_norm())]
 
 
 def publish_index(index: bm25.LexicalIndex, index_dir: str,
@@ -135,23 +103,17 @@ def publish_index(index: bm25.LexicalIndex, index_dir: str,
     a stale _commit.json left by a killed refresh would otherwise be
     replayed by the next open ON TOP of this fresh publish, splicing the
     dead refresh's staged dirs into a rebuilt index (r9 review)."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)
-    _write_layout(index_dir, n_buckets)
+    recover(index_dir)
+    write_sidecar(index_dir, LAYOUT_NAME, {"n_buckets": n_buckets})
     bkt = _bucket_col("term", n_buckets).alias("term_bucket")
-    _write_bucketed(index.postings.select("doc_id", "term", "tf", bkt),
-                    os.path.join(index_dir, "postings"), n_buckets)
-    _write_bucketed(
+    write_parted_table(index.postings.select("doc_id", "term", "tf", bkt),
+                       os.path.join(index_dir, "postings"), "term_bucket",
+                       "term")
+    write_parted_table(
         index.scoring_view().select("doc_id", "term", "tf", "dl", "df", bkt),
-        os.path.join(index_dir, "scoring"), n_buckets)
-    index.doc_len.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "doc_len"))
-    index.term_df.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "term_df"))
-    index.stats.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "stats"))
-    index.doc_norm().write.mode("overwrite").parquet(
-        os.path.join(index_dir, "doc_norm"))
+        os.path.join(index_dir, "scoring"), "term_bucket", "term")
+    for name, df in _whole_tables(index):
+        df.write.mode("overwrite").parquet(os.path.join(index_dir, name))
 
 
 def open_index(spark: SparkSession, index_dir: str) -> bm25.LexicalIndex:
@@ -163,7 +125,7 @@ def open_index(spark: SparkSession, index_dir: str) -> bm25.LexicalIndex:
     buckets the query can match (PartitionFilters at planning time).
     Settles any interrupted refresh first (see `recover`)."""
     recover(index_dir)
-    n_buckets = read_layout(index_dir)
+    n_buckets = _n_buckets(index_dir)
 
     def rd(name: str, *cols: str) -> DataFrame:
         return (spark.read.parquet(os.path.join(index_dir, name))
@@ -212,8 +174,6 @@ def ensure_lexical_index(spark: SparkSession, corpus: DataFrame,
     corpus drifted, then opens the published artifact either way.
     Returns (opened index, staleness reasons) — reasons == [] means a
     prior session's index was reused byte-for-byte."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)  # settle a crashed refresh before staleness
     current = lexical_manifest(corpus_path, corpus.count(), n_buckets)
     reasons = ensure_index(
         index_dir, current,
@@ -239,23 +199,16 @@ def write_refresh(spark: SparkSession, index_dir: str,
     Re-stamps the manifest when the caller passes the post-merge corpus
     identity (corpus_path [+ n_rows]).
 
-    CRASH-SAFE: every new file is staged under `.refresh-staging/` while
-    the live tree still serves the old index, then a journal of
-    rename/delete ops commits atomically and replays — a kill at any
-    point leaves a reopen seeing either the old or the new index, never a
-    mix (see `recover`; kill-mid-refresh tested). Degenerate shapes that
-    bucket-level swaps cannot express — a batch that empties EVERY
-    surviving bucket, or a refresh on top of such an emptied store — fall
-    back to whole-table swaps, leaving an empty-but-schema'd placeholder
-    file so the store stays openable (ADVICE r8: an all-emptied store
-    previously lost its last data file and failed schema inference).
+    CRASH-SAFE and degenerate-shape-safe through the store core
+    (`commit.stage_refresh`/`swap_ops`): a kill at any point leaves a
+    reopen seeing either the old or the new index, and a batch that
+    empties every surviving bucket leaves an openable placeholder.
 
     Returns the reopened index. Rebuild-equivalence with a from-scratch
     publish over the merged corpus is pinned by
     tests/test_index_store.py."""
-    recover(index_dir)
-    base = open_index(spark, index_dir)
-    n_buckets = read_layout(index_dir)
+    base = open_index(spark, index_dir)  # settles any crashed refresh
+    n_buckets = _n_buckets(index_dir)
     refreshed = bm25.refresh_index(base, changed_docs, removed_ids,
                                    text_col=text_col, id_col=id_col)
 
@@ -268,91 +221,42 @@ def write_refresh(spark: SparkSession, index_dir: str,
                      .join(F.broadcast(drop), "doc_id", "left_semi")
                      .select("term")
                      .unionByName(bm25.doc_tokens(changed_docs, text_col,
-                                                  id_col).select("term"))
-                     .distinct())
-    touched = sorted({bucket_of(r.term, n_buckets)
-                      for r in touched_terms.collect()})
+                                                  id_col).select("term")))
+    # collect_set of the bucket: the driver receives at most n_buckets
+    # values, never the batch's distinct terms
+    touched = sorted(
+        touched_terms.select(_bucket_col("term", n_buckets).alias("b"))
+        .agg(F.collect_set("b")).collect()[0][0] or [])
 
-    # STAGE: all writes land under .refresh-staging while the live tree
-    # (which the refreshed plans lazily read) stays untouched — no
-    # checkpoint needed, no read-while-overwrite hazard by construction.
-    staging = os.path.join(index_dir, STAGING_NAME)
-    shutil.rmtree(staging, ignore_errors=True)
-    stg = lambda name: os.path.join(staging, name)  # noqa: E731
+    # Postings/scoring content is the REFRESHED table filtered to the
+    # touched buckets (not survivors-plus-new rows: a surviving row's df
+    # changes with the batch). When every surviving bucket empties, that
+    # filtered frame is the complete table (every refreshed posting's
+    # term came from a dropped doc or the batch, so its bucket is
+    # touched) — the whole-table shape `commit.swap_ops` picks.
     bkt = _bucket_col("term", n_buckets).alias("term_bucket")
-    ops: list[dict] = []
-    if touched:
-        new_post = (refreshed.postings
-                    .select("doc_id", "term", "tf", bkt)
-                    .filter(F.col("term_bucket").isin(touched)))
-        new_sc = (refreshed.scoring_view()
-                  .select("doc_id", "term", "tf", "dl", "df", bkt)
-                  .filter(F.col("term_bucket").isin(touched)))
-        _write_bucketed(new_post, stg("postings"), n_buckets)
-        _write_bucketed(new_sc, stg("scoring"), n_buckets)
-        still = _bucket_dirs(stg("postings"))
-        existing = _bucket_dirs(os.path.join(index_dir, "postings"))
-        emptied = ({f"term_bucket={b}" for b in touched} & existing) - still
-        if existing and (existing - emptied or still):
-            # Delta shape: swap the touched bucket dirs that survive,
-            # delete the ones the batch emptied (a lake does the same as
-            # a metadata-only partition REPLACE/DROP in one snapshot).
-            for tbl in ("postings", "scoring"):
-                ops += [{"op": "swap_dir", "src": f"{STAGING_NAME}/{tbl}/{d}",
-                         "dst": f"{tbl}/{d}"} for d in sorted(still)]
-                ops += [{"op": "remove_dir", "dst": f"{tbl}/{d}"}
-                        for d in sorted(emptied)]
-        else:
-            # Whole-table shape: either the base store holds no bucket
-            # dirs (an earlier all-emptied refresh left the placeholder —
-            # its root data files cannot mix with partition dirs), or
-            # this batch empties every surviving bucket. In both cases
-            # the touched-filtered frames ARE the complete tables (every
-            # refreshed posting's term came from a dropped doc or the
-            # batch, so its bucket is in `touched`).
-            if not still:
-                # empty-but-schema'd placeholder: partitioned writes of
-                # zero rows produce no files and the store would stop
-                # inferring a schema — write one empty non-partitioned
-                # file instead (term_bucket becomes a data column, which
-                # reads and prunes identically).
-                new_post.limit(0).write.mode("overwrite").parquet(
-                    stg("postings"))
-                new_sc.limit(0).write.mode("overwrite").parquet(
-                    stg("scoring"))
-            ops += [{"op": "swap_dir", "src": f"{STAGING_NAME}/{tbl}",
-                     "dst": tbl} for tbl in ("postings", "scoring")]
-    for name, df in (("doc_len", refreshed.doc_len),
-                     ("term_df", refreshed.term_df),
-                     ("stats", refreshed.stats),
-                     ("doc_norm", refreshed.doc_norm())):
-        df.write.mode("overwrite").parquet(stg(name))
-        ops.append({"op": "swap_dir", "src": f"{STAGING_NAME}/{name}",
-                    "dst": name})
+    tables = [] if not touched else [
+        ("postings", refreshed.postings.select("doc_id", "term", "tf", bkt)
+         .filter(F.col("term_bucket").isin(touched))),
+        ("scoring", refreshed.scoring_view()
+         .select("doc_id", "term", "tf", "dl", "df", bkt)
+         .filter(F.col("term_bucket").isin(touched)))]
 
-    if corpus_path is not None:
-        if n_rows is None:
-            n_rows = int(spark.read.parquet(stg("stats")).first().n_docs)
-        os.makedirs(staging, exist_ok=True)
-        with open(stg(MANIFEST_NAME), "w") as fh:
-            fh.write(lexical_manifest(corpus_path, n_rows,
-                                      n_buckets).to_json())
-        ops.append({"op": "swap_file", "src": f"{STAGING_NAME}/{MANIFEST_NAME}",
-                    "dst": MANIFEST_NAME})
+    def stage_whole(staging: str) -> list[dict]:
+        ops = []
+        for name, df in _whole_tables(refreshed):
+            df.write.mode("overwrite").parquet(os.path.join(staging, name))
+            ops.append({"op": "swap_dir", "src": f"{STAGING_NAME}/{name}",
+                        "dst": name})
+        return ops
 
-    # COMMIT: journal lands atomically, then the idempotent replay; a kill
-    # anywhere in between is rolled forward by the next recover().
-    commit(index_dir, ops)
+    def stamp() -> IndexManifest:
+        n = n_rows
+        if n is None:  # the staged stats hold the post-merge doc count
+            n = int(spark.read.parquet(os.path.join(
+                index_dir, STAGING_NAME, "stats")).first().n_docs)
+        return lexical_manifest(corpus_path, n, n_buckets)
+
+    stage_refresh(index_dir, "term_bucket", "term", tables, touched,
+                  None if corpus_path is None else stamp, stage_whole)
     return open_index(spark, index_dir)
-
-
-def index_is_fresh(index_dir: str, corpus_path: str, n_rows: int,
-                   n_buckets: int = DEFAULT_BUCKETS) -> bool:
-    """True iff the published index would be reused as-is (manifest
-    matches the current corpus identity)."""
-    from .manifest import staleness_reasons
-    if os.path.isdir(index_dir):
-        recover(index_dir)  # a crashed refresh may hold the newer manifest
-    return not staleness_reasons(
-        read_manifest(index_dir),
-        lexical_manifest(corpus_path, n_rows, n_buckets))

@@ -22,7 +22,7 @@ import os
 from dataclasses import asdict, dataclass, field
 from typing import Callable
 
-MANIFEST_NAME = "_index_manifest.json"
+from .commit import MANIFEST_NAME, read_sidecar, recover, write_sidecar
 
 
 @dataclass
@@ -61,20 +61,13 @@ def source_fingerprint(paths: list[str]) -> dict[str, list[int]]:
 def write_manifest(index_dir: str, manifest: IndexManifest) -> None:
     """Atomic publish (write + rename), same discipline as the streaming
     MERGE commit point."""
-    os.makedirs(index_dir, exist_ok=True)
-    tmp = os.path.join(index_dir, f".{MANIFEST_NAME}.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(manifest.to_json())
-    os.replace(tmp, os.path.join(index_dir, MANIFEST_NAME))
+    write_sidecar(index_dir, MANIFEST_NAME, manifest.to_json())
 
 
 def read_manifest(index_dir: str) -> IndexManifest | None:
-    path = os.path.join(index_dir, MANIFEST_NAME)
-    if not os.path.exists(path):
-        return None
     try:
-        with open(path) as fh:
-            return IndexManifest(**json.load(fh))
+        payload = read_sidecar(index_dir, MANIFEST_NAME, default=None)
+        return None if payload is None else IndexManifest(**payload)
     except (json.JSONDecodeError, TypeError):
         return None  # unreadable manifest == stale
 
@@ -99,11 +92,24 @@ def staleness_reasons(existing: IndexManifest | None, current: IndexManifest) ->
     return reasons
 
 
+def is_fresh(index_dir: str, current: IndexManifest) -> bool:
+    """True iff the store at `index_dir` would be reused as-is by
+    `ensure_index` against `current`. Settles any interrupted refresh
+    first: a committed journal may hold the newer manifest."""
+    recover(index_dir)
+    return not staleness_reasons(read_manifest(index_dir), current)
+
+
 def ensure_index(index_dir: str, current: IndexManifest,
                  build: Callable[[], None]) -> list[str]:
     """Build-or-reuse: rebuild (and re-stamp the manifest) iff stale.
-    Returns the staleness reasons that triggered the rebuild ([] if the
-    cached index was reused) so callers can log/observe invalidations."""
+    Settles any interrupted refresh BEFORE the comparison — a refresh
+    whose journal landed is rolled forward, so its manifest, not the
+    pre-refresh one, decides (a committed refresh that already matches
+    `current` is reused, never rebuilt). Returns the staleness reasons
+    that triggered the rebuild ([] if the cached index was reused) so
+    callers can log/observe invalidations."""
+    recover(index_dir)
     reasons = staleness_reasons(read_manifest(index_dir), current)
     if reasons:
         build()

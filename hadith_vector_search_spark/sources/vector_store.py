@@ -30,17 +30,17 @@ Scale design (100 TB):
 - In-file id sort gives parquet row-group min/max stats on the id, so
   point lookups (fetch the query vector by id) skip row groups inside
   the surviving files.
-- Writes go through the shared staged-journal commit protocol
-  (`sources.commit`): a reopen sees either the wholly-old or wholly-new
-  index, never a mix, and a kill mid-refresh is settled by `recover`.
+- Writes go through the store core (`sources.commit`): sidecars, the
+  partitioned writer and the staged-journal commit — a reopen sees
+  either the wholly-old or wholly-new index, never a mix, and a kill
+  mid-refresh is settled by `recover`.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-from contextlib import contextmanager
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,10 +49,11 @@ from ..functions.vector import dot, vector_lit
 from ..operators import similarity
 from . import resident
 from .commit import (JOURNAL_NAME, STAGING_NAME,  # noqa: F401
-                     commit, recover)
+                     partitioned_refresh, read_sidecar, recover, write_parted,
+                     write_parted_table, write_sidecar)
 from ..localrel import local_df
-from .manifest import (MANIFEST_NAME, IndexManifest, ensure_index,
-                       read_manifest, source_fingerprint, staleness_reasons)
+from .manifest import IndexManifest, ensure_index, read_manifest, \
+    source_fingerprint
 
 DEFAULT_CELLS = 8   # sized for the test SFs; a lake uses thousands
 VLAYOUT_NAME = "_vlayout.json"
@@ -111,56 +112,112 @@ def _tag_cells(emb: DataFrame, centroids, id_col: str,
     return emb.join(assign.withColumnRenamed("cent_id", "cell"), id_col)
 
 
-def _write_json_sidecar(index_dir: str, name: str, payload: dict) -> None:
-    """Atomic config-sized sidecar write (tmp + rename), shared by the
-    IVF and LSH layout files."""
-    os.makedirs(index_dir, exist_ok=True)
-    tmp = os.path.join(index_dir, f".{name}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, os.path.join(index_dir, name))
+def _read_pairs(spark: SparkSession, index_dir: str,
+                name: str) -> list[tuple[int, list[float]]]:
+    """A (key int, vector array<double>) sidecar table — the IVF codebook
+    `centroids/` or the LSH hyperplanes `planes/` — collected in key
+    order."""
+    return [(int(r[0]), list(r[1])) for r in sorted(
+        spark.read.parquet(os.path.join(index_dir, name)).collect(),
+        key=lambda r: r[0])]
 
 
-def read_vlayout(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, VLAYOUT_NAME)) as fh:
-        return json.load(fh)
+def _vlayout(centroids, dim: int, id_col: str, vec_col: str,
+             geometry: dict) -> dict:
+    return {"n_cells": len(centroids), "dim": dim, "id_col": id_col,
+            "vec_col": vec_col, "geometry": geometry}
 
 
-def _remove_pq_sidecar(index_dir: str) -> None:
-    """Drop every PQ artifact (_pqlayout.json, pq_centroids/, codes/).
-    Called whenever a publish will NOT (re)write codes: a republish with
-    pq unset after an identity/geometry change, or publish_pq_codes'
-    empty-corpus degrade — otherwise the reopened store pairs the
-    previous epoch's codes/sub-codebooks with the new vectors and
-    ivfpq_topk silently ADC-ranks stale codes (round-10 advice)."""
+# quantization tier -> (layout sidecar, tables and books it owns)
+_TIER_FILES = {"pq": (PQ_LAYOUT_NAME, ("pq_centroids", "codes")),
+               "sq": (SQ_LAYOUT_NAME, ("sq",)),
+               "bq": (BQ_LAYOUT_NAME, ("bq",))}
+
+
+def _drop_tier(index_dir: str, tier: str) -> None:
+    """Drop every artifact of one quantization tier. Called whenever a
+    publish will NOT (re)write that tier: a republish without it after
+    an identity/geometry change, or a tier publish's empty-corpus
+    degrade — otherwise the reopened store pairs the previous epoch's
+    codes with the new vectors and the tier silently ranks stale codes
+    (round-10 advice)."""
+    layout, dirs = _TIER_FILES[tier]
     try:
-        os.remove(os.path.join(index_dir, PQ_LAYOUT_NAME))
+        os.remove(os.path.join(index_dir, layout))
     except FileNotFoundError:
         pass
-    shutil.rmtree(os.path.join(index_dir, "pq_centroids"),
-                  ignore_errors=True)
-    shutil.rmtree(os.path.join(index_dir, "codes"), ignore_errors=True)
+    for d in dirs:
+        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
 
 
-def _remove_sq_sidecar(index_dir: str) -> None:
-    """Drop the SQ8 artifacts (_sqlayout.json, sq/) — same stale-sidecar
-    rule as `_remove_pq_sidecar`: a publish that will not (re)write
-    quantized codes must not leave a prior epoch's behind."""
-    try:
-        os.remove(os.path.join(index_dir, SQ_LAYOUT_NAME))
-    except FileNotFoundError:
-        pass
-    shutil.rmtree(os.path.join(index_dir, "sq"), ignore_errors=True)
+def _strip_probe_stamp(geometry: dict) -> dict:
+    return {k: v for k, v in geometry.items()
+            if k != "n_probe" and not k.startswith("probe_")}
 
 
-def _remove_bq_sidecar(index_dir: str) -> None:
-    """Drop the binary-quantization artifacts (_bqlayout.json, bq/) —
-    the stale-sidecar rule, third application."""
-    try:
-        os.remove(os.path.join(index_dir, BQ_LAYOUT_NAME))
-    except FileNotFoundError:
-        pass
-    shutil.rmtree(os.path.join(index_dir, "bq"), ignore_errors=True)
+def _governed_geometry(geometry: dict, emb: DataFrame, centroids,
+                       id_col: str, vec_col: str) -> dict:
+    """`geometry` with its probe contract re-measured against `centroids`:
+    the smallest n_probe whose sample recall clears the stated target
+    (`similarity.nprobe_for_recall` — the order-statistic twin of the
+    LSH layout's bands_for_recall stamp), so a reopened store can
+    default its probes to a recall contract instead of a constant. Any
+    PRIOR epoch's contract is stripped first: if governance yields no
+    pairs (degenerate corpus), the store carries NO stamp rather than
+    one measured against a codebook that no longer exists."""
+    geometry = _strip_probe_stamp(geometry)
+    gov = similarity.nprobe_for_recall(emb, centroids, id_col=id_col,
+                                       vec_col=vec_col)
+    return geometry if gov is None else dict(geometry, **gov)
+
+
+def _rerank_stamp(layout: dict, r=None, n_probe: int | None = None) -> dict:
+    """A tier layout without any prior rerank contract, plus — given a
+    `governed_*rerank_report` row `r` — the one it measured at
+    `n_probe`."""
+    out = {k: v for k, v in layout.items() if not k.startswith("rerank")}
+    if r is not None:
+        out.update(rerank=int(r["rerank"]),
+                   rerank_target=float(r["rerank_target"]),
+                   rerank_measured=float(r["measured_rerank_recall"]),
+                   rerank_end_to_end=float(r["end_to_end_recall"]),
+                   rerank_n_probe=n_probe,
+                   rerank_sample=int(r["sample_queries"]),
+                   rerank_pairs=int(r["pairs"]),
+                   rerank_in_probe_pairs=int(r["in_probe_pairs"]))
+    return out
+
+
+def _govern_pq(index_dir: str, stored: DataFrame, codes: DataFrame,
+               centroids, subbooks, n_probe: int, layout: dict,
+               id_col: str, vec_col: str) -> None:
+    """IVFADC rerank governance (the third knob: bands, n_probe, and the
+    ADC->exact budget all derive from stated targets): the smallest
+    rerank whose conditional recall over probed pairs clears the target,
+    measured AT the store's governed n_probe against the written codes —
+    so the stamp audits the artifact itself. A degenerate corpus (no
+    pairs) keeps no stamp."""
+    rows = similarity.governed_rerank_report(
+        stored.select(id_col, vec_col), centroids, subbooks, n_probe,
+        id_col=id_col, vec_col=vec_col, codes=codes,
+        residual=bool(layout.get("residual"))).collect()
+    if rows:
+        write_sidecar(index_dir, PQ_LAYOUT_NAME,
+                      _rerank_stamp(layout, rows[0], n_probe))
+
+
+def _govern_bq(index_dir: str, stored: DataFrame, bq_codes: DataFrame,
+               centroids, n_probe: int, layout: dict, id_col: str,
+               vec_col: str) -> None:
+    """BQ Hamming-prefilter depth governance (the BQ twin of
+    `_govern_pq`), measured against the written packed signs."""
+    rows = similarity.governed_bq_rerank_report(
+        stored.select(id_col, vec_col), centroids, n_probe,
+        id_col=id_col, vec_col=vec_col, bq_codes=bq_codes,
+        dim=int(layout["dim"])).collect()
+    if rows:
+        write_sidecar(index_dir, BQ_LAYOUT_NAME,
+                      _rerank_stamp(layout, rows[0], n_probe))
 
 
 def sq_quantize(df: DataFrame, id_col: str, vec_col: str,
@@ -187,13 +244,6 @@ def sq_quantize(df: DataFrame, id_col: str, vec_col: str,
     return out.select(id_col, *keep_cols, codes.alias("qcodes"), "scale")
 
 
-def _part_dirs(path: str, part_col: str) -> set[str]:
-    """`part_col=V` partition dirs under a store table ({} if absent)."""
-    if not os.path.isdir(path):
-        return set()
-    return {d for d in os.listdir(path) if d.startswith(f"{part_col}=")}
-
-
 def data_codebook(emb: DataFrame, n_cells: int,
                   id_col: str = "vec_id", vec_col: str = "embedding",
                   ) -> list[tuple[int, list[float]]]:
@@ -205,70 +255,6 @@ def data_codebook(emb: DataFrame, n_cells: int,
     rows = (emb.select(F.col(id_col), F.col(vec_col))
             .orderBy(F.asc(id_col)).limit(n_cells).collect())
     return [(i, list(r[1])) for i, r in enumerate(rows)]
-
-
-@contextmanager
-def _bytes_sized_writers(spark: SparkSession):
-    """Scope AQE to size WRITER tasks by bytes, not core count, for the
-    duration of one staged store write. `coalescePartitions.
-    parallelismFirst` defaults to true, which makes AQE coalesce only
-    down to minPartitionSize (1 MB) "to maximize parallelism" — so a
-    small delta batch still fans out to ~core-count near-empty writer
-    tasks, each paying the serialized task-commit round trip (measured:
-    a 16-dir frame-store staged write ran 17-18 write tasks for ~2 MB).
-    parallelismFirst=false restores the documented at-scale behaviour:
-    partitions track advisoryPartitionSizeInBytes (64 MB default), so a
-    tiny delta writes with 1-2 tasks while a lake-scale batch still gets
-    one writer per ~64 MB (guide §2.2/§6). Scoped to the write action —
-    a session-wide flip would also serialize small-byte compute-heavy
-    stages (a 4096-dim matmul over 2000 rows is ~65 MB but wants the
-    full core count)."""
-    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _write_parted(df: DataFrame, path: str, part_col: str,
-                  id_col: str) -> None:
-    """One directory per partition value, id-sorted in-file (row-group
-    min/max stats on the id for point-lookup skipping).
-
-    REBALANCE instead of `repartition(part_col)`: the writer-task count
-    must track the DATA, not the core count. A plain repartition pins
-    the stage at spark.sql.shuffle.partitions tasks — for a small delta
-    batch that is dozens of near-empty writer tasks each paying the
-    serialized task-commit round trip (measured 3-4x the write cost of
-    the whole staged table at bench scale), while at lake scale AQE
-    sizes the same hint to advisoryPartitionSizeInBytes-sized tasks and
-    splits a skewed partition value across writers instead of wedging
-    it into one task (guide §2.5/§6). In-file id ordering is preserved
-    by the explicit sortWithinPartitions either way. The scoped
-    `_bytes_sized_writers` conf makes the rebalance actually honor the
-    advisory byte size (see its docstring)."""
-    with _bytes_sized_writers(df.sparkSession):
-        (df.hint("rebalance", part_col)
-         .sortWithinPartitions(part_col, id_col)
-         .write.mode("overwrite")
-         .partitionBy(part_col).parquet(path))
-
-
-def _write_parted_table(df: DataFrame, path: str, part_col: str,
-                        id_col: str) -> None:
-    """`_write_parted` for the PUBLISH paths: an empty input under
-    partitionBy writes no schema-bearing file (the table is unreadable
-    on reopen), so degrade to the empty-but-schema'd placeholder the
-    refresh's all-emptied shape already uses. Detection is a directory
-    listing, not a Spark job."""
-    _write_parted(df, path, part_col, id_col)
-    if not _part_dirs(path, part_col):
-        df.limit(0).write.mode("overwrite").parquet(path)
 
 
 def publish_vector_index(emb: DataFrame, index_dir: str,
@@ -303,8 +289,7 @@ def publish_vector_index(emb: DataFrame, index_dir: str,
     `write_vector_refresh` is the delta path. Settles any crashed
     refresh FIRST — a stale _commit.json would otherwise be replayed
     over this fresh publish by the next open (r9 review)."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)
+    recover(index_dir)
     if geometry is not None:
         n_cells = geometry["n_cells"]
     elif n_cells is None and centroids is None:
@@ -317,31 +302,16 @@ def publish_vector_index(emb: DataFrame, index_dir: str,
     if geometry is None:
         geometry = {"n_cells": len(centroids), "derived": False}
     if geometry.get("derived") and centroids:
-        # derived-geometry publishes also GOVERN the probe count: the
-        # smallest n_probe whose sample recall clears the stated target
-        # (`similarity.nprobe_for_recall` — the order-statistic twin of
-        # the LSH layout's bands_for_recall stamp), measured against
-        # THESE centroids, stamped so a reopened store can default its
-        # probes to a recall contract instead of a constant. One extra
-        # sample-x-corpus job per artifact epoch; a hot-cell split
-        # republish re-governs against the expanded codebook (probe
-        # ranks shift when a cell divides). Explicit-geometry publishes
-        # (the driver-SF oracle-replayable path) skip it unchanged.
-        # strip any PRIOR epoch's contract first (a split republish
-        # passes the old geometry through): if re-governance yields no
-        # pairs (degenerate corpus), the store must carry NO stamp
-        # rather than one measured against a codebook that no longer
-        # exists — the stale-sidecar rule the PQ path already follows
-        geometry = {k: v for k, v in geometry.items()
-                    if k != "n_probe" and not k.startswith("probe_")}
-        gov = similarity.nprobe_for_recall(emb, centroids,
-                                           id_col=id_col, vec_col=vec_col)
-        if gov is not None:
-            geometry = dict(geometry, **gov)
-    _write_json_sidecar(index_dir, VLAYOUT_NAME,
-                        {"n_cells": len(centroids), "dim": dim,
-                         "id_col": id_col, "vec_col": vec_col,
-                         "geometry": geometry})
+        # derived-geometry publishes also GOVERN the probe count against
+        # THESE centroids: one extra sample-x-corpus job per artifact
+        # epoch; a hot-cell split re-governs against the expanded
+        # codebook (probe ranks shift when a cell divides).
+        # Explicit-geometry publishes (the driver-SF oracle-replayable
+        # path) skip it unchanged.
+        geometry = _governed_geometry(geometry, emb, centroids, id_col,
+                                      vec_col)
+    write_sidecar(index_dir, VLAYOUT_NAME,
+                  _vlayout(centroids, dim, id_col, vec_col, geometry))
     spark = emb.sparkSession
     _cent_df(spark, centroids).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(index_dir, "centroids"))
@@ -352,23 +322,23 @@ def publish_vector_index(emb: DataFrame, index_dir: str,
     # asserted by tests) instead of paying a join against the corpus.
     tagged = (vectors if vectors is not None
               else _tag_cells(emb, centroids, id_col, vec_col))
-    _write_parted_table(tagged, os.path.join(index_dir, "vectors"),
-                        "cell", id_col)
+    write_parted_table(tagged, os.path.join(index_dir, "vectors"),
+                       "cell", id_col)
+    # full-overwrite publish without a tier: a prior epoch's tier must
+    # not survive to be paired with the new vectors
     if pq_cents:
         publish_pq_codes(spark, index_dir, pq_cents, emb=emb,
                          subbooks=pq_subbooks, residual=pq_residual)
     else:
-        # full-overwrite publish with pq unset: a prior epoch's PQ
-        # sidecar must not survive to be paired with the new vectors
-        _remove_pq_sidecar(index_dir)
+        _drop_tier(index_dir, "pq")
     if sq8:
         publish_sq_codes(spark, index_dir)
     else:
-        _remove_sq_sidecar(index_dir)
+        _drop_tier(index_dir, "sq")
     if bq1:
         publish_bq_codes(spark, index_dir)
     else:
-        _remove_bq_sidecar(index_dir)
+        _drop_tier(index_dir, "bq")
 
 
 def publish_pq_codes(spark: SparkSession, index_dir: str, pq_cents: int,
@@ -388,7 +358,7 @@ def publish_pq_codes(spark: SparkSession, index_dir: str, pq_cents: int,
     vectors are touched only for the top-`rerank` survivors."""
     import numpy as np
 
-    lay = read_vlayout(index_dir)
+    lay = read_sidecar(index_dir, VLAYOUT_NAME)
     id_col, vec_col = lay["id_col"], lay["vec_col"]
     stored = spark.read.parquet(os.path.join(index_dir, "vectors"))
     if not stored.take(1):
@@ -397,13 +367,10 @@ def publish_pq_codes(spark: SparkSession, index_dir: str, pq_cents: int,
         # PRIOR epoch's, which would otherwise pair stale codes with the
         # empty store on reopen) instead of dying mid-publish;
         # `ivfpq_topk` reports the missing codes explicitly
-        _remove_pq_sidecar(index_dir)
+        _drop_tier(index_dir, "pq")
         return
-    centroids = None
-    if residual:
-        centroids = [(int(r.cent_id), list(r.cvec)) for r in sorted(
-            spark.read.parquet(os.path.join(index_dir, "centroids"))
-            .collect(), key=lambda r: r.cent_id)]
+    centroids = (_read_pairs(spark, index_dir, "centroids") if residual
+                 else None)
     if subbooks is None and residual:
         # data-derived residual books: residuals of the lowest-id STORED
         # rows w.r.t. their own assigned cells (the data_codebook
@@ -420,10 +387,10 @@ def publish_pq_codes(spark: SparkSession, index_dir: str, pq_cents: int,
         # passes through unchanged — same list-of-arrays contract
         subbooks = similarity.pq_subbooks(emb if emb is not None else stored,
                                           pq_cents, id_col, vec_col)
-    dim = sum(Bm.shape[1] for Bm in subbooks)
-    _write_json_sidecar(index_dir, PQ_LAYOUT_NAME,
-                        {"n_cents": pq_cents, "m": len(subbooks),
-                         "dim": dim, "residual": bool(residual)})
+    pq_lay = {"n_cents": pq_cents, "m": len(subbooks),
+              "dim": sum(Bm.shape[1] for Bm in subbooks),
+              "residual": bool(residual)}
+    write_sidecar(index_dir, PQ_LAYOUT_NAME, pq_lay)
     (local_df(
         spark,
         [(m, c, [float(x) for x in Bm[c]])
@@ -434,39 +401,15 @@ def publish_pq_codes(spark: SparkSession, index_dir: str, pq_cents: int,
     codes = similarity.pq_encode(stored, subbooks, id_col, vec_col,
                                  keep_cols=("cell",),
                                  residual_centroids=centroids)
-    _write_parted(codes, os.path.join(index_dir, "codes"), "cell", id_col)
-    geo = read_vlayout(index_dir).get("geometry") or {}
+    write_parted(codes, os.path.join(index_dir, "codes"), "cell", id_col)
+    geo = lay.get("geometry") or {}
     if geo.get("derived"):
         # derived-geometry IVFADC publishes also GOVERN the rerank depth
-        # (the third knob: bands, n_probe, and the ADC->exact budget all
-        # derive from stated targets): the smallest rerank whose
-        # conditional recall over probed pairs clears the target,
-        # measured AT the store's governed n_probe against the
-        # just-written codes — so the stamp audits the artifact itself.
-        if centroids is None:
-            centroids = [(int(r.cent_id), list(r.cvec)) for r in sorted(
-                spark.read.parquet(os.path.join(index_dir, "centroids"))
-                .collect(), key=lambda r: r.cent_id)]
-        n_probe = int(geo.get("n_probe", 2))
-        rows = similarity.governed_rerank_report(
-            stored.select(id_col, vec_col), centroids, subbooks, n_probe,
-            id_col=id_col, vec_col=vec_col,
-            codes=spark.read.parquet(os.path.join(index_dir, "codes")),
-            residual=bool(residual)).collect()
-        if rows:
-            r = rows[0]
-            _write_json_sidecar(
-                index_dir, PQ_LAYOUT_NAME,
-                {"n_cents": pq_cents, "m": len(subbooks), "dim": dim,
-                 "residual": bool(residual),
-                 "rerank": int(r["rerank"]),
-                 "rerank_target": float(r["rerank_target"]),
-                 "rerank_measured": float(r["measured_rerank_recall"]),
-                 "rerank_end_to_end": float(r["end_to_end_recall"]),
-                 "rerank_n_probe": n_probe,
-                 "rerank_sample": int(r["sample_queries"]),
-                 "rerank_pairs": int(r["pairs"]),
-                 "rerank_in_probe_pairs": int(r["in_probe_pairs"])})
+        _govern_pq(index_dir, stored,
+                   spark.read.parquet(os.path.join(index_dir, "codes")),
+                   centroids or _read_pairs(spark, index_dir, "centroids"),
+                   subbooks, int(geo.get("n_probe", 2)), pq_lay, id_col,
+                   vec_col)
 
 
 def publish_sq_codes(spark: SparkSession, index_dir: str) -> None:
@@ -479,16 +422,16 @@ def publish_sq_codes(spark: SparkSession, index_dir: str) -> None:
     exactly as it prunes the others. Quantized from the WRITTEN vectors
     table (never the publish input) so a code row can never disagree
     with its stored vector — the `publish_pq_codes` discipline."""
-    lay = read_vlayout(index_dir)
+    lay = read_sidecar(index_dir, VLAYOUT_NAME)
     id_col, vec_col = lay["id_col"], lay["vec_col"]
     stored = spark.read.parquet(os.path.join(index_dir, "vectors"))
     if not stored.take(1):
-        _remove_sq_sidecar(index_dir)
+        _drop_tier(index_dir, "sq")
         return
-    _write_json_sidecar(index_dir, SQ_LAYOUT_NAME,
-                        {"bits": 8, "scheme": "symmetric-per-vector"})
+    write_sidecar(index_dir, SQ_LAYOUT_NAME,
+                  {"bits": 8, "scheme": "symmetric-per-vector"})
     sq = sq_quantize(stored, id_col, vec_col, keep_cols=("cell",))
-    _write_parted(sq, os.path.join(index_dir, "sq"), "cell", id_col)
+    write_parted(sq, os.path.join(index_dir, "sq"), "cell", id_col)
 
 
 def bq_quantize(df: DataFrame, id_col: str, vec_col: str, dim: int,
@@ -509,57 +452,24 @@ def publish_bq_codes(spark: SparkSession, index_dir: str) -> None:
     Hamming (integer xor+popcount) ranks the tiny scan, exact dots touch
     only the survivors — the modern binary-quantization trick. Packed
     from the WRITTEN vectors table (the publish_pq_codes discipline)."""
-    lay = read_vlayout(index_dir)
+    lay = read_sidecar(index_dir, VLAYOUT_NAME)
     id_col, vec_col, dim = lay["id_col"], lay["vec_col"], int(lay["dim"])
     stored = spark.read.parquet(os.path.join(index_dir, "vectors"))
     if dim <= 0 or not stored.take(1):
-        _remove_bq_sidecar(index_dir)
+        _drop_tier(index_dir, "bq")
         return
-    _write_json_sidecar(index_dir, BQ_LAYOUT_NAME,
-                        {"dim": dim, "words": -(-dim // 64)})
+    bq_lay = {"dim": dim, "words": -(-dim // 64)}
+    write_sidecar(index_dir, BQ_LAYOUT_NAME, bq_lay)
     bq = bq_quantize(stored, id_col, vec_col, dim, keep_cols=("cell",))
-    _write_parted(bq, os.path.join(index_dir, "bq"), "cell", id_col)
+    write_parted(bq, os.path.join(index_dir, "bq"), "cell", id_col)
     geo = lay.get("geometry") or {}
     if geo.get("derived"):
         # derived-geometry publishes also GOVERN the Hamming-prefilter
-        # depth (the BQ twin of the IVFADC rerank stamp): the smallest
-        # rerank whose conditional recall over probed pairs clears the
-        # target, measured AT the store's governed n_probe against the
-        # just-written packed signs — the stamp audits the artifact. A
-        # degenerate corpus (no pairs) carries NO stamp (the
-        # stale-sidecar rule every tier follows).
-        centroids = [(int(r.cent_id), list(r.cvec)) for r in sorted(
-            spark.read.parquet(os.path.join(index_dir, "centroids"))
-            .collect(), key=lambda r: r.cent_id)]
-        n_probe = int(geo.get("n_probe", 2))
-        rows = similarity.governed_bq_rerank_report(
-            stored.select(id_col, vec_col), centroids, n_probe,
-            id_col=id_col, vec_col=vec_col,
-            bq_codes=spark.read.parquet(os.path.join(index_dir, "bq")),
-            dim=dim).collect()
-        if rows:
-            r = rows[0]
-            _write_json_sidecar(
-                index_dir, BQ_LAYOUT_NAME,
-                {"dim": dim, "words": -(-dim // 64),
-                 "rerank": int(r["rerank"]),
-                 "rerank_target": float(r["rerank_target"]),
-                 "rerank_measured": float(r["measured_rerank_recall"]),
-                 "rerank_end_to_end": float(r["end_to_end_recall"]),
-                 "rerank_n_probe": n_probe,
-                 "rerank_sample": int(r["sample_queries"]),
-                 "rerank_pairs": int(r["pairs"]),
-                 "rerank_in_probe_pairs": int(r["in_probe_pairs"])})
-
-
-def _load_pq_subbooks(spark: SparkSession, index_dir: str, m: int,
-                      ) -> list:
-    import numpy as np
-    rows = sorted(spark.read.parquet(os.path.join(index_dir,
-                                                  "pq_centroids")).collect(),
-                  key=lambda r: (r.m, r.cent_id))
-    return [np.array([list(r.cvec) for r in rows if r.m == mi],
-                     dtype=float) for mi in range(m)]
+        # depth (the BQ twin of the IVFADC rerank stamp)
+        _govern_bq(index_dir, stored,
+                   spark.read.parquet(os.path.join(index_dir, "bq")),
+                   _read_pairs(spark, index_dir, "centroids"),
+                   int(geo.get("n_probe", 2)), bq_lay, id_col, vec_col)
 
 
 def select_probes(spark: SparkSession,
@@ -642,7 +552,7 @@ class PublishedVectorIndex:
     def __init__(self, spark: SparkSession, index_dir: str) -> None:
         recover(index_dir)
         self.spark, self.index_dir = spark, index_dir
-        lay = read_vlayout(index_dir)
+        lay = read_sidecar(index_dir, VLAYOUT_NAME)
         self.n_cells, self.dim = int(lay["n_cells"]), int(lay["dim"])
         self.id_col, self.vec_col = lay["id_col"], lay["vec_col"]
         # build-time geometry stamp (absent on pre-r10 artifacts): a
@@ -653,36 +563,30 @@ class PublishedVectorIndex:
         # target) — `ivf_topk(n_probe=None)` resolves to it
         self.governed_nprobe = (self.geometry or {}).get("n_probe")
         self.vectors_path = os.path.join(index_dir, "vectors")
-        self.centroids = [(int(r.cent_id), list(r.cvec)) for r in sorted(
-            spark.read.parquet(os.path.join(index_dir, "centroids"))
-            .collect(), key=lambda r: r.cent_id)]
+        self.centroids = _read_pairs(spark, index_dir, "centroids")
         # Optional IVFADC sidecar (see `publish_pq_codes`): the celled
         # PQ-code table + sub-codebooks. Lazily loaded — an IVF-only
         # store never reads them.
-        pq_path = os.path.join(index_dir, PQ_LAYOUT_NAME)
-        self.pq = json.load(open(pq_path)) if os.path.exists(pq_path) \
-            else None
+        self.pq = read_sidecar(index_dir, PQ_LAYOUT_NAME, default=None)
         self.codes_path = os.path.join(index_dir, "codes")
-        self._pq_subbooks = None
         # Optional SQ8 sidecar (see `publish_sq_codes`): the celled
         # scalar-quantized table, lazily scanned.
-        sq_path = os.path.join(index_dir, SQ_LAYOUT_NAME)
-        self.sq = json.load(open(sq_path)) if os.path.exists(sq_path) \
-            else None
+        self.sq = read_sidecar(index_dir, SQ_LAYOUT_NAME, default=None)
         self.sq_path = os.path.join(index_dir, "sq")
         # Optional binary-quantization sidecar (see `publish_bq_codes`).
-        bq_path = os.path.join(index_dir, BQ_LAYOUT_NAME)
-        self.bq = json.load(open(bq_path)) if os.path.exists(bq_path) \
-            else None
+        self.bq = read_sidecar(index_dir, BQ_LAYOUT_NAME, default=None)
         self.bq_path = os.path.join(index_dir, "bq")
         self._resident = None  # set by enable_interactive
 
-    @property
+    @cached_property
     def pq_subbooks(self) -> list:
-        if self._pq_subbooks is None:
-            self._pq_subbooks = _load_pq_subbooks(self.spark, self.index_dir,
-                                                  int(self.pq["m"]))
-        return self._pq_subbooks
+        """The `pq_centroids/` sidecar as m sub-codebook arrays."""
+        import numpy as np
+        rows = sorted(self.spark.read.parquet(os.path.join(
+            self.index_dir, "pq_centroids")).collect(),
+            key=lambda r: (r.m, r.cent_id))
+        return [np.array([list(r.cvec) for r in rows if r.m == mi],
+                         dtype=float) for mi in range(int(self.pq["m"]))]
 
     @property
     def codes(self) -> DataFrame:
@@ -1371,8 +1275,6 @@ def ensure_vector_index(spark: SparkSession, emb: DataFrame,
     the session cache `plans.pins`, restamped by the table's
     fingerprint) so repeated ensures don't re-pay the count/take jobs;
     the manifest COMPARISON is unchanged."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)
     if dim is None:
         sample = emb.select(vec_col).take(1)
         dim = len(sample[0][0]) if sample else 0
@@ -1390,18 +1292,6 @@ def ensure_vector_index(spark: SparkSession, emb: DataFrame,
                                      id_col, vec_col, geometry, pq_cents,
                                      pq_subbooks, pq_residual, sq8, bq1))
     return open_vector_index(spark, index_dir), reasons
-
-
-def vector_index_is_fresh(index_dir: str, source_path: str, n_rows: int,
-                          dim: int, n_cells: int | None = DEFAULT_CELLS,
-                          model_name: str | None = None) -> bool:
-    if os.path.isdir(index_dir):
-        recover(index_dir)
-    if n_cells is None:
-        n_cells = similarity.index_geometry(n_rows)["n_cells"]
-    return not staleness_reasons(
-        read_manifest(index_dir),
-        vector_manifest(source_path, n_rows, dim, n_cells, model_name))
 
 
 # ---------------------------------------------------------------------------
@@ -1425,9 +1315,13 @@ LSH_LAYOUT_NAME = "_lshlayout.json"
 LSH_MODEL = "lsh-store-v2"  # v2: bucket partition values are 'b'+bits
 
 
-def read_lsh_layout(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, LSH_LAYOUT_NAME)) as fh:
-        return json.load(fh)
+def _lsh_bucket(planes, vec_col: str):
+    """The LSH partition value 'b' + sign bits (the probe arithmetic);
+    the prefix keeps Hive type inference from reading '0010' as int 10.
+    A zero-plane (empty-corpus) store buckets every row as 'b'."""
+    return F.concat(F.lit("b"),
+                    similarity.sign_bucket_expr(planes, vec_col) if planes
+                    else F.lit(""))
 
 
 def publish_lsh_index(emb: DataFrame, index_dir: str, n_planes: int = 6,
@@ -1459,8 +1353,7 @@ def publish_lsh_index(emb: DataFrame, index_dir: str, n_planes: int = 6,
     collected planes alongside). Intended for a maintenance twin forking
     a working store off the published per-corpus-snapshot LSH index
     (guide §6: the sign pass was paid at that store's publish)."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)
+    recover(index_dir)
     if planes is None:
         plane_rows = sorted(
             similarity.data_planes(emb, n_planes, id_col, vec_col).collect(),
@@ -1485,24 +1378,16 @@ def publish_lsh_index(emb: DataFrame, index_dir: str, n_planes: int = 6,
            if planes and govern else None)
     if gov is not None:
         layout.update(gov)
-    _write_json_sidecar(index_dir, LSH_LAYOUT_NAME, layout)
+    write_sidecar(index_dir, LSH_LAYOUT_NAME, layout)
     spark = emb.sparkSession
     (local_df(spark, planes, "plane_id int, pvec array<double>")
      .coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(index_dir, "planes")))
 
-    # empty-corpus publish: no planes to sign (F.concat of zero columns
-    # is unconstructible); the store is 0 rows either way
     if sigs is None:
-        bucket = (similarity.sign_bucket_expr(planes, vec_col) if planes
-                  else F.lit(""))
-        # partition VALUE is 'b'+bits: Hive partition-type inference would
-        # otherwise coerce the bit string to an int, dropping leading
-        # zeros ('0010' -> 10) — the prefix pins the column to string at
-        # any read
-        sigs = emb.select("*", F.concat(F.lit("b"), bucket).alias("bucket"))
-    _write_parted_table(sigs, os.path.join(index_dir, "sigs"),
-                        "bucket", id_col)
+        sigs = emb.select("*", _lsh_bucket(planes, vec_col).alias("bucket"))
+    write_parted_table(sigs, os.path.join(index_dir, "sigs"),
+                       "bucket", id_col)
 
 
 class PublishedLshIndex:
@@ -1513,7 +1398,7 @@ class PublishedLshIndex:
     def __init__(self, spark: SparkSession, index_dir: str) -> None:
         recover(index_dir)
         self.spark, self.index_dir = spark, index_dir
-        lay = read_lsh_layout(index_dir)
+        lay = read_sidecar(index_dir, LSH_LAYOUT_NAME)
         self.n_planes, self.dim = int(lay["n_planes"]), int(lay["dim"])
         # the geometry REQUEST the store was published under (pre-r11
         # artifacts lack it — fall back to the fitted count); deltas
@@ -1526,9 +1411,7 @@ class PublishedLshIndex:
         self.governed_nflip = lay.get("n_flip")
         self.id_col, self.vec_col = lay["id_col"], lay["vec_col"]
         self.sigs_path = os.path.join(index_dir, "sigs")
-        self.planes = [(int(r.plane_id), list(r.pvec)) for r in sorted(
-            spark.read.parquet(os.path.join(index_dir, "planes"))
-            .collect(), key=lambda r: r.plane_id)]
+        self.planes = _read_pairs(spark, index_dir, "planes")
 
     @property
     def sigs(self) -> DataFrame:
@@ -1614,8 +1497,6 @@ def ensure_lsh_index(spark: SparkSession, emb: DataFrame, source_path: str,
     opens the artifact either way. `n_rows`/`dim` as
     `ensure_vector_index`: caller-known stats skip the count/take jobs,
     the manifest comparison is unchanged."""
-    if os.path.isdir(index_dir):
-        recover(index_dir)
     if dim is None:
         sample = emb.select(vec_col).take(1)
         dim = len(sample[0][0]) if sample else 0
@@ -1700,9 +1581,44 @@ def export_vectors_binary(spark: SparkSession, index_dir: str,
                "source_index": os.path.abspath(index_dir),
                "model_name": mf.model_name if mf else None,
                "space_hint": "ip"}
-    with open(os.path.join(out_dir, "export_manifest.json"), "w") as fh:
-        json.dump(payload, fh)
+    write_sidecar(out_dir, "export_manifest.json", payload)
     return payload
+
+
+def _tier_specs(vidx: PublishedVectorIndex, centroids) -> list[dict]:
+    """`partitioned_refresh` specs for every table of an IVF store — the
+    raw vectors plus each attached quantization tier, all assigned at
+    `centroids` (and residual PQ codes encoded against them). Every tier
+    refreshes IN THE SAME COMMIT as the vectors: the journal covers all
+    tables, so a reopen never sees codes from one epoch and vectors from
+    another. Sub-codebooks are immutable under refresh for the same
+    reason the IVF codebook is — every stored code depends on them."""
+    id_col, vec_col = vidx.id_col, vidx.vec_col
+
+    def cell_tag(df: DataFrame) -> DataFrame:
+        return _tag_cells(df, centroids, id_col, vec_col)
+
+    specs = [{"table": "vectors", "live": vidx.vectors, "tag": cell_tag}]
+    if vidx.pq is not None:
+        subbooks = vidx.pq_subbooks
+        res_cents = centroids if vidx.pq.get("residual") else None
+        specs.append({
+            "table": "codes", "live": vidx.codes,
+            "tag": lambda df: similarity.pq_encode(
+                cell_tag(df), subbooks, id_col, vec_col,
+                keep_cols=("cell",), residual_centroids=res_cents)})
+    if vidx.sq is not None:
+        specs.append({
+            "table": "sq", "live": vidx.sq_codes,
+            "tag": lambda df: sq_quantize(cell_tag(df), id_col, vec_col,
+                                          keep_cols=("cell",))})
+    if vidx.bq is not None:
+        specs.append({
+            "table": "bq", "live": vidx.bq_codes,
+            "tag": lambda df: bq_quantize(cell_tag(df), id_col, vec_col,
+                                          int(vidx.bq["dim"]),
+                                          keep_cols=("cell",))})
+    return specs
 
 
 def split_hot_cell(spark: SparkSession, index_dir: str,
@@ -1727,7 +1643,7 @@ def split_hot_cell(spark: SparkSession, index_dir: str,
     stored cell, no shuffle) finds the movers; the rewrite set is the
     hot cell's dir, child B's dir, and exactly the dirs that lose a row
     to a child (plus any dir a hot-cell row re-assigns into) — the
-    `_partitioned_refresh` core rewrites those and ONLY those, with
+    `commit.partitioned_refresh` core rewrites those and ONLY those, with
     every untouched cell dir byte-invariant (pinned by test). For
     residual-IVFADC stores all old hot-cell rows join the batch even
     when their cell id is unchanged: child A's centroid moved, so their
@@ -1751,8 +1667,7 @@ def split_hot_cell(spark: SparkSession, index_dir: str,
 
     Returns None when no cell crosses the bound; a report dict when a
     split ran (or was refused as degenerate — all members identical)."""
-    recover(index_dir)
-    vidx = open_vector_index(spark, index_dir)
+    vidx = open_vector_index(spark, index_dir)  # settles a crashed refresh
     occ = cell_occupancy(vidx)
     total = sum(n for _, n in occ)
     if not total:
@@ -1788,63 +1703,24 @@ def split_hot_cell(spark: SparkSession, index_dir: str,
     changed = (retagged.filter(mover_pred)
                .drop("cell", "old_cell").localCheckpoint())
 
-    def cell_tag(df: DataFrame) -> DataFrame:
-        return _tag_cells(df, new_centroids, id_col, vec_col)
-
-    specs = [{"table": "vectors", "live": vidx.vectors,
-              "live_path": vidx.vectors_path, "tag": cell_tag}]
-    if pq is not None:
-        subbooks = vidx.pq_subbooks
-        res_cents = new_centroids if pq.get("residual") else None
-        specs.append({
-            "table": "codes", "live": vidx.codes,
-            "live_path": vidx.codes_path,
-            "tag": lambda df: similarity.pq_encode(
-                cell_tag(df), subbooks, id_col, vec_col,
-                keep_cols=("cell",), residual_centroids=res_cents)})
-    if vidx.sq is not None:
-        specs.append({
-            "table": "sq", "live": vidx.sq_codes,
-            "live_path": vidx.sq_path,
-            "tag": lambda df: sq_quantize(cell_tag(df), id_col, vec_col,
-                                          keep_cols=("cell",))})
-    if vidx.bq is not None:
-        specs.append({
-            "table": "bq", "live": vidx.bq_codes,
-            "live_path": vidx.bq_path,
-            "tag": lambda df: bq_quantize(cell_tag(df), id_col, vec_col,
-                                          int(vidx.bq["dim"]),
-                                          keep_cols=("cell",))})
-
-    geometry = dict(vidx.geometry or {}, n_cells=len(new_centroids),
-                    split_from=hot_cell)
-    # strip pre-split governance (measured against the dead codebook)
-    geometry = {k: v for k, v in geometry.items()
-                if k != "n_probe" and not k.startswith("probe_")}
+    geometry = _strip_probe_stamp(dict(vidx.geometry or {},
+                                       n_cells=len(new_centroids),
+                                       split_from=hot_cell))
 
     def stage_sidecars(staging: str) -> list[dict]:
-        ops: list[dict] = []
+        # the expanded codebook and the layouts with every pre-split
+        # governance stamp stripped (measured against the dead codebook)
         _cent_df(spark, new_centroids).coalesce(1).write.mode(
             "overwrite").parquet(os.path.join(staging, "centroids"))
-        ops.append({"op": "swap_dir",
-                    "src": f"{STAGING_NAME}/centroids", "dst": "centroids"})
-        with open(os.path.join(staging, VLAYOUT_NAME), "w") as fh:
-            json.dump({"n_cells": len(new_centroids), "dim": vidx.dim,
-                       "id_col": id_col, "vec_col": vec_col,
-                       "geometry": geometry}, fh)
-        ops.append({"op": "swap_file",
-                    "src": f"{STAGING_NAME}/{VLAYOUT_NAME}",
-                    "dst": VLAYOUT_NAME})
+        ops = [{"op": "swap_dir",
+                "src": f"{STAGING_NAME}/centroids", "dst": "centroids"}]
         for name, payload in (
-                (PQ_LAYOUT_NAME,
-                 {k: v for k, v in (pq or {}).items()
-                  if not k.startswith("rerank")} if pq else None),
-                (BQ_LAYOUT_NAME,
-                 {k: v for k, v in vidx.bq.items()
-                  if not k.startswith("rerank")} if vidx.bq else None)):
-            if payload is not None:
-                with open(os.path.join(staging, name), "w") as fh:
-                    json.dump(payload, fh)
+                (VLAYOUT_NAME, _vlayout(new_centroids, vidx.dim, id_col,
+                                        vec_col, geometry)),
+                (PQ_LAYOUT_NAME, pq and _rerank_stamp(pq)),
+                (BQ_LAYOUT_NAME, vidx.bq and _rerank_stamp(vidx.bq))):
+            if payload:
+                write_sidecar(staging, name, payload)
                 ops.append({"op": "swap_file",
                             "src": f"{STAGING_NAME}/{name}", "dst": name})
         return ops
@@ -1857,67 +1733,34 @@ def split_hot_cell(spark: SparkSession, index_dir: str,
             source_files=old_manifest.source_files)
         manifest_fn = lambda n: split_manifest  # noqa: E731
 
-    _partitioned_refresh(
-        spark, index_dir, part_col="cell", specs=specs, id_col=id_col,
+    partitioned_refresh(
+        spark, index_dir, part_col="cell",
+        specs=_tier_specs(vidx, new_centroids), id_col=id_col,
         changed=changed, removed_ids=None, manifest=manifest_fn,
         n_rows=total, extra_stage=stage_sidecars)
     # cell geometry changed: drop any pooled resident generation
     resident.invalidate_dir(index_dir)
 
     # re-derive the recall contracts against the POST-split artifact
-    # (derived-geometry stores only — the publish condition)
+    # with the per-tier governance publish uses (derived-geometry
+    # stores only — the publish condition)
     if geometry.get("derived"):
         out = open_vector_index(spark, index_dir)
         stored = out.vectors
-        gov = similarity.nprobe_for_recall(
-            stored.select(id_col, vec_col), new_centroids,
-            id_col=id_col, vec_col=vec_col)
-        if gov is not None:
-            _write_json_sidecar(index_dir, VLAYOUT_NAME,
-                                {"n_cells": len(new_centroids),
-                                 "dim": vidx.dim, "id_col": id_col,
-                                 "vec_col": vec_col,
-                                 "geometry": dict(geometry, **gov)})
-        n_probe = int((gov or {}).get("n_probe", 2))
+        governed = _governed_geometry(geometry,
+                                      stored.select(id_col, vec_col),
+                                      new_centroids, id_col, vec_col)
+        if governed != geometry:
+            write_sidecar(index_dir, VLAYOUT_NAME,
+                          _vlayout(new_centroids, vidx.dim, id_col,
+                                   vec_col, governed))
+        n_probe = int(governed.get("n_probe", 2))
         if pq is not None:
-            rows = similarity.governed_rerank_report(
-                stored.select(id_col, vec_col), new_centroids,
-                vidx.pq_subbooks, n_probe, id_col=id_col, vec_col=vec_col,
-                codes=out.codes, residual=bool(pq.get("residual"))
-            ).collect()
-            if rows:
-                r = rows[0]
-                _write_json_sidecar(
-                    index_dir, PQ_LAYOUT_NAME,
-                    dict({k: v for k, v in pq.items()
-                          if not k.startswith("rerank")},
-                         rerank=int(r["rerank"]),
-                         rerank_target=float(r["rerank_target"]),
-                         rerank_measured=float(r["measured_rerank_recall"]),
-                         rerank_end_to_end=float(r["end_to_end_recall"]),
-                         rerank_n_probe=n_probe,
-                         rerank_sample=int(r["sample_queries"]),
-                         rerank_pairs=int(r["pairs"]),
-                         rerank_in_probe_pairs=int(r["in_probe_pairs"])))
+            _govern_pq(index_dir, stored, out.codes, new_centroids,
+                       vidx.pq_subbooks, n_probe, pq, id_col, vec_col)
         if vidx.bq is not None:
-            rows = similarity.governed_bq_rerank_report(
-                stored.select(id_col, vec_col), new_centroids, n_probe,
-                id_col=id_col, vec_col=vec_col, bq_codes=out.bq_codes,
-                dim=vidx.dim).collect()
-            if rows:
-                r = rows[0]
-                _write_json_sidecar(
-                    index_dir, BQ_LAYOUT_NAME,
-                    dict({k: v for k, v in vidx.bq.items()
-                          if not k.startswith("rerank")},
-                         rerank=int(r["rerank"]),
-                         rerank_target=float(r["rerank_target"]),
-                         rerank_measured=float(r["measured_rerank_recall"]),
-                         rerank_end_to_end=float(r["end_to_end_recall"]),
-                         rerank_n_probe=n_probe,
-                         rerank_sample=int(r["sample_queries"]),
-                         rerank_pairs=int(r["pairs"]),
-                         rerank_in_probe_pairs=int(r["in_probe_pairs"])))
+            _govern_bq(index_dir, stored, out.bq_codes, new_centroids,
+                       n_probe, vidx.bq, id_col, vec_col)
 
     after = cell_occupancy(open_vector_index(spark, index_dir))
     return {"split": True, "cell": hot_cell, "new_cell": new_id,
@@ -1942,12 +1785,9 @@ def write_vector_refresh(spark: SparkSession, index_dir: str,
     dropped/replaced ids plus the assigned cells of the new vectors; the
     codebook never moves under a refresh (a retrain is a rebuild, see
     module docstring), so untouched cell dirs are byte-invariant
-    (asserted by tests). Degenerate shapes (every surviving cell emptied,
-    or a refresh on top of such an emptied store) fall back to
-    whole-table swaps with an empty-but-schema'd placeholder, exactly as
-    the lexical store does. Commits through the shared staged-journal
-    protocol — kill-safe at any point. Re-stamps the manifest when
-    `source_path` (+ `n_rows`) is given.
+    (asserted by tests). Commits through `commit.partitioned_refresh` —
+    kill-safe at any point, degenerate shapes included. Re-stamps the
+    manifest when `source_path` (+ `n_rows`) is given.
 
     `vidx` (optional) is an already-open handle on THIS dir: the
     codebook and quantizer sidecars are immutable under refresh and the
@@ -1971,44 +1811,9 @@ def write_vector_refresh(spark: SparkSession, index_dir: str,
     if vidx is None:
         vidx = open_vector_index(spark, index_dir)
 
-    def cell_tag(df: DataFrame) -> DataFrame:
-        return _tag_cells(df, vidx.centroids, vidx.id_col, vidx.vec_col)
-
-    specs = [{"table": "vectors", "live": vidx.vectors,
-              "live_path": vidx.vectors_path, "tag": cell_tag}]
-    if vidx.pq is not None:
-        # IVFADC stores refresh the code table IN THE SAME COMMIT: the
-        # journal covers both tables, so a reopen never sees codes from
-        # one epoch and vectors from another. Sub-codebooks are immutable
-        # under refresh for the same reason the IVF codebook is — every
-        # stored code depends on them.
-        subbooks = vidx.pq_subbooks
-        res_cents = vidx.centroids if vidx.pq.get("residual") else None
-        specs.append({
-            "table": "codes", "live": vidx.codes,
-            "live_path": vidx.codes_path,
-            "tag": lambda df: similarity.pq_encode(
-                cell_tag(df), subbooks, vidx.id_col, vidx.vec_col,
-                keep_cols=("cell",), residual_centroids=res_cents)})
-    if vidx.sq is not None:
-        # SQ8 stores refresh the quantized table in the same commit —
-        # the same never-a-mixed-epoch rule as the PQ codes
-        specs.append({
-            "table": "sq", "live": vidx.sq_codes,
-            "live_path": vidx.sq_path,
-            "tag": lambda df: sq_quantize(cell_tag(df), vidx.id_col,
-                                          vidx.vec_col,
-                                          keep_cols=("cell",))})
-    if vidx.bq is not None:
-        specs.append({
-            "table": "bq", "live": vidx.bq_codes,
-            "live_path": vidx.bq_path,
-            "tag": lambda df: bq_quantize(cell_tag(df), vidx.id_col,
-                                          vidx.vec_col,
-                                          int(vidx.bq["dim"]),
-                                          keep_cols=("cell",))})
-    _partitioned_refresh(
-        spark, index_dir, part_col="cell", specs=specs,
+    partitioned_refresh(
+        spark, index_dir, part_col="cell",
+        specs=_tier_specs(vidx, vidx.centroids),
         id_col=vidx.id_col, changed=changed, removed_ids=removed_ids,
         manifest=(None if source_path is None else
                   lambda n: vector_manifest(
@@ -2035,171 +1840,6 @@ def write_vector_refresh(spark: SparkSession, index_dir: str,
     return out
 
 
-def _partitioned_refresh(spark: SparkSession, index_dir: str,
-                         part_col: str, specs: list[dict], id_col: str,
-                         changed: DataFrame,
-                         removed_ids: DataFrame | None,
-                         manifest, n_rows: int | None,
-                         extra_stage=None, part_of=None) -> None:
-    """The partition-level delta-refresh core the published stores share
-    (IVF `vectors/cell=K/` [+ IVFADC `codes/cell=K/`], LSH
-    `sigs/bucket=B/`): rewrite ONLY the partition directories the batch
-    touches — the stored partitions of dropped/replaced ids plus the
-    partitions the new rows are assigned to (each spec's `tag`, the
-    store's own immutable assignment expression) — through the
-    staged-journal commit, kill-safe at any point. `specs` is one or
-    more derived tables sharing the SAME partition assignment
-    ({table, live, live_path, tag}); every table stages under the one
-    journal, so multi-table stores (raw vectors + PQ codes) move between
-    epochs ATOMICALLY. A staged partition dir REPLACES the live one, so
-    every touched partition's surviving old rows ride along; degenerate
-    shapes (every surviving partition emptied, or a refresh on top of
-    such an emptied store) fall back to whole-table swaps with an
-    empty-but-schema'd placeholder. `manifest(n_rows) -> IndexManifest`
-    (optional) re-stamps the staleness identity in the same commit."""
-    # Pin the batch ONCE so every spec's tag derives from the same rows —
-    # a non-deterministic upstream (a live encoder projection) must not
-    # give the vectors table one evaluation and the codes table another.
-    # LAZY checkpoint: the pin semantics are identical (first evaluation
-    # persists the blocks; every later consumer reads them), but the
-    # materialization folds into the first consuming job instead of
-    # being its own — per-batch fixed cost is the JOB count (§1.2).
-    changed = changed.localCheckpoint(eager=False)
-    # No .distinct() on the drop set: it is only ever the BROADCAST side
-    # of left_semi/left_anti joins (set semantics regardless of
-    # duplicates) and stays batch-sized either way — the distinct was a
-    # whole extra exchange stage inside every broadcast build (§1.2; the
-    # manifest row count below keeps its own exact distinct).
-    drop = changed.select(F.col(id_col))
-    if removed_ids is not None:
-        drop = drop.unionByName(
-            removed_ids.select(F.col(removed_ids.columns[0])
-                               .alias(id_col)))
-    # Touched partitions are computed across ALL specs (they agree by
-    # construction — same ids, same assignment — the union is defensive),
-    # as ONE probe job per side rather than one per spec: the per-batch
-    # fixed cost of a streaming refresh is its Spark job count (round-10
-    # verdict item 5 — the journal is already a single fsync), so the
-    # old-partition semi-join probes union before the collect, and the
-    # new-partition probe runs over the already-checkpointed assignments
-    # (batch-sized) in one pass.
-    staged: list[tuple[dict, list[str], DataFrame]] = []
-    old_probes: DataFrame | None = None
-    new_probes: DataFrame | None = None
-    for spec in specs:
-        live = spec["live"]
-        if part_of is None:
-            probe = (live.join(F.broadcast(drop), id_col, "left_semi")
-                     .select(part_col))
-            old_probes = probe if old_probes is None \
-                else old_probes.unionByName(probe)
-        # Pin each spec's assignments (batch-sized) so upstream work
-        # (re-embedding, encoding) isn't recomputed between the
-        # touched-partition probe and the staged write. The batch carries
-        # the VECTOR shape; `tag` maps it to the spec's columns+part_col.
-        # Lazy, like the batch pin above: the probes collect materializes
-        # it; the staged write reads the pinned blocks.
-        cols = [c for c in live.columns if c != part_col]
-        new_assign = (spec["tag"](changed).select(*cols, part_col)
-                      .localCheckpoint(eager=False))
-        new_probes = (new_assign.select(part_col) if new_probes is None
-                      else new_probes.unionByName(
-                          new_assign.select(part_col)))
-        staged.append((spec, cols, new_assign))
-    if part_of is not None:
-        # Pure-function probe (doc-hash partitioned stores): the
-        # partition of ANY id — stored or not — is part_of(id), so the
-        # touched set is computable from the batch ids alone: no live
-        # scan, no broadcast semi-join build, and the derivation (`tag`)
-        # is not forced before the staged write evaluates it once (§1.2).
-        # A removed-but-absent id contributes a partition that is then
-        # rewritten with identical content — same degenerate shape the
-        # semi-join path already tolerates via the new-side union.
-        ids = changed.select(F.col(id_col))
-        if removed_ids is not None:
-            ids = ids.unionByName(
-                removed_ids.select(F.col(removed_ids.columns[0])
-                                   .alias(id_col)))
-        # collect_set: each task ships its own <= n_buckets-value set,
-        # so the driver round-trip is bounded by the bucket count, not
-        # the micro-batch's row count (round-13 ADVICE).
-        touched_parts = sorted(
-            ids.select(part_of(id_col).alias("_p"))
-            .agg(F.collect_set("_p")).collect()[0][0] or [])
-    else:
-        # ONE collect for both probe sides: the old-partition semi-joins
-        # and the new-assignment projections union into a single driver
-        # round-trip — per-batch fixed cost is the Spark JOB count, and
-        # the two sides were two identical-shaped jobs (guide §1.2 /
-        # round-10 verdict item 5, taken one step further). collect_set
-        # instead of a bare collect: each task ships its own bounded
-        # distinct set, so the driver round-trip is bounded by the
-        # partition count, not (n_specs+1) x batch rows (round-13
-        # ADVICE), without paying a full distinct exchange.
-        touched_parts = sorted(
-            old_probes.unionByName(new_probes)
-            .agg(F.collect_set(part_col)).collect()[0][0] or [])
-
-    staging = os.path.join(index_dir, STAGING_NAME)
-    shutil.rmtree(staging, ignore_errors=True)
-    stg = lambda name: os.path.join(staging, name)  # noqa: E731
-    ops: list[dict] = []
-    for spec, cols, new_assign in staged:
-        live, table = spec["live"], spec["table"]
-        survivors_old = (live
-                         .filter(F.col(part_col).isin(touched_parts))
-                         .join(F.broadcast(drop), id_col, "left_anti")
-                         .select(*cols, part_col)) if touched_parts \
-            else None
-        content = (new_assign if survivors_old is None
-                   else survivors_old.unionByName(new_assign))
-        _write_parted(content, stg(table), part_col, id_col)
-
-        still = _part_dirs(stg(table), part_col)
-        existing = _part_dirs(spec["live_path"], part_col)
-        touched = ({f"{part_col}={p}" for p in touched_parts} | still)
-        emptied = (touched & existing) - still
-        if existing and (existing - emptied or still):
-            ops += [{"op": "swap_dir",
-                     "src": f"{STAGING_NAME}/{table}/{d}",
-                     "dst": f"{table}/{d}"} for d in sorted(still)]
-            ops += [{"op": "remove_dir", "dst": f"{table}/{d}"}
-                    for d in sorted(emptied)]
-        else:
-            # Whole-table shape: the base store holds no partition dirs
-            # (an earlier all-emptied refresh left the placeholder) or
-            # this batch empties every surviving partition — `content`
-            # IS the complete table in both cases (old store empty, or
-            # every surviving row sits in a touched partition).
-            if not still:
-                content.limit(0).write.mode("overwrite").parquet(
-                    stg(table))
-            ops.append({"op": "swap_dir",
-                        "src": f"{STAGING_NAME}/{table}", "dst": table})
-
-    if manifest is not None:
-        if n_rows is None:
-            kept = (specs[0]["live"].join(F.broadcast(drop), id_col,
-                                          "left_anti").count())
-            n_rows = kept + changed.select(id_col).distinct().count()
-        os.makedirs(staging, exist_ok=True)
-        with open(stg(MANIFEST_NAME), "w") as fh:
-            fh.write(manifest(n_rows).to_json())
-        ops.append({"op": "swap_file",
-                    "src": f"{STAGING_NAME}/{MANIFEST_NAME}",
-                    "dst": MANIFEST_NAME})
-
-    if extra_stage is not None:
-        # Caller-staged sidecar state that must move in the SAME journal
-        # as the partition swaps (the incremental split's expanded
-        # codebook + re-stamped layouts): extra_stage(staging_dir)
-        # writes under staging and returns the ops to append.
-        os.makedirs(staging, exist_ok=True)
-        ops += extra_stage(staging)
-
-    commit(index_dir, ops)
-
-
 def write_lsh_refresh(spark: SparkSession, index_dir: str,
                       changed: DataFrame,
                       removed_ids: DataFrame | None = None,
@@ -2209,7 +1849,7 @@ def write_lsh_refresh(spark: SparkSession, index_dir: str,
                       lidx: PublishedLshIndex | None = None,
                       reopen: bool = True) -> PublishedLshIndex | None:
     """Incremental write-back for the published LSH store — the bucket
-    twin of `write_vector_refresh` (same `_partitioned_refresh` core,
+    twin of `write_vector_refresh` (same `commit.partitioned_refresh` core,
     same staged-journal kill-safety): rewrites ONLY the `bucket=B` dirs
     the batch touches; the hyperplane sidecar never moves under a
     refresh (every stored bucket depends on it — a plane change is a
@@ -2220,15 +1860,10 @@ def write_lsh_refresh(spark: SparkSession, index_dir: str,
     recover(index_dir)
     if lidx is None:
         lidx = open_lsh_index(spark, index_dir)
-    # zero-plane store (empty-corpus publish): the same guard
-    # publish_lsh_index carries — F.concat of zero columns is
-    # unconstructible
-    bucket = (F.concat(F.lit("b"), similarity.sign_bucket_expr(
-        lidx.planes, lidx.vec_col)) if lidx.planes else F.lit("b"))
-    _partitioned_refresh(
+    bucket = _lsh_bucket(lidx.planes, lidx.vec_col)
+    partitioned_refresh(
         spark, index_dir, part_col="bucket",
         specs=[{"table": "sigs", "live": lidx.sigs,
-                "live_path": lidx.sigs_path,
                 "tag": lambda df: df.select("*", bucket.alias("bucket"))}],
         id_col=lidx.id_col, changed=changed, removed_ids=removed_ids,
         manifest=(None if source_path is None else

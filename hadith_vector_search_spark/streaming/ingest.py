@@ -410,7 +410,7 @@ def stream_merge_jsonl(spark: SparkSession, src_dir: str, schema: StructType,
             # rebalance: writer-task count tracks the staged bytes (AQE)
             # instead of shuffle.partitions — a small batch's staged
             # write was paying ~32 near-empty writer commits per pass
-            # (vector_store._write_parted rationale)
+            # (commit.write_parted rationale)
             (merged.hint("rebalance", MERGE_PART_COL)
              .write.mode("overwrite")
              .partitionBy(MERGE_PART_COL).parquet(staging))

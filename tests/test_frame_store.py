@@ -18,6 +18,7 @@ from hadith_vector_search_spark.operators import dedup
 from hadith_vector_search_spark.plans.pins import release_sf_pins
 from hadith_vector_search_spark.sources import commit as commitlog
 from hadith_vector_search_spark.sources import frame_store
+from hadith_vector_search_spark.sources.manifest import is_fresh
 
 # The store mechanics (refresh, crash recovery, geometry) are
 # deriver-generic; each check runs over the window index and one other
@@ -150,8 +151,8 @@ def test_refresh_equals_rebuild_and_untouched_buckets_invariant(
     untouched = [k for k in before if k in after and before[k] == after[k]]
     assert untouched, "no bucket survived byte-invariant"
     # manifest re-stamped against the merged corpus at stored geometry
-    assert frame_store.frame_store_is_fresh(idx_dir, src, 11, "simhash",
-                                            {"n_bits": 16}, n_buckets=6)
+    assert is_fresh(idx_dir, frame_store.frame_manifest(
+        src, 11, "simhash", {"n_bits": 16}, 6))
 
 
 @MECHANICS
@@ -302,18 +303,18 @@ def test_bucket_geometry_derives_stamps_and_gates(spark, tmp_path,
         assert reasons  # first publish
         expect = frame_store.window_buckets(docs.count())
         assert fidx.n_buckets == expect
-        lay = frame_store.read_flayout(idx)
+        lay = commitlog.read_sidecar(idx, frame_store.FLAYOUT_NAME)
         assert lay["n_buckets"] == expect and lay["derived"] is True
         got[tag] = expect
         # fresh for the same corpus at derived geometry
-        assert frame_store.frame_store_is_fresh(idx, src, docs.count(),
-                                                deriver, params)
+        assert is_fresh(idx, frame_store.frame_manifest(
+            src, docs.count(), deriver, params, expect))
     assert got["s"] != got["b"]
 
     # growth across the boundary is STALE at derived geometry
     idx_s = str(tmp_path / "fs_s")
-    assert not frame_store.frame_store_is_fresh(idx_s, src_s, 40, deriver,
-                                                params)
+    assert not is_fresh(idx_s, frame_store.frame_manifest(
+        src_s, 40, deriver, params, frame_store.window_buckets(40)))
 
     # reopened refresh uses the STORED bucket count: change one doc,
     # assert only its bucket rewrote and the result equals a rebuild

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from hadith_vector_search_spark.operators import similarity
 from hadith_vector_search_spark.sources import vector_store
+from hadith_vector_search_spark.sources.manifest import is_fresh
 
 
 def test_index_geometry_rule():
@@ -77,14 +78,14 @@ def test_publish_derives_and_stamps_geometry(spark, tmp_path):
         sims = [r.sim for r in top]
         assert sims == sorted(sims, reverse=True)
         # derived geometry is FRESH for the same corpus...
-        assert vector_store.vector_index_is_fresh(
-            idx, src, n, dim=4, n_cells=None)
+        assert is_fresh(idx, vector_store.vector_manifest(
+            src, n, 4, similarity.index_geometry(n)["n_cells"]))
     assert got["small"] != got["big"]
     # ...and a corpus-size jump across the sqrt boundary is STALE
     small_idx = str(tmp_path / "idx_small")
-    assert not vector_store.vector_index_is_fresh(
-        small_idx, str(tmp_path / "small.parquet"), 5000, dim=4,
-        n_cells=None)
+    assert not is_fresh(small_idx, vector_store.vector_manifest(
+        str(tmp_path / "small.parquet"), 5000, 4,
+        similarity.index_geometry(5000)["n_cells"]))
 
 
 def test_explicit_n_cells_stamped_as_override(spark, tmp_path):

@@ -13,6 +13,7 @@ from hadith_vector_search_spark.operators import bm25
 from hadith_vector_search_spark.sources import commit as commitlog
 from hadith_vector_search_spark.sources import index_store
 from hadith_vector_search_spark.sources.layout import partition_filters
+from hadith_vector_search_spark.sources.manifest import read_manifest
 
 CORPUS = [
     (1, "data stream window merge"),
@@ -106,6 +107,18 @@ def test_ensure_reuses_across_sessions(spark, tmp_path):
         spark, spark.read.parquet(corpus_path), corpus_path, idx_dir,
         n_buckets=4)
     assert reasons3  # stale -> republished
+
+
+def test_empty_corpus_store_reopens(spark, tmp_path):
+    """A 0-row corpus publishes a store that reopens and scores: the
+    partitioned postings/scoring writes degrade to the schema'd
+    placeholder instead of leaving only `_SUCCESS` behind."""
+    idx_dir = str(tmp_path / "idx")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    index_store.publish_index(bm25.build_index(empty), idx_dir)
+    idx = index_store.open_index(spark, idx_dir)
+    assert bm25.score_terms(spark, idx, ["data"]).count() == 0
+    assert idx.postings.count() == 0
 
 
 def test_prune_scan_partition_filters_and_equivalence(spark, tmp_path):
@@ -283,7 +296,7 @@ def test_write_refresh_crash_mid_commit_rolls_forward(spark, tmp_path,
         corpus_path)
     # (corpus rewritten -> fingerprint drifts; only the count assertion
     # below is meaningful for the journal's manifest op)
-    m = index_store.read_manifest(idx_dir)
+    m = read_manifest(idx_dir)
     assert m is not None and m.n_rows == len(_merged_after_refresh())
 
 

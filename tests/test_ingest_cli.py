@@ -190,6 +190,7 @@ def test_ingest_delta_manifest_counts_tokenless_docs(spark, corpus):
     rebuild (lost incrementality, never wrong results)."""
     from hadith_vector_search_spark.ingest import update_indexes
     from hadith_vector_search_spark.sources import index_store
+    from hadith_vector_search_spark.sources.manifest import is_fresh
 
     data, table = corpus
     run_ingestion(spark, data, table, do_update_indexes=True,
@@ -209,8 +210,8 @@ def test_ingest_delta_manifest_counts_tokenless_docs(spark, corpus):
     assert any("delta-refreshed" in line for line in logs), logs
 
     n_rows = spark.read.parquet(table).count()
-    assert index_store.index_is_fresh(
-        os.path.join(f"{table}_indexes", "fts"), table, n_rows)
+    assert is_fresh(os.path.join(f"{table}_indexes", "fts"),
+                    index_store.lexical_manifest(table, n_rows))
     third = update_indexes(spark, table, f"{table}_indexes")
     assert third == {"fts": [], "vector": [], "lsh": []}
 
