@@ -25,7 +25,15 @@ from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .functions.text import py_tokenize, snippet, term_coverage
 from .functions.vector import round6_arr
@@ -41,6 +49,12 @@ from .operators.router import INTENT_EXACT, INTENT_NARRATOR, route_one
 from .localrel import local_df
 
 OVERFETCH_FLOOR = 50   # max(50, 5*n) per the reference (tools.py:87,93)
+
+# hybrid tool-arg names (the reference's HybridScorer kwargs,
+# tools.py:75-82) -> fusion.Weights field names
+_TOOL_WEIGHTS = {"weight_vector": "vector", "weight_fts": "fts",
+                 "weight_term_coverage": "coverage",
+                 "bonus_phrase": "phrase"}
 
 
 # the HALF_UP-on-shortest-repr rounding twin lives with the vector
@@ -150,8 +164,8 @@ class HybridEngine:
         (`_scored_column_tail`), over the resident doc map.
 
         Bounded: refuses (returns False) above `max_driver_rows` vectors,
-        and for id column types that cannot round-trip through the VALUES
-        literal re-entry (anything but string/integral) — at lake scale
+        and for id column types the resident tiers cannot key by exact
+        equality (anything but string/integral) — at lake scale
         the interactive tier is a separate service over the published
         index, not a driver copy. On refusal NO interactive tier is left
         resident: a first enable leaves the engine unchanged, and a
@@ -231,8 +245,8 @@ class HybridEngine:
 
         # Point-lookup tier: the full corpus rows as a driver dict (same
         # max_driver_rows bound the vector matrix already passed) — only
-        # when every column is an atomic SQL type the literal return path
-        # can round-trip.
+        # when every column is an atomic SQL type, so each served row is
+        # plain scalars.
         if n_corpus <= max_driver_rows and all(
                 not f.dataType.simpleString().startswith(
                     ("array", "map", "struct", "binary"))
@@ -444,46 +458,6 @@ class HybridEngine:
         tiers degrade independently per their own bounds)."""
         return self._mat is not None
 
-    def _sql_atom(self, v, type_str: str) -> str:
-        """One atomic value as a typed SQL literal: everything round-trips
-        through a quoted string + CAST (ints, doubles via repr, booleans,
-        dates/timestamps via their ISO str) — the uniform exact encoding
-        the VALUES fast paths rely on."""
-        if v is None:
-            return f"CAST(NULL AS {type_str})"
-        if isinstance(v, float):
-            return f"CAST('{v!r}' AS {type_str})"
-        return f"CAST({self._sql_str(str(v))} AS {type_str})"
-
-    @staticmethod
-    def _sql_str(v: str) -> str:
-        """Spark SQL string literal — literals process backslash escapes
-        by default, so escape the escape char FIRST, then the quote (a
-        string ending in '\\' would otherwise escape the closing quote:
-        verified ParseException)."""
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    def _hits_literal_df(self, hits: list, score_col: str) -> DataFrame:
-        """Ranked (id, score) pairs as a LocalRelation DataFrame — the
-        zero-job return path for fully driver-computed legs (collect of
-        a literal relation never launches a Spark job)."""
-        if not hits:
-            return self._empty_leg(score_col)
-        id_t = self._schema[self.id_col].dataType.simpleString()
-        vals = ", ".join(
-            f"({self._fmt_id(i)}, {self._sql_atom(float(s), 'DOUBLE')})"
-            for i, s in hits)
-        return self.spark.sql(
-            f"SELECT CAST(col1 AS {id_t}) AS `{self.id_col}`, "
-            f"col2 AS {score_col} FROM VALUES {vals}")
-
-    def _fmt_id(self, v) -> str:
-        """An id value as a SQL literal for the VALUES fast paths —
-        string ids through _sql_str escaping, integral ids verbatim
-        (every path CASTs to the id column's type around it). The ONE
-        definition all VALUES builders share."""
-        return self._sql_str(v) if isinstance(v, str) else str(v)
-
     @staticmethod
     def _min_pair_distance_py(toks: list[str], ga: set, gb: set):
         """Driver twin of `proximity.min_pair_distance` over one doc's
@@ -613,49 +587,72 @@ class HybridEngine:
             scored = survivors
         return scored[:int(n_results)], dropped
 
-    def _scored_values_df(self, groups: list[tuple]) -> DataFrame:
-        """Render locally-scored rows as ONE VALUES LocalRelation (zero
-        Spark jobs). `groups` is [(query_idx | None, top_rows, dropped)]
-        — a single (None, ...) group emits the plain hybrid schema; the
-        batch tier passes N indexed groups and gains a leading
-        `query_idx` column, paying ONE statement parse for the whole
-        batch instead of one per query. Groups with no rows at all render
-        one typed placeholder row under `WHERE false`: the optimizer
-        prunes it to an empty LocalRelation, so the zero-row result keeps
-        this one schema and still runs no Spark job."""
-        id_t = self._schema[self.id_col].dataType.simpleString()
-        dbl = lambda x: self._sql_atom(float(x), "DOUBLE")  # noqa: E731
-        with_nar = self.narrator_col is not None
-        with_qidx = groups[0][0] is not None
-        rows = [(qidx, dropped, r) for qidx, top, dropped in groups
-                for r in top]
-        where = ""
-        if not rows:
-            rows = [(0, 0, (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, None))]
-            where = " WHERE false"
-        vals = ", ".join(
-            "({}{}, {}, {}, {}, {}, {}, {}, {}{}, {})"
-            .format(f"{int(qidx)}, " if with_qidx else "",
-                    self._fmt_id(rid), dbl(sc), dbl(v), dbl(f), dbl(c),
-                    dbl(p), dbl(px),
-                    f"{dbl(nb)}, " if with_nar else "",
-                    int(dropped),
-                    "CAST(NULL AS STRING)" if prev is None
-                    else self._sql_str(prev))
-            for qidx, dropped, (rid, sc, v, f, c, p, px, nb, prev) in rows)
-        off = 1 if with_qidx else 0
-        c = lambda i: f"col{i + off}"  # noqa: E731
-        qidx_sel = (f"CAST(col1 AS INT) AS query_idx, " if with_qidx else "")
-        nar_sel = f"{c(8)} AS narrator_bonus, " if with_nar else ""
-        c_dropped, c_prev = (c(9), c(10)) if with_nar else (c(8), c(9))
-        return self.spark.sql(
-            f"SELECT {qidx_sel}"
-            f"CAST({c(1)} AS {id_t}) AS `{self.id_col}`, "
-            f"{c(2)} AS score, {c(3)} AS vec_signal, {c(4)} AS fts_sig, "
-            f"{c(5)} AS coverage, {c(6)} AS phrase_bonus, "
-            f"{c(7)} AS proximity_bonus, {nar_sel}"
-            f"CAST({c_dropped} AS BIGINT) AS duplicates_filtered, "
-            f"{c_prev} AS preview FROM VALUES {vals}{where}")
+    def _hybrid_rows(self, groups: list[tuple], batched: bool) -> tuple:
+        """`_resident_hybrid`'s [(query_idx, top rows, dropped)] groups
+        as (result tuples, schema): each `_score_local_py` row projected
+        to the hybrid columns under the Spark path's column types —
+        `query_idx` leading on a batch, `narrator_bonus` with a narrator
+        column."""
+        nar = self.narrator_col is not None
+        rows = [((qidx,) if batched else ()) + r[:7] + (r[7:8] if nar else ())
+                + (dropped, r[8])
+                for qidx, top, dropped in groups for r in top]
+        dbl = ["score", "vec_signal", "fts_sig", "coverage", "phrase_bonus",
+               "proximity_bonus"] + (["narrator_bonus"] if nar else [])
+        return rows, StructType(
+            ([StructField("query_idx", IntegerType())] if batched else [])
+            + [self._schema[self.id_col]]
+            + [StructField(n, DoubleType()) for n in dbl]
+            + [StructField("duplicates_filtered", LongType()),
+               StructField("preview", StringType())])
+
+    def _hit_rows(self, hits: list, *cols: tuple) -> tuple:
+        """Ranked driver-side hits (id, then one value per `cols` entry,
+        a (name, type) pair) as (rows, schema)."""
+        return hits, StructType([self._schema[self.id_col]] + [
+            StructField(n, t) for n, t in cols])
+
+    def _frame(self, out) -> DataFrame:
+        """The public DataFrame face of a row renderer's result: resident
+        (rows, schema) through the one frame builder (`local_df`, a
+        LocalTableScan whose collect runs no Spark job); a Spark-path
+        frame as it is."""
+        return local_df(self.spark, *out) if isinstance(out, tuple) else out
+
+    def tool_rows(self, name: str, args: dict):
+        """One serving-tool call by its transport name and JSON arguments
+        (the argument names of `serving.stdio.TOOL_DEFINITIONS`) — the
+        transports' entry to the engine. A resident call returns
+        (rows, schema): plain Python tuples (`int`, `float`, `str`,
+        `None`, never numpy scalars) in the field order of one
+        `StructType`, with no DataFrame built. A call on the Spark path
+        returns its DataFrame, which the caller collects; the rows are
+        the ones the public method of the same name returns either way.
+        `get_document` is served by `get_document_row`."""
+        if name in ("hybrid_search", "hybrid_search_batch"):
+            weights = {field: float(args[arg])
+                       for arg, field in _TOOL_WEIGHTS.items() if arg in args}
+            queries = ([args["query"]] if name == "hybrid_search"
+                       else list(args["queries"]))
+            return self._hybrid_out(
+                queries, name == "hybrid_search_batch",
+                n_results=int(args.get("n_results", 10)),
+                scoring_mode=args.get("scoring_mode", "balanced"),
+                filters=args.get("filters"), **weights)
+        if name == "fts_match":
+            return self._fts_out(args.get("terms"), args.get("prefix"),
+                                 args.get("field"), args.get("value"),
+                                 int(args.get("limit", 10)))
+        if name == "rerank_search":
+            return self._rerank_out(
+                args["query"], int(args.get("n_results", 10)),
+                scoring_mode=args.get("scoring_mode", "balanced"),
+                filters=args.get("filters"))
+        if name == "more_like_this":
+            return self._mlt_out(args["doc_id"],
+                                 int(args.get("n_results", 10)),
+                                 int(args.get("n_terms", 5)))
+        raise KeyError(f"unknown tool: {name}")
 
     @staticmethod
     def _group_sum(ids, vals):
@@ -1236,23 +1233,52 @@ class HybridEngine:
         a filter value's type only coerces to its column's.
         Returns (id, score, vec_signal, fts_sig, coverage, phrase_bonus,
         proximity_bonus, duplicates_filtered, preview)."""
+        return self._frame(self._hybrid_out(
+            [query], False, n_results, scoring_mode, fts_available,
+            vector_available, synonym_groups, near_window, dedupe, filters,
+            **weight_overrides))
+
+    def _hybrid_out(self, queries: list[str], batched: bool,
+                    n_results: int = 10, scoring_mode: str = "balanced",
+                    fts_available: bool = True,
+                    vector_available: bool = True,
+                    synonym_groups: list[list[str]] | None = None,
+                    near_window: int = 5, dedupe: bool = True,
+                    filters: dict | None = None,
+                    **weight_overrides: float):
+        """The hybrid row renderer behind `hybrid_search` (one query,
+        `batched` False) and `hybrid_search_batch`: (rows, schema) when
+        `_resident_hybrid` serves every query, else the Spark-path frame
+        — one query's, or the `query_idx`-tagged union of every query's
+        on a batch."""
+        from functools import reduce
+
+        if not queries:
+            raise ValueError("queries must be a non-empty list")
         w = self._checked_weights(n_results, scoring_mode, fts_available,
                                   vector_available, filters,
                                   weight_overrides)
-        # Driver-side router twin: one serving call routes ONE string, and
-        # a 1-row Spark job costs ~400 ms of scheduler overhead per request
-        # (route_one is equivalence-tested against the column router).
-        intent = route_one(query)
+        # Driver-side router twin: one serving call routes its strings in
+        # Python, where a 1-row Spark job would cost ~400 ms of scheduler
+        # overhead (route_one is equivalence-tested against the column
+        # router).
+        intents = [route_one(q) for q in queries]
         call = dict(n_results=n_results, w=w, fts_available=fts_available,
                     vector_available=vector_available,
                     synonym_groups=synonym_groups, near_window=near_window,
                     dedupe=dedupe)
-        groups = self._resident_hybrid([query], [intent],
+        groups = self._resident_hybrid(queries, intents,
                                        self._fast_allowed_ids(filters),
                                        **call)
-        if groups is None:
-            return self._spark_hybrid(query, intent, filters, **call)
-        return self._scored_values_df([(None, *groups[0][1:])])
+        if groups is not None:
+            return self._hybrid_rows(groups, batched)
+        frames = [self._spark_hybrid(q, it, filters, **call)
+                  for q, it in zip(queries, intents)]
+        if not batched:
+            return frames[0]
+        return reduce(lambda a, b: a.unionByName(b), [
+            f.select(F.lit(i).cast("int").alias("query_idx"), "*")
+            for i, f in enumerate(frames)])
 
     def _resident_hybrid(self, queries: list[str], intents: list,
                          allowed, n_results: int, w, fts_available: bool,
@@ -1493,36 +1519,17 @@ class HybridEngine:
         evaluation and agent fan-out.
 
         On a resident engine the whole batch runs through
-        `_resident_hybrid` (one matmul for every vector leg) and
-        re-enters as a SINGLE VALUES LocalRelation — zero Spark jobs and
-        one statement parse for the batch, amortizing the per-call
-        overhead that dominates single-query p50 (SERVING_LATENCY.md).
-        When that loop declines the call (a tier some query needs is not
-        resident, a coercible filter type, a doc-map gap), every query
-        takes the Spark path and the call returns their union — same
-        rows, Spark-side cost."""
-        from functools import reduce
-
-        if not queries:
-            raise ValueError("queries must be a non-empty list")
-        w = self._checked_weights(n_results, scoring_mode, fts_available,
-                                  vector_available, filters,
-                                  weight_overrides)
-        intents = [route_one(q) for q in queries]
-        call = dict(n_results=n_results, w=w, fts_available=fts_available,
-                    vector_available=vector_available,
-                    synonym_groups=synonym_groups, near_window=near_window,
-                    dedupe=dedupe)
-        groups = self._resident_hybrid(queries, intents,
-                                       self._fast_allowed_ids(filters),
-                                       **call)
-        if groups is not None:
-            return self._scored_values_df(groups)
-        frames = [
-            self._spark_hybrid(q, it, filters, **call)
-            .select(F.lit(i).cast("int").alias("query_idx"), "*")
-            for i, (q, it) in enumerate(zip(queries, intents))]
-        return reduce(lambda a, b: a.unionByName(b), frames)
+        `_resident_hybrid` (one matmul for every vector leg) and its rows
+        come back as ONE local relation — zero Spark jobs for the batch;
+        the serving transports take the same rows with no frame at all
+        (`tool_rows`). When that loop declines the call (a tier some
+        query needs is not resident, a coercible filter type, a doc-map
+        gap), every query takes the Spark path and the call returns
+        their union — same rows, Spark-side cost."""
+        return self._frame(self._hybrid_out(
+            queries, True, n_results, scoring_mode, fts_available,
+            vector_available, synonym_groups, near_window, dedupe, filters,
+            **weight_overrides))
 
     def fts_match(self, terms: list[str] | None = None, prefix: str | None = None,
                   field: str | None = None, value: str | None = None,
@@ -1531,6 +1538,12 @@ class HybridEngine:
         (fts_cli.py:21-42): AND over `terms`, optional `pre*` prefix term
         (ANDed in), optional `field:value` scope (semi-join). Any
         combination; at least one of terms/prefix required."""
+        return self._frame(self._fts_out(terms, prefix, field, value, k))
+
+    def _fts_out(self, terms: list[str] | None, prefix: str | None,
+                 field: str | None, value: str | None, k: int):
+        """`fts_match`'s row renderer: (rows, schema) off the resident
+        impact arrays, else the Spark-path frame."""
         if not terms and not prefix:
             raise ValueError("need terms and/or prefix")
         if k < 0:
@@ -1540,12 +1553,12 @@ class HybridEngine:
             raise ValueError(f"k must be >= 0, got {k}")
         if self._lex is not None and not (field and value is not None):
             # Interactive tier: both legs compute on the resident impact
-            # arrays and the ranked hits return as a LocalRelation —
-            # ZERO Spark jobs end-to-end (collect of a literal relation
-            # is driver-only). Field scope needs the docs metadata join
-            # and stays on the Spark path.
-            hits = self._fts_match_interactive(terms, prefix, k)
-            return self._hits_literal_df(hits, "bm25")
+            # arrays and the ranked hits return as plain rows — ZERO
+            # Spark jobs. Field scope needs the docs metadata join and
+            # stays on the Spark path.
+            return self._hit_rows(self._fts_match_interactive(terms, prefix,
+                                                              k),
+                                  ("bm25", DoubleType()))
         parts = []
         if terms:
             parts.append(
@@ -1589,53 +1602,51 @@ class HybridEngine:
         the DRIVER with the exact scorer object executors would run
         (operators/reranker.get_pair_scorer — shared code, not a twin)
         over the resident candidate texts, removing the per-request
-        Python-worker round-trip job; only the hybrid first stage
-        touches Spark. Row-identity pinned by
+        Python-worker round-trip job; Spark runs only when the hybrid
+        first stage takes the Spark path. Row-identity pinned by
         test_rerank_interactive_equals_spark."""
+        return self._frame(self._rerank_out(query, n_results, first_stage_k,
+                                            scoring_mode, backend, filters))
+
+    def _rerank_out(self, query: str, n_results: int,
+                    first_stage_k: int | None = None,
+                    scoring_mode: str = "balanced", backend: str = "auto",
+                    filters: dict | None = None):
+        """`rerank_search`'s row renderer: with the doc map resident, the
+        hybrid rows (collected first only when the hybrid stage took the
+        Spark path) reranked on the driver as (rows, schema); else the
+        Spark-path frame."""
         from .operators.reranker import pair_score
 
         if n_results < 0:
             # Tier parity: the batch path's .limit(n) raises on negative n
-            # (INVALID_LIMIT_LIKE_EXPRESSION); numpy's [:n] would silently
+            # (INVALID_LIMIT_LIKE_EXPRESSION); a slice [:n] would silently
             # tail-truncate on the interactive tier instead.
             raise ValueError(f"n_results must be >= 0, got {n_results}")
         k = first_stage_k or max(OVERFETCH_FLOOR, 5 * n_results)
         # `filters` restricts the first-stage retrieval (hybrid_search's
         # Chroma where= semantics); the reranker only ever sees allowed
         # candidates.
-        cands = self.hybrid_search(query, n_results=k,
-                                   scoring_mode=scoring_mode,
-                                   filters=filters)
+        cands = self._hybrid_out([query], False, n_results=k,
+                                 scoring_mode=scoring_mode, filters=filters)
         if self._doc_rows is not None:
-            import numpy as np
-
-            rows = cands.collect()
+            rows, schema = (cands if isinstance(cands, tuple) else
+                            ([tuple(r) for r in cands.collect()],
+                             cands.schema))
+            schema = StructType(schema.fields
+                                + [StructField("ce_score", DoubleType())])
             if not rows:
-                return cands.withColumn("ce_score", F.lit(0.0)).limit(0)
+                return [], schema
             from .operators.reranker import get_pair_scorer
             scorer = get_pair_scorer(self.dim, backend)
-            texts = [(self._doc_rows.get(r[self.id_col]) or {})
+            at = schema.names.index(self.id_col)
+            texts = [(self._doc_rows.get(r[at]) or {})
                      .get(self.text_col) or "" for r in rows]
             ces = _round6_arr(scorer.score_batch([query] * len(rows), texts))
             ranked = sorted(zip(rows, ces.tolist()),
-                            key=lambda t: (-t[1], t[0][self.id_col]))
-            if not ranked[:n_results]:
-                # n_results <= 0 (or fewer survivors than requested after
-                # a non-positive cap): an empty VALUES clause would be a
-                # ParseException — return the same empty shape the batch
-                # path's .limit() produces.
-                return cands.withColumn("ce_score", F.lit(0.0)).limit(0)
-            fields = ([(f.name, f.dataType.simpleString())
-                       for f in cands.schema.fields]
-                      + [("ce_score", "double")])
-            vals = ", ".join(
-                "(" + ", ".join(
-                    [self._sql_atom(r[n_], t_) for n_, t_ in fields[:-1]]
-                    + [f"CAST('{ce!r}' AS DOUBLE)"]) + ")"
-                for r, ce in ranked[:n_results])
-            cols = ", ".join(f"col{i + 1} AS `{n_}`"
-                             for i, (n_, _) in enumerate(fields))
-            return self.spark.sql(f"SELECT {cols} FROM VALUES {vals}")
+                            key=lambda t: (-t[1], t[0][at]))
+            return [(*r, ce) for r, ce in ranked[:n_results]], schema
+        cands = self._frame(cands)
         with_text = F.broadcast(cands).join(
             self.docs.select(self.id_col, self.text_col), self.id_col)
         ce = F.round(pair_score(F.lit(query), F.col(self.text_col),
@@ -1651,23 +1662,17 @@ class HybridEngine:
         parameterized face of the shared operator
         (operators/bm25.more_like_this; the oracle-checked plan is its
         fixed-constant instantiation). With the interactive tier
-        resident, mining + retrieval run on the driver arrays and the
-        hits return as a LocalRelation (zero Spark jobs).
-        Returns (id, bm25, matched)."""
+        resident, mining + retrieval run on the driver arrays (zero Spark
+        jobs). Returns (id, bm25, matched)."""
+        return self._frame(self._mlt_out(doc_id, n_results, n_terms))
+
+    def _mlt_out(self, doc_id, n_results: int, n_terms: int):
+        """`more_like_this`'s row renderer: (rows, schema) off the
+        resident forward arrays, else the Spark-path frame."""
         if self._fwd is not None:
-            hits = self._mlt_interactive(doc_id, n_terms, n_results)
-            if not hits:
-                return (self._empty_leg("bm25")
-                        .withColumn("matched", F.lit(0).cast("int")))
-            id_t = self._schema[self.id_col].dataType.simpleString()
-            vals = ", ".join(
-                f"({self._fmt_id(i)}, "
-                f"{self._sql_atom(float(s), 'DOUBLE')}, {int(c)})"
-                for i, s, c in hits)
-            return self.spark.sql(
-                f"SELECT CAST(col1 AS {id_t}) AS `{self.id_col}`, "
-                f"col2 AS bm25, CAST(col3 AS INT) AS matched "
-                f"FROM VALUES {vals}")
+            return self._hit_rows(
+                self._mlt_interactive(doc_id, n_terms, n_results),
+                ("bm25", DoubleType()), ("matched", IntegerType()))
         return (bm25.more_like_this(self.index, doc_id,
                                     n_terms=n_terms, k=n_results)
                 .withColumnRenamed("doc_id", self.id_col)
@@ -1773,29 +1778,25 @@ class HybridEngine:
     def get_document(self, doc_id) -> DataFrame:
         """Q7 point lookup with a head snippet. With the interactive doc
         map resident (enable_interactive; built only when every corpus
-        column is an atomic SQL type), the row returns as a
-        LocalRelation — zero Spark jobs, the reference's <5 ms in-process
-        lookup reproduced as an explicit bounded tier."""
+        column is an atomic SQL type), the row comes straight from it —
+        zero Spark jobs, the reference's <5 ms in-process lookup
+        reproduced as an explicit bounded tier."""
+        return self._frame(self._document_out(doc_id))
+
+    def _document_out(self, doc_id):
+        """The point lookup's row renderer: (rows, schema) off the
+        resident doc map — the corpus columns plus `preview`, NULL for a
+        NULL text as the Spark path's snippet(NULL) is — else the
+        Spark-path frame."""
         if self._doc_rows is not None:
             row = self._doc_rows.get(doc_id)
+            schema = StructType(self._schema.fields
+                                + [StructField("preview", StringType())])
             if row is None:
-                return (self._docs.limit(0)
-                        .select("*", F.lit("").alias("preview")))
-            vals = ", ".join(
-                self._sql_atom(row[f.name], f.dataType.simpleString())
-                for f in self._schema.fields)
-            # NULL text must stay NULL (the Spark path's snippet(NULL)
-            # is NULL) — '' here would break tier row-identity.
+                return [], schema
             txt = row[self.text_col]
-            preview = ("CAST(NULL AS STRING)" if txt is None
-                       else self._sql_str(txt[:120]))
-            cols = ", ".join(
-                f"col{i + 1} AS `{f.name}`"
-                for i, f in enumerate(self._schema.fields))
-            n = len(self._schema.fields)
-            return self.spark.sql(
-                f"SELECT {cols}, col{n + 1} AS preview "
-                f"FROM VALUES ({vals}, {preview})")
+            return [tuple(row[n] for n in self._schema.names)
+                    + (None if txt is None else txt[:120],)], schema
         self._fold()
         return (self.docs.filter(F.col(self.id_col) == doc_id)
                 .select("*", snippet(F.col(self.text_col),
@@ -1807,21 +1808,16 @@ class HybridEngine:
         resident doc map — no DataFrame, no py4j round trip, no Spark
         job. The <5 ms target (HADITH_SEARCH_SPEC.md:553) is a statement
         about THIS shape (the reference returns a dict from a loaded
-        corpus map); `get_document` keeps the composable DataFrame face,
-        whose ~9 ms floor is the collect round trip itself, not work.
+        corpus map); `get_document` keeps the composable DataFrame face.
         Serving transports prefer this path. Falls back to collecting the
         Spark path when the map tier is absent; None == no such doc.
         Value-identity with get_document is pinned by
         test_get_document_row_equals_frame."""
-        if self._doc_rows is not None:
-            row = self._doc_rows.get(doc_id)
-            if row is None:
-                return None
-            out = dict(row)
-            txt = row[self.text_col]
-            out["preview"] = None if txt is None else txt[:120]
-            return out
-        rows = self.get_document(doc_id).collect()
+        out = self._document_out(doc_id)
+        if isinstance(out, tuple):
+            rows, schema = out
+            return dict(zip(schema.names, rows[0])) if rows else None
+        rows = out.collect()
         return rows[0].asDict() if rows else None
 
     def vector_index_status(self) -> DataFrame:

@@ -5,14 +5,15 @@ frame: the rows are parallelized over defaultParallelism partitions and
 every downstream action evaluates them through Python workers — measured
 ~0.2-0.5 s per action on this host for a handful of rows, and ~6 s when a
 `coalesce(1)` forces one task to drain all (mostly empty) pickled
-partitions sequentially (one Python-worker round trip each). The serving
-layer dodges this with SQL VALUES literals
-(`api.HybridEngine._scored_values_df`); this module is the same fix for
-the plan layer's many small driver-side relations (query batches, probe
-tables, codebooks, hyperplanes): hand Spark a pyarrow Table, which lands
-as a JVM LocalRelation — no Python workers at action time, broadcast
-builds driver-side with no job (guide §4: keep the JVM↔Python boundary
-out of the query path).
+partitions sequentially (one Python-worker round trip each). This module
+is the one frame builder for driver-side rows: the DataFrame faces of the
+engine's resident results (`api.HybridEngine._frame`; the serving
+transports take those rows with no frame at all) and the plan layer's
+many small relations (query batches, probe tables, codebooks,
+hyperplanes). It hands Spark a pyarrow Table, which lands as a JVM
+LocalRelation — no Python workers at action time, broadcast builds
+driver-side with no job (guide §4: keep the JVM↔Python boundary out of
+the query path).
 """
 
 from __future__ import annotations

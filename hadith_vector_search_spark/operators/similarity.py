@@ -513,26 +513,29 @@ def bq_pack_expr(vec_col: Column | str, dim: int) -> Column:
     fingerprint machinery, applied to embedding signs — Charikar 2002's
     observation that sign agreement tracks cosine). Bit 63's shiftleft
     wraps into the sign bit; xor/bit_count are bit-pattern operations,
-    so the wrap is harmless and identical across engines."""
+    so the wrap is harmless and identical across engines.
+
+    Each word is ONE `aggregate` over the `sequence` of its element
+    positions, OR-ing in one shifted bit per element, not a Column tree
+    with a shift/OR node per dimension: at dim 384 such a tree generates
+    Java too large for Janino to compile, and whole-stage codegen falls
+    back on every BQ write."""
     if dim <= 0:
         raise ValueError(f"bq_pack_expr needs dim >= 1, got {dim} — "
                          "an empty vector has no sign pattern to pack")
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    n_words = -(-dim // 64)
-    words = []
-    for w in range(n_words):
-        bits = [
-            F.shiftleft(
+
+    def word(w: int) -> Column:
+        lo, hi = 64 * w, min(dim, 64 * (w + 1)) - 1
+        return F.aggregate(
+            F.sequence(F.lit(lo), F.lit(hi)), F.lit(0).cast("long"),
+            lambda acc, i: acc.bitwiseOR(F.call_function(
+                "shiftleft",
                 F.when(F.element_at(v, i + 1).cast("double") > 0.0,
                        F.lit(1)).otherwise(F.lit(0)).cast("long"),
-                i - 64 * w)
-            for i in range(64 * w, min(dim, 64 * (w + 1)))
-        ]
-        word = bits[0]
-        for b in bits[1:]:
-            word = word.bitwiseOR(b)
-        words.append(word)
-    return F.array(*words)
+                i - lo)))
+
+    return F.array(*[word(w) for w in range(-(-dim // 64))])
 
 
 def bq_hamming_expr(bq_col: Column | str, qwords: list[int]) -> Column:

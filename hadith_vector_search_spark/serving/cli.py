@@ -18,9 +18,12 @@ import argparse
 import json
 import sys
 
+from .stdio import tool_dicts
 
-def _print_df(df, as_json: bool, out=sys.stdout) -> None:
-    rows = [r.asDict(recursive=True) for r in df.collect()]
+
+def _print_rows(result, as_json: bool, out=sys.stdout) -> None:
+    """Print an engine result: `tool_rows` output or a status frame."""
+    rows = tool_dicts(result)
     if as_json:
         out.write(json.dumps(rows, ensure_ascii=False, default=str) + "\n")
     else:
@@ -70,17 +73,17 @@ def run(argv: list[str] | None = None, engine=None,
     if args.status:
         fn = {"corpus": engine.status, "vector": engine.vector_index_status,
               "fts": engine.fts_status}[args.status]
-        _print_df(fn(), args.as_json, stdout)
+        _print_rows(fn(), args.as_json, stdout)
         return 0
     if args.terms or args.prefix:
-        _print_df(engine.fts_match(terms=args.terms or None,
-                                   prefix=args.prefix, k=args.limit),
-                  args.as_json, stdout)
+        _print_rows(engine.tool_rows("fts_match", {
+            "terms": args.terms or None, "prefix": args.prefix,
+            "limit": args.limit}), args.as_json, stdout)
         return 0
     if args.query:
-        _print_df(engine.hybrid_search(args.query, n_results=args.limit,
-                                       scoring_mode=args.mode),
-                  args.as_json, stdout)
+        _print_rows(engine.tool_rows("hybrid_search", {
+            "query": args.query, "n_results": args.limit,
+            "scoring_mode": args.mode}), args.as_json, stdout)
         return 0
 
     # REPL: hybrid per line; ':match t1 t2' for compiled FTS; ':quit' ends.
@@ -98,16 +101,17 @@ def run(argv: list[str] | None = None, engine=None,
                   "vector": engine.vector_index_status,
                   "fts": engine.fts_status}.get(which)
             if fn is not None:
-                _print_df(fn(), args.as_json, stdout)
+                _print_rows(fn(), args.as_json, stdout)
         elif line.startswith(":match"):
             terms = line.split()[1:]
             if terms:
-                _print_df(engine.fts_match(terms=terms, k=args.limit),
-                          args.as_json, stdout)
+                _print_rows(engine.tool_rows("fts_match", {
+                    "terms": terms, "limit": args.limit}),
+                    args.as_json, stdout)
         else:
-            _print_df(engine.hybrid_search(line, n_results=args.limit,
-                                           scoring_mode=args.mode),
-                      args.as_json, stdout)
+            _print_rows(engine.tool_rows("hybrid_search", {
+                "query": line, "n_results": args.limit,
+                "scoring_mode": args.mode}), args.as_json, stdout)
         stdout.write("query> ")
         stdout.flush()
     return 0

@@ -61,29 +61,23 @@ def _make_handler(dispatch: StdioServer):
             self.end_headers()
             self.wfile.write(body)
 
-        def _rows(self, df) -> list[dict]:
-            if isinstance(df, list):  # pre-materialized rows (dicts)
-                return df
-            return [r.asDict(recursive=True) for r in df.collect()]
-
         def do_GET(self) -> None:  # noqa: N802 (stdlib naming)
             try:
                 if self.path == "/health":
                     self._send(200, {"ok": True})
                 elif self.path == "/api/status":
-                    self._send(200, self._rows(dispatch.call_tool("status", {})))
+                    self._send(200, dispatch.call_tool("status", {}))
                 elif self.path == "/api/status/vector":
-                    self._send(200, self._rows(
-                        dispatch.call_tool("vector_index_status", {})))
+                    self._send(200,
+                               dispatch.call_tool("vector_index_status", {}))
                 elif self.path == "/api/status/fts":
-                    self._send(200, self._rows(
-                        dispatch.call_tool("fts_status", {})))
+                    self._send(200, dispatch.call_tool("fts_status", {}))
                 elif self.path.startswith("/api/document/"):
                     doc_id: Any = self.path.rsplit("/", 1)[1]
                     if doc_id.lstrip("-").isdigit():
                         doc_id = int(doc_id)
-                    rows = self._rows(dispatch.call_tool("get_document",
-                                                         {"doc_id": doc_id}))
+                    rows = dispatch.call_tool("get_document",
+                                              {"doc_id": doc_id})
                     if rows:
                         self._send(200, rows[0])
                     else:
@@ -118,32 +112,28 @@ def _make_handler(dispatch: StdioServer):
                     if not payload.get("query"):
                         self._send(400, {"error": "Missing 'query'"})
                         return
-                    rows = self._rows(dispatch.call_tool("hybrid_search", payload))
-                    self._send(200, rows)
+                    self._send(200,
+                               dispatch.call_tool("hybrid_search", payload))
                 elif self.path == "/api/search/hybrid_batch":
                     if not payload.get("queries"):
                         self._send(400, {"error": "Missing 'queries'"})
                         return
-                    rows = self._rows(
-                        dispatch.call_tool("hybrid_search_batch", payload))
-                    self._send(200, rows)
+                    self._send(200, dispatch.call_tool(
+                        "hybrid_search_batch", payload))
                 elif self.path == "/api/match/fts":
-                    rows = self._rows(dispatch.call_tool("fts_match", payload))
-                    self._send(200, rows)
+                    self._send(200, dispatch.call_tool("fts_match", payload))
                 elif self.path == "/api/search/rerank":
                     if not payload.get("query"):
                         self._send(400, {"error": "Missing 'query'"})
                         return
-                    rows = self._rows(
-                        dispatch.call_tool("rerank_search", payload))
-                    self._send(200, rows)
+                    self._send(200,
+                               dispatch.call_tool("rerank_search", payload))
                 elif self.path == "/api/search/more_like_this":
                     if "doc_id" not in payload:
                         self._send(400, {"error": "Missing 'doc_id'"})
                         return
-                    rows = self._rows(
-                        dispatch.call_tool("more_like_this", payload))
-                    self._send(200, rows)
+                    self._send(200,
+                               dispatch.call_tool("more_like_this", payload))
                 else:
                     self._send(404, {"error": f"unknown path {self.path}"})
             except json.JSONDecodeError as exc:

@@ -14,8 +14,10 @@ are public protocol).
 
 Run: ``python -m hadith_vector_search_spark.serving.stdio [sf_dir]``.
 
-Every tool result is a bounded frame (top-k, point lookup, status), so the
-``collect()`` here is O(k) presentation, never a data-sized pull.
+Every tool result is bounded (top-k, point lookup, status). A resident
+call's rows come from the engine as plain Python tuples and go straight to
+JSON; a Spark-path call's frame is collected here, an O(k) presentation,
+never a data-sized pull.
 """
 
 from __future__ import annotations
@@ -152,9 +154,23 @@ TOOL_DEFINITIONS: tuple[dict[str, Any], ...] = (
 )
 
 
+STATUS_TOOLS = ("status", "vector_index_status", "fts_status")
+
+
+def tool_dicts(out) -> list[dict]:
+    """An engine result as row dicts: `tool_rows`' resident (rows,
+    schema) zipped by field name, anything else — a Spark-path frame,
+    or a proxy of one — collected."""
+    if isinstance(out, tuple):
+        rows, schema = out
+        return [dict(zip(schema.names, r)) for r in rows]
+    return [r.asDict(recursive=True) for r in out.collect()]
+
+
 class StdioServer:
-    """Dispatch layer: one engine, many requests. Tool calls collect their
-    bounded result frames and return MCP-style content
+    """Dispatch layer: one engine, many requests. A resident tool call
+    hands its plain rows straight to JSON; a Spark-path call collects
+    its bounded result frame. Results return as MCP-style content
     (`{"content": [{"type": "text", "text": <json rows>}]}`)."""
 
     PROTOCOL_VERSION = "2024-11-05"
@@ -164,80 +180,30 @@ class StdioServer:
 
     # -- tool dispatch ------------------------------------------------------
 
-    def call_tool(self, name: str, args: dict[str, Any]):
-        if name == "hybrid_search":
-            # tool-arg names (the reference's HybridScorer kwargs,
-            # tools.py:75-82) -> fusion.Weights field names
-            _w_map = {"weight_vector": "vector", "weight_fts": "fts",
-                      "weight_term_coverage": "coverage",
-                      "bonus_phrase": "phrase"}
-            weights = {field: float(args[arg])
-                       for arg, field in _w_map.items() if arg in args}
-            df = self.engine.hybrid_search(
-                args["query"], n_results=int(args.get("n_results", 10)),
-                scoring_mode=args.get("scoring_mode", "balanced"),
-                filters=args.get("filters"), **weights)
+    def call_tool(self, name: str, args: dict[str, Any]) -> list[dict]:
+        """One tool call as a list of row dicts. The search tools go
+        through `engine.tool_rows`, whose resident results are plain
+        (rows, schema) with no DataFrame built; `get_document` through
+        `engine.get_document_row`; the status tools through their engine
+        methods."""
+        if name == "get_document":
+            row = self.engine.get_document_row(args["doc_id"])
+            return [] if row is None else [row]
+        if name in STATUS_TOOLS:
+            return tool_dicts(getattr(self.engine, name)())
+        rows = tool_dicts(self.engine.tool_rows(name, args))
+        if name in ("hybrid_search", "hybrid_search_batch"):
             # Attach the spec'd human-readable explanation per hit
             # (HADITH_SEARCH_SPEC.md:487-496 — the reference's designed
             # output format, TEST_QUERIES.md:445-468, never shipped).
             from ..operators.fusion import explain_ranking
-            rows = [r.asDict(recursive=True) for r in df.collect()]
             for r in rows:
                 r["explanation"] = explain_ranking(r)
-            return rows
-        if name == "hybrid_search_batch":
-            # same per-call weight-override mapping as the single tool —
-            # a batch of the same requests must score identically
-            _w_map = {"weight_vector": "vector", "weight_fts": "fts",
-                      "weight_term_coverage": "coverage",
-                      "bonus_phrase": "phrase"}
-            weights = {field: float(args[arg])
-                       for arg, field in _w_map.items() if arg in args}
-            df = self.engine.hybrid_search_batch(
-                list(args["queries"]),
-                n_results=int(args.get("n_results", 10)),
-                scoring_mode=args.get("scoring_mode", "balanced"),
-                filters=args.get("filters"), **weights)
-            from ..operators.fusion import explain_ranking
-            rows = [r.asDict(recursive=True) for r in df.collect()]
-            for r in rows:
-                r["explanation"] = explain_ranking(r)
-            return rows
-        if name == "fts_match":
-            return self.engine.fts_match(
-                terms=args.get("terms"), prefix=args.get("prefix"),
-                field=args.get("field"), value=args.get("value"),
-                k=int(args.get("limit", 10)))
-        if name == "get_document":
-            # In-process row path: dict straight from the resident doc
-            # map (the reference's <5 ms lookup shape) — no DataFrame
-            # collect round trip. Returned as a plain rows list, which
-            # _rows_json passes through.
-            row = self.engine.get_document_row(args["doc_id"])
-            return [] if row is None else [row]
-        if name == "rerank_search":
-            return self.engine.rerank_search(
-                args["query"], n_results=int(args.get("n_results", 10)),
-                scoring_mode=args.get("scoring_mode", "balanced"),
-                filters=args.get("filters"))
-        if name == "more_like_this":
-            return self.engine.more_like_this(
-                args["doc_id"], n_results=int(args.get("n_results", 10)),
-                n_terms=int(args.get("n_terms", 5)))
-        if name == "status":
-            return self.engine.status()
-        if name == "vector_index_status":
-            return self.engine.vector_index_status()
-        if name == "fts_status":
-            return self.engine.fts_status()
-        raise KeyError(f"unknown tool: {name}")
+        return rows
 
     @staticmethod
-    def _rows_json(df) -> str:
-        if isinstance(df, list):  # pre-materialized rows (dict per row)
-            return json.dumps(df, ensure_ascii=False, default=str)
-        return json.dumps([row.asDict(recursive=True) for row in df.collect()],
-                          ensure_ascii=False, default=str)
+    def _rows_json(rows: list[dict]) -> str:
+        return json.dumps(rows, ensure_ascii=False, default=str)
 
     # -- JSON-RPC plumbing --------------------------------------------------
 
@@ -262,8 +228,8 @@ class StdioServer:
             name = params.get("name", "")
             args = params.get("arguments") or {}
             try:
-                df = self.call_tool(name, args)
-                content = [{"type": "text", "text": self._rows_json(df)}]
+                rows = self.call_tool(name, args)
+                content = [{"type": "text", "text": self._rows_json(rows)}]
                 return self._result(rid, {"content": content,
                                           "isError": False})
             except Exception as exc:  # noqa: BLE001 — serve, don't die

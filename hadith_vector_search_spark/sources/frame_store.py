@@ -178,13 +178,20 @@ def publish_frame_store(docs: DataFrame, index_dir: str, deriver: str,
     it doc-bucket-partitioned. `n_buckets=None` derives the bucket count
     from the doc count (`window_buckets`, stamped as derived). Settles
     any crashed refresh first."""
+    derived = n_buckets is None
+    _publish(docs, index_dir, deriver, params,
+             window_buckets(docs.count()) if derived else n_buckets,
+             derived)
+
+
+def _publish(docs: DataFrame, index_dir: str, deriver: str, params: dict,
+             n_buckets: int, derived: bool) -> None:
+    """`publish_frame_store` once the bucket count is known; `derived`
+    stamps whether it came from the doc count."""
     if deriver not in DERIVERS:
         raise KeyError(f"unknown frame deriver {deriver!r}; "
                        f"registry has {sorted(DERIVERS)}")
     recover(index_dir)
-    derived = n_buckets is None
-    if derived:
-        n_buckets = window_buckets(docs.count())
     write_sidecar(index_dir, FLAYOUT_NAME,
                   {"deriver": deriver, "params": params,
                    "n_buckets": n_buckets, "id_col": "doc_id",
@@ -234,10 +241,12 @@ def ensure_frame_store(spark: SparkSession, docs: DataFrame,
         n_buckets = window_buckets(n_docs)
     current = frame_manifest(source_path, n_docs, deriver, params,
                              n_buckets)
+    # the count above already sized a derived layout: publish with it
+    # rather than counting the corpus again
     reasons = ensure_index(
         index_dir, current,
-        lambda: publish_frame_store(docs, index_dir, deriver, params,
-                                    None if derived else n_buckets))
+        lambda: _publish(docs, index_dir, deriver, params, n_buckets,
+                         derived))
     return open_frame_store(spark, index_dir), reasons
 
 

@@ -745,7 +745,7 @@ def test_hybrid_local_tail_launches_no_spark_jobs(spark):
 
 
 def test_empty_resident_results_launch_no_spark_jobs(spark):
-    """An empty resident result is a zero-row LocalRelation, not a
+    """An empty resident result is a zero-row local relation, not a
     pickled-RDD frame: `n_results=0` and a filter that matches no row
     each run ZERO Spark jobs, as a batch and as a single call, and
     return the Spark path's hybrid schema — `query_idx` on the batch
@@ -773,8 +773,8 @@ def test_empty_resident_results_launch_no_spark_jobs(spark):
 
 
 def test_local_tail_adversarial_corpus_equals_batch(spark):
-    """The driver-local scoring tail re-enters results as SQL VALUES
-    literals — drive it over a corpus built to break that transport and
+    """The driver-local scoring tail returns its results as plain rows —
+    drive it over a corpus built to break their rendering and
     the dedup/tie-break algebra: quotes, backslashes, newlines, unicode,
     empty and NULL texts, exact duplicate texts (dedup groups), and
     identical non-duplicate score ties. Must stay row-identical to the
@@ -816,8 +816,9 @@ def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
     values (it once used the exact expansion and scored 0.905035 where
     Spark said 0.905036), and on coverage and the phrase bonus when the
     query has terms and a phrase. Both tails score the same crafted
-    candidates: `_score_local_py` rendered by `_scored_values_df`, and
-    `_scored_column_tail` reading them from a `local_df` relation."""
+    candidates: `_score_local_py` rendered by `_hybrid_rows` into the
+    `_frame` builder, and `_scored_column_tail` reading them from a
+    `local_df` relation."""
     from dataclasses import replace
 
     from hadith_vector_search_spark.localrel import local_df
@@ -842,9 +843,9 @@ def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
     out = []
     for cands, terms, wts, phrase in cases:
         for dedupe in (True, False):
-            a = [r.asDict() for r in eng._scored_values_df([(
+            a = [r.asDict() for r in eng._frame(eng._hybrid_rows([(
                 None, *eng._score_local_py(cands, terms, wts, phrase,
-                                           dedupe, 12))]).collect()]
+                                           dedupe, 12))], False)).collect()]
             fused = local_df(spark, [(i, fs, vs) for i, (fs, vs) in cands],
                              "doc_id int, fts_score double, vector_sim double")
             b = [r.asDict() for r in eng._scored_column_tail(
@@ -1022,6 +1023,78 @@ def test_get_document_row_equals_frame(spark):
         assert eng.get_document(999).count() == 0
     # the resident path really is zero Spark jobs
     assert _spark_jobs(spark, lambda: inter.get_document_row(3))[0] == 0
+
+
+def test_tool_rows_equal_the_frame_face_and_the_spark_path(spark):
+    """Rows-out serving: for every resident tool, `tool_rows` returns
+    plain Python scalars (never numpy) under the DataFrame face's schema,
+    row-for-row and double-for-double bit-equal to collecting that face
+    — NULL preview, empty results and the batch's leading `query_idx`
+    included — and the transport's JSON text equals what the same calls
+    serve on the Spark path after `disable_interactive()`."""
+    from hadith_vector_search_spark.serving.stdio import StdioServer
+
+    docs = spark.createDataFrame(
+        [(1, "patience and prayer during hardship"),
+         (2, "charity and kindness at night"),
+         (3, None),
+         (4, "prayer at dawn brings patience and reward"),
+         (5, "the reward of charity and prayer is great"),
+         (6, "kindness to neighbours is charity")],
+        "doc_id bigint, text string")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive() and eng._doc_rows is not None
+    calls = [
+        ("hybrid_search", {"query": "patience prayer", "n_results": 10}),
+        ("hybrid_search", {"query": "charity", "n_results": 0}),
+        ("hybrid_search", {"query": "hadith 4", "n_results": 3}),
+        ("hybrid_search_batch", {"queries": ["patience prayer", "hadith 2",
+                                             "kindness"], "n_results": 3}),
+        ("fts_match", {"terms": ["prayer"], "limit": 5}),
+        ("fts_match", {"prefix": "char", "limit": 5}),
+        ("fts_match", {"terms": ["zzz"]}),
+        ("more_like_this", {"doc_id": 1, "n_results": 5}),
+        ("more_like_this", {"doc_id": 999}),
+        ("rerank_search", {"query": "charity prayer", "n_results": 3}),
+        ("rerank_search", {"query": "charity prayer", "n_results": 0}),
+    ]
+    faces = {"hybrid_search": lambda a: eng.hybrid_search(
+                 a["query"], a["n_results"]),
+             "hybrid_search_batch": lambda a: eng.hybrid_search_batch(
+                 a["queries"], a["n_results"]),
+             "fts_match": lambda a: eng.fts_match(
+                 a.get("terms"), a.get("prefix"), k=a.get("limit", 10)),
+             "more_like_this": lambda a: eng.more_like_this(
+                 a["doc_id"], a.get("n_results", 10)),
+             "rerank_search": lambda a: eng.rerank_search(
+                 a["query"], a["n_results"])}
+    outs = [(eng.tool_rows(n, a), faces[n](a)) for n, a in calls]
+    outs += [(eng._document_out(i), eng.get_document(i)) for i in (3, 999)]
+    for out, frame in outs:
+        assert isinstance(out, tuple)  # resident: no frame handed back
+        rows, schema = out
+        assert [(f.name, f.dataType) for f in schema] == \
+            [(f.name, f.dataType) for f in frame.schema]
+        got = frame.collect()
+        assert len(rows) == len(got)
+        for r, g in zip(rows, got):
+            assert all(type(v) in (int, float, str, type(None)) for v in r)
+            assert [v.hex() if isinstance(v, float) else v for v in r] == \
+                [v.hex() if isinstance(v, float) else v for v in g]
+    flat = {i: o[0] for i, (o, _) in enumerate(outs)}
+    assert flat[1] == flat[6] == flat[8] == flat[10] == flat[12] == []
+    assert any(r[-1] is None for r in flat[0])  # doc 3's NULL preview
+    assert flat[11] == [(3, None, None)]
+    assert outs[3][0][1].names[0] == "query_idx"
+    assert sorted({r[0] for r in flat[3]}) == [0, 1, 2]
+
+    served = StdioServer(eng)
+    tools = calls + [("get_document", {"doc_id": 3}),
+                     ("get_document", {"doc_id": 999})]
+    resident = [served._rows_json(served.call_tool(n, a)) for n, a in tools]
+    eng.disable_interactive()
+    on_spark = [served._rows_json(served.call_tool(n, a)) for n, a in tools]
+    assert resident == on_spark
 
 
 def _serving_snapshot(eng, seed_doc):

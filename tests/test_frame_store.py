@@ -260,6 +260,37 @@ def test_refresh_all_docs_removed_keeps_store_openable(spark, tmp_path,
                for d in os.listdir(os.path.join(idx_dir, "rows")))
 
 
+def test_derived_publish_through_ensure_counts_the_corpus_once(spark,
+                                                               tmp_path):
+    """`ensure_frame_store` counts the docs for the manifest and hands
+    that count to the derived-bucket publish: one count job per publish,
+    not two. The stamped layout (its `derived` flag included) is
+    byte-identical to the one `publish_frame_store(n_buckets=None)`
+    writes for the same corpus."""
+    src = str(tmp_path / "docs.parquet")
+    _corpus(spark).write.parquet(src)
+    docs = spark.read.parquet(src)
+    counted = []
+    real_count = docs.count
+    docs.count = lambda: counted.append(1) or real_count()
+
+    idx_dir = str(tmp_path / "fs_ensure")
+    _, reasons = frame_store.ensure_frame_store(
+        spark, docs, src, idx_dir, "windows", {"w": 4})
+    assert reasons  # first publish
+    assert len(counted) == 1
+
+    direct = str(tmp_path / "fs_direct")
+    frame_store.publish_frame_store(spark.read.parquet(src), direct,
+                                    "windows", {"w": 4})
+    with open(os.path.join(idx_dir, frame_store.FLAYOUT_NAME), "rb") as a, \
+            open(os.path.join(direct, frame_store.FLAYOUT_NAME), "rb") as b:
+        assert a.read() == b.read()
+    lay = commitlog.read_sidecar(idx_dir, frame_store.FLAYOUT_NAME)
+    assert lay["derived"] is True
+    assert lay["n_buckets"] == frame_store.window_buckets(real_count())
+
+
 def test_window_buckets_rule():
     """Derived bucket count: power-of-two step function of the doc
     count, clamped — pure integer arithmetic, no flapping."""

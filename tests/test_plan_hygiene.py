@@ -133,3 +133,26 @@ def test_plan_audit_table_covers_registry():
         f"missing={sorted(registered - rows)} "
         f"stale={sorted(rows - registered)} — re-run "
         f"scripts/audit_plans.py and re-stamp PLAN_AUDIT.md")
+
+
+def test_serving_paths_render_no_sql_literal_relations():
+    """Resident results leave the engine as plain rows (`tool_rows`) or
+    through the one frame builder (`localrel.local_df`); a SQL `VALUES`
+    relation rendered from result rows — parsed, analyzed and planned
+    per call — must not come back into the engine API or the serving
+    transports. Reads the sources, so it needs no Spark."""
+    import glob
+    import os
+    import re
+
+    import hadith_vector_search_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    paths = [os.path.join(root, "api.py")] + sorted(
+        glob.glob(os.path.join(root, "serving", "*.py")))
+    for path in paths:
+        with open(path) as fh:
+            src = fh.read()
+        rel = os.path.relpath(path, root)
+        assert not re.search(r"\bFROM\s+VALUES\b", src, re.I), rel
+        assert "spark.sql(" not in src, rel

@@ -211,3 +211,69 @@ def test_stdio_hybrid_batch_weight_overrides(server):
     assert shared and any(abs(b[d] - o[d]) > 1e-6 for d in shared)
     assert [(r["doc_id"], r["score"]) for r in over] == \
         [(r["doc_id"], r["score"]) for r in single]
+
+
+class _DuckFrame:
+    """A result frame that is not a `pyspark.sql.DataFrame` — the shape a
+    tracing proxy hands back: only `collect()` is forwarded."""
+
+    def __init__(self, df) -> None:
+        self._df = df
+
+    def collect(self):
+        return self._df.collect()
+
+
+class _ProxyEngine:
+    """Stands in for a HybridEngine the way a tracing proxy does: every
+    public method is forwarded, and a returned DataFrame comes back
+    wrapped in a `_DuckFrame`."""
+
+    def __init__(self, engine) -> None:
+        self._engine = engine
+
+    def __getattr__(self, name):
+        attr = getattr(self._engine, name)
+        if name.startswith("_") or not callable(attr):
+            return attr
+        from pyspark.sql import DataFrame
+
+        def call(*args, **kwargs):
+            out = attr(*args, **kwargs)
+            return _DuckFrame(out) if isinstance(out, DataFrame) else out
+
+        return call
+
+
+def test_stdio_serves_identical_json_through_a_duck_typed_proxy(spark):
+    """StdioServer must not depend on results being `DataFrame`s: over a
+    proxy whose Spark-path results are duck-typed frames it serves the
+    same JSON text as over the engine itself, for every tool, on the
+    Spark path and on the resident tiers."""
+    from hadith_vector_search_spark.api import HybridEngine
+    from hadith_vector_search_spark.serving.stdio import StdioServer
+
+    docs = spark.createDataFrame(
+        [(1, "patience and prayer during hardship"),
+         (2, "charity and kindness at night"),
+         (3, "prayer at dawn brings patience and reward"),
+         (4, None)],
+        "doc_id bigint, text string")
+    tools = [("hybrid_search", {"query": "patience prayer", "n_results": 3}),
+             ("hybrid_search_batch", {"queries": ["charity", "hadith 2"],
+                                      "n_results": 2}),
+             ("fts_match", {"terms": ["prayer"], "limit": 3}),
+             ("more_like_this", {"doc_id": 1, "n_results": 3}),
+             ("rerank_search", {"query": "prayer", "n_results": 2}),
+             ("get_document", {"doc_id": 4}),
+             ("status", {})]
+    spark_eng = HybridEngine(spark, docs)
+    resident = HybridEngine(spark, docs)
+    assert resident.enable_interactive()
+    for eng in (spark_eng, resident):
+        direct, proxied = StdioServer(eng), StdioServer(_ProxyEngine(eng))
+        for name, args in tools:
+            want = direct._rows_json(direct.call_tool(name, args))
+            got = proxied._rows_json(proxied.call_tool(name, args))
+            assert got == want, (name, eng.interactive_enabled)
+            assert json.loads(got), name

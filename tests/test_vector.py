@@ -205,6 +205,34 @@ def test_pq_topk_default_rerank_recall(spark, sf_dir):
     assert len(got & want) >= 3, (got, want)
 
 
+@pytest.mark.parametrize("dim", [384, 70])
+def test_bq_pack_expr_equals_driver_twin(spark, dim):
+    """The packed sign words equal `bq_pack_np` at the ingest store's
+    width (384, six full words) and at a width that leaves a partial
+    last word, on vectors holding exact 0.0 and -0.0 (both pack as 0),
+    bit 63 set (the signed wrap) and NULL elements (pack as 0)."""
+    import numpy as np
+
+    rng = np.random.default_rng(dim)
+    X = rng.normal(size=(12, dim))
+    X[0] = 0.0
+    X[1] = -0.0
+    X[2, ::3] = 0.0
+    X[3, 1::2] = -0.0
+    X[4] = 1.0                      # every bit, bit 63 included
+    X[5, 63::64] = 2.0
+    vecs = [[float(x) for x in row] for row in X]
+    vecs[6][5] = None
+    df = spark.createDataFrame(list(enumerate(vecs)),
+                               "id long, v array<double>")
+    got = {r.id: list(r.bq) for r in df.select(
+        "id", similarity.bq_pack_expr("v", dim).alias("bq")).collect()}
+    for i, row in enumerate(vecs):
+        twin = similarity.bq_pack_np(
+            np.array([0.0 if x is None else x for x in row]))
+        assert got[i] == twin, i
+
+
 def test_cell_dedup_list_semantics(spark):
     """Within-cell removal only: near-identical vectors in the same cell
     produce (higher_id -> smallest-qualifying-lower-id) removal rows;
