@@ -141,6 +141,7 @@ class HybridEngine:
         self._index: bm25.LexicalIndex | None = None
         self._emb: DataFrame | None = (
             embeddings.localCheckpoint() if embeddings is not None else None)
+        self._emb_supplied = embeddings is not None
         self._ids = None   # numpy id vector (interactive mode)
         self._mat = None   # numpy embedding matrix (interactive mode)
         self._lex = None   # per-term (ids, impacts) arrays (interactive mode)
@@ -176,14 +177,24 @@ class HybridEngine:
         oracle-checked plans never use this state.
 
         Also builds (best-effort, bounded by `max_driver_postings`
-        scoring-view rows) the SYMMETRIC lexical tier: per term, the ids
-        and PRECOMPUTED BM25 impacts of its postings. The per-posting
-        score idf(df)·sat(tf, dl) is query-independent — the classic
-        impact-ordered-index observation — so a request's lexical leg is
-        a gather over its terms' arrays plus one grouped sum, no Spark
-        job. A hybrid call runs resident only when every tier its
-        queries use is resident (`_resident_hybrid`); if the postings
-        bound is exceeded, text-leg hybrid calls take the Spark path.
+        postings and, as a driver copy of the corpus texts, by
+        `max_driver_rows` corpus rows) the SYMMETRIC lexical tier: per
+        term, the ids and PRECOMPUTED BM25 impacts of its postings. The
+        per-posting score idf(df)·sat(tf, dl) is query-independent — the
+        classic impact-ordered-index observation — so a request's lexical
+        leg is a gather over its terms' arrays plus one grouped sum, no
+        Spark job. A hybrid call runs resident only when every tier its
+        queries use is resident (`_resident_hybrid`); if a bound is
+        exceeded, text-leg hybrid calls take the Spark path.
+
+        Every tier is built in the driver, the way the upsert delta
+        builds it: one read of at most `max_driver_rows + 1` corpus rows
+        decides the row bound and feeds both the doc map and the
+        postings (`_postings_of`, tokenized with `py_tokenize`), and the
+        vector tier comes from the pinned embedding frame through one
+        `toArrow()`. No Spark BM25 index is built or pinned here: the
+        `index` property builds it on the first Spark-path call that
+        reads it.
 
         `borrow_vectors_from` (opt-in): a `PublishedVectorIndex` whose
         resident raw matrix this engine SHARES instead of collecting its
@@ -197,63 +208,66 @@ class HybridEngine:
         borrowed arrays are read-shared — every downstream mutation path
         (`_apply_interactive_delta`) copies-on-write via fancy indexing,
         so an upsert un-shares instead of corrupting the store tier."""
-        import numpy as np
-
         self._fold()
         self._interactive_bounds = (max_driver_rows, max_driver_postings)
         id_type = self._schema[self.id_col].dataType.simpleString()
         if id_type not in ("string", "tinyint", "smallint", "int", "bigint"):
             self.disable_interactive()
             return False
+        # One read of the corpus, bounded at max_driver_rows + 1 rows,
+        # feeds the doc map and the lexical tier. The corpus can be
+        # LARGER than a user-supplied embeddings frame, so those two
+        # tiers bound on the DOCS rows: max_driver_rows is a promise
+        # about every driver copy. The doc map holds the full rows only
+        # when every column is an atomic SQL type, so each served row is
+        # plain scalars.
+        atomic = all(not f.dataType.simpleString().startswith(
+                         ("array", "map", "struct", "binary"))
+                     for f in self._schema.fields)
+        docs = (self.docs if atomic
+                else self.docs.select(self.id_col, self.text_col))
+        rows = docs.limit(max_driver_rows + 1).collect()
         borrowed = None
         if borrow_vectors_from is not None:
             borrowed = self._borrow_vector_tier(borrow_vectors_from,
                                                 max_driver_rows)
-        if borrowed is None and self.emb.count() > max_driver_rows:
+        # derived embeddings hold one vector per corpus row; supplied
+        # ones are counted
+        if borrowed is None and (
+                self.emb.count() if self._emb_supplied
+                else len(rows)) > max_driver_rows:
             self.disable_interactive()
             return False
-        # Tiers below are rebuilt conditionally (postings bound, atomic
-        # columns); reset them FIRST so a re-enable whose corpus newly
-        # crosses a per-tier bound degrades that tier to the Spark path
-        # instead of serving stale arrays.
+        # Tiers below are rebuilt conditionally (row and postings bounds,
+        # atomic columns); reset them FIRST so a re-enable whose corpus
+        # newly crosses a per-tier bound degrades that tier to the Spark
+        # path instead of serving stale arrays.
         self._lex = self._fwd = self._doc_rows = None
         self._lex_vocab = self._lex_stats = None
         self._nar_tier = None  # lazy; rebuilt on first narrator leg
-        if borrowed is not None:
-            self._ids, self._mat = borrowed
-        else:
-            rows = self.emb.select(self.id_col, "embedding").collect()
-            self._ids = np.array([r[0] for r in rows])
-            self._mat = np.array([list(r[1]) for r in rows])
-
-        # The corpus frame can be LARGER than the embeddings frame the
-        # row bound was checked on (user-supplied partial embeddings), so
-        # the doc-map tier bounds on the DOCS count — max_driver_rows is a
-        # promise about every driver copy.
-        n_corpus = self.docs.count()
-
-        sc = self.index.scoring_view()
-        if sc.count() <= max_driver_postings:
-            n_docs, avgdl = self.index.stats_literals()
-            srows = sc.collect()
-            self._install_lex_tiers(
-                np.array([r["term"] for r in srows]),
-                np.array([r["doc_id"] for r in srows]),
-                np.array([r["tf"] for r in srows]),
-                np.array([r["dl"] for r in srows]),
-                n_docs, avgdl)
-
-        # Point-lookup tier: the full corpus rows as a driver dict (same
-        # max_driver_rows bound the vector matrix already passed) — only
-        # when every column is an atomic SQL type, so each served row is
-        # plain scalars.
-        if n_corpus <= max_driver_rows and all(
-                not f.dataType.simpleString().startswith(
-                    ("array", "map", "struct", "binary"))
-                for f in self._schema.fields):
-            self._doc_rows = {r[self.id_col]: r.asDict()
-                              for r in self.docs.collect()}
+        self._ids, self._mat = (borrowed if borrowed is not None
+                                else self._vector_arrays())
+        if len(rows) <= max_driver_rows:
+            postings = self._postings_of(rows)
+            if len(postings[0]) <= max_driver_postings:
+                self._install_lex_tiers(*postings)
+            if atomic:
+                self._doc_rows = {r[self.id_col]: r.asDict() for r in rows}
         return True
+
+    def _vector_arrays(self) -> tuple:
+        """(ids, matrix) of the embedding frame through one `toArrow()`:
+        the flattened `list<double>` values reshaped to (n, dim), the ids
+        by `to_pylist()` so their numpy dtype is the one Python values
+        give (strings stay str, integral ids int64)."""
+        import numpy as np
+
+        tbl = self.emb.select(self.id_col, "embedding").toArrow()
+        ids = np.array(tbl.column(0).to_pylist())
+        vals = tbl.column(1).combine_chunks().flatten().to_numpy(
+            zero_copy_only=False).astype(float, copy=False)
+        n = tbl.num_rows
+        return ids, (vals.reshape(n, -1) if n else np.empty((0, self.dim)))
 
     def _borrow_vector_tier(self, vidx, max_driver_rows: int):
         """Borrow a `PublishedVectorIndex`'s resident (ids, mat) buffers
@@ -282,22 +296,54 @@ class HybridEngine:
             return None
         return ids, mat
 
-    def _install_lex_tiers(self, terms, pids, tf, dl,
-                           n_docs: float, avgdl: float) -> None:
+    def _postings_of(self, rows) -> tuple:
+        """(terms, pids, tf, dl) postings arrays of corpus `rows` (Rows
+        or row dicts), tokenized in the driver with `py_tokenize`, the
+        tested twin of the index tokenizer: one entry per distinct
+        (doc, term), tf its count and dl the doc's token count, both as
+        doubles like the index's; token-less docs have no index presence.
+        Enable-time builds and the upsert delta share it."""
+        from collections import Counter
+
+        import numpy as np
+
+        terms, pids, tf, dl = [], [], [], []
+        for r in rows:
+            toks = py_tokenize(r[self.text_col] or "")
+            if not toks:
+                continue
+            length = float(len(toks))
+            for t, n in Counter(toks).items():
+                terms.append(t)
+                pids.append(r[self.id_col])
+                tf.append(float(n))
+                dl.append(length)
+        return np.array(terms), np.array(pids), np.array(tf), np.array(dl)
+
+    def _install_lex_tiers(self, terms, pids, tf, dl) -> None:
         """Build and install the driver-resident lexical tiers from raw
         postings-shaped arrays (any row order): per-term document
         frequency is the term-segment length (each (doc, term) row is
         unique, so segment length == df — exactly the index's term_df
         values), impacts are the query-independent idf(df)·sat(tf, dl)
-        factors. ONE implementation shared by enable-time collection and
+        factors. ONE implementation shared by enable-time builds and
         the upsert delta path, so the two can never drift.
 
+        n_docs/avgdl come exactly from the doc-level dl values
+        (integer-valued doubles: sums are exact, the division matches
+        Spark's avg; an empty tier takes the index's 1.0 placeholder).
         FP note: mirrors the JVM expression op-for-op (np.log(1 + x),
         not log1p) — any residual difference is libm-vs-Math.log
         last-ulp, the accepted class pinned by
         test_interactive_mode_equals_batch_path."""
         import numpy as np
 
+        if len(pids):
+            uniq, first = np.unique(pids, return_index=True)
+            n_docs = float(len(uniq))
+            avgdl = float(dl[first].sum()) / n_docs
+        else:
+            n_docs, avgdl = 0.0, 1.0
         order = np.argsort(terms, kind="stable")
         terms, pids = terms[order], pids[order]
         tf, dl = tf[order], dl[order]
@@ -327,7 +373,7 @@ class HybridEngine:
                                  removed: set) -> bool:
         """Apply an upsert batch to the RESIDENT interactive tiers in
         place — the O(batch) alternative to `enable_interactive`'s full
-        re-collect, and no Spark job: `changed` holds the batch's
+        corpus read, and no Spark job: `changed` holds the batch's
         corpus-schema rows that change (removal-wins already applied) as
         the upsert's one collect read them, `removed` the ids it drops.
         Their vectors are encoded here in the driver with the model
@@ -335,26 +381,24 @@ class HybridEngine:
 
         Per tier: vector matrix/doc map drop the batch's rows and append
         the fresh ones; the lexical tier drops the batch's postings from
-        the raw forward arrays, appends postings tokenized driver-side
-        with `py_tokenize` (the tested twin of the index tokenizer), and
-        re-derives df/impacts through `_install_lex_tiers` — the SAME
-        builder enable-time collection uses, because BM25's global
-        n_docs/avgdl/df factors make per-posting impacts globally
-        sensitive to any batch (recompute is one vectorized numpy pass
-        over ≤max_driver_postings rows). n_docs/avgdl come exactly from
-        the doc-level dl values (integer-valued doubles: sums are exact,
-        the division matches Spark's avg).
+        the raw forward arrays, appends the changed rows' postings from
+        `_postings_of`, and re-derives n_docs/avgdl/df/impacts through
+        `_install_lex_tiers` — the SAME two builders `enable_interactive`
+        runs over the whole corpus, because BM25's global n_docs/avgdl/df
+        factors make per-posting impacts globally sensitive to any batch
+        (recompute is one vectorized numpy pass over
+        ≤max_driver_postings rows).
 
-        Bound discipline mirrors enable_interactive: vector/doc-map rows
-        over `max_driver_rows` → False before anything is installed
-        (the caller releases the tiers and re-enables, which refuses);
-        postings over `max_driver_postings` → the lexical tier alone is
-        dropped (text-leg hybrid calls take the Spark path). Returns True
+        Bound discipline mirrors enable_interactive: vectors over
+        `max_driver_rows` → False before anything is installed (the
+        caller releases the tiers and re-enables, which refuses); corpus
+        rows over it (seen by the doc map) → the doc map and lexical
+        tiers are dropped; postings over `max_driver_postings` → the
+        lexical tier alone is dropped (text-leg hybrid calls take the
+        Spark path). Returns True
         when the resident tiers now serve the post-upsert corpus.
         Row-identity with a fresh enable is pinned by
         test_upsert_delta_equals_fresh_enable."""
-        from collections import Counter
-
         import numpy as np
 
         if self._mat is None:
@@ -379,47 +423,33 @@ class HybridEngine:
             mat2[n_keep:] = self._encode([r[self.text_col]
                                           for r in changed])
 
-        # --- doc-map tier (bound: corpus rows; degrades alone) ---------
-        new_map = None
+        # --- doc-map tier (bound: corpus rows) -------------------------
+        new_map, over_rows = None, False
         if self._doc_rows is not None:
             new_map = {k: v for k, v in self._doc_rows.items()
                        if k not in drop}
             for r in changed:
                 new_map[r[self.id_col]] = r
-            if len(new_map) > max_rows:
+            over_rows = len(new_map) > max_rows
+            if over_rows:
                 new_map = None
 
-        # --- lexical tier (bound: postings; degrades alone) ------------
+        # --- lexical tier (bound: postings, and the corpus rows of the
+        # texts it copies, as at enable) --------------------------------
         lex_arrays = None
-        if self._fwd is not None:
+        if self._fwd is not None and not over_rows:
             pids, terms, tf, dl, _ = self._fwd
             if drop_arr is not None:
                 m = ~np.isin(pids, drop_arr)
                 pids, terms, tf, dl = pids[m], terms[m], tf[m], dl[m]
-            a_ids, a_terms, a_tf, a_dl = [], [], [], []
-            for r in changed:
-                toks = py_tokenize(r[self.text_col] or "")
-                if not toks:
-                    continue  # token-less docs have no index presence
-                length = float(len(toks))
-                for t, n in Counter(toks).items():
-                    a_ids.append(r[self.id_col])
-                    a_terms.append(t)
-                    a_tf.append(float(n))
-                    a_dl.append(length)
-            if a_ids:
-                pids = np.concatenate([pids, np.array(a_ids)])
-                terms = np.concatenate([terms, np.array(a_terms)])
-                tf = np.concatenate([tf, np.array(a_tf)])
-                dl = np.concatenate([dl, np.array(a_dl)])
+            a_terms, a_ids, a_tf, a_dl = self._postings_of(changed)
+            if len(a_ids):
+                pids = np.concatenate([pids, a_ids])
+                terms = np.concatenate([terms, a_terms])
+                tf = np.concatenate([tf, a_tf])
+                dl = np.concatenate([dl, a_dl])
             if len(pids) <= max_post:
-                if len(pids):
-                    uniq, first = np.unique(pids, return_index=True)
-                    n_docs = float(len(uniq))
-                    avgdl = float(dl[first].sum()) / n_docs
-                else:
-                    n_docs, avgdl = 0.0, 1.0
-                lex_arrays = (terms, pids, tf, dl, n_docs, avgdl)
+                lex_arrays = (terms, pids, tf, dl)
 
         # --- all bounds verified: install -----------------------------
         self._ids, self._mat = ids2, mat2
@@ -967,7 +997,8 @@ class HybridEngine:
     def _fold(self) -> None:
         """Fold the pending upserts into the Spark-side frames, once,
         before a Spark path reads them: the corpus view becomes the new
-        pinned `docs` snapshot, the lexical index takes one
+        pinned `docs` snapshot, the lexical index (once a Spark path has
+        built it: a resident engine has none) takes one
         `bm25.refresh_index` over every pending live row and tombstone,
         and the embedding frame one anti-join + union whose fresh vectors
         come from the resident matrix (which already holds them) or, with
@@ -1023,10 +1054,14 @@ class HybridEngine:
 
     @property
     def index(self) -> bm25.LexicalIndex:
-        self._fold()
-        if self._index is None:
-            self._index = bm25.build_index(self.docs, self.text_col, self.id_col)
-        return self._index
+        """The Spark BM25 index, built and pinned on first use (under the
+        fold lock, so concurrent Spark-path calls build it once)."""
+        with self._fold_lock:
+            self._fold()
+            if self._index is None:
+                self._index = bm25.build_index(self.docs, self.text_col,
+                                               self.id_col)
+            return self._index
 
     @property
     def emb(self) -> DataFrame:
@@ -1839,24 +1874,27 @@ class HybridEngine:
 
     def fts_status(self) -> DataFrame:
         """The reference's `fts_status` tool (tools.py:29-37): lexical-
-        index metadata from the pinned postings/stats frames — doc count,
-        distinct terms, postings rows, average doc length."""
-        self._fold()
-        built = self._index is not None
-        if not built:
-            return local_df(
-                self.spark, [(0, 0, 0, 0.0, False)],
-                "n_docs long, n_terms long, n_postings long, "
-                "avgdl double, built boolean")
-        idx = self._index
-        st = idx.stats.first()
-        n_terms = idx.term_df.count()
-        n_postings = idx.postings.count()
-        return local_df(
-            self.spark, [(int(st.n_docs), n_terms, n_postings,
-                          round(float(st.avgdl), 4), True)],
-            "n_docs long, n_terms long, n_postings long, "
-            "avgdl double, built boolean")
+        index metadata — doc count, distinct terms, postings rows,
+        average doc length (0 on an empty index). A resident lexical tier
+        answers from its own arrays with no Spark job (it holds the
+        postings the index would, pending upserts included); otherwise
+        the pinned index frames do, and `built` says whether the Spark
+        index exists."""
+        ddl = ("n_docs long, n_terms long, n_postings long, "
+               "avgdl double, built boolean")
+        if self._lex is not None:
+            (n_docs, avgdl), fwd = self._lex_stats, self._fwd
+            counts = (len(self._lex), len(fwd[0]))
+        else:
+            self._fold()
+            idx = self._index
+            if idx is None:
+                return local_df(self.spark, [(0, 0, 0, 0.0, False)], ddl)
+            n_docs, avgdl = idx.stats_literals()
+            counts = (idx.term_df.count(), idx.postings.count())
+        return local_df(self.spark, [(
+            int(n_docs), *counts, round(avgdl, 4) if n_docs else 0.0,
+            True)], ddl)
 
     def status(self) -> DataFrame:
         """Q8: corpus counts + embedding dim — cheap metadata like the

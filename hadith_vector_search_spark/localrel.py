@@ -19,9 +19,10 @@ the query path).
 from __future__ import annotations
 
 import logging
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 try:
     import pyarrow as pa
@@ -29,6 +30,18 @@ except ImportError:  # pragma: no cover — pyspark ships pyarrow
     pa = None
 
 _log = logging.getLogger(__name__)
+_TIMESTAMP = TimestampType()
+
+
+def _arrow_column(values: list, arrow_type):
+    """One Arrow column of `values`. A TIMESTAMP (zoned) column takes
+    each datetime as the epoch microseconds the classic path stores
+    (`TimestampType.toInternal`): `collect()` returns naive datetimes in
+    the process's local zone, and `pa.array` would read them as UTC."""
+    if pa.types.is_timestamp(arrow_type) and arrow_type.tz is not None:
+        values = [_TIMESTAMP.toInternal(v) if isinstance(v, datetime)
+                  else v for v in values]
+    return pa.array(values, type=arrow_type)
 
 
 def local_df(spark: SparkSession, rows: list,
@@ -52,7 +65,7 @@ def local_df(spark: SparkSession, rows: list,
         schema = (ddl if isinstance(ddl, StructType)
                   else StructType.fromDDL(ddl))
         arrow_schema = to_arrow_schema(schema)
-        cols = [pa.array([r[i] for r in rows], type=f.type)
+        cols = [_arrow_column([r[i] for r in rows], f.type)
                 for i, f in enumerate(arrow_schema)]
         return spark.createDataFrame(
             pa.Table.from_arrays(cols, schema=arrow_schema))

@@ -5,8 +5,12 @@ shape the reference's latency targets assume (BASELINE.md rows 1-3:
 targets — the reference never implemented its benchmark runner).
 
 Usage: python scripts/bench_serving.py [sf_dir ...] [--n 30]
-Prints one JSON line per SF with per-call p50/p95 in milliseconds, and a
-markdown table to stderr for SERVING_LATENCY.md.
+Prints one JSON line per SF with the wall time and Spark job count of
+`enable_interactive` (`setup`) and per-call p50/p95 in milliseconds
+(`latencies`), and a markdown table of both to stderr for
+SERVING_LATENCY.md. The `tool_rows.*` rows time the rows-out calls the
+serving transports make; the rows named after a public method time its
+DataFrame face, collected.
 """
 
 from __future__ import annotations
@@ -36,14 +40,20 @@ def pctl(xs: list[float], p: float) -> float:
     return xs[k]
 
 
-def bench_sf(spark, sf_dir: str, n: int) -> dict:
+def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
     from hadith_vector_search_spark.api import HybridEngine
     from hadith_vector_search_spark.plans import semantic
     from hadith_vector_search_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     engine = HybridEngine(spark, docs)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    t0 = time.perf_counter()
     engine.enable_interactive()
+    setup = {"enable_interactive": {
+        "wall_s": round(time.perf_counter() - t0, 2),
+        "jobs": len(set(tracker.getJobIdsForGroup()) - before)}}
     doc_ids = [r.doc_id for r in
                engine.docs.select("doc_id").limit(200).collect()]
     # narrator-shaped engine for the mixed-batch row: the `source` column
@@ -69,6 +79,13 @@ def bench_sf(spark, sf_dir: str, n: int) -> dict:
     assert bq_idx.enable_interactive(), "resident BQ row needs the tier"
     assert sq_idx.enable_interactive(), "resident SQ8 row needs the tier"
 
+    def rows_out(name, args):
+        # a tool_rows row must time the resident call, never the
+        # Spark-path frame a degraded tier returns
+        out = engine.tool_rows(name, args)
+        assert isinstance(out, tuple), f"{name} left the resident tiers"
+        return out
+
     calls = {
         "hybrid_search": lambda i: engine.hybrid_search(
             QUERIES[i % len(QUERIES)], n_results=10).collect(),
@@ -84,6 +101,19 @@ def bench_sf(spark, sf_dir: str, n: int) -> dict:
         # resident map — the shape the reference's <5 ms target measures)
         "get_document_row": lambda i: engine.get_document_row(
             doc_ids[i % len(doc_ids)]),
+        # the rows-out calls the serving transports make (no frame)
+        "tool_rows.hybrid_search": lambda i: rows_out("hybrid_search", {
+            "query": QUERIES[i % len(QUERIES)], "n_results": 10}),
+        "tool_rows.hybrid_search_batch": lambda i: rows_out(
+            "hybrid_search_batch", {
+                "queries": [QUERIES[(i + j) % len(QUERIES)]
+                            for j in range(8)], "n_results": 10}),
+        "tool_rows.rerank_search": lambda i: rows_out("rerank_search", {
+            "query": QUERIES[i % len(QUERIES)], "n_results": 10}),
+        "tool_rows.more_like_this": lambda i: rows_out("more_like_this", {
+            "doc_id": doc_ids[i % len(doc_ids)], "n_results": 10}),
+        "tool_rows.fts_match": lambda i: rows_out("fts_match", {
+            "terms": [QUERIES[i % len(QUERIES)].split()[0]], "limit": 10}),
         "hybrid_synonyms": lambda i: engine.hybrid_search(
             QUERIES[i % len(QUERIES)], n_results=10,
             synonym_groups=[["window", "pane"],
@@ -165,7 +195,7 @@ def bench_sf(spark, sf_dir: str, n: int) -> dict:
                      "p95_ms": round(pctl(lat, 95), 1),
                      "mean_ms": round(statistics.mean(lat), 1),
                      "n": n}
-    return out
+    return setup, out
 
 
 def main() -> None:
@@ -183,15 +213,20 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").write.mode(
         "overwrite").format("noop").save()
 
+    setup_md = ["| sf | set-up | wall s | Spark jobs |", "|---|---|---|---|"]
     md = ["| sf | call | p50 ms | p95 ms | mean ms |", "|---|---|---|---|---|"]
     for sf_dir in args.sf_dirs:
-        res = bench_sf(spark, sf_dir, args.n)
+        setup, res = bench_sf(spark, sf_dir, args.n)
         sf = os.path.basename(sf_dir.rstrip("/"))
-        print(json.dumps({"sf_dir": sf_dir, "latencies": res}))
+        print(json.dumps({"sf_dir": sf_dir, "setup": setup,
+                          "latencies": res}))
+        for step, m in setup.items():
+            setup_md.append(f"| {sf} | {step} | {m['wall_s']} | "
+                            f"{m['jobs']} |")
         for call, m in res.items():
             md.append(f"| {sf} | {call} | {m['p50_ms']} | {m['p95_ms']} | "
                       f"{m['mean_ms']} |")
-    print("\n".join(md), file=sys.stderr)
+    print("\n".join(setup_md + [""] + md), file=sys.stderr)
 
 
 if __name__ == "__main__":

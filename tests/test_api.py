@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from hadith_vector_search_spark.api import HybridEngine
 
+from conftest import SF_SMOKE
+
 
 def _spark_jobs(spark, fn):
     """Run `fn()`; return (number of Spark jobs it launched, its result)."""
@@ -1744,3 +1746,185 @@ def test_engine_borrows_store_resident_matrix(spark, tmp_path):
     sub = HybridEngine(spark, docs.filter(F.col("doc_id") != 0))
     assert sub.enable_interactive(borrow_vectors_from=vidx)
     assert not np.shares_memory(sub._mat, vidx._resident["mat"])
+
+
+def _old_way_lexical_tier(spark, docs):
+    """Per term, the sorted (pid, tf, dl, df, impact) rows of the Spark
+    index a resident engine used to collect: `bm25.build_index`'s
+    scoring view, with impacts from its `stats_literals()` by the
+    driver BM25 expression (np.log(1 + x), op for op)."""
+    from collections import defaultdict
+
+    import numpy as np
+
+    from hadith_vector_search_spark.operators import bm25
+
+    idx = bm25.build_index(docs)
+    n_docs, avgdl = idx.stats_literals()
+    rows = idx.scoring_view().collect()
+    tf = np.array([r["tf"] for r in rows])
+    dl = np.array([r["dl"] for r in rows])
+    df = np.array([r["df"] for r in rows])
+    idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+    impact = idf * (tf * (bm25.K1 + 1.0)) / (
+        tf + bm25.K1 * (1.0 - bm25.B + bm25.B * dl / avgdl))
+    out = defaultdict(list)
+    for r, imp in zip(rows, impact):
+        out[r["term"]].append((r["doc_id"], r["tf"], r["dl"], r["df"],
+                               float(imp).hex()))
+    return (n_docs, avgdl), {t: sorted(v) for t, v in out.items()}
+
+
+def _edge_corpus(spark):
+    from test_properties import EDGE_CASES, _random_corpus
+
+    texts = EDGE_CASES + _random_corpus() + [None, "", "  ", "a b c !"]
+    return spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id int, text string")
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "tokenizer_edges"])
+def test_driver_lexical_tier_equals_the_spark_index(spark, corpus):
+    """The lexical tier `enable_interactive` tokenizes in the driver
+    holds, term for term, the postings of the Spark BM25 index: the
+    same (pid, tf, dl, df) multiset, the same (n_docs, avgdl), and
+    bit-equal impacts to the ones computed from the index's scoring view
+    and stats. On the sf0.001 corpus and on the tokenizer edge cases
+    (NULL, empty and token-less texts included)."""
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = (load_table(spark, SF_SMOKE, "documents")
+            if corpus == "sf0.001" else _edge_corpus(spark))
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    assert eng._lex is not None and eng._index is None
+    stats, want = _old_way_lexical_tier(spark, docs)
+    assert eng._lex_stats == stats
+    got = {t: sorted(zip(pids.tolist(), tf.tolist(), dl.tolist(),
+                         [float(len(pids))] * len(pids),
+                         [float(x).hex() for x in imp]))
+           for t, (pids, imp, tf, dl) in eng._lex.items()}
+    assert got == want
+
+
+def test_enable_interactive_runs_five_jobs_and_builds_no_spark_index(spark):
+    """enable_interactive builds every resident tier in the driver: at
+    most 5 Spark jobs at sf0.001 (the embedding pin, its count and Arrow
+    read, one bounded corpus read) and no Spark BM25 index. The Spark
+    paths build the index when they first need it, and then serve what
+    a batch engine serves."""
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    eng = HybridEngine(spark, docs)
+    n_jobs, ok = _spark_jobs(spark, eng.enable_interactive)
+    assert ok and n_jobs <= 5, n_jobs
+    assert eng._index is None
+    eng.disable_interactive()
+    batch = HybridEngine(spark, docs)
+    for q in ["patience and prayer", "charity given in secret"]:
+        a = [r.asDict() for r in batch.hybrid_search(q, 10).collect()]
+        b = [r.asDict() for r in eng.hybrid_search(q, 10).collect()]
+        assert a == b, q
+    assert eng._index is not None
+
+
+def test_fts_status_reports_the_resident_lexical_tier(spark):
+    """A resident engine has no Spark index, so `fts_status` reports
+    the resident lexical tier, with no Spark job: the same counts and
+    avgdl as an engine whose Spark index is built."""
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive() and eng._index is None
+    n_jobs, got = _spark_jobs(spark, lambda: eng.fts_status().collect())
+    twin = HybridEngine(spark, docs)
+    twin.index
+    want = twin.fts_status().collect()
+    assert n_jobs == 0
+    assert got == want and want[0]["built"] is True
+
+
+def test_upsert_past_the_row_bound_drops_the_lexical_tier_with_the_doc_map(
+        spark):
+    """The lexical tier is a driver copy of the corpus texts, so it is
+    bounded by the corpus rows like the doc map: an upsert that grows
+    the corpus past `max_driver_rows` while user-supplied partial
+    embeddings keep the vector tier under it drops both tiers, as a
+    fresh enable over the grown corpus leaves them off."""
+    from hadith_vector_search_spark.operators.embedder import embed_column
+
+    docs = spark.createDataFrame(
+        [(i, f"patience and prayer doc {i}") for i in range(3)],
+        "doc_id int, text string")
+    emb = docs.limit(1).select(
+        "doc_id", embed_column(F.col("text")).alias("embedding"))
+    eng = HybridEngine(spark, docs, embeddings=emb)
+    assert eng.enable_interactive(max_driver_rows=3)
+    assert eng._lex is not None and eng._doc_rows is not None
+    eng.upsert_documents(spark.createDataFrame(
+        [(7, "charity in secret")], docs.schema))
+    assert eng.interactive_enabled  # 2 vectors <= 3
+    assert eng._doc_rows is None and eng._lex is None
+    fresh = HybridEngine(spark, eng.docs, embeddings=emb)
+    assert fresh.enable_interactive(max_driver_rows=3)
+    assert fresh._doc_rows is None and fresh._lex is None
+    a = [r.asDict() for r in eng.fts_match(terms=["prayer"], k=10).collect()]
+    b = [r.asDict() for r in
+         fresh.fts_match(terms=["prayer"], k=10).collect()]
+    assert a == b and len(a) == 3
+
+
+def test_fts_status_on_an_empty_corpus(spark):
+    """BUG FIX: with a built index over an empty corpus, `fts_status`
+    raised (its avg(dl) is NULL). The Spark index and the resident tier
+    both report an empty index, avgdl 0."""
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    spark_path = HybridEngine(spark, docs)
+    spark_path.index
+    resident = HybridEngine(spark, docs)
+    assert resident.enable_interactive() and resident._lex == {}
+    want = [(0, 0, 0, 0.0, True)]
+    assert [tuple(r) for r in spark_path.fts_status().collect()] == want
+    assert [tuple(r) for r in resident.fts_status().collect()] == want
+
+
+def test_resident_timestamps_read_back_in_the_process_zone(spark):
+    """BUG FIX: `collect()` returns naive datetimes in the process's
+    local zone, and the resident frames (`get_document`, the pending
+    rows of an upsert) read them back unshifted, as the Spark path
+    does, in a process zone other than UTC."""
+    import datetime as dt
+    import os
+    import time
+
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        rows = [(1, "patience and prayer", dt.datetime(2020, 3, 8, 1, 30),
+                 dt.date(2020, 3, 8)),
+                (2, "charity in secret", dt.datetime(2021, 7, 1, 23, 59, 59,
+                                                      250), dt.date(2021, 7, 1))]
+        docs = spark.createDataFrame(
+            rows, "doc_id int, text string, ts timestamp, d date")
+        spark_path = HybridEngine(spark, docs)
+        resident = HybridEngine(spark, docs)
+        assert resident.enable_interactive()
+        assert resident._doc_rows is not None
+        for row in rows:
+            want = spark_path.get_document(row[0]).collect()
+            assert tuple(want[0])[:4] == row
+            assert resident.get_document(row[0]).collect() == want
+        new = (3, "prayer at night", dt.datetime(2022, 12, 31, 22, 15),
+               dt.date(2022, 12, 31))
+        resident.upsert_documents(spark.createDataFrame([new], docs.schema))
+        assert resident._pending
+        assert tuple(resident.docs.filter("doc_id = 3").first()) == new
+    finally:
+        if prev is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
