@@ -21,6 +21,7 @@ path instead.
 from __future__ import annotations
 
 import threading
+from collections.abc import Mapping
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from .functions.text import py_tokenize, snippet, term_coverage
-from .functions.vector import round6_arr
+from .functions.vector import round6_arr, topk_order
 from .operators import bm25, fusion, proximity, similarity
 from .operators import dedup as dedup_ops
 from .operators.embedder import (
@@ -60,6 +61,70 @@ _TOOL_WEIGHTS = {"weight_vector": "vector", "weight_fts": "fts",
 # the HALF_UP-on-shortest-repr rounding twin lives with the vector
 # helpers so the store-side BLAS paths share one implementation
 _round6_arr = round6_arr
+
+
+class _LexTier(Mapping):
+    """A resident lexical tier: per term, its postings as int32
+    positions into `ids`, the tier's one sorted id vector, with aligned
+    per-posting payload arrays. `post[term]` is the stored
+    (positions, *payload) the ranking kernels read; read as a Mapping,
+    the tier gives each term's (ids, *payload), the id-keyed face of the
+    same postings."""
+
+    __slots__ = ("ids", "post")
+
+    def __init__(self, ids, post: dict) -> None:
+        self.ids, self.post = ids, post
+
+    def __getitem__(self, term):
+        pos, *payload = self.post[term]
+        return (self.ids[pos], *payload)
+
+    def __contains__(self, term) -> bool:
+        return term in self.post
+
+    def __iter__(self):
+        return iter(self.post)
+
+    def __len__(self) -> int:
+        return len(self.post)
+
+
+def _term_segments(terms, pids) -> tuple:
+    """One lexical tier's layout from postings in any row order: the
+    sorted unique id vector, the stable term order, and in that order
+    the terms, each posting's int32 position into the ids, and each
+    term's segment (starts, ends)."""
+    import numpy as np
+
+    ids, inv = np.unique(pids, return_inverse=True)
+    order = np.argsort(terms, kind="stable")
+    terms = terms[order]
+    starts = np.searchsorted(terms, np.unique(terms), side="left")
+    ends = np.append(starts[1:], len(terms))
+    return ids, order, terms, inv.astype(np.int32)[order], starts, ends
+
+
+def _dense_group(n_postings: int, n: int) -> bool:
+    """Whether a grouped sum of `n_postings` postings over a tier of `n`
+    ids takes the dense O(n) route of `HybridEngine._group_sum` rather
+    than the sparse O(postings) one. Dense wins on a small tier, where
+    its whole pass costs about what np.unique's fixed overhead does,
+    and on a larger tier from about one posting per two ids; below
+    that, a dense pass over 50,000 ids costs up to 20 times the sort
+    (numpy 1.26, 4-core x86 host, n = 5,000 to 500,000)."""
+    return n < 16_384 or 2 * n_postings >= n
+
+
+def _clamp01(x):
+    """`min(1.0, max(0.0, x))` over an array, with the builtins'
+    semantics: each takes its second argument only on a STRICT
+    comparison, so -0.0 and NaN clamp to 0.0 (`np.maximum(0.0, -0.0)`
+    keeps -0.0, and NaN would propagate)."""
+    import numpy as np
+
+    x = np.where(x > 0.0, x, 0.0)
+    return np.where(x < 1.0, x, 1.0)
 
 
 def _unpin(*frames) -> None:
@@ -144,7 +209,7 @@ class HybridEngine:
         self._emb_supplied = embeddings is not None
         self._ids = None   # numpy id vector (interactive mode)
         self._mat = None   # numpy embedding matrix (interactive mode)
-        self._lex = None   # per-term (ids, impacts) arrays (interactive mode)
+        self._lex = None   # _LexTier: per-term postings (interactive mode)
         self._fwd = None   # doc-sorted forward arrays (interactive mode)
         self._doc_rows = None   # id -> row dict (interactive mode)
         self._lex_vocab = None  # sorted vocab keys of _lex
@@ -179,7 +244,8 @@ class HybridEngine:
         Also builds (best-effort, bounded by `max_driver_postings`
         postings and, as a driver copy of the corpus texts, by
         `max_driver_rows` corpus rows) the SYMMETRIC lexical tier: per
-        term, the ids and PRECOMPUTED BM25 impacts of its postings. The
+        term, the docs (positions into one sorted id vector) and
+        PRECOMPUTED BM25 impacts of its postings (`_LexTier`). The
         per-posting score idf(df)·sat(tf, dl) is query-independent — the
         classic impact-ordered-index observation — so a request's lexical
         leg is a gather over its terms' arrays plus one grouped sum, no
@@ -329,6 +395,12 @@ class HybridEngine:
         factors. ONE implementation shared by enable-time builds and
         the upsert delta path, so the two can never drift.
 
+        `_lex` stores each term's postings as int32 positions into the
+        tier's one sorted id vector (`_LexTier`), so the lexical legs
+        sum by `np.bincount` over positions (`_group_sum`); the doc-sorted
+        forward view `_fwd` keeps the ids, by which the upsert delta
+        drops a batch's rows.
+
         n_docs/avgdl come exactly from the doc-level dl values
         (integer-valued doubles: sums are exact, the division matches
         Spark's avg; an empty tier takes the index's 1.0 placeholder).
@@ -338,34 +410,31 @@ class HybridEngine:
         test_interactive_mode_equals_batch_path."""
         import numpy as np
 
-        if len(pids):
-            uniq, first = np.unique(pids, return_index=True)
-            n_docs = float(len(uniq))
-            avgdl = float(dl[first].sum()) / n_docs
-        else:
-            n_docs, avgdl = 0.0, 1.0
-        order = np.argsort(terms, kind="stable")
-        terms, pids = terms[order], pids[order]
-        tf, dl = tf[order], dl[order]
-        bounds = np.searchsorted(terms, np.unique(terms), side="left")
-        ends = np.append(bounds[1:], len(terms))
-        df = np.repeat((ends - bounds).astype(float), ends - bounds)
+        ids, order, terms, pos, starts, ends = _term_segments(terms, pids)
+        pids, tf, dl = pids[order], tf[order], dl[order]
+        n_docs, avgdl = float(len(ids)), 1.0
+        if len(ids):
+            doc_dl = np.empty(len(ids))
+            doc_dl[pos] = dl  # every posting of a doc carries its dl
+            avgdl = float(doc_dl.sum()) / n_docs
+        df = np.repeat((ends - starts).astype(float), ends - starts)
         idf = np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
         impact = idf * (tf * (bm25.K1 + 1.0)) / (
             tf + bm25.K1 * (1.0 - bm25.B + bm25.B * dl / avgdl))
         # raw tf/dl ride along for the prefix pseudo-term (its summed
         # tf and member-df can't be recombined from impacts)
-        self._lex = {terms[s]: (pids[s:e], impact[s:e],
-                                tf[s:e], dl[s:e])
-                     for s, e in zip(bounds, ends)}
+        self._lex = _LexTier(ids, {terms[s]: (pos[s:e], impact[s:e],
+                                              tf[s:e], dl[s:e])
+                                   for s, e in zip(starts, ends)})
         # keys were inserted in term-sorted order (the arrays are
         # sorted above), so this list is sorted — prefix queries
         # bisect an O(log V) range instead of scanning the vocab
         self._lex_vocab = list(self._lex)
         self._lex_stats = (n_docs, avgdl)
         # doc-sorted forward view for MoreLikeThis seed mining
-        # (searchsorted slice -> the seed's term rows)
-        dorder = np.argsort(pids, kind="stable")
+        # (searchsorted slice -> the seed's term rows); positions order
+        # as their ids do
+        dorder = np.argsort(pos, kind="stable")
         self._fwd = (pids[dorder], terms[dorder], tf[dorder],
                      dl[dorder], df[dorder])
 
@@ -528,19 +597,30 @@ class HybridEngine:
         path). Each row is (id, score, vec, fts, cov, phrase, prox,
         narrator, preview), all already HALF_UP-rounded to 6 dp.
 
-        Rounding: Spark's round(x, 6) rounds the SHORTEST decimal repr of
-        the double (BigDecimal.valueOf = Double.toString), not its exact
-        binary expansion — Decimal(repr(x)) reproduces that (Python repr
-        is also shortest-round-trip; verified against Spark on half-way
-        values like 0.9050355, where the exact expansion ...49999 rounds
-        DOWN but both engines round UP). Residual divergence needs a
-        double where Java 17's Double.toString emits a non-shortest repr
-        AND the 6-dp boundary falls inside the extra digits — vanishingly
-        rarer than the np.round class. Row-identity with the Spark path
+        Columnar: a Python loop runs only the string predicates
+        (coverage, phrase, proximity, narrator); the clamps and the
+        fusion sum are numpy over the candidate columns, in the Python
+        expressions' operation and argument order (`_clamp01` keeps the
+        builtins' signed-zero and NaN results), and the candidates rank
+        by one `np.lexsort((ids, -score))`.
+
+        Rounding: all seven columns go through `_round6_arr`, the one
+        Python twin of Spark's round(x, 6). Spark rounds the SHORTEST
+        decimal repr of the double (Java's Double.toString), not its
+        exact binary expansion; the half-way candidates `_round6_arr`
+        detects are rounded HALF_UP on repr(x), which reproduces that
+        (Python repr is also shortest-round-trip;
+        verified against Spark on half-way values like 0.9050355, where
+        the exact expansion ...49999 rounds DOWN but both engines round
+        UP). Residual divergence needs a double where Java 17's
+        Double.toString emits a non-shortest repr AND the 6-dp boundary
+        falls inside the extra digits. Row-identity with the Spark path
         is pinned by test_interactive_mode_equals_batch_path; equality
         with the Column tail on crafted candidates (rounding boundaries,
         coverage, phrase bonus) by
-        test_local_and_column_scoring_tails_agree_on_rounding_boundaries.
+        test_local_and_column_scoring_tails_agree_on_rounding_boundaries,
+        and on clamp edges (sims outside [0, 1], -0.0, a clamped total)
+        by test_local_and_column_scoring_tails_agree_on_clamp_edges.
 
         With `synonym_groups` this also twins the reference's group
         scorer: coverage is per-group any-member SUBSTRING containment,
@@ -549,12 +629,7 @@ class HybridEngine:
         (`_min_pair_distance_py`, mirroring
         operators/proximity.min_pair_distance over
         py_tokenize — the tested driver twin of `tokenize`)."""
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q6 = Decimal("0.000001")
-
-        def r6(x: float) -> float:
-            return float(Decimal(repr(x)).quantize(q6, rounding=ROUND_HALF_UP))
+        import numpy as np
 
         phrase_l = phrase.lower() if phrase else None
         groups_l = ([[m.lower() for m in grp] for grp in synonym_groups]
@@ -564,15 +639,13 @@ class HybridEngine:
             ga = set(groups_l[0])
             gb = set(groups_l[1])
             thresh = max(1, near_window)
-        scored = []
-        for rid, (fts, vs) in items:
+        preds, previews = [], []
+        for rid, _ in items:
             row = self._doc_rows.get(rid)
             if row is None:
                 return None
             txt = row[self.text_col]
             ltxt = txt.lower() if txt is not None else None
-            _vs = min(1.0, max(0.0, vs))
-            _fs = max(0.0, fts) / (max(0.0, fts) + 1.0)
             if groups_l is not None:
                 _cv = (float(sum(1 for grp in groups_l
                                  if any(m in ltxt for m in grp)))
@@ -596,14 +669,20 @@ class HybridEngine:
                 nlow = nval.lower() if nval is not None else ""
                 if any(t in nlow for t in terms):
                     _nb = w.narrator
-            total = min(1.0, max(
-                0.0, _vs * w.vector + _fs * w.fts + _cv * w.coverage
-                + _ph + _px + _nb))
-            prev = txt[:120] if txt is not None else None
-            scored.append((rid, r6(total), r6(_vs), r6(_fs), r6(_cv),
-                           r6(_ph), r6(_px), r6(_nb), prev))
-        n_tot = len(scored)
-        scored.sort(key=lambda s: (-s[1], s[0]))
+            preds.append((_cv, _ph, _px, _nb))
+            previews.append(txt[:120] if txt is not None else None)
+        fts, vs = np.array([s for _, s in items], dtype=float).reshape(-1, 2).T
+        cv, ph, px, nb = np.array(preds, dtype=float).reshape(-1, 4).T
+        vs = _clamp01(vs)
+        fs = np.where(fts > 0.0, fts, 0.0)
+        fs = fs / (fs + 1.0)
+        total = _clamp01(vs * w.vector + fs * w.fts + cv * w.coverage
+                         + ph + px + nb)
+        cols = _round6_arr(np.stack([total, vs, fs, cv, ph, px, nb]))
+        rids = [rid for rid, _ in items]
+        order = np.lexsort((np.array(rids), -cols[0]))
+        rounded = cols.T.tolist()
+        scored = [(rids[j], *rounded[j], previews[j]) for j in order.tolist()]
         dropped = 0
         if dedupe:
             seen: set = set()
@@ -613,7 +692,7 @@ class HybridEngine:
                 if key not in seen:
                     seen.add(key)
                     survivors.append(s)
-            dropped = n_tot - len(survivors)
+            dropped = len(scored) - len(survivors)
             scored = survivors
         return scored[:int(n_results)], dropped
 
@@ -685,20 +764,31 @@ class HybridEngine:
         raise KeyError(f"unknown tool: {name}")
 
     @staticmethod
-    def _group_sum(ids, vals):
-        """The gather→grouped-sum kernel every lexical interactive twin
-        shares: sum `vals` per unique id (np.add.at over the unique
-        inverse). Returns (uids, tot, cnt, inv) — cnt is the per-id row
-        count (term-match count for conjunctive legs), inv lets callers
-        gather aligned per-row payloads (e.g. dl)."""
+    def _group_sum(pos, vals, n: int) -> tuple:
+        """The grouped-sum kernel every resident lexical leg shares,
+        over postings stored as positions into a tier's sorted id vector
+        of length `n` (`_LexTier`). Each bin adds its values in input
+        order starting from 0.0, as np.add.at over np.unique's inverse
+        does, so the sums are bit-identical to that grouping on either
+        route (`_dense_group`): a dense `np.bincount` over all `n` bins
+        plus `flatnonzero` (no sort) when the postings are many, or
+        np.unique's sort of the postings and a bincount over its inverse
+        when they are few against `n`, so a rare-term leg on a large
+        tier costs O(postings), not O(n). Returns (hit, tot, cnt): the
+        hit positions ascending (`ids[hit]` are the hit ids, in id
+        order), their sums, and their posting counts (the term-match
+        count of a conjunctive leg)."""
         import numpy as np
 
-        uids, inv = np.unique(ids, return_inverse=True)
-        tot = np.zeros(len(uids))
-        np.add.at(tot, inv, vals)
-        cnt = np.zeros(len(uids), dtype=np.int64)
-        np.add.at(cnt, inv, 1)
-        return uids, tot, cnt, inv
+        if not _dense_group(len(pos), n):
+            hit, inv, cnt = np.unique(pos, return_inverse=True,
+                                      return_counts=True)
+            return hit, np.bincount(inv, weights=vals,
+                                    minlength=len(hit)), cnt
+        cnt = np.bincount(pos, minlength=n)
+        hit = np.flatnonzero(cnt)
+        tot = np.bincount(pos, weights=vals, minlength=n)[hit]
+        return hit, tot, cnt[hit]
 
     @staticmethod
     def _ranked_topk(uids, tot, k):
@@ -706,12 +796,33 @@ class HybridEngine:
         the sum (Spark HALF_UP-on-shortest-repr semantics via
         `_round6_arr` — rounding BEFORE the sort so half-way corrections
         participate in the ranking exactly as F.round does), rank
-        (score desc, id asc), top k. Returns (rounded totals, order
-        indices) so callers carry extra payloads along."""
+        (score desc, id asc), top k by the partial sort `topk_order`
+        (`np.lexsort((uids, -tot))[:k]` without sorting every row).
+        Serves the lexical, `fts_match`, `more_like_this` and narrator
+        legs. Returns (rounded totals, order indices) so callers carry
+        extra payloads along."""
+        tot = _round6_arr(tot)
+        return tot, topk_order(uids, tot, k)
+
+    @staticmethod
+    def _and_legs(legs) -> tuple:
+        """AND-combine (hit positions, scores) legs over one tier: keep
+        the positions every leg hit, scores added in leg order (the
+        Spark paths' inner join, `score + _s`). Stops at the first
+        empty result, so later legs of a generator are not computed."""
         import numpy as np
 
-        tot = _round6_arr(tot)
-        return tot, np.lexsort((uids, -tot))[:k]
+        hit = tot = None
+        for h, s in legs:
+            if hit is None:
+                hit, tot = h, s
+            else:
+                hit, ia, ib = np.intersect1d(hit, h, assume_unique=True,
+                                             return_indices=True)
+                tot = tot[ia] + s[ib]
+            if not len(hit):
+                break
+        return hit, tot
 
     def _lex_topk_interactive(self, terms: list[str], k: int,
                               allowed: set | None = None) -> list:
@@ -724,12 +835,14 @@ class HybridEngine:
         placement."""
         import numpy as np
 
-        parts = [self._lex[t] for t in terms if t in self._lex]
+        lex = self._lex
+        parts = [lex.post[t] for t in terms if t in lex.post]
         if not parts:
             return []
-        uids, tot, _, _ = self._group_sum(
+        hit, tot, _ = self._group_sum(
             np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]))
+            np.concatenate([p[1] for p in parts]), len(lex.ids))
+        uids = lex.ids[hit]
         if allowed is not None:
             keep = np.array([i in allowed for i in uids.tolist()])
             uids, tot = uids[keep], tot[keep]
@@ -757,18 +870,23 @@ class HybridEngine:
         idf = np.log(1.0 + (n_docs - df[lo:hi] + 0.5) / (df[lo:hi] + 0.5))
         w = _round6_arr((tf[lo:hi] / dl[lo:hi]) * idf)
         seed_terms = terms_a[lo:hi]
-        order = np.lexsort((seed_terms, -w))[:n_terms]
-        mined = [seed_terms[i] for i in order]
-        parts = [self._lex[t] for t in mined if t in self._lex]
+        mined = [seed_terms[i] for i in topk_order(seed_terms, w, n_terms)]
+        lex = self._lex
+        parts = [lex.post[t] for t in mined if t in lex.post]
         if not parts:
             return []
-        ids = np.concatenate([p[0] for p in parts])
+        pos = np.concatenate([p[0] for p in parts])
         imp = np.concatenate([p[1] for p in parts])
-        keep = ids != doc_id
-        ids, imp = ids[keep], imp[keep]
-        if not len(ids):
+        # searchsorted gives an insertion point: exclude the seed only
+        # where that point holds it
+        seed = np.searchsorted(lex.ids, doc_id)
+        if seed < len(lex.ids) and lex.ids[seed] == doc_id:
+            keep = pos != seed
+            pos, imp = pos[keep], imp[keep]
+        if not len(pos):
             return []
-        uids, tot, cnt, _ = self._group_sum(ids, imp)
+        hit, tot, cnt = self._group_sum(pos, imp, len(lex.ids))
+        uids = lex.ids[hit]
         tot, order = self._ranked_topk(uids, tot, k)
         return [(uids[i].item(), float(tot[i]), int(cnt[i]))
                 for i in order]
@@ -781,45 +899,39 @@ class HybridEngine:
         term; prefix leg = score_prefix's pseudo-term (summed member tf
         per doc, df = count of docs containing any member) recomputed
         from the raw tf/dl arrays (`_prefix_leg_local`, shared with the
-        narrator tier); legs AND-combined by id intersection with scores
+        narrator tier); legs AND-combined (`_and_legs`) with scores
         added, rounded 6 AFTER the sum, ranked (bm25 desc, id asc),
         top k. Returns [(id, bm25)]."""
         import numpy as np
 
+        lex = self._lex
         legs = []
         if terms:
             ts = sorted(set(terms))
-            parts = [self._lex.get(t) for t in ts]
+            parts = [lex.post.get(t) for t in ts]
             if any(p is None for p in parts):
-                legs.append({})
+                legs.append((np.empty(0, dtype=np.intp), np.empty(0)))
             else:
-                uids, tot, cnt, _ = self._group_sum(
+                hit, tot, cnt = self._group_sum(
                     np.concatenate([p[0] for p in parts]),
-                    np.concatenate([p[1] for p in parts]))
+                    np.concatenate([p[1] for p in parts]), len(lex.ids))
                 m = cnt == len(ts)
-                legs.append(dict(zip(uids[m].tolist(), tot[m])))
+                legs.append((hit[m], tot[m]))
         if prefix:
             n_docs, avgdl = self._lex_stats
             legs.append(self._prefix_leg_local(
                 [(p[0], p[2], p[3]) for p in self._lex_members(
-                    self._lex, self._lex_vocab, prefix)],
-                n_docs, avgdl))
-        out = legs[0]
-        for leg in legs[1:]:
-            out = {i: out[i] + leg[i] for i in out.keys() & leg.keys()}
-        if not out:
+                    lex.post, self._lex_vocab, prefix)],
+                len(lex.ids), n_docs, avgdl))
+        hit, tot = self._and_legs(legs)
+        if not len(hit):
             return []
-        # Vectorized ranking: per-scalar np.round cost ~6 µs x corpus-many
-        # matched docs (23 ms/call profiled at sf0.1) — one array round +
-        # lexsort is the same contract (round 6 AFTER the leg sum,
-        # score desc, id asc) at array speed.
-        uids = np.array(list(out.keys()))
-        tot = np.fromiter(out.values(), dtype=float, count=len(out))
+        uids = lex.ids[hit]
         tot, order = self._ranked_topk(uids, tot, k)
         return [(uids[i].item(), float(tot[i])) for i in order]
 
     @staticmethod
-    def _lex_members(lex: dict, vocab: list, prefix: str) -> list:
+    def _lex_members(post: dict, vocab: list, prefix: str) -> list:
         """Resident-vocab prefix range scan: the sorted vocab bisects to
         the members starting with `prefix` (O(log V) + range)."""
         from bisect import bisect_left
@@ -828,48 +940,56 @@ class HybridEngine:
         for i in range(bisect_left(vocab, prefix), len(vocab)):
             if not vocab[i].startswith(prefix):
                 break
-            members.append(lex[vocab[i]])
+            members.append(post[vocab[i]])
         return members
 
     @staticmethod
-    def _prefix_leg_local(members: list, n_docs: float,
-                          avgdl: float) -> dict:
+    def _prefix_leg_local(members: list, n: int, n_docs: float,
+                          avgdl: float) -> tuple:
         """`bm25.score_prefix`'s pseudo-term recomputed driver-side from
-        raw (pids, tf, dl) member arrays: summed member tf per doc,
-        df = count of docs containing any member, one BM25 expression —
-        shared by `_fts_match_interactive`'s prefix leg and the narrator
-        tier so the two can never drift. Returns {id: unrounded score}
-        ({} when the prefix matches no vocab term — the empty inner-join
-        leg)."""
+        raw (positions, tf, dl) member arrays of a tier with `n` ids:
+        summed member tf per doc, df = count of docs containing any
+        member, one BM25 expression — shared by
+        `_fts_match_interactive`'s prefix leg and the narrator tier so
+        the two can never drift. Returns (hit positions, unrounded
+        scores), both empty when the prefix matches no vocab term (the
+        empty inner-join leg)."""
         import math
 
         import numpy as np
 
         if not members:
-            return {}
+            return np.empty(0, dtype=np.intp), np.empty(0)
+        pos = np.concatenate([m[0] for m in members])
+        hit, tfs, _ = HybridEngine._group_sum(
+            pos, np.concatenate([m[1] for m in members]), n)
+        # same doc, same dl — any member row's value
         dl = np.concatenate([m[2] for m in members])
-        uids, tfs, _, inv = HybridEngine._group_sum(
-            np.concatenate([m[0] for m in members]),
-            np.concatenate([m[1] for m in members]))
-        dls = np.zeros(len(uids))
-        dls[inv] = dl  # same doc, same dl — any member row's value
-        df = float(len(uids))
+        if _dense_group(len(pos), n):
+            dls = np.zeros(n)
+            dls[pos] = dl
+            dls = dls[hit]
+        else:  # no O(n) buffer for a few postings
+            dls = np.empty(len(hit))
+            dls[np.searchsorted(hit, pos)] = dl
+        df = float(len(hit))
         idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
         score = idf * (tfs * (bm25.K1 + 1.0)) / (
             tfs + bm25.K1 * (1.0 - bm25.B + bm25.B * dls / avgdl))
-        return dict(zip(uids.tolist(), score))
+        return hit, score
 
     def _narrator_tier(self):
-        """Driver-resident NARRATOR-field tier — (per-term (pids, tf, dl)
-        arrays, sorted vocab, (n_docs, avgdl)) over the narrator index,
-        the round-9 verdict item 5: narrator-leg queries degraded every
-        batch call to a union of per-query Spark plans because the
-        narrator index had no resident arrays. Built lazily once per
-        corpus snapshot (narrator vocabulary is names-sized) under the
-        SAME postings bound interactive enabling promised; invalidated
-        with `_nar_index` on upsert. Returns None when interactive tiers
-        are not resident, there is no narrator column, or the bound is
-        exceeded (narrator-intent calls then take the Spark path)."""
+        """Driver-resident NARRATOR-field tier — (`_LexTier` of per-term
+        (positions, tf, dl) arrays, sorted vocab, (n_docs, avgdl)) over
+        the narrator index, the round-9 verdict item 5: narrator-leg
+        queries degraded every batch call to a union of per-query Spark
+        plans because the narrator index had no resident arrays. Built
+        lazily once per corpus snapshot (narrator vocabulary is
+        names-sized) under the SAME postings bound interactive enabling
+        promised; invalidated with `_nar_index` on upsert. Returns None
+        when interactive tiers are not resident, there is no narrator
+        column, or the bound is exceeded (narrator-intent calls then
+        take the Spark path)."""
         if (self.narrator_col is None or self._mat is None
                 or self._interactive_bounds is None):
             return None
@@ -881,18 +1001,13 @@ class HybridEngine:
                 self._nar_tier = False  # over bound: stay on Spark
             else:
                 rows = sc.collect()
-                terms = np.array([r["term"] for r in rows])
-                pids = np.array([r["doc_id"] for r in rows])
-                tf = np.array([r["tf"] for r in rows], dtype=float)
-                dl = np.array([r["dl"] for r in rows], dtype=float)
-                order = np.argsort(terms, kind="stable")
-                terms, pids = terms[order], pids[order]
-                tf, dl = tf[order], dl[order]
-                bounds = np.searchsorted(terms, np.unique(terms),
-                                         side="left")
-                ends = np.append(bounds[1:], len(terms))
-                lex = {terms[s]: (pids[s:e], tf[s:e], dl[s:e])
-                       for s, e in zip(bounds, ends)}
+                ids, order, terms, pos, starts, ends = _term_segments(
+                    np.array([r["term"] for r in rows]),
+                    np.array([r["doc_id"] for r in rows]))
+                tf = np.array([r["tf"] for r in rows], dtype=float)[order]
+                dl = np.array([r["dl"] for r in rows], dtype=float)[order]
+                lex = _LexTier(ids, {terms[s]: (pos[s:e], tf[s:e], dl[s:e])
+                                     for s, e in zip(starts, ends)})
                 self._nar_tier = (lex, list(lex),
                                   self._narrator_index().stats_literals())
         return self._nar_tier or None
@@ -901,26 +1016,23 @@ class HybridEngine:
                                    allowed: set | None = None) -> list:
         """Driver twin of `_narrator_leg` (`bm25.prefix_and_match` over
         the narrator index): each token is a prefix pseudo-term
-        (`_prefix_leg_local`), conjunctive via id-set intersection with
-        scores summed, `allowed` restricting before the cutoff, rounded 6
+        (`_prefix_leg_local`), conjunctive (`_and_legs`) with scores
+        summed, `allowed` restricting before the cutoff, rounded 6
         AFTER the total, ranked (bm25 desc, id asc), top k."""
         import numpy as np
 
         lex, vocab, (n_docs, avgdl) = self._narrator_tier()
-        out = None
-        for p in toks:
-            leg = self._prefix_leg_local(
-                self._lex_members(lex, vocab, p), n_docs, avgdl)
-            out = leg if out is None else {
-                i: out[i] + leg[i] for i in out.keys() & leg.keys()}
-            if not out:
-                return []
+        hit, tot = self._and_legs(
+            self._prefix_leg_local(self._lex_members(lex.post, vocab, p),
+                                   len(lex.ids), n_docs, avgdl)
+            for p in toks)
+        uids = lex.ids[hit]
         if allowed is not None:
-            out = {i: s for i, s in out.items() if i in allowed}
-        if not out:
+            keep = np.array([i in allowed for i in uids.tolist()],
+                            dtype=bool)
+            uids, tot = uids[keep], tot[keep]
+        if not len(uids):
             return []
-        uids = np.array(list(out.keys()))
-        tot = np.fromiter(out.values(), dtype=float, count=len(out))
         tot, order = self._ranked_topk(uids, tot, k)
         return [(uids[i].item(), float(tot[i])) for i in order]
 
@@ -1388,7 +1500,7 @@ class HybridEngine:
                     fused[rid] = [s, 0.0]
             if sims_all is not None and len(ids):
                 sims = sims_all[:, i]
-                for j in np.lexsort((ids, -sims))[:k]:
+                for j in topk_order(ids, sims, k):
                     fused.setdefault(ids[j].item(),
                                      [0.0, 0.0])[1] = float(sims[j])
             scored = self._score_local_py(

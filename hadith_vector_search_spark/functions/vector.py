@@ -57,6 +57,29 @@ def vector_lit(vec: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in vec])
 
 
+def topk_order(ids, scores, k: int):
+    """Indices of the top `k` rows ranked (score desc, id asc): exactly
+    `np.lexsort((ids, -scores))[:k]`, without sorting every row. One
+    partition finds the k-th score, every row scoring at least that
+    (each tie of the k-th score included) is a candidate, and only the
+    candidates are lexsorted. Both sorts are stable and the candidates
+    keep their input order, so rows equal in score AND id keep theirs.
+    A negative `k`, a `k` past the rows and a NaN k-th score take the
+    full sort."""
+    import numpy as np
+
+    if k == 0:
+        return np.empty(0, dtype=np.intp)
+    neg = -np.asarray(scores, dtype=float)
+    if k < 0 or k >= len(neg):
+        return np.lexsort((ids, neg))[:k]
+    kth = np.partition(neg, k - 1)[k - 1]
+    if np.isnan(kth):  # lexsort orders NaN last; `<=` would drop it
+        return np.lexsort((ids, neg))[:k]
+    cand = np.flatnonzero(neg <= kth)
+    return cand[np.lexsort((ids[cand], neg[cand]))][:k]
+
+
 def round6_arr(arr):
     """Vectorized Spark-equivalent round(x, 6): np.round for the bulk,
     with the half-way class corrected to HALF_UP on the SHORTEST decimal
@@ -64,9 +87,11 @@ def round6_arr(arr):
     diverges from Spark only when x*1e6 sits (within float error) on a
     half-integer, so candidates are detected vectorized and only those
     few pay the Decimal path — O(n) numpy + O(half-way hits) Python,
-    never per-scalar over the whole array. Shared by the serving tiers
-    (api._round6_arr) and the blocked-BLAS IVF assignment
-    (operators.similarity.ivf_cell_assignments_blas)."""
+    never per-scalar over the whole array. It is the one Python twin of
+    Spark's round(x, 6): the serving tiers (api._round6_arr, the
+    scoring tail's seven columns included) and the blocked-BLAS IVF
+    assignment (operators.similarity.ivf_cell_assignments_blas) share
+    it."""
     import numpy as np
 
     arr = np.asarray(arr, dtype=float)

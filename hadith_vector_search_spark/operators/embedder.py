@@ -167,8 +167,17 @@ def resolve_backend(dim: int, backend: str) -> str:
 def get_model(dim: int = DEFAULT_DIM, backend: str = "auto"):
     """Lazy per-process singleton (V1's executor-cached model). "auto"
     prefers the real sentence-transformer when importable (and the dim
-    matches its fixed 384 geometry), else the deterministic hash backend."""
-    backend = resolve_backend(dim, backend)
+    matches its fixed 384 geometry), else the deterministic hash backend.
+    The model "auto" resolved to is memoized under ("auto", dim), so the
+    backend is probed once per process, not per query: Python does not
+    cache a failed import, and every probe of a missing
+    sentence-transformers searches sys.path again."""
+    if backend == "auto":
+        model = _MODEL_CACHE.get(("auto", dim))
+        if model is None:
+            model = _MODEL_CACHE[("auto", dim)] = get_model(
+                dim, resolve_backend(dim, backend))
+        return model
     key = (backend, dim)
     model = _MODEL_CACHE.get(key)
     if model is None:

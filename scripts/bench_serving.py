@@ -5,12 +5,15 @@ shape the reference's latency targets assume (BASELINE.md rows 1-3:
 targets — the reference never implemented its benchmark runner).
 
 Usage: python scripts/bench_serving.py [sf_dir ...] [--n 30]
+           [--route-docs 50000]
 Prints one JSON line per SF with the wall time and Spark job count of
 `enable_interactive` (`setup`) and per-call p50/p95 in milliseconds
 (`latencies`), and a markdown table of both to stderr for
 SERVING_LATENCY.md. The `tool_rows.*` rows time the rows-out calls the
 serving transports make; the rows named after a public method time its
-DataFrame face, collected.
+DataFrame face, collected. `--route-docs N` adds one more JSON line,
+the `routes.*` rows: resident lexical calls on both sides of the
+dense/sparse grouping choice, on a generated corpus of N docs.
 """
 
 from __future__ import annotations
@@ -104,6 +107,11 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
         # the rows-out calls the serving transports make (no frame)
         "tool_rows.hybrid_search": lambda i: rows_out("hybrid_search", {
             "query": QUERIES[i % len(QUERIES)], "n_results": 10}),
+        # a `lang`-filtered call: resident too (strict-type equality on
+        # the doc map, `_fast_allowed_ids`), it also scans every row
+        "tool_rows.hybrid_search[lang]": lambda i: rows_out(
+            "hybrid_search", {"query": QUERIES[i % len(QUERIES)],
+                              "n_results": 10, "filters": {"lang": "en"}}),
         "tool_rows.hybrid_search_batch": lambda i: rows_out(
             "hybrid_search_batch", {
                 "queries": [QUERIES[(i + j) % len(QUERIES)]
@@ -123,9 +131,10 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
         "hybrid_exact_ref": lambda i: engine.hybrid_search(
             f"hadith number {doc_ids[i % len(doc_ids)]}",
             n_results=1).collect(),
-        # batch serving tier: 8 queries per call (one matmul + one VALUES
-        # re-entry on the resident tiers). The row is the WHOLE-CALL
-        # latency; divide by 8 for the amortized per-query number.
+        # batch serving tier: 8 queries per call (one matmul on the
+        # resident tiers, rows out through a `local_df` frame). The row
+        # is the WHOLE-CALL latency; divide by 8 for the amortized
+        # per-query number.
         "hybrid_batch8": lambda i: engine.hybrid_search_batch(
             [QUERIES[(i + j) % len(QUERIES)] for j in range(8)],
             n_results=10).collect(),
@@ -182,6 +191,10 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
         "ann_sq8_point_resident_batch32": lambda i: sq_idx.sq_topk_point_batch(
             [(i * 7 + j) % 100 for j in range(32)], n_probe=2, k=5),
     }
+    return setup, time_calls(calls, n)
+
+
+def time_calls(calls: dict, n: int, digits: int = 1) -> dict:
     out = {}
     for name, call in calls.items():
         for i in range(3):  # warm: indexes pin, plans compile
@@ -191,11 +204,60 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
             t0 = time.perf_counter()
             call(i)
             lat.append((time.perf_counter() - t0) * 1000)
-        out[name] = {"p50_ms": round(pctl(lat, 50), 1),
-                     "p95_ms": round(pctl(lat, 95), 1),
-                     "mean_ms": round(statistics.mean(lat), 1),
+        out[name] = {"p50_ms": round(pctl(lat, 50), digits),
+                     "p95_ms": round(pctl(lat, 95), digits),
+                     "mean_ms": round(statistics.mean(lat), digits),
                      "n": n}
-    return setup, out
+    return out
+
+
+def bench_routes(spark, n_docs: int, n: int) -> dict:
+    """Resident lexical calls on each side of the dense/sparse choice of
+    `HybridEngine._group_sum`, on the perfbench generator's corpus at
+    `n_docs` docs. Its 30-word vocabulary puts every corpus term on most
+    docs (the dense route). Three upserted docs add a term no other doc
+    has, and the narrator tier's names are each on one doc in 20: from
+    16,384 docs up, those legs take the sparse route."""
+    from hadith_vector_search_spark.api import HybridEngine
+    from perfbench.gen import make_corpus
+
+    corpus = make_corpus(n_docs)
+    cols = ["doc_id", "text", "lang", "source", "n_chars"]
+    docs = spark.createDataFrame(
+        list(zip(*(corpus[c] for c in cols))),
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long")
+    engine = HybridEngine(spark, docs, narrator_col="source")
+    assert engine.enable_interactive(), "route rows need resident tiers"
+    engine.upsert_documents(spark.createDataFrame(
+        [(n_docs + i, "zyxrare data stream " + "zyxrare " * i, "en",
+          "src_rare", 20) for i in range(3)], docs.schema))
+
+    def rows_out(name, args):
+        out = engine.tool_rows(name, args)
+        assert isinstance(out, tuple), f"{name} left the resident tiers"
+        return out
+
+    calls = {
+        "routes.fts_match[common]": lambda i: rows_out(
+            "fts_match", {"terms": ["data"], "limit": 10}),
+        "routes.fts_match[rare]": lambda i: rows_out(
+            "fts_match", {"terms": ["zyxrare"], "limit": 10}),
+        "routes.fts_match[rare prefix]": lambda i: rows_out(
+            "fts_match", {"prefix": "zyx", "limit": 10}),
+        "routes.more_like_this": lambda i: rows_out(
+            "more_like_this", {"doc_id": i * 97 % n_docs,
+                               "n_results": 10}),
+        "routes.hybrid_search[common]": lambda i: rows_out(
+            "hybrid_search", {"query": "fast stream join",
+                              "n_results": 10}),
+        "routes.hybrid_search[rare]": lambda i: rows_out(
+            "hybrid_search", {"query": "zyxrare", "n_results": 10}),
+        "routes.hybrid_search[narrator]": lambda i: rows_out(
+            "hybrid_search", {"query": f"narrated by src{i % 20} data",
+                              "n_results": 10}),
+    }
+    return time_calls(calls, n, digits=3)
 
 
 def main() -> None:
@@ -203,6 +265,8 @@ def main() -> None:
     ap.add_argument("sf_dirs", nargs="*",
                     default=["/root/testdata/sf0.01", "/root/testdata/sf0.1"])
     ap.add_argument("--n", type=int, default=30)
+    ap.add_argument("--route-docs", type=int, default=0,
+                    help="also time the routes.* rows at this many docs")
     args = ap.parse_args()
 
     from hadith_vector_search_spark.api import configure_interactive
@@ -226,6 +290,13 @@ def main() -> None:
         for call, m in res.items():
             md.append(f"| {sf} | {call} | {m['p50_ms']} | {m['p95_ms']} | "
                       f"{m['mean_ms']} |")
+    if args.route_docs:
+        res = bench_routes(spark, args.route_docs, args.n)
+        print(json.dumps({"route_docs": args.route_docs,
+                          "latencies": res}))
+        for call, m in res.items():
+            md.append(f"| {args.route_docs} docs | {call} | {m['p50_ms']} "
+                      f"| {m['p95_ms']} | {m['mean_ms']} |")
     print("\n".join(setup_md + [""] + md), file=sys.stderr)
 
 

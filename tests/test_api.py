@@ -862,6 +862,52 @@ def test_local_and_column_scoring_tails_agree_on_rounding_boundaries(spark):
     assert 0.0 < hit[10]["coverage"] < 1.0
 
 
+def test_local_and_column_scoring_tails_agree_on_clamp_edges(spark):
+    """The columnar local tail equals the Column tail, signed zeros
+    included (compared by float.hex), on its clamp edges: an empty
+    candidate list, vector sims above 1 and below 0, -0.0 scores, a
+    total clamped at 1.0, and negative weights that push it below 0."""
+    from dataclasses import replace
+
+    from hadith_vector_search_spark.localrel import local_df
+    from hadith_vector_search_spark.operators import fusion
+
+    docs = spark.createDataFrame(
+        [(i, f"patience and prayer {i}") for i in range(1, 9)],
+        "doc_id int, text string")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    base = fusion.resolve_weights("balanced", True, True)
+    edges = [(1, (0.0, 1.5)), (2, (-0.0, -0.3)), (3, (-0.0, -0.0)),
+             (4, (2.5, 1.0)), (5, (-2.0, 0.0)), (6, (7.0, 1.0000004)),
+             (7, (0.0, -1e-7)), (8, (1e-9, 0.9999996))]
+    weights = [base, replace(base, vector=1.0, fts=1.0, coverage=1.0),
+               replace(base, vector=-1.0, fts=-0.5, coverage=0.0)]
+
+    def exact(rows):
+        return [tuple(v.hex() if isinstance(v, float) else v for v in r)
+                for r in rows]
+
+    for cands in ([], edges):
+        for wts in weights:
+            for dedupe in (True, False):
+                a = eng._frame(eng._hybrid_rows([(
+                    None, *eng._score_local_py(cands, ["prayer"], wts,
+                                               "and prayer", dedupe, 8))],
+                    False)).collect()
+                fused = local_df(
+                    spark, [(i, fs, vs) for i, (fs, vs) in cands],
+                    "doc_id int, fts_score double, vector_sim double")
+                b = eng._scored_column_tail(fused, ["prayer"], wts,
+                                            "and prayer", dedupe,
+                                            8).collect()
+                assert exact(a) == exact(b), (cands, wts, dedupe)
+                assert len(a) == len(cands)  # distinct texts: no drops
+    top = eng._score_local_py(edges, ["prayer"], weights[1], None,
+                              False, 8)[0]
+    assert top[0][1] == 1.0  # the clamped total
+
+
 def test_column_tail_serves_without_doc_map(spark):
     """With the doc map absent (e.g. a non-atomic corpus column blocks
     it), an engine whose vector tier is still resident takes the Spark
@@ -1471,8 +1517,9 @@ def test_hybrid_search_batch_tier_matches_single_calls(spark):
     """The batch serving tier: N queries -> one frame with a leading
     query_idx, rows per query ROW-IDENTICAL to the single-query call on
     the same engine — on the Spark path (union of plans) and on the
-    interactive fast path (one matmul + one VALUES re-entry), where the
-    whole batch costs ZERO Spark jobs. Exact-reference queries, misses,
+    interactive fast path (one matmul, the rows scored in the driver and
+    returned as a `local_df` LocalTableScan), where the whole batch
+    costs ZERO Spark jobs. Exact-reference queries, misses,
     duplicates, filters, and error contracts all ride along."""
     rows = [
         (1, "patience and prayer during hardship and trials"),
@@ -1827,6 +1874,46 @@ def test_enable_interactive_runs_five_jobs_and_builds_no_spark_index(spark):
         b = [r.asDict() for r in eng.hybrid_search(q, 10).collect()]
         assert a == b, q
     assert eng._index is not None
+
+
+def test_enable_builds_the_same_tiers_at_any_partition_count(
+        spark, monkeypatch):
+    """enable_interactive's bounded corpus read builds the same doc map
+    and lexical tier whatever the corpus frame's partition count, and an
+    oversized corpus is still refused with at most `max_driver_rows + 1`
+    rows in the driver."""
+    from hadith_vector_search_spark.operators.embedder import embed_column
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    emb = (docs.select("doc_id", embed_column(F.col("text"))
+                       .alias("embedding"))
+           .coalesce(1).localCheckpoint())
+    tiers = {}
+    for p in (1, 4, 16):
+        eng = HybridEngine(spark, docs.repartition(p).localCheckpoint(),
+                           embeddings=emb)
+        assert eng.enable_interactive()
+        tiers[p] = (eng._doc_rows, {
+            t: sorted(zip(ids.tolist(), [float(x).hex() for x in imp],
+                          tf.tolist(), dl.tolist()))
+            for t, (ids, imp, tf, dl) in eng._lex.items()})
+    assert tiers[4] == tiers[1] and tiers[16] == tiers[1]
+    assert len(tiers[1][0]) == docs.count()
+
+    seen = []
+    frame = type(docs)
+    collect = frame.collect
+
+    def spy(df):
+        out = collect(df)
+        seen.append(len(out))
+        return out
+
+    monkeypatch.setattr(frame, "collect", spy)
+    big = HybridEngine(spark, docs.repartition(16).localCheckpoint())
+    assert not big.enable_interactive(max_driver_rows=10)
+    assert seen == [11] and not big.interactive_enabled
 
 
 def test_fts_status_reports_the_resident_lexical_tier(spark):

@@ -118,6 +118,27 @@ def test_auto_falls_back_to_hash_without_sentence_transformers():
     assert isinstance(m, embedder.HashEmbedder)
 
 
+def test_auto_backend_is_probed_once_per_process(monkeypatch):
+    """`encode_query` with the "auto" backend probes for
+    sentence-transformers once: the resolved model is memoized, so a
+    second query does not call `real_model_available` (a failed import
+    is not cached by Python and searched sys.path on every query)."""
+    calls = []
+    probe = embedder.real_model_available
+
+    def counted():
+        calls.append(1)
+        return probe()
+
+    monkeypatch.setattr(embedder, "_MODEL_CACHE", {})
+    monkeypatch.setattr(embedder, "real_model_available", counted)
+    first = embedder.encode_query("patience and prayer", 384)
+    assert len(calls) == 1
+    assert embedder.encode_query("patience and prayer", 384) == first
+    embedder.encode_query("charity in secret", 384)
+    assert len(calls) == 1
+
+
 def test_singleton_cache_keyed_by_backend_and_dim():
     a = embedder.get_model(384, backend="hash")
     b = embedder.get_model(384, backend="hash")
