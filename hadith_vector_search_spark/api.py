@@ -42,6 +42,7 @@ from .operators import bm25, fusion, proximity, similarity
 from .operators import dedup as dedup_ops
 from .operators.embedder import (
     DEFAULT_DIM,
+    HashEmbedder,
     embed_column,
     encode_query,
     get_model,
@@ -212,6 +213,10 @@ class HybridEngine:
         self._lex = None   # _LexTier: per-term postings (interactive mode)
         self._fwd = None   # doc-sorted forward arrays (interactive mode)
         self._doc_rows = None   # id -> row dict (interactive mode)
+        # column -> {value: sorted ids} over _doc_rows, filled per column
+        # by `_filter_ids`; emptied right after each replacement of
+        # _doc_rows
+        self._filter_index: dict = {}
         self._lex_vocab = None  # sorted vocab keys of _lex
         self._lex_stats = None  # (n_docs, avgdl) the _lex impacts use
         self._interactive_bounds = None  # set once enable_interactive runs
@@ -219,7 +224,7 @@ class HybridEngine:
     def enable_interactive(self, max_driver_rows: int = 500_000,
                            max_driver_postings: int = 5_000_000,
                            borrow_vectors_from=None) -> bool:
-        """Opt-in INTERACTIVE serving: pull the pinned vector index into a
+        """Opt-in INTERACTIVE serving: build the document vectors as a
         driver-resident numpy matrix so the per-request vector leg and the
         O(k) fusion run driver-side — the reference's own in-process
         architecture (quran_mcp/search.py's numpy matmul over a loaded
@@ -255,12 +260,17 @@ class HybridEngine:
 
         Every tier is built in the driver, the way the upsert delta
         builds it: one read of at most `max_driver_rows + 1` corpus rows
-        decides the row bound and feeds both the doc map and the
-        postings (`_postings_of`, tokenized with `py_tokenize`), and the
-        vector tier comes from the pinned embedding frame through one
-        `toArrow()`. No Spark BM25 index is built or pinned here: the
-        `index` property builds it on the first Spark-path call that
-        reads it.
+        decides the row bound and feeds the doc map, and one
+        tokenization pass over it (`_postings_of`) feeds both the
+        lexical tier and the vector tier (`_doc_vectors`: the hash
+        model's vectors are the postings' counts times their tokens'
+        sign rows, so enable runs no embedding UDF). That read is the
+        only Spark job of an engine with derived vectors; supplied
+        embeddings are counted and read through `toArrow()`
+        (`_vector_arrays`). Neither the Spark BM25 index nor the
+        embedding frame is built or pinned here: the `index` and `emb`
+        properties build them on the first Spark-path call that reads
+        them.
 
         `borrow_vectors_from` (opt-in): a `PublishedVectorIndex` whose
         resident raw matrix this engine SHARES instead of collecting its
@@ -274,6 +284,8 @@ class HybridEngine:
         borrowed arrays are read-shared — every downstream mutation path
         (`_apply_interactive_delta`) copies-on-write via fancy indexing,
         so an upsert un-shares instead of corrupting the store tier."""
+        import numpy as np
+
         self._fold()
         self._interactive_bounds = (max_driver_rows, max_driver_postings)
         id_type = self._schema[self.id_col].dataType.simpleString()
@@ -311,21 +323,30 @@ class HybridEngine:
         self._lex = self._fwd = self._doc_rows = None
         self._lex_vocab = self._lex_stats = None
         self._nar_tier = None  # lazy; rebuilt on first narrator leg
-        self._ids, self._mat = (borrowed if borrowed is not None
-                                else self._vector_arrays())
-        if len(rows) <= max_driver_rows:
-            postings = self._postings_of(rows)
+        self._filter_index = {}
+        postings = (self._postings_of(rows) if len(rows) <= max_driver_rows
+                    else None)
+        if borrowed is not None:
+            self._ids, self._mat = borrowed
+        elif self._emb_supplied:
+            self._ids, self._mat = self._vector_arrays()
+        else:
+            self._ids = np.array([r[self.id_col] for r in rows])
+            self._mat = self._doc_vectors(rows, postings)
+        if postings is not None:
             if len(postings[0]) <= max_driver_postings:
-                self._install_lex_tiers(*postings)
+                self._install_lex_tiers(*postings[:4])
             if atomic:
                 self._doc_rows = {r[self.id_col]: r.asDict() for r in rows}
         return True
 
     def _vector_arrays(self) -> tuple:
-        """(ids, matrix) of the embedding frame through one `toArrow()`:
-        the flattened `list<double>` values reshaped to (n, dim), the ids
-        by `to_pylist()` so their numpy dtype is the one Python values
-        give (strings stay str, integral ids int64)."""
+        """(ids, matrix) of the SUPPLIED embeddings frame through one
+        `toArrow()`: the flattened `list<double>` values reshaped to (n,
+        dim), the ids by `to_pylist()` so their numpy dtype is the one
+        Python values give (strings stay str, integral ids int64).
+        Derived vectors never come through here: `_doc_vectors` builds
+        them from the corpus rows."""
         import numpy as np
 
         tbl = self.emb.select(self.id_col, "embedding").toArrow()
@@ -363,18 +384,22 @@ class HybridEngine:
         return ids, mat
 
     def _postings_of(self, rows) -> tuple:
-        """(terms, pids, tf, dl) postings arrays of corpus `rows` (Rows
-        or row dicts), tokenized in the driver with `py_tokenize`, the
-        tested twin of the index tokenizer: one entry per distinct
+        """(terms, pids, tf, dl, at) postings arrays of corpus `rows`
+        (Rows or row dicts), tokenized in the driver with `py_tokenize`,
+        the tested twin of the index tokenizer: one entry per distinct
         (doc, term), tf its count and dl the doc's token count, both as
-        doubles like the index's; token-less docs have no index presence.
-        Enable-time builds and the upsert delta share it."""
+        doubles like the index's, and `at` the doc's position in `rows`
+        (ascending); token-less docs have no index presence. The one
+        tokenization pass enable-time builds and the upsert delta make:
+        the first four arrays feed the lexical tier
+        (`_install_lex_tiers`), tf and `at` the vector tier
+        (`_doc_vectors`)."""
         from collections import Counter
 
         import numpy as np
 
-        terms, pids, tf, dl = [], [], [], []
-        for r in rows:
+        terms, pids, tf, dl, at = [], [], [], [], []
+        for i, r in enumerate(rows):
             toks = py_tokenize(r[self.text_col] or "")
             if not toks:
                 continue
@@ -384,7 +409,9 @@ class HybridEngine:
                 pids.append(r[self.id_col])
                 tf.append(float(n))
                 dl.append(length)
-        return np.array(terms), np.array(pids), np.array(tf), np.array(dl)
+                at.append(i)
+        return (np.array(terms), np.array(pids), np.array(tf), np.array(dl),
+                np.array(at, dtype=np.intp))
 
     def _install_lex_tiers(self, terms, pids, tf, dl) -> None:
         """Build and install the driver-resident lexical tiers from raw
@@ -445,15 +472,16 @@ class HybridEngine:
         corpus read, and no Spark job: `changed` holds the batch's
         corpus-schema rows that change (removal-wins already applied) as
         the upsert's one collect read them, `removed` the ids it drops.
-        Their vectors are encoded here in the driver with the model
-        `encode_query` uses — the values the embed UDF computes.
+        The changed rows are tokenized once (`_postings_of`), and their
+        vectors built from those postings by `_doc_vectors` — the values
+        the embed UDF computes.
 
         Per tier: vector matrix/doc map drop the batch's rows and append
         the fresh ones; the lexical tier drops the batch's postings from
-        the raw forward arrays, appends the changed rows' postings from
-        `_postings_of`, and re-derives n_docs/avgdl/df/impacts through
-        `_install_lex_tiers` — the SAME two builders `enable_interactive`
-        runs over the whole corpus, because BM25's global n_docs/avgdl/df
+        the raw forward arrays, appends the changed rows' postings, and
+        re-derives n_docs/avgdl/df/impacts through `_install_lex_tiers`
+        — the SAME three builders `enable_interactive` runs over the
+        whole corpus, because BM25's global n_docs/avgdl/df
         factors make per-posting impacts globally sensitive to any batch
         (recompute is one vectorized numpy pass over
         ≤max_driver_postings rows).
@@ -475,6 +503,7 @@ class HybridEngine:
         max_rows, max_post = self._interactive_bounds
         drop = removed | {r[self.id_col] for r in changed}
         drop_arr = np.array(sorted(drop)) if drop else None
+        postings = self._postings_of(changed)
 
         # --- vector tier (bound: total resident vectors) ---------------
         keep = (~np.isin(self._ids, drop_arr) if drop_arr is not None
@@ -489,8 +518,7 @@ class HybridEngine:
         if changed:
             ids2 = np.concatenate(
                 [ids2, np.array([r[self.id_col] for r in changed])])
-            mat2[n_keep:] = self._encode([r[self.text_col]
-                                          for r in changed])
+            mat2[n_keep:] = self._doc_vectors(changed, postings)
 
         # --- doc-map tier (bound: corpus rows) -------------------------
         new_map, over_rows = None, False
@@ -511,7 +539,7 @@ class HybridEngine:
             if drop_arr is not None:
                 m = ~np.isin(pids, drop_arr)
                 pids, terms, tf, dl = pids[m], terms[m], tf[m], dl[m]
-            a_terms, a_ids, a_tf, a_dl = self._postings_of(changed)
+            a_terms, a_ids, a_tf, a_dl, _ = postings
             if len(a_ids):
                 pids = np.concatenate([pids, a_ids])
                 terms = np.concatenate([terms, a_terms])
@@ -523,6 +551,7 @@ class HybridEngine:
         # --- all bounds verified: install -----------------------------
         self._ids, self._mat = ids2, mat2
         self._doc_rows = new_map
+        self._filter_index = {}  # after the map (`_fast_allowed_ids`)
         if lex_arrays is not None:
             self._install_lex_tiers(*lex_arrays)
         else:
@@ -531,15 +560,25 @@ class HybridEngine:
 
         return True
 
-    def _encode(self, texts: list):
-        """Document vectors of `texts` as one (n, dim) float matrix,
-        encoded in the driver by the model `encode_query` uses. The embed
-        UDF runs the same `encode_batch` over NULL-filled text, so the
-        values are the ones the Spark-side embedding frame holds."""
+    def _doc_vectors(self, rows, postings=None):
+        """The document vectors of corpus `rows` (Rows or row dicts) as
+        one (len(rows), dim) matrix, in row order, built in the driver by
+        the model `encode_query` uses: the values the embed UDF computes
+        for their NULL-filled texts. The hash model builds them from the
+        rows' postings (`postings`, else `_postings_of(rows)` here) with
+        `HashEmbedder.encode_bags`, so a caller that tokenized the rows
+        for the lexical tier does not tokenize them again; any other
+        model encodes the texts with `encode_batch`, as the UDF does.
+        Enable, the upsert delta and the fold share it."""
         import numpy as np
 
-        vecs = get_model(self.dim).encode_batch([t or "" for t in texts])
-        return np.array(vecs, dtype=float).reshape(len(texts), self.dim)
+        model = get_model(self.dim)
+        if isinstance(model, HashEmbedder):
+            terms, _, tf, _, at = (postings if postings is not None
+                                   else self._postings_of(rows))
+            return model.encode_bags(terms, tf, at, len(rows))
+        vecs = model.encode_batch([r[self.text_col] or "" for r in rows])
+        return np.array(vecs, dtype=float).reshape(len(rows), self.dim)
 
     def disable_interactive(self) -> None:
         """Release every driver-resident interactive tier (vector matrix,
@@ -550,6 +589,7 @@ class HybridEngine:
         self._lex = self._fwd = self._doc_rows = None
         self._lex_vocab = self._lex_stats = None
         self._nar_tier = None
+        self._filter_index = {}
 
     @property
     def interactive_enabled(self) -> bool:
@@ -825,12 +865,12 @@ class HybridEngine:
         return hit, tot
 
     def _lex_topk_interactive(self, terms: list[str], k: int,
-                              allowed: set | None = None) -> list:
+                              allowed=None) -> list:
         """Driver-side disjunctive BM25 top-k over the resident per-term
         impact arrays: gather the query terms' postings, one grouped sum,
         round 6, rank by (score desc, id asc) — the exact contract of the
         Spark leg (`bm25.score_terms` + round + orderBy + limit).
-        `allowed` (a driver id set, see `_fast_allowed_ids`) restricts
+        `allowed` (a sorted id array, see `_fast_allowed_ids`) restricts
         BEFORE the top-k cutoff, mirroring `_spark_lex_leg`'s semi-join
         placement."""
         import numpy as np
@@ -844,7 +884,7 @@ class HybridEngine:
             np.concatenate([p[1] for p in parts]), len(lex.ids))
         uids = lex.ids[hit]
         if allowed is not None:
-            keep = np.array([i in allowed for i in uids.tolist()])
+            keep = np.isin(uids, allowed)
             uids, tot = uids[keep], tot[keep]
             if not len(uids):
                 return []
@@ -1013,7 +1053,7 @@ class HybridEngine:
         return self._nar_tier or None
 
     def _narrator_topk_interactive(self, toks: list[str], k: int,
-                                   allowed: set | None = None) -> list:
+                                   allowed=None) -> list:
         """Driver twin of `_narrator_leg` (`bm25.prefix_and_match` over
         the narrator index): each token is a prefix pseudo-term
         (`_prefix_leg_local`), conjunctive (`_and_legs`) with scores
@@ -1028,8 +1068,7 @@ class HybridEngine:
             for p in toks)
         uids = lex.ids[hit]
         if allowed is not None:
-            keep = np.array([i in allowed for i in uids.tolist()],
-                            dtype=bool)
+            keep = np.isin(uids, allowed)
             uids, tot = uids[keep], tot[keep]
         if not len(uids):
             return []
@@ -1050,11 +1089,19 @@ class HybridEngine:
         way. Anything else (floats, coercible mismatches, unknown
         columns, no resident doc map) returns the DEGRADE sentinel and
         the call takes the Spark path, preserving exact Column
-        semantics. Returns None (no filters), a set (restrict to these
-        ids), or `NotImplemented` (degrade)."""
+        semantics. Returns None (no filters), a sorted id array
+        (restrict to these ids: the intersection of each filter's ids
+        from `_filter_ids`), or `NotImplemented` (degrade)."""
+        import numpy as np
+
         if not filters:
             return None
-        if self._doc_rows is None:
+        # the index before the map: every replacement of the map stores
+        # the new map first and a new empty index after it, so an index
+        # read here is never one a later map's replacement emptied
+        # before this call read that later map
+        index, doc_rows = self._filter_index, self._doc_rows
+        if doc_rows is None:
             return NotImplemented
         strict = {"string": str, "tinyint": int, "smallint": int,
                   "int": int, "bigint": int, "boolean": bool}
@@ -1068,8 +1115,35 @@ class HybridEngine:
                 # a past-bigint literal ERRORS on the Spark path under
                 # ANSI; degrade so the two paths cannot diverge
                 return NotImplemented
-        return {rid for rid, row in self._doc_rows.items()
-                if all(row[c] == v for c, v in filters.items())}
+        allowed = None
+        for col, val in filters.items():
+            ids = self._filter_ids(index, doc_rows, col, val)
+            allowed = (ids if allowed is None
+                       else np.intersect1d(allowed, ids, assume_unique=True))
+        return allowed
+
+    @staticmethod
+    def _filter_ids(index: dict, doc_rows: dict, col: str, val):
+        """The sorted ids of the `doc_rows` rows whose `col` equals `val`
+        (NULL matching nothing), from `index`, the engine's (column,
+        value) -> ids index `_filter_index`: a column's entry is built by
+        one pass over the doc map on its first filtered call, and the
+        engine empties the whole index whenever it replaces the doc map
+        (enable, upsert delta, disable). Values are dict keys, so lookups
+        use Python `==`, sound only under `_fast_allowed_ids`' strict
+        typing."""
+        import numpy as np
+
+        by_val = index.get(col)
+        if by_val is None:
+            groups: dict = {}
+            for rid, row in doc_rows.items():
+                if row[col] is not None:
+                    groups.setdefault(row[col], []).append(rid)
+            by_val = {v: np.sort(np.array(ids)) for v, ids in groups.items()}
+            index[col] = by_val
+        found = by_val.get(val)
+        return found if found is not None else np.empty(0)
 
     # -- derived state (lazy, pinned once) ---------------------------------
 
@@ -1112,11 +1186,15 @@ class HybridEngine:
         pinned `docs` snapshot, the lexical index (once a Spark path has
         built it: a resident engine has none) takes one
         `bm25.refresh_index` over every pending live row and tombstone,
-        and the embedding frame one anti-join + union whose fresh vectors
-        come from the resident matrix (which already holds them) or, with
-        no vector tier resident, from `_encode`. However many batches are
-        pending, it is this one set of frames and pins, so the fold's job
-        count does not grow with them.
+        and the embedding frame (likewise only once built: a resident
+        engine builds its vectors in the driver and has none) one
+        anti-join + union whose fresh vectors come from the resident
+        matrix (which already holds them) or, with no vector tier
+        resident, from `_doc_vectors`. An unbuilt index or embedding
+        frame stays unbuilt here: the `index` and `emb` properties build
+        it from the folded corpus on its first read. However many
+        batches are pending, it is this one set of frames and pins, so
+        the fold's job count does not grow with them.
 
         The new index pins are materialized here, so the superseded index,
         narrator-index and embedding pins are released at once
@@ -1153,13 +1231,14 @@ class HybridEngine:
     def _vectors_frame(self, rows: list[dict]) -> DataFrame:
         """(id, embedding) of `rows` as a driver-local relation: their
         rows of the resident matrix when the vector tier is resident
-        (every upsert's delta put them there), else `_encode`d now."""
+        (every upsert's delta put them there), else built now by
+        `_doc_vectors`."""
         ids = [r[self.id_col] for r in rows]
         if self._mat is not None:
             pos = dict(zip(self._ids.tolist(), range(len(self._ids))))
             mat = self._mat[[pos[i] for i in ids]]
         else:
-            mat = self._encode([r[self.text_col] for r in rows])
+            mat = self._doc_vectors(rows)
         return local_df(self.spark, list(zip(ids, mat)), StructType([
             self._schema[self.id_col],
             StructField("embedding", ArrayType(DoubleType()))]))
@@ -1177,6 +1256,12 @@ class HybridEngine:
 
     @property
     def emb(self) -> DataFrame:
+        """The Spark embedding frame (id, embedding): the supplied one,
+        or the corpus embedded by the UDF, built and pinned on the first
+        Spark-path read (after folding pending upserts), as the `index`
+        property builds the BM25 index. `enable_interactive` does not
+        build it: the resident vector tier comes from the driver's
+        tokenization pass (`_doc_vectors`), with the same values."""
         self._fold()
         if self._emb is None:
             from .operators.embedder import spread_for_encode
@@ -1305,11 +1390,11 @@ class HybridEngine:
                 .limit(n_results))
 
     def _exact_local_rows(self, query: str, n_results: int,
-                          allowed: set | None) -> list[tuple]:
+                          allowed) -> list[tuple]:
         """Driver twin of `_exact_reference_lookup` over the resident doc
         map: the 0/1-row top list in `_score_local_py`'s row shape. A
         filtered lookup keeps the row only when its id is in `allowed`,
-        the filter's driver id set. That set exists only under
+        the filter's sorted driver id array. It exists only under
         strict-type equality (`_fast_allowed_ids`), where Python `==` and
         Column `==` agree and NULL never matches, so this returns the
         Spark lookup's row; a coercible pair such as {"book": "1"}
@@ -1438,7 +1523,7 @@ class HybridEngine:
         the resident impact arrays, narrator-intent queries from the
         resident narrator-field tier (`_narrator_tier`), exact references
         resolve off the doc map (`_exact_local_rows`), the filter's
-        driver id set `allowed` (`_fast_allowed_ids`) restricts every leg
+        driver id array `allowed` (`_fast_allowed_ids`) restricts every leg
         BEFORE its cutoff, and `_score_local_py` scores. Returns
         [(query_idx, top rows, dropped)], one group per query.
 
@@ -1478,8 +1563,7 @@ class HybridEngine:
             if allowed is not None:
                 # restrict BEFORE the per-query top-k cutoff — the
                 # semi-join placement of the Spark vector leg
-                keep = np.fromiter((i in allowed for i in ids.tolist()),
-                                   dtype=bool, count=len(ids))
+                keep = np.isin(ids, allowed)
                 ids, sims_all = ids[keep], sims_all[keep]
         groups = []
         for i, (query, it, toks) in enumerate(zip(queries, intents,
@@ -1971,7 +2055,14 @@ class HybridEngine:
         """The reference's `vector_index_status` tool
         (/root/reference/mcp_server/tools.py:14-27): embedding-index
         metadata — vector count, dim, whether the index is built (pinned)
-        yet. Counting a pinned frame never re-embeds."""
+        yet. Counting a pinned frame never re-embeds. A resident vector
+        tier answers from its own matrix with no Spark job (it holds the
+        vectors the frame would, pending upserts included), as
+        `fts_status` does for the lexical tier."""
+        ddl = "n_vectors long, embedding_dim int, built boolean"
+        if self._mat is not None:
+            return local_df(self.spark, [
+                (len(self._ids), self._mat.shape[1], True)], ddl)
         self._fold()
         built = self._emb is not None
         n_vectors = self._emb.count() if built else 0
@@ -1980,9 +2071,7 @@ class HybridEngine:
             row = self._emb.select(F.size("embedding").alias("d")).first()
             if row is not None:
                 dim = row.d
-        return local_df(
-            self.spark, [(n_vectors, dim, built)],
-            "n_vectors long, embedding_dim int, built boolean")
+        return local_df(self.spark, [(n_vectors, dim, built)], ddl)
 
     def fts_status(self) -> DataFrame:
         """The reference's `fts_status` tool (tools.py:29-37): lexical-

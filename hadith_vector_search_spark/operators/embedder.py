@@ -109,6 +109,42 @@ class HashEmbedder:
                      normalize: bool = True) -> list[list[float]]:
         return [self.encode(t, normalize) for t in texts]
 
+    # bound on one `encode_bags` chunk's count matrix and product
+    BAG_CHUNK_BYTES = 8 << 20
+
+    def encode_bags(self, terms, counts, rows, n_rows: int) -> np.ndarray:
+        """The normalized vectors of `n_rows` texts as one (n_rows, dim)
+        matrix, from their bags of tokens: posting i says text rows[i]
+        holds token terms[i] counts[i] times, one posting per distinct
+        (text, token), in ascending row order. Each chunk of rows is one
+        product of its dense (rows x the chunk's tokens) count matrix
+        with those tokens' `_sign_vec` rows, and rows per chunk are
+        bounded so the count matrix and the product stay within
+        BAG_CHUNK_BYTES. Every sum is an integer-valued double, so a row
+        equals `encode()` of its text bit for bit in any summation
+        order; a row with no postings is zeros, as a token-less text's
+        vector is."""
+        out = np.zeros((n_rows, self.dim))
+        if not len(terms):
+            return out
+        vocab, term_ix = np.unique(terms, return_inverse=True)
+        step = max(1, self.BAG_CHUNK_BYTES // (8 * (len(vocab) + self.dim)))
+        for lo in range(0, n_rows, step):
+            hi = min(lo + step, n_rows)
+            a, b = np.searchsorted(rows, [lo, hi])
+            if a == b:
+                continue
+            cols, col_ix = np.unique(term_ix[a:b], return_inverse=True)
+            cnt = np.zeros((hi - lo, len(cols)))
+            cnt[rows[a:b] - lo, col_ix] = counts[a:b]
+            m = cnt @ np.stack([self._sign_vec(t)
+                                for t in vocab[cols].tolist()])
+            # the zero rows of token-less texts keep `out`'s +0.0 (their
+            # products may hold -0.0)
+            norm = np.sqrt(np.einsum("ij,ij->i", m, m))[:, None]
+            np.divide(m, norm, out=out[lo:hi], where=norm > 0.0)
+        return out
+
 
 class SentenceTransformerEmbedder:
     """The reference's real model (all-MiniLM-L6-v2, dim 384, batch 64,

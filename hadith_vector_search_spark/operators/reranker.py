@@ -110,7 +110,17 @@ def resolve_pair_backend(backend: str) -> str:
 
 
 def get_pair_scorer(dim: int = DEFAULT_DIM, backend: str = "auto"):
-    backend = resolve_pair_backend(backend)
+    """Lazy per-process scorer singleton. The scorer "auto" resolved to
+    is memoized under ("auto", dim), as `embedder.get_model` memoizes
+    its model, so the cross-encoder is probed once per process, not per
+    rerank call: Python does not cache a failed import, and every probe
+    of a missing sentence-transformers searches sys.path again."""
+    if backend == "auto":
+        scorer = _SCORER_CACHE.get(("auto", dim))
+        if scorer is None:
+            scorer = _SCORER_CACHE[("auto", dim)] = get_pair_scorer(
+                dim, resolve_pair_backend(backend))
+        return scorer
     key = (backend, dim)
     scorer = _SCORER_CACHE.get(key)
     if scorer is None:

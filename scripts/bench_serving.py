@@ -13,7 +13,8 @@ SERVING_LATENCY.md. The `tool_rows.*` rows time the rows-out calls the
 serving transports make; the rows named after a public method time its
 DataFrame face, collected. `--route-docs N` adds one more JSON line,
 the `routes.*` rows: resident lexical calls on both sides of the
-dense/sparse grouping choice, on a generated corpus of N docs.
+dense/sparse grouping choice, on a generated corpus of N docs, with the
+wall time and Spark job count of that engine's `enable_interactive`.
 """
 
 from __future__ import annotations
@@ -43,6 +44,17 @@ def pctl(xs: list[float], p: float) -> float:
     return xs[k]
 
 
+def timed_enable(spark, engine) -> dict:
+    """`engine.enable_interactive()`'s wall time and Spark job count."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    t0 = time.perf_counter()
+    assert engine.enable_interactive(), "the rows need resident tiers"
+    return {"enable_interactive": {
+        "wall_s": round(time.perf_counter() - t0, 2),
+        "jobs": len(set(tracker.getJobIdsForGroup()) - before)}}
+
+
 def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
     from hadith_vector_search_spark.api import HybridEngine
     from hadith_vector_search_spark.plans import semantic
@@ -50,13 +62,7 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
 
     docs = load_table(spark, sf_dir, "documents")
     engine = HybridEngine(spark, docs)
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    t0 = time.perf_counter()
-    engine.enable_interactive()
-    setup = {"enable_interactive": {
-        "wall_s": round(time.perf_counter() - t0, 2),
-        "jobs": len(set(tracker.getJobIdsForGroup()) - before)}}
+    setup = timed_enable(spark, engine)
     doc_ids = [r.doc_id for r in
                engine.docs.select("doc_id").limit(200).collect()]
     # narrator-shaped engine for the mixed-batch row: the `source` column
@@ -66,7 +72,6 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
     # labels the row zero-job (round-10 review).
     nar_engine = HybridEngine(spark, docs, narrator_col="source")
     assert nar_engine.enable_interactive(), "mixed-batch row needs tiers"
-    assert engine.interactive_enabled, "batch rows need resident tiers"
     narrators = [r.source for r in
                  docs.select("source").distinct().limit(8).collect()
                  if r.source is not None]
@@ -108,7 +113,7 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
         "tool_rows.hybrid_search": lambda i: rows_out("hybrid_search", {
             "query": QUERIES[i % len(QUERIES)], "n_results": 10}),
         # a `lang`-filtered call: resident too (strict-type equality on
-        # the doc map, `_fast_allowed_ids`), it also scans every row
+        # the doc map, `_fast_allowed_ids`, through its lazy filter index)
         "tool_rows.hybrid_search[lang]": lambda i: rows_out(
             "hybrid_search", {"query": QUERIES[i % len(QUERIES)],
                               "n_results": 10, "filters": {"lang": "en"}}),
@@ -211,13 +216,14 @@ def time_calls(calls: dict, n: int, digits: int = 1) -> dict:
     return out
 
 
-def bench_routes(spark, n_docs: int, n: int) -> dict:
+def bench_routes(spark, n_docs: int, n: int) -> tuple[dict, dict]:
     """Resident lexical calls on each side of the dense/sparse choice of
     `HybridEngine._group_sum`, on the perfbench generator's corpus at
     `n_docs` docs. Its 30-word vocabulary puts every corpus term on most
     docs (the dense route). Three upserted docs add a term no other doc
     has, and the narrator tier's names are each on one doc in 20: from
-    16,384 docs up, those legs take the sparse route."""
+    16,384 docs up, those legs take the sparse route. Returns the
+    engine's `enable_interactive` set-up row and the call latencies."""
     from hadith_vector_search_spark.api import HybridEngine
     from perfbench.gen import make_corpus
 
@@ -228,7 +234,7 @@ def bench_routes(spark, n_docs: int, n: int) -> dict:
         "doc_id long, text string, lang string, source string, "
         "n_chars long")
     engine = HybridEngine(spark, docs, narrator_col="source")
-    assert engine.enable_interactive(), "route rows need resident tiers"
+    setup = timed_enable(spark, engine)
     engine.upsert_documents(spark.createDataFrame(
         [(n_docs + i, "zyxrare data stream " + "zyxrare " * i, "en",
           "src_rare", 20) for i in range(3)], docs.schema))
@@ -257,7 +263,7 @@ def bench_routes(spark, n_docs: int, n: int) -> dict:
             "hybrid_search", {"query": f"narrated by src{i % 20} data",
                               "n_results": 10}),
     }
-    return time_calls(calls, n, digits=3)
+    return setup, time_calls(calls, n, digits=3)
 
 
 def main() -> None:
@@ -291,9 +297,12 @@ def main() -> None:
             md.append(f"| {sf} | {call} | {m['p50_ms']} | {m['p95_ms']} | "
                       f"{m['mean_ms']} |")
     if args.route_docs:
-        res = bench_routes(spark, args.route_docs, args.n)
-        print(json.dumps({"route_docs": args.route_docs,
+        setup, res = bench_routes(spark, args.route_docs, args.n)
+        print(json.dumps({"route_docs": args.route_docs, "setup": setup,
                           "latencies": res}))
+        for step, m in setup.items():
+            setup_md.append(f"| {args.route_docs} docs | {step} | "
+                            f"{m['wall_s']} | {m['jobs']} |")
         for call, m in res.items():
             md.append(f"| {args.route_docs} docs | {call} | {m['p50_ms']} "
                       f"| {m['p95_ms']} | {m['mean_ms']} |")

@@ -1854,26 +1854,210 @@ def test_driver_lexical_tier_equals_the_spark_index(spark, corpus):
     assert got == want
 
 
-def test_enable_interactive_runs_five_jobs_and_builds_no_spark_index(spark):
-    """enable_interactive builds every resident tier in the driver: at
-    most 5 Spark jobs at sf0.001 (the embedding pin, its count and Arrow
-    read, one bounded corpus read) and no Spark BM25 index. The Spark
-    paths build the index when they first need it, and then serve what
-    a batch engine serves."""
+def test_enable_interactive_runs_one_job_and_builds_no_spark_frames(spark):
+    """enable_interactive builds every resident tier in the driver from
+    one bounded corpus read: 1 Spark job at sf0.001, no Spark BM25 index
+    and no embedding frame. The Spark paths build both when they first
+    need them, and then serve what a batch engine serves."""
     from hadith_vector_search_spark.sources import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
     eng = HybridEngine(spark, docs)
     n_jobs, ok = _spark_jobs(spark, eng.enable_interactive)
-    assert ok and n_jobs <= 5, n_jobs
-    assert eng._index is None
+    assert ok and n_jobs == 1, n_jobs
+    assert eng._index is None and eng._emb is None
     eng.disable_interactive()
     batch = HybridEngine(spark, docs)
     for q in ["patience and prayer", "charity given in secret"]:
         a = [r.asDict() for r in batch.hybrid_search(q, 10).collect()]
         b = [r.asDict() for r in eng.hybrid_search(q, 10).collect()]
         assert a == b, q
-    assert eng._index is not None
+    assert eng._index is not None and eng._emb is not None
+
+
+def _vectors_by_id(ids, mat) -> dict:
+    return {i: [float(x).hex() for x in v]
+            for i, v in zip(ids.tolist(), mat.tolist())}
+
+
+def _frame_vectors_by_id(emb, id_col: str = "doc_id") -> dict:
+    return {r[id_col]: [float(x).hex() for x in r["embedding"]]
+            for r in emb.collect()}
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", "tokenizer_edges"])
+def test_driver_vector_tier_equals_the_embedding_frame(spark, corpus):
+    """The vector tier `enable_interactive` builds from its tokenization
+    pass holds, id for id and bit for bit, the vectors the embed UDF
+    puts in the Spark embedding frame: on sf0.001 and on the tokenizer
+    edge cases (NULL, empty, whitespace- and punctuation-only, unicode,
+    repeated-token and duplicate-text docs). Token-less docs are +0.0
+    rows in both."""
+    from test_properties import EDGE_CASES, _random_corpus
+
+    from hadith_vector_search_spark.sources import load_table
+
+    if corpus == "sf0.001":
+        docs = load_table(spark, SF_SMOKE, "documents")
+    else:
+        texts = EDGE_CASES + _random_corpus() + [
+            None, "", "  ", "!!! ... ???", "a b c !", "prayer prayer prayer",
+            "charity given in secret", "charity given in secret"]
+        docs = spark.createDataFrame(list(enumerate(texts)),
+                                     "doc_id int, text string")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive() and eng._emb is None
+    got = _vectors_by_id(eng._ids, eng._mat)
+    assert len(got) == len(eng._ids) == docs.count()
+    assert got == _frame_vectors_by_id(eng.emb)
+
+
+def test_first_spark_read_after_upserts_builds_the_frame_from_the_fold(
+        spark):
+    """On a resident engine whose embedding frame was never built,
+    upserts touch only the driver tiers; the first Spark-path read
+    folds them and embeds the folded corpus, and that frame holds the
+    resident matrix's vectors, id for id and bit for bit."""
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    first = docs.orderBy("doc_id").limit(3).collect()
+    eng.upsert_documents(spark.createDataFrame(
+        [(first[0].doc_id, "patience patience and prayer", "en", "s", 28),
+         (10_001, "charity given in secret", "en", "s", 23)], docs.schema),
+        removed_ids=spark.createDataFrame([(first[1].doc_id,)],
+                                          "doc_id long"))
+    eng.upsert_documents(spark.createDataFrame(
+        [(10_002, "", "en", "s", 0)], docs.schema))
+    assert eng._emb is None and eng._pending
+    emb = eng.emb
+    assert not eng._pending
+    got = _frame_vectors_by_id(emb)
+    assert first[1].doc_id not in got and {10_001, 10_002} <= set(got)
+    assert got == _vectors_by_id(eng._ids, eng._mat)
+
+
+def test_vector_index_status_reports_the_resident_vector_tier(spark):
+    """A resident engine has no embedding frame, so
+    `vector_index_status` reports the resident vector tier, with no
+    Spark job: the same answer as an engine whose frame is built."""
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive() and eng._emb is None
+    n_jobs, got = _spark_jobs(spark,
+                              lambda: eng.vector_index_status().collect())
+    twin = HybridEngine(spark, docs)
+    twin.emb
+    assert n_jobs == 0
+    assert got == twin.vector_index_status().collect()
+    assert got[0]["built"] is True and got[0]["n_vectors"] == docs.count()
+
+
+def test_filter_index_equals_the_doc_map_scan(spark, monkeypatch):
+    """The (column, value) -> ids index behind a filtered resident call
+    gives the ids a scan of the doc map gives, on random filters, and
+    again after an upsert that moves a doc to another `lang`; the
+    filtered responses are byte-identical to ones served from the
+    scan."""
+    import json
+    import random
+
+    import numpy as np
+
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    rng = random.Random(7)
+
+    def scan(filters):
+        return sorted(i for i, row in eng._doc_rows.items()
+                      if all(row[c] == v for c, v in filters.items()))
+
+    def draws():
+        rows = list(eng._doc_rows.values())
+        for _ in range(25):
+            row = rng.choice(rows)
+            cols = rng.sample(["lang", "source", "n_chars", "doc_id"],
+                              rng.randint(1, 3))
+            yield {c: row[c] for c in cols}
+        yield {"lang": "xx"}
+        yield {"lang": "en", "source": "no such source"}
+
+    def responses(filters):
+        return [json.dumps(eng.tool_rows("hybrid_search", {
+            "query": q, "n_results": 5, "filters": filters})[0])
+            for q in ("patience and prayer", "hadith number 3")]
+
+    def check():
+        for filters in draws():
+            assert eng._fast_allowed_ids(filters).tolist() == \
+                scan(filters), filters
+            got = responses(filters)
+            with monkeypatch.context() as m:
+                m.setattr(HybridEngine, "_filter_ids", staticmethod(
+                    lambda index, rows, c, v: np.array(scan({c: v}))))
+                assert responses(filters) == got, filters
+
+    check()
+    moved = eng._doc_rows[3]
+    lang = "en" if moved["lang"] != "en" else "fr"
+    assert 3 in eng._fast_allowed_ids({"lang": moved["lang"]}).tolist()
+    eng.upsert_documents(spark.createDataFrame(
+        [(3, moved["text"], lang, moved["source"], moved["n_chars"])],
+        docs.schema), force=True)  # same text: only `force` rewrites it
+    assert not eng._filter_index
+    assert 3 in eng._fast_allowed_ids({"lang": lang}).tolist()
+    assert 3 not in eng._fast_allowed_ids({"lang": moved["lang"]}).tolist()
+    check()
+
+
+def test_filter_index_survives_concurrent_doc_map_swaps(spark):
+    """Readers filling the lazy filter index while upsert deltas replace
+    the doc map never leave an index of an older map installed: after
+    the swaps, the index answers as a scan of the final map does. Four
+    reader threads, with a short switch interval, race 100 deltas that
+    move one doc between two langs."""
+    import sys
+    import threading
+
+    from hadith_vector_search_spark.sources import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").filter("doc_id < 100")
+    eng = HybridEngine(spark, docs)
+    assert eng.enable_interactive()
+    row = dict(eng._doc_rows[3])
+    stop, errors = threading.Event(), []
+
+    def read():
+        try:
+            while not stop.is_set():
+                eng._fast_allowed_ids({"lang": "en"})
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=read) for _ in range(4)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for i in range(100):
+            row["lang"] = "en" if i % 2 else "fr"
+            assert eng._apply_interactive_delta([dict(row)], set())
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=30)
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    want = sorted(i for i, r in eng._doc_rows.items() if r["lang"] == "en")
+    assert eng._fast_allowed_ids({"lang": "en"}).tolist() == want
 
 
 def test_enable_builds_the_same_tiers_at_any_partition_count(

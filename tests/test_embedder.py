@@ -139,6 +139,57 @@ def test_auto_backend_is_probed_once_per_process(monkeypatch):
     assert len(calls) == 1
 
 
+def test_auto_pair_scorer_is_probed_once_per_process(monkeypatch):
+    """`get_pair_scorer` with the "auto" backend probes for the
+    cross-encoder once: the resolved scorer is memoized, so later
+    resident rerank calls do not call `cross_encoder_available`."""
+    from hadith_vector_search_spark.operators import reranker
+
+    calls = []
+    probe = reranker.cross_encoder_available
+
+    def counted():
+        calls.append(1)
+        return probe()
+
+    monkeypatch.setattr(reranker, "_SCORER_CACHE", {})
+    monkeypatch.setattr(reranker, "cross_encoder_available", counted)
+    first = reranker.get_pair_scorer(384, "auto")
+    assert len(calls) == 1
+    assert reranker.get_pair_scorer(384, "auto") is first
+    reranker.get_pair_scorer(384, "auto")
+    assert len(calls) == 1
+    reranker.get_pair_scorer(64, "auto")  # another dim resolves once more
+    assert len(calls) == 2
+
+
+@pytest.mark.parametrize("chunk_bytes", [64, 4096, 8 << 20])
+def test_encode_bags_equals_encode_bit_for_bit(monkeypatch, chunk_bytes):
+    """`HashEmbedder.encode_bags` over (token, count, row) postings
+    gives each row `encode()`'s vector of its text, bit for bit, at any
+    chunk size; rows with no postings are +0.0 zeros."""
+    from collections import Counter
+
+    from hadith_vector_search_spark.functions.text import py_tokenize
+    from test_properties import EDGE_CASES
+
+    texts = EDGE_CASES + [None, "patience patience prayer", "a b !",
+                          "charity in secret", "charity in secret"]
+    terms, counts, rows = [], [], []
+    for i, t in enumerate(texts):
+        for tok, n in Counter(py_tokenize(t or "")).items():
+            terms.append(tok)
+            counts.append(float(n))
+            rows.append(i)
+    m = embedder.HashEmbedder(384)
+    monkeypatch.setattr(m, "BAG_CHUNK_BYTES", chunk_bytes)
+    got = m.encode_bags(np.array(terms), np.array(counts),
+                        np.array(rows), len(texts))
+    for t, v in zip(texts, got.tolist()):
+        assert [x.hex() for x in v] == \
+            [float(x).hex() for x in m.encode(t or "")], t
+
+
 def test_singleton_cache_keyed_by_backend_and_dim():
     a = embedder.get_model(384, backend="hash")
     b = embedder.get_model(384, backend="hash")
