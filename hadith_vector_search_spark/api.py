@@ -48,7 +48,7 @@ from .operators.embedder import (
     get_model,
 )
 from .operators.router import INTENT_EXACT, INTENT_NARRATOR, route_one
-from .localrel import local_df
+from .localrel import arrow_arrays, local_df
 
 OVERFETCH_FLOOR = 50   # max(50, 5*n) per the reference (tools.py:87,93)
 
@@ -222,8 +222,7 @@ class HybridEngine:
         self._interactive_bounds = None  # set once enable_interactive runs
 
     def enable_interactive(self, max_driver_rows: int = 500_000,
-                           max_driver_postings: int = 5_000_000,
-                           borrow_vectors_from=None) -> bool:
+                           max_driver_postings: int = 5_000_000) -> bool:
         """Opt-in INTERACTIVE serving: build the document vectors as a
         driver-resident numpy matrix so the per-request vector leg and the
         O(k) fusion run driver-side — the reference's own in-process
@@ -267,23 +266,10 @@ class HybridEngine:
         sign rows, so enable runs no embedding UDF). That read is the
         only Spark job of an engine with derived vectors; supplied
         embeddings are counted and read through `toArrow()`
-        (`_vector_arrays`). Neither the Spark BM25 index nor the
+        (`localrel.arrow_arrays`). Neither the Spark BM25 index nor the
         embedding frame is built or pinned here: the `index` and `emb`
         properties build them on the first Spark-path call that reads
-        them.
-
-        `borrow_vectors_from` (opt-in): a `PublishedVectorIndex` whose
-        resident raw matrix this engine SHARES instead of collecting its
-        own copy (round-12 verdict item 2 — a serving process enabling
-        both tiers held the corpus twice). The caller asserts the store
-        was published from THIS corpus with THIS engine's embedder (the
-        ingest-CLI composition); the engine verifies what is cheap to
-        verify — dim equality and exact id-SET equality against the
-        corpus — and on any mismatch (or a store that refuses residency)
-        falls back to its own collect: never wrong, just unshared. The
-        borrowed arrays are read-shared — every downstream mutation path
-        (`_apply_interactive_delta`) copies-on-write via fancy indexing,
-        so an upsert un-shares instead of corrupting the store tier."""
+        them."""
         import numpy as np
 
         self._fold()
@@ -305,14 +291,9 @@ class HybridEngine:
         docs = (self.docs if atomic
                 else self.docs.select(self.id_col, self.text_col))
         rows = docs.limit(max_driver_rows + 1).collect()
-        borrowed = None
-        if borrow_vectors_from is not None:
-            borrowed = self._borrow_vector_tier(borrow_vectors_from,
-                                                max_driver_rows)
         # derived embeddings hold one vector per corpus row; supplied
         # ones are counted
-        if borrowed is None and (
-                self.emb.count() if self._emb_supplied
+        if (self.emb.count() if self._emb_supplied
                 else len(rows)) > max_driver_rows:
             self.disable_interactive()
             return False
@@ -326,10 +307,10 @@ class HybridEngine:
         self._filter_index = {}
         postings = (self._postings_of(rows) if len(rows) <= max_driver_rows
                     else None)
-        if borrowed is not None:
-            self._ids, self._mat = borrowed
-        elif self._emb_supplied:
-            self._ids, self._mat = self._vector_arrays()
+        if self._emb_supplied:
+            self._ids, mat = arrow_arrays(
+                self.emb.select(self.id_col, "embedding"), self.dim)
+            self._mat = mat.astype(float, copy=False)
         else:
             self._ids = np.array([r[self.id_col] for r in rows])
             self._mat = self._doc_vectors(rows, postings)
@@ -339,49 +320,6 @@ class HybridEngine:
             if atomic:
                 self._doc_rows = {r[self.id_col]: r.asDict() for r in rows}
         return True
-
-    def _vector_arrays(self) -> tuple:
-        """(ids, matrix) of the SUPPLIED embeddings frame through one
-        `toArrow()`: the flattened `list<double>` values reshaped to (n,
-        dim), the ids by `to_pylist()` so their numpy dtype is the one
-        Python values give (strings stay str, integral ids int64).
-        Derived vectors never come through here: `_doc_vectors` builds
-        them from the corpus rows."""
-        import numpy as np
-
-        tbl = self.emb.select(self.id_col, "embedding").toArrow()
-        ids = np.array(tbl.column(0).to_pylist())
-        vals = tbl.column(1).combine_chunks().flatten().to_numpy(
-            zero_copy_only=False).astype(float, copy=False)
-        n = tbl.num_rows
-        return ids, (vals.reshape(n, -1) if n else np.empty((0, self.dim)))
-
-    def _borrow_vector_tier(self, vidx, max_driver_rows: int):
-        """Borrow a `PublishedVectorIndex`'s resident (ids, mat) buffers
-        for this engine's vector tier — one driver copy across both
-        interactive tiers. Returns None (caller falls back to its own
-        collect) unless every cheap identity check passes: the store's
-        dim equals the engine's, the store can (or already did) enable
-        its resident tier under this caller's row bound, and the store's
-        id set EXACTLY equals the engine's vector-source id set (the
-        supplied embeddings frame when one was given, else the corpus —
-        an ids-only collect, no encoder pass)."""
-        if getattr(vidx, "dim", None) != self.dim:
-            return None
-        if not vidx.interactive_enabled \
-                and not vidx.enable_interactive(max_driver_rows):
-            return None
-        handle = vidx.resident_vectors()
-        if handle is None:
-            return None
-        ids, mat = handle
-        if len(ids) > max_driver_rows:
-            return None
-        src = self._emb if self._emb is not None else self.docs
-        src_ids = {r[0] for r in src.select(self.id_col).collect()}
-        if set(ids.tolist()) != src_ids:
-            return None
-        return ids, mat
 
     def _postings_of(self, rows) -> tuple:
         """(terms, pids, tf, dl, at) postings arrays of corpus `rows`

@@ -75,3 +75,27 @@ def local_df(spark: SparkSession, rows: list,
         _log.debug("local_df: Arrow path fell back to pickled-RDD "
                    "(%s: %s)", type(e).__name__, e)
         return spark.createDataFrame(rows, ddl)
+
+
+def arrow_arrays(df: DataFrame, width: int = 0) -> list:
+    """The columns of `df` as numpy arrays through one `toArrow()`, the
+    way back from a frame to driver arrays with no per-value Python
+    objects. The first column (the row key) comes by `to_pylist()`, so
+    its numpy dtype is the one Python values give (strings stay str,
+    integral ids int64); a list column is flattened and reshaped to
+    (rows, list length), or to (0, `width`) when `df` is empty; any
+    other column comes by `to_numpy()`. Callers cast to the dtypes they
+    keep."""
+    import numpy as np
+
+    tbl = df.toArrow()
+    n = tbl.num_rows
+    out = [np.array(tbl.column(0).to_pylist())]
+    for col in tbl.columns[1:]:
+        if pa.types.is_list(col.type):
+            vals = col.combine_chunks().flatten().to_numpy(
+                zero_copy_only=False)
+            out.append(vals.reshape(n, -1) if n else vals.reshape(0, width))
+        else:
+            out.append(col.to_numpy())
+    return out

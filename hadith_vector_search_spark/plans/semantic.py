@@ -359,7 +359,9 @@ def ann_topk_bq_published(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_topk_bq_resident(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RESIDENT BQ point tier under the external hash gate: enable
     the driver-resident tier on the published store and serve
-    `bq_topk_point` — numpy xor+popcount prefilter + exact rerank, zero
+    `bq_topk_point` — the store handle's one resident kernel
+    (`PublishedVectorIndex._point_topk`, the tier every quantized point
+    call shares): numpy xor+popcount prefilter + exact rerank, zero
     Spark jobs (SERVING_LATENCY.md round 12: p50 0.3 ms vs the ~0.9 s
     two-job store path) — then re-enter the rows as a local relation so
     the SAME DuckDB oracle that replays the store path from raw vectors

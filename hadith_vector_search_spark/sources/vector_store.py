@@ -47,7 +47,6 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import dot, vector_lit
 from ..operators import similarity
-from . import resident
 from .commit import (JOURNAL_NAME, STAGING_NAME,  # noqa: F401
                      partitioned_refresh, read_sidecar, recover, write_parted,
                      write_parted_table, write_sidecar)
@@ -472,6 +471,28 @@ def publish_bq_codes(spark: SparkSession, index_dir: str) -> None:
                    int(geo.get("n_probe", 2)), bq_lay, id_col, vec_col)
 
 
+def _codebook_arrays(centroids) -> tuple:
+    """(cent ids int64, centroid matrix float64), in cent-id order."""
+    import numpy as np
+
+    order = sorted(centroids, key=lambda c: c[0])
+    return (np.array([int(c) for c, _ in order], dtype=np.int64),
+            np.array([v for _, v in order], dtype=np.float64))
+
+
+def _probe_np(cids, cmat, qvec, n_probe: int):
+    """Top-`n_probe` cent ids for one query vector by numpy: the
+    round(dot,6) / ties-to-lowest-cent-id arithmetic of every probe tier,
+    as `round6_arr(cmat @ q)` plus a lexsort by (-score, cent id). The
+    one single-query helper of `select_probes`' numpy tier and the
+    resident point tier."""
+    import numpy as np
+
+    from ..functions.vector import round6_arr
+    cd = round6_arr(cmat @ np.asarray(qvec, dtype=np.float64))
+    return cids[np.lexsort((cids, -cd))[:n_probe]]
+
+
 def select_probes(spark: SparkSession,
                   centroids: list[tuple[int, list[float]]],
                   qvec: list[float], n_probe: int) -> list[int]:
@@ -494,15 +515,8 @@ def select_probes(spark: SparkSession,
                .collect()[0])
         return [-s["ncid"] for s in row["top"]]
     if len(centroids) > RELATIONAL_CODEBOOK_BOUND:
-        import numpy as np
-
-        from ..functions.vector import round6_arr
-        order = sorted(centroids, key=lambda c: c[0])
-        cids = np.array([int(c) for c, _ in order])
-        cd = round6_arr(np.array([v for _, v in order], dtype=float)
-                        @ np.asarray(qvec, dtype=float))
-        top = np.lexsort((cids, -cd))[:n_probe]
-        return [int(cids[i]) for i in top]
+        return _probe_np(*_codebook_arrays(centroids), qvec,
+                         n_probe).tolist()
     q = vector_lit([float(x) for x in qvec])
     rows = (_cent_df(spark, centroids)
             .select("cent_id", F.round(dot(F.col("cvec"), q), 6)
@@ -524,7 +538,9 @@ def select_probes_batch(centroids: list[tuple[int, list[float]]],
     is one local matmul: `round6_arr(Q @ C.T)` + per-row lexsort — the
     SAME round(dot,6) / ties-to-lowest-cent-id arithmetic as
     `select_probes`' three tiers (bit-equality pinned by test). Returns
-    probe lists in input order."""
+    probe lists in input order. It keeps its own `Q @ C.T` product
+    rather than looping `_probe_np`: the oracle-checked batch queries
+    hash the rows this arithmetic probes."""
     import numpy as np
 
     from ..functions.vector import round6_arr
@@ -622,8 +638,17 @@ class PublishedVectorIndex:
 
     def probes_for(self, qvec: list[float], n_probe: int) -> list[int]:
         """Top-`n_probe` nearest cells (see `select_probes` — the shared
-        three-tier implementation)."""
+        three-tier implementation); above RELATIONAL_CODEBOOK_BOUND from
+        the handle's `_codebook`."""
+        if len(self.centroids) > RELATIONAL_CODEBOOK_BOUND:
+            return _probe_np(*self._codebook, qvec, n_probe).tolist()
         return select_probes(self.spark, self.centroids, qvec, n_probe)
+
+    @cached_property
+    def _codebook(self) -> tuple:
+        """The codebook as (cent ids, centroid matrix) in cent-id order,
+        built once per handle: the numpy probe tier's input."""
+        return _codebook_arrays(self.centroids)
 
     def resolve_probe(self, n_probe: int | None) -> int:
         """`None` means "the store's recall contract": the governed
@@ -674,148 +699,79 @@ class PublishedVectorIndex:
 
     def enable_interactive(self, max_driver_rows: int = 500_000,
                            max_driver_bytes: int = 2 << 30) -> bool:
-        """Opt-in RESIDENT point tier for the quantized rungs (round-11
-        verdict item 4: `ann_bq_point` sat at the ~1 s two-Spark-job
-        floor while the hybrid interactive tier served at ~40 ms — the
-        floor is job dispatch, not work): pull the packed signs, cells,
-        and raw vectors into driver numpy arrays so `bq_topk_point`
-        serves xor+popcount prefilter + exact rerank with ZERO Spark
-        jobs. The api.Engine discipline applies verbatim — bounded
-        (refuses above `max_driver_rows`, leaving the store unchanged so
-        every call falls back to the Spark path), opt-in only, and the
-        oracle-checked plans never read this state. Size argument: the
-        packed table is n x words x 8 B (64x under raw); the raw matrix
-        (the rerank side) is the same bytes the api tier already
-        residents at corpus scale. At lake scale this tier is a separate
-        service over the published store — exactly the api.Engine
-        story."""
+        """Opt-in RESIDENT point tier for the quantized rungs (the store
+        path's point calls sit at a two-Spark-job floor that is job
+        dispatch, not work): load the raw vectors and every published
+        quantized table (BQ packed signs, SQ8 codes and scales, PQ codes)
+        into driver numpy arrays, so the `*_topk_point` calls serve with
+        ZERO Spark jobs (`_point_topk`). Each table comes through one
+        `toArrow()` (`localrel.arrow_arrays`) and is sorted by id; a
+        table whose ids or cells differ from the raw vectors' (a
+        partially published store) refuses the tier. Bounded by rows
+        (`max_driver_rows`, the api.Engine contract) AND estimated bytes
+        (`max_driver_bytes`: a wide-dim store can blow the driver well
+        under the row cap). A refusal, or a store with no quantized tier,
+        leaves NO tier resident and every point call falls back to the
+        Spark path; the oracle-checked plans never read this state. The
+        arrays are a snapshot of the store at this call: a later refresh
+        serves after a re-enable or on a newly opened handle. At lake
+        scale this tier is a separate service over the published
+        store."""
         import numpy as np
 
-        from . import resident as resident_pool
+        from ..localrel import arrow_arrays
 
-        if self.bq is None and self.sq is None and self.pq is None:
-            self.disable_interactive()
-            return False
-        key = resident_pool.store_key(self.index_dir)
-        pooled = resident_pool.peek(key)
-        if pooled is not None:
-            # Another handle (or an earlier enable on this one) already
-            # loaded this artifact GENERATION — borrow the same buffers
-            # instead of re-collecting, after re-checking THIS caller's
-            # bounds against the pooled size.
-            n = len(pooled["ids"])
-            if n > max_driver_rows \
-                    or self.estimated_resident_bytes(n) > max_driver_bytes:
-                self.disable_interactive()
-                return False
-            self._resident = pooled
-            return True
-        n = self.vectors.count()
-        # Two bounds, both required: row count (the api.Engine contract)
-        # AND estimated bytes (dim-aware — a wide-dim store can blow the
-        # driver well under the row cap; round-12 ADVICE).
-        if n > max_driver_rows \
+        def id_sorted(df, width=0):
+            cols = arrow_arrays(df, width)
+            order = np.argsort(cols[0], kind="stable")
+            return [c[order] for c in cols]
+
+        self._resident = None
+        m = int((self.pq or {}).get("m", 0))
+        tiers = [(t, path, cols, dtype) for t, lay, path, cols, dtype in (
+            ("bq", self.bq, self.bq_path, ["bq"], np.int64),
+            ("sq", self.sq, self.sq_path, ["qcodes", "scale"], np.float64),
+            ("pq", self.pq, self.codes_path,
+             [F.array(*[f"code_{i}" for i in range(m)])], np.int64))
+            if lay is not None]
+        vectors = self.vectors
+        n = vectors.count() if tiers else 0
+        if not tiers or n > max_driver_rows \
                 or self.estimated_resident_bytes(n) > max_driver_bytes:
-            self.disable_interactive()
             return False
-
-        def load():
-            vrows = sorted(self.vectors.select(self.id_col, self.vec_col)
-                           .collect(), key=lambda r: r[0])
-            order = sorted(self.centroids, key=lambda c: c[0])
-            resident = {
-                "ids": np.array([r[0] for r in vrows]),
-                "mat": np.array([[float(x) for x in r[1]] for r in vrows],
-                                dtype=np.float64),
-                "cids": np.array([int(c) for c, _ in order],
-                                 dtype=np.int64),
-                "cmat": np.array([v for _, v in order], dtype=np.float64),
-                # 8-bit popcount LUT: numpy<2 has no bitwise_count; a
-                # byte view + LUT gather is exact and O(n*words*8) tiny
-                "pop8": np.array([bin(i).count("1") for i in range(256)],
-                                 dtype=np.uint16),
-            }
-            want_ids = [r[0] for r in vrows]
-            if self.bq is not None:
-                brows = sorted(self.bq_codes
-                               .select(self.id_col, "cell", "bq")
-                               .collect(), key=lambda r: r[0])
-                if [r[0] for r in brows] != want_ids:
-                    # mid-refresh torn read can't happen (journal), but a
-                    # partially-published store must not serve a mixed
-                    # tier (None = not pooled; next borrow retries)
-                    return None
-                resident["cells"] = np.array([int(r[1]) for r in brows],
-                                             dtype=np.int64)
-                resident["bqw"] = np.array([[int(w) for w in r[2]]
-                                            for r in brows],
-                                           dtype=np.int64)
-            if self.sq is not None:
-                srows = sorted(self.sq_codes.select(self.id_col, "cell",
-                                                    "qcodes", "scale")
-                               .collect(), key=lambda r: r[0])
-                if [r[0] for r in srows] != want_ids:
-                    return None
-                if "cells" not in resident:
-                    resident["cells"] = np.array(
-                        [int(r[1]) for r in srows], dtype=np.int64)
-                resident["sqc"] = np.array([[int(c) for c in r[2]]
-                                            for r in srows],
-                                           dtype=np.float64)
-                resident["sqs"] = np.array([float(r[3]) for r in srows],
-                                           dtype=np.float64)
-            if self.pq is not None:
-                m = int(self.pq["m"])
-                crows = sorted(self.codes.select(
-                    self.id_col, "cell",
-                    *[f"code_{i}" for i in range(m)]).collect(),
-                    key=lambda r: r[0])
-                if [r[0] for r in crows] != want_ids:
-                    return None
-                if "cells" not in resident:
-                    resident["cells"] = np.array(
-                        [int(r[1]) for r in crows], dtype=np.int64)
-                resident["pqc"] = np.array(
-                    [[int(r[2 + i]) for i in range(m)] for r in crows],
-                    dtype=np.int64)
-            return resident
-
-        loaded = resident_pool.borrow(key, load)
-        if loaded is None:
-            self.disable_interactive()
-            return False
-        self._resident = loaded
+        ids, cells, mat = id_sorted(vectors.select(
+            self.id_col, "cell", self.vec_col), self.dim)
+        cells = cells.astype(np.int64)
+        order = np.argsort(cells, kind="stable")
+        r = {"ids": ids, "mat": mat.astype(np.float64, copy=False),
+             "cells": cells, "cell_order": order,
+             "cells_sorted": cells[order],
+             # 8-bit popcount LUT: numpy<2 has no bitwise_count
+             "pop8": np.array([bin(i).count("1") for i in range(256)],
+                              dtype=np.uint16)}
+        for tier, path, cols, dtype in tiers:
+            tids, tcells, *arrs = id_sorted(self.spark.read.parquet(path)
+                                            .select(self.id_col, "cell",
+                                                    *cols))
+            if not (np.array_equal(tids, ids)
+                    and np.array_equal(tcells, cells)):
+                return False
+            r[tier] = [a.astype(dtype) for a in arrs]
+        self._resident = r
         return True
 
-    def resident_vectors(self):
-        """(ids, mat) of the resident tier, or None — the borrowable
-        raw-matrix handle `api.HybridEngine.enable_interactive` shares
-        instead of collecting its own copy (round-12 verdict item 2)."""
-        if self._resident is None:
-            return None
-        return self._resident["ids"], self._resident["mat"]
-
     def _cand_positions(self, probes):
-        """Row positions whose cell is in `probes`, ascending — served
-        from a lazily-built sorted cell index cached on the resident
-        payload. Replaces the per-call `np.isin` O(n) scan with
-        O(log n + |candidates|) slice gathers: the same candidate SET
-        (isin-mask nonzero = ascending positions with cell in probes),
-        so every downstream tie-break is unchanged. The cache rides the
-        POOLED payload, so all handles sharing the buffer share the
-        index too."""
+        """Row positions whose cell is in `probes`, ascending: slice
+        gathers from the sorted cell index `enable_interactive` builds,
+        O(log n + |candidates|) — the candidate SET an `np.isin` mask
+        gives, so every downstream tie-break is the same."""
         import numpy as np
 
         r = self._resident
-        if "cell_order" not in r:
-            order = np.argsort(r["cells"], kind="stable")
-            r["cell_order"] = order
-            r["cells_sorted"] = r["cells"][order]
-        parts = []
-        for c in probes:
-            lo = np.searchsorted(r["cells_sorted"], c, "left")
-            hi = np.searchsorted(r["cells_sorted"], c, "right")
-            parts.append(r["cell_order"][lo:hi])
+        parts = [r["cell_order"][np.searchsorted(r["cells_sorted"], c):
+                                 np.searchsorted(r["cells_sorted"], c,
+                                                 "right")]
+                 for c in probes]
         if not parts:
             return np.empty(0, dtype=np.int64)
         return np.sort(np.concatenate(parts))
@@ -823,7 +779,7 @@ class PublishedVectorIndex:
     def _resident_qpos(self, query_id) -> int:
         """Position of `query_id` in the resident id vector (which is
         id-ascending by construction) via binary search; KeyError when
-        absent — same contract as the nonzero scan it replaces."""
+        absent."""
         import numpy as np
 
         ids = self._resident["ids"]
@@ -839,239 +795,126 @@ class PublishedVectorIndex:
     def interactive_enabled(self) -> bool:
         return self._resident is not None
 
-    def bq_topk_point(self, query_id, n_probe: int | None = None,
-                      k: int = 5, rerank: int | None = None) -> list[tuple]:
-        """`bq_topk` served from the resident tier — the SAME arithmetic
-        (round6 HALF_UP probe dots / lowest-cent-id ties; Hamming asc /
-        lowest-id ties; exact round6 dots desc / lowest-id ties), zero
-        Spark jobs, returning (id, hamming, sim) tuples row-identical to
-        the store path (pinned by test). Falls back to collecting the
-        Spark plan when the tier is not resident — graceful, never
-        wrong."""
-        if self._resident is None or "bqw" not in self._resident:
-            return [tuple(r) for r in
-                    self.bq_topk(query_id, n_probe, k, rerank).collect()]
+    def _point_topk(self, tier: str, query_ids, n_probe, k: int,
+                    rerank) -> list[list[tuple]]:
+        """The resident point tier: the rows of the store path's
+        `bq_topk`, `sq_topk` or `ivfpq_topk` (`tier` "bq", "sq" or "pq")
+        for each of `query_ids`, in input order, from the arrays
+        `enable_interactive` loaded, with zero Spark jobs and
+        row-identical to the store path (pinned by tests). The knobs
+        resolve once per call. Per query: one probe stage (`_probe_np`)
+        and one candidate gather (`_cand_positions`), then the tier's
+        prefilter score, ranked with ties to the lowest id: Hamming
+        ascending (one integer xor + popcount sweep over the whole
+        batch's candidates, exact, so batching cannot change it), the
+        SQ8 dequantized dot descending (both sides quantized), or ADC
+        descending (LUT gathers summed left to right, a residual store's
+        cell dot added outside that sum as `pq_adc_expr` does). SQ8
+        returns its top-k as (id, sim_q); BQ and IVFADC keep the
+        top-`rerank` and rank them by the exact round6 dot, as
+        (id, hamming or adc_sim, sim). Every float stage runs per query
+        with the single query's ops: float summation order is part of
+        the row-identity contract. When the tier is not resident, each
+        query collects the Spark store plan."""
+        r = self._resident
+        if r is None or tier not in r:
+            plan = {"bq": self.bq_topk, "sq": self.sq_topk,
+                    "pq": self.ivfpq_topk}[tier]
+            args = (n_probe, k) if tier == "sq" else (n_probe, k, rerank)
+            return [[tuple(row) for row in plan(q, *args).collect()]
+                    for q in query_ids]
         import numpy as np
 
         from ..functions.vector import round6_arr
 
-        r = self._resident
-        q = r["mat"][self._resident_qpos(query_id)]
+        ids, mat = r["ids"], r["mat"]
         n_probe = self.resolve_probe(n_probe)
-        rerank = self.resolve_bq_rerank(rerank)
-        cd = round6_arr(r["cmat"] @ q)
-        probes = r["cids"][np.lexsort((r["cids"], -cd))[:n_probe]]
-        cand = self._cand_positions(probes)
-        if not len(cand):
-            return []
-        qwords = np.array(similarity.bq_pack_np(q), dtype=np.int64)
-        xor = np.bitwise_xor(r["bqw"][cand], qwords)
-        ham = r["pop8"][xor.view(np.uint8)].reshape(len(cand), -1) \
-            .sum(axis=1).astype(np.int64)
-        keep = cand[np.lexsort((r["ids"][cand], ham))[:rerank]]
-        ham_by_pos = dict(zip(cand.tolist(), ham.tolist()))
-        sims = round6_arr(r["mat"][keep] @ q)
-        top = keep[np.lexsort((r["ids"][keep], -sims))[:k]]
-        sim_by_pos = dict(zip(keep.tolist(), sims.tolist()))
-        return [(r["ids"][p].item() if hasattr(r["ids"][p], "item")
-                 else r["ids"][p],
-                 int(ham_by_pos[int(p)]), float(sim_by_pos[int(p)]))
-                for p in top.tolist()]
+        depth = (k if tier == "sq" else self.resolve_bq_rerank(rerank)
+                 if tier == "bq" else self.resolve_rerank(rerank))
+        qs = [mat[self._resident_qpos(q)] for q in query_ids]
+        cands = [self._cand_positions(_probe_np(*self._codebook, q, n_probe))
+                 for q in qs]
+        if tier == "bq" and qs:
+            qw = np.array([similarity.bq_pack_np(q) for q in qs],
+                          dtype=np.int64)
+            counts = [len(c) for c in cands]
+            big = np.concatenate(cands)
+            xor = np.bitwise_xor(r["bq"][0][big],
+                                 np.repeat(qw, counts, axis=0))
+            ham = r["pop8"][xor.view(np.uint8)].sum(axis=1).astype(np.int64)
+            scores = np.split(ham, np.cumsum(counts)[:-1])
+        out = []
+        for i, (q, cand) in enumerate(zip(qs, cands)):
+            if not len(cand):
+                out.append([])
+                continue
+            if tier == "bq":
+                score = scores[i]
+            elif tier == "sq":
+                qd = similarity._int8_roundtrip_np(
+                    np.asarray([q], dtype=np.float64))[0]
+                codes, scale = r["sq"]
+                score = round6_arr(
+                    (codes[cand] * (scale[cand, None] / 127.0)) @ qd)
+            else:
+                luts = similarity.pq_adc_luts(self.pq_subbooks,
+                                              [float(x) for x in q])
+                codes = r["pq"][0][cand]
+                t = luts[0][codes[:, 0]]
+                for j in range(1, len(luts)):
+                    t = t + luts[j][codes[:, j]]
+                if self.pq.get("residual"):
+                    cids, cmat = self._codebook
+                    t = (cmat @ q)[np.searchsorted(cids, r["cells"][cand])] + t
+                score = round6_arr(t)
+            top = np.lexsort((ids[cand],
+                              score if tier == "bq" else -score))[:depth]
+            keep = cand[top]
+            if tier == "sq":
+                out.append(list(zip(ids[keep].tolist(),
+                                    score[top].tolist())))
+                continue
+            sims = round6_arr(mat[keep] @ q)
+            fin = np.lexsort((ids[keep], -sims))[:k]
+            out.append(list(zip(ids[keep[fin]].tolist(),
+                                score[top][fin].tolist(),
+                                sims[fin].tolist())))
+        return out
+
+    def bq_topk_point(self, query_id, n_probe: int | None = None,
+                      k: int = 5, rerank: int | None = None) -> list[tuple]:
+        """`bq_topk`'s (id, hamming, sim) rows from the resident tier."""
+        return self._point_topk("bq", [query_id], n_probe, k, rerank)[0]
 
     def sq_topk_point(self, query_id, n_probe: int | None = None,
                       k: int = 5) -> list[tuple]:
-        """`sq_topk` served from the resident tier — the same
-        both-sides-quantized arithmetic (query int8 round-trip,
-        `code * scale / 127` dequantization, round6 dots desc /
-        lowest-id ties) with zero Spark jobs, returning (id, sim_q)
-        tuples row-identical to the store path (pinned by test). Falls
-        back to collecting the Spark plan when the tier is not
-        resident."""
-        if self._resident is None or "sqc" not in self._resident:
-            return [tuple(r) for r in
-                    self.sq_topk(query_id, n_probe, k).collect()]
-        import numpy as np
-
-        from ..functions.vector import round6_arr
-
-        r = self._resident
-        q = r["mat"][self._resident_qpos(query_id)]
-        n_probe = self.resolve_probe(n_probe)
-        cd = round6_arr(r["cmat"] @ q)
-        probes = r["cids"][np.lexsort((r["cids"], -cd))[:n_probe]]
-        cand = self._cand_positions(probes)
-        if not len(cand):
-            return []
-        qd = similarity._int8_roundtrip_np(
-            np.asarray([q], dtype=np.float64))[0]
-        deq = r["sqc"][cand] * (r["sqs"][cand, None] / 127.0)
-        sims = round6_arr(deq @ qd)
-        top = cand[np.lexsort((r["ids"][cand], -sims))[:k]]
-        sim_by_pos = dict(zip(cand.tolist(), sims.tolist()))
-        return [(r["ids"][p].item() if hasattr(r["ids"][p], "item")
-                 else r["ids"][p], float(sim_by_pos[int(p)]))
-                for p in top.tolist()]
+        """`sq_topk`'s (id, sim_q) rows from the resident tier."""
+        return self._point_topk("sq", [query_id], n_probe, k, None)[0]
 
     def ivfpq_topk_point(self, query_id, n_probe: int | None = None,
                          k: int = 5,
                          rerank: int | None = None) -> list[tuple]:
-        """`ivfpq_topk` served from the resident tier — same ADC
-        arithmetic (per-subspace LUT gathers summed left-to-right,
-        residual cell dot added OUTSIDE the subspace sum, round6; ADC
-        desc / lowest-id prefilter at the GOVERNED rerank depth; exact
-        round6 rerank) with zero Spark jobs, returning
-        (id, adc_sim, sim) tuples row-identical to the store path
-        (pinned by test). Falls back to collecting the Spark plan when
-        the tier is not resident."""
-        if self._resident is None or "pqc" not in self._resident:
-            return [tuple(r) for r in
-                    self.ivfpq_topk(query_id, n_probe, k,
-                                    rerank).collect()]
-        import numpy as np
-
-        from ..functions.vector import round6_arr
-
-        r = self._resident
-        q = r["mat"][self._resident_qpos(query_id)]
-        n_probe = self.resolve_probe(n_probe)
-        rerank = self.resolve_rerank(rerank)
-        cd = round6_arr(r["cmat"] @ q)
-        probes = r["cids"][np.lexsort((r["cids"], -cd))[:n_probe]]
-        cand = self._cand_positions(probes)
-        if not len(cand):
-            return []
-        luts = similarity.pq_adc_luts(self.pq_subbooks,
-                                      [float(x) for x in q])
-        t = luts[0][r["pqc"][cand, 0]]
-        for m in range(1, len(luts)):
-            t = t + luts[m][r["pqc"][cand, m]]
-        if self.pq.get("residual"):
-            # residual ADC = dot(q, centroid_cell) + (t0 + t1) — the
-            # same association as pq_adc_expr's cell_term + total
-            cell_dots = r["cmat"] @ q
-            t = cell_dots[np.searchsorted(r["cids"], r["cells"][cand])] + t
-        adc = round6_arr(t)
-        keep = cand[np.lexsort((r["ids"][cand], -adc))[:rerank]]
-        adc_by_pos = dict(zip(cand.tolist(), adc.tolist()))
-        sims = round6_arr(r["mat"][keep] @ q)
-        top = keep[np.lexsort((r["ids"][keep], -sims))[:k]]
-        sim_by_pos = dict(zip(keep.tolist(), sims.tolist()))
-        return [(r["ids"][p].item() if hasattr(r["ids"][p], "item")
-                 else r["ids"][p],
-                 float(adc_by_pos[int(p)]), float(sim_by_pos[int(p)]))
-                for p in top.tolist()]
+        """`ivfpq_topk`'s (id, adc_sim, sim) rows from the resident
+        tier."""
+        return self._point_topk("pq", [query_id], n_probe, k, rerank)[0]
 
     def bq_topk_point_batch(self, query_ids, n_probe: int | None = None,
                             k: int = 5,
                             rerank: int | None = None) -> list[list[tuple]]:
-        """Batched resident BQ point serving (round-12 verdict item 3:
-        the serving path looped `bq_topk_point` per query) — the
-        resident twin of `select_probes_batch`: knob resolution, id
-        lookups, and the cell index are paid once for the batch, and the
-        Hamming stage (the O(candidates) work) runs as ONE numpy pass —
-        all queries' candidate gathers concatenated into a single
-        xor + popcount-LUT sweep. Hamming is integer arithmetic, so the
-        batched sweep is bit-identical to the per-query loops; the two
-        FLOAT stages (probe dots, exact rerank) stay per-query with the
-        exact ops the single call uses, so the result is ROW-IDENTICAL
-        to N single calls (pinned by test). Returns one (id, hamming,
-        sim) tuple list per query id, input order. Falls back to the
-        per-query path when the tier is not resident."""
-        if self._resident is None or "bqw" not in self._resident:
-            return [self.bq_topk_point(qid, n_probe, k, rerank)
-                    for qid in query_ids]
-        import numpy as np
-
-        from ..functions.vector import round6_arr
-
-        r = self._resident
-        n_probe = self.resolve_probe(n_probe)
-        rerank = self.resolve_bq_rerank(rerank)
-        qids = list(query_ids)
-        qvecs, qwords, cands = [], [], []
-        for qid in qids:
-            q = r["mat"][self._resident_qpos(qid)]
-            cd = round6_arr(r["cmat"] @ q)
-            probes = r["cids"][np.lexsort((r["cids"], -cd))[:n_probe]]
-            qvecs.append(q)
-            qwords.append(similarity.bq_pack_np(q))
-            cands.append(self._cand_positions(probes))
-        counts = [len(c) for c in cands]
-        offs = np.concatenate([[0], np.cumsum(counts)])
-        out: list[list[tuple]] = [[] for _ in qids]
-        if sum(counts):
-            big = np.concatenate([c for c in cands if len(c)])
-            qw = np.asarray(qwords, dtype=np.int64)
-            rep = np.repeat(np.arange(len(qids)), counts)
-            xor = np.bitwise_xor(r["bqw"][big], qw[rep])
-            ham_all = r["pop8"][xor.view(np.uint8)] \
-                .reshape(len(big), -1).sum(axis=1).astype(np.int64)
-            for i, qid in enumerate(qids):
-                cand, q = cands[i], qvecs[i]
-                if not len(cand):
-                    continue
-                ham = ham_all[offs[i]:offs[i + 1]]
-                keep = cand[np.lexsort((r["ids"][cand], ham))[:rerank]]
-                ham_by_pos = dict(zip(cand.tolist(), ham.tolist()))
-                sims = round6_arr(r["mat"][keep] @ q)
-                top = keep[np.lexsort((r["ids"][keep], -sims))[:k]]
-                sim_by_pos = dict(zip(keep.tolist(), sims.tolist()))
-                out[i] = [(r["ids"][p].item()
-                           if hasattr(r["ids"][p], "item") else r["ids"][p],
-                           int(ham_by_pos[int(p)]),
-                           float(sim_by_pos[int(p)]))
-                          for p in top.tolist()]
-        return out
+        """`bq_topk_point` for each of `query_ids`, in input order."""
+        return self._point_topk("bq", query_ids, n_probe, k, rerank)
 
     def sq_topk_point_batch(self, query_ids, n_probe: int | None = None,
                             k: int = 5) -> list[list[tuple]]:
-        """Batched resident SQ8 point serving: shared knob resolution +
-        cell index across the batch; the dequantized dot stays the exact
-        per-query op the single call performs (float summation order is
-        part of the row-identity contract). Row-identical to N single
-        calls (pinned by test)."""
-        if self._resident is None or "sqc" not in self._resident:
-            return [self.sq_topk_point(qid, n_probe, k)
-                    for qid in query_ids]
-        import numpy as np
-
-        from ..functions.vector import round6_arr
-
-        r = self._resident
-        n_probe = self.resolve_probe(n_probe)
-        out = []
-        for qid in query_ids:
-            q = r["mat"][self._resident_qpos(qid)]
-            cd = round6_arr(r["cmat"] @ q)
-            probes = r["cids"][np.lexsort((r["cids"], -cd))[:n_probe]]
-            cand = self._cand_positions(probes)
-            if not len(cand):
-                out.append([])
-                continue
-            qd = similarity._int8_roundtrip_np(
-                np.asarray([q], dtype=np.float64))[0]
-            deq = r["sqc"][cand] * (r["sqs"][cand, None] / 127.0)
-            sims = round6_arr(deq @ qd)
-            top = cand[np.lexsort((r["ids"][cand], -sims))[:k]]
-            sim_by_pos = dict(zip(cand.tolist(), sims.tolist()))
-            out.append([(r["ids"][p].item()
-                         if hasattr(r["ids"][p], "item") else r["ids"][p],
-                         float(sim_by_pos[int(p)]))
-                        for p in top.tolist()])
-        return out
+        """`sq_topk_point` for each of `query_ids`, in input order."""
+        return self._point_topk("sq", query_ids, n_probe, k, None)
 
     def ivfpq_topk_point_batch(self, query_ids,
                                n_probe: int | None = None, k: int = 5,
                                rerank: int | None = None
                                ) -> list[list[tuple]]:
-        """Batched resident IVFADC point serving — per-query delegation
-        (trivially row-identical): the ADC LUT build and gather/sum are
-        query-dependent floats, so beyond the cached cell index the
-        single call already shares there is no batch-amortizable stage
-        that would not change float summation order. Provided for API
-        symmetry with the BQ/SQ8 batch twins."""
-        return [self.ivfpq_topk_point(qid, n_probe, k, rerank)
-                for qid in query_ids]
+        """`ivfpq_topk_point` for each of `query_ids`, in input order."""
+        return self._point_topk("pq", query_ids, n_probe, k, rerank)
 
     def ivf_topk(self, query_id, n_probe: int | None = 2, k: int = 5,
                  allowed: DataFrame | None = None,
@@ -1738,8 +1581,6 @@ def split_hot_cell(spark: SparkSession, index_dir: str,
         specs=_tier_specs(vidx, new_centroids), id_col=id_col,
         changed=changed, removed_ids=None, manifest=manifest_fn,
         n_rows=total, extra_stage=stage_sidecars)
-    # cell geometry changed: drop any pooled resident generation
-    resident.invalidate_dir(index_dir)
 
     # re-derive the recall contracts against the POST-split artifact
     # with the per-tier governance publish uses (derived-geometry
@@ -1823,11 +1664,6 @@ def write_vector_refresh(spark: SparkSession, index_dir: str,
                       sq8=vidx.sq is not None,
                       bq1=vidx.bq is not None)),
         n_rows=n_rows)
-    # the delta changed the store's contents: any pooled resident
-    # matrix for this dir is now a stale generation (a manifest-less
-    # refresh leaves sidecar stamps untouched, so eager invalidation is
-    # load-bearing here, not belt-and-braces)
-    resident.invalidate_dir(index_dir)
     # opt-in hot-cell remediation: after the delta lands, check the
     # balance the refresh produced and split a cell that crossed the
     # bound (see `split_hot_cell`); the report rides on the handle

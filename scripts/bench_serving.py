@@ -178,24 +178,24 @@ def bench_sf(spark, sf_dir: str, n: int) -> tuple[dict, dict]:
             (i * 7) % 100, n_probe=2, k=5).collect(),
         "ann_bq_point": lambda i: bq_idx.bq_topk(
             (i * 7) % 100, n_probe=2, k=5, rerank=20).collect(),
-        # the RESIDENT twin: same rows (identity pinned by test), zero
-        # Spark jobs — xor+popcount prefilter + exact rerank in numpy
-        "ann_bq_point_resident": lambda i: bq_idx.bq_topk_point(
-            (i * 7) % 100, n_probe=2, k=5, rerank=20),
-        "ann_sq8_point_resident": lambda i: sq_idx.sq_topk_point(
-            (i * 7) % 100, n_probe=2, k=5),
-        "ann_pq_point_resident": lambda i: pq_idx.ivfpq_topk_point(
-            (i * 7) % 100, n_probe=2, k=5, rerank=20),
-        # BATCHED resident point serving (round-12 verdict item 3): 32
-        # queries per call through ONE numpy Hamming sweep. The row is
-        # the WHOLE-CALL latency; divide by 32 for per-query cost, which
-        # must sit well under the single-call resident row above.
-        "ann_bq_point_resident_batch32": lambda i: bq_idx.bq_topk_point_batch(
-            [(i * 7 + j) % 100 for j in range(32)],
-            n_probe=2, k=5, rerank=20),
-        "ann_sq8_point_resident_batch32": lambda i: sq_idx.sq_topk_point_batch(
-            [(i * 7 + j) % 100 for j in range(32)], n_probe=2, k=5),
     }
+    # the RESIDENT twins: same rows (identity pinned by test), zero Spark
+    # jobs, one query per call and 32 per call through the one resident
+    # kernel. A batch32 row is the WHOLE-CALL latency; divide by 32 for
+    # the per-query cost, which must sit well under the single-call row.
+    for tier, point, batch, knobs in (
+            ("bq", bq_idx.bq_topk_point, bq_idx.bq_topk_point_batch,
+             {"rerank": 20}),
+            ("sq8", sq_idx.sq_topk_point, sq_idx.sq_topk_point_batch, {}),
+            ("pq", pq_idx.ivfpq_topk_point, pq_idx.ivfpq_topk_point_batch,
+             {"rerank": 20})):
+        calls[f"ann_{tier}_point_resident"] = (
+            lambda i, f=point, kw=knobs: f((i * 7) % 100, n_probe=2, k=5,
+                                           **kw))
+        calls[f"ann_{tier}_point_resident_batch32"] = (
+            lambda i, f=batch, kw=knobs: f(
+                [(i * 7 + j) % 100 for j in range(32)], n_probe=2, k=5,
+                **kw))
     return setup, time_calls(calls, n)
 
 

@@ -20,7 +20,6 @@ SF_CORRECT = "/root/testdata/sf0.01"
 SLOW_TESTS = frozenset({
     "test_api.py::test_batch_fast_path_mixed_narrator_filtered_zero_jobs",
     "test_api.py::test_column_tail_serves_without_doc_map",
-    "test_api.py::test_engine_borrows_store_resident_matrix",
     "test_api.py::test_hybrid_search_batch_synonyms_and_fallback",
     "test_api.py::test_hybrid_search_batch_tier_matches_single_calls",
     "test_api.py::test_hybrid_search_returns_ranked_results",

@@ -1757,44 +1757,6 @@ def test_batch_gate_lazy_narrator_tier_and_lexless_narrator_batches(spark):
     assert n_jobs == 0
 
 
-def test_engine_borrows_store_resident_matrix(spark, tmp_path):
-    """round-12 verdict item 2: with `borrow_vectors_from`, the engine's
-    interactive vector tier SHARES the published store's resident raw
-    matrix (one driver buffer across both enables) and serves results
-    identical to an engine that collected its own copy; dim or id-set
-    mismatches fall back to the unshared collect — never wrong."""
-    import numpy as np
-
-    from hadith_vector_search_spark.sources import load_table, vector_store
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    own = HybridEngine(spark, docs)
-    assert own.enable_interactive()
-    # publish a store FROM the engine's own embeddings: the borrow
-    # contract's "store was built from this corpus" premise, exactly
-    idx = str(tmp_path / "borrow_store")
-    vector_store.publish_vector_index(own.emb, idx, n_cells=4,
-                                      id_col="doc_id", bq1=True)
-    vidx = vector_store.open_vector_index(spark, idx)
-    shared = HybridEngine(spark, docs)
-    assert shared.enable_interactive(borrow_vectors_from=vidx)
-    assert vidx.interactive_enabled  # the engine enabled the store tier
-    assert np.shares_memory(shared._mat, vidx._resident["mat"])
-    for q in ["patience and prayer", "charity given in secret"]:
-        a = [r.asDict() for r in own.hybrid_search(q, n_results=10).collect()]
-        b = [r.asDict() for r in
-             shared.hybrid_search(q, n_results=10).collect()]
-        assert a == b, q
-    # dim mismatch: enable succeeds but falls back to an unshared collect
-    small = HybridEngine(spark, docs, dim=64)
-    assert small.enable_interactive(borrow_vectors_from=vidx)
-    assert not np.shares_memory(small._mat, vidx._resident["mat"])
-    # id-set mismatch (corpus missing a store row): unshared fallback
-    sub = HybridEngine(spark, docs.filter(F.col("doc_id") != 0))
-    assert sub.enable_interactive(borrow_vectors_from=vidx)
-    assert not np.shares_memory(sub._mat, vidx._resident["mat"])
-
-
 def _old_way_lexical_tier(spark, docs):
     """Per term, the sorted (pid, tf, dl, df, impact) rows of the Spark
     index a resident engine used to collect: `bm25.build_index`'s

@@ -1484,37 +1484,35 @@ def test_export_rejects_non_integral_ids_before_writing(spark, tmp_path):
     assert not os.path.exists(os.path.join(out, "ids.bin"))
 
 
-def test_resident_pool_shares_one_buffer_across_handles(spark, tmp_path):
-    """Two handles on the same published artifact share ONE resident
-    buffer (round-12 verdict item 2): the second enable borrows the
-    pooled arrays instead of re-collecting, and a refresh invalidates
-    the pooled generation so the next enable serves the new corpus."""
-    import numpy as np
-
-    from hadith_vector_search_spark.sources import resident
-
-    idx = str(tmp_path / "vec_pool")
-    emb = _emb(spark, IDS)
-    vector_store.publish_vector_index(emb, idx, n_cells=N_CELLS, bq1=True)
-    v1 = vector_store.open_vector_index(spark, idx)
-    v2 = vector_store.open_vector_index(spark, idx)
-    assert v1.enable_interactive()
-    assert v2.enable_interactive()
-    assert v1._resident is v2._resident  # one pooled payload, borrowed
-    assert np.shares_memory(v1._resident["mat"], v2._resident["mat"])
-    # row-identity still holds through the shared buffer
-    assert v1.bq_topk_point(3, 2, 4, 8) == v2.bq_topk_point(3, 2, 4, 8)
-    # refresh drops the pooled generation: a fresh enable sees new rows
+def test_resident_tier_serves_refresh_on_new_handle(spark, tmp_path):
+    """After `write_vector_refresh` adds an id, a handle opened after it
+    serves that id from its resident tier, row-identical to the Spark
+    store path on the BQ, SQ8 and IVFADC tiers; a handle enabled before
+    the refresh keeps its snapshot until it is re-enabled."""
+    idx = str(tmp_path / "vec_refresh_res")
+    vector_store.publish_vector_index(_emb(spark, IDS), idx,
+                                      n_cells=N_CELLS, sq8=True, bq1=True,
+                                      pq_cents=PQ_CENTS)
+    before = vector_store.open_vector_index(spark, idx)
+    assert before.enable_interactive()
     new_id = max(IDS) + 1
-    vector_store.write_vector_refresh(
-        spark, idx, _emb(spark, [new_id]))
-    v3 = vector_store.open_vector_index(spark, idx)
-    assert v3.enable_interactive()
-    assert v3._resident is not v1._resident
-    assert new_id in set(v3._resident["ids"].tolist())
-    # the stale handle still holds its old (pre-refresh) snapshot —
-    # same semantics as the unpooled tier (re-enable to refresh)
-    assert new_id not in set(v1._resident["ids"].tolist())
+    vector_store.write_vector_refresh(spark, idx, _emb(spark, [new_id]),
+                                      vidx=before, reopen=False)
+    after = vector_store.open_vector_index(spark, idx)
+    assert after.enable_interactive()
+    assert after.bq_topk_point(new_id, 2, 4, 8) == [
+        tuple(r) for r in after.bq_topk(new_id, 2, 4, 8).collect()]
+    assert after.sq_topk_point(new_id, 2, 4) == [
+        tuple(r) for r in after.sq_topk(new_id, 2, 4).collect()]
+    assert after.ivfpq_topk_point(new_id, 2, 4, 8) == [
+        tuple(r) for r in after.ivfpq_topk(new_id, 2, 4, 8).collect()]
+    # the earlier handle serves its pre-refresh snapshot ...
+    with pytest.raises(KeyError):
+        before.bq_topk_point(new_id, 2, 4, 8)
+    # ... until it is re-enabled
+    assert before.enable_interactive()
+    assert before.bq_topk_point_batch([new_id, 3], 2, 4, 8) == [
+        after.bq_topk_point(q, 2, 4, 8) for q in (new_id, 3)]
 
 
 def test_resident_byte_bound_refuses_wide_stores(spark, tmp_path):
